@@ -182,10 +182,13 @@ object Bench {
     val fullLine =
       f"""{"queries":$qs,"sf":"$sfDir"$scaling,"load_at_start":$loadAtStart%.1f,"contended_n":${contendedRows.size},"contended":$contended,"calibration":$calibration,"steady":$steadyQs,"steady_total":$steadyTotal%.3f,"metric":"total","unit":"sec","n_queries":${results.size},"value":$total%.3f}"""
     val mirror = s"BENCH_LOCAL_c$cpus.json"
+    // mirrors land in the working directory; a failed write warns on
+    // stderr (stdout's last line stays the result)
     Seq("BENCH_LOCAL.json", mirror).foreach { f =>
-      try java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"/root/repo/$f"), fullLine + "\n")
-      catch { case _: Throwable => () }
+      val path = java.nio.file.Paths.get(f).toAbsolutePath
+      try java.nio.file.Files.writeString(path, fullLine + "\n")
+      catch { case e: java.io.IOException =>
+        System.err.println(s"bench: could not write the mirror $path: $e") }
     }
     // the 30 slowest steady rows inline (the rows a verdict reads
     // first); the complete maps are in the mirror

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 import graft.auth.{Auth, AuthStore}
-import graft.core.{GraphCatalog, GraphDatabase, PropertyGraph, SnapshotStore}
+import graft.core.{DeltaBuffer, DeltaSide, DeltaState, GraphCatalog, GraphDatabase, PropertyGraph,
+  SnapshotStore}
 import graft.cypher.{CypherCompiler, CypherParser, Params, ast}
 import graft.procs.ProcedureRegistry
 
@@ -68,6 +69,13 @@ final class GraftSession(val spark: SparkSession,
   private def statementDatabase: GraphDatabase =
     catalog.database(statementDb.get())
   private def statementGraph(): PropertyGraph = statementDatabase.graph
+  /** The database a procedure body WRITES: the dispatching
+    * statement's target — inside an explicit transaction its private
+    * shadow, so a procedure write is isolated and rolls back like any
+    * other statement of the transaction. Schema metadata (indexes,
+    * constraints) stays on [[statementDatabase]]. */
+  private def statementTarget: GraphDatabase =
+    Option(statementTargetDb.get()).getOrElse(statementDatabase)
   /** The statement database NAME, for procedure bodies that dispatch
     * nested cypher (apoc.schema.assert): without passing it
     * explicitly, a nested `session.cypher(q)` defaults to 'neo4j' and
@@ -608,6 +616,7 @@ final class GraftSession(val spark: SparkSession,
   private val statementDb = new ThreadLocal[String] {
     override def initialValue(): String = "neo4j"
   }
+  private val statementTargetDb = new ThreadLocal[GraphDatabase]
   /** Serializes statement execution across threads: Spark plan
     * construction and the snapshot-pointer swap of a mutation are not
     * thread-safe per database. Held per STATEMENT, never across a
@@ -1218,7 +1227,9 @@ final class GraftSession(val spark: SparkSession,
       // nested statement (apoc.periodic.iterate), and the outer
       // statement's database must survive the nested dispatch
       val prevStatementDb = statementDb.get()
+      val prevTarget = statementTargetDb.get()
       statementDb.set(database) // procedures resolve db-scoped state from here
+      statementTargetDb.set(db)
       try {
         if (parsed.clauses.exists { case cs: ast.CallSub => cs.inTransactions; case _ => false }) {
           // batched-commit ingest: each batch is its own transaction, so
@@ -1245,9 +1256,17 @@ final class GraftSession(val spark: SparkSession,
           out
         } else {
           compactIfNeeded(db)
-          compiler(db, wire).compile(parsed)
+          val g0 = db.graph
+          val out = compiler(db, wire).compile(parsed)
+          // a procedure that wrote the transaction's shadow publishes
+          // it at COMMIT like any mutating statement
+          if (db.graph ne g0) tx.foreach(_.mutated += database)
+          out
         }
-      } finally statementDb.set(prevStatementDb)
+      } finally {
+        statementDb.set(prevStatementDb)
+        statementTargetDb.set(prevTarget)
+      }
   }
 
   /** Default LOAD CSV batch bound — the house 10k-row write-buffer
@@ -1392,46 +1411,37 @@ final class GraftSession(val spark: SparkSession,
     * the same role where executor loss must not drop the graph. */
   private def compactIfNeeded(db: GraphDatabase): Unit =
     if (db.pendingMutations >= 2) {
-      val g = db.graph
-      // Each side resolves independently (node and edge deltas can be
-      // live at once — a tx that upserts nodes then MERGEs edges).
-      // Delta-shaped write burst: the delta is ALREADY materialized
-      // (it checkpoints at each commit), so compaction only needs to
-      // materialize a base that is itself an unmaterialized chain (a
-      // non-delta mutation ran before the burst) — exactly once; the
-      // full table is never rewritten for delta-shaped commits. This
-      // is what makes a 30-row batch commit O(batch + delta), not
-      // O(table).
-      val (nodesOut, matN, ndState) = db.validNodeDelta match {
-        case Some(s) =>
-          val base = if (s.base eq db.matNodes) s.base else s.base.localCheckpoint()
-          val delta = if (s.materialized) s.delta else s.delta.localCheckpoint()
-          val resolved = if ((base eq s.base) && (delta eq s.delta)) g.nodes
-            else overlayNodes(base, delta)
-          (resolved, base, Some(graft.core.NodeDeltaState(base, delta, resolved, s.buf)))
-        case None =>
-          val nodes = if (g.nodes eq db.matNodes) g.nodes else g.nodes.localCheckpoint()
-          (nodes, nodes, None)
-      }
-      val (edgesOut, matE, edState) = db.validEdgeDelta match {
-        case Some(s) =>
-          val base = if (s.base eq db.matEdges) s.base else s.base.localCheckpoint()
-          val delta = if (s.materialized) s.delta else s.delta.localCheckpoint()
-          val resolved = if ((base eq s.base) && (delta eq s.delta)) g.edges
-            else overlayEdges(base, delta)
-          (resolved, base, Some(graft.core.EdgeDeltaState(base, delta, resolved, s.buf)))
-        case None =>
-          val edges = if (g.edges eq db.matEdges) g.edges else g.edges.localCheckpoint()
-          (edges, edges, None)
-      }
-      db.graph = PropertyGraph(nodesOut, edgesOut)
-      db.matNodes = matN
-      db.matEdges = matE
-      db.nodeDeltaState = ndState // stale overlay state drops (None case)
-      db.edgeDeltaState = edState
+      db.matNodes = compactSide(db, DeltaSide.Nodes, db.matNodes)
+      db.matEdges = compactSide(db, DeltaSide.Edges, db.matEdges)
       db.releasePinned()
       db.pendingMutations = 0
     }
+
+  /** One side of [[compactIfNeeded]]; returns the side's new
+    * materialized frame. Each side resolves independently (node and
+    * edge deltas can be live at once — a tx that upserts nodes then
+    * MERGEs edges). Delta-shaped write burst: the delta is ALREADY
+    * materialized (it checkpoints at each commit), so compaction only
+    * needs to materialize a base that is itself an unmaterialized
+    * chain (a non-delta mutation ran before the burst) — exactly once;
+    * the full table is never rewritten for delta-shaped commits. This
+    * is what makes a 30-row batch commit O(batch + delta), not
+    * O(table). */
+  private def compactSide[B <: DeltaBuffer[B]](db: GraphDatabase, side: DeltaSide[B],
+      mat: DataFrame): DataFrame = side.valid(db) match {
+    case Some(s) =>
+      val base = if (s.base eq mat) s.base else s.base.localCheckpoint()
+      val delta = if (s.materialized) s.delta else s.delta.localCheckpoint()
+      val resolved = if ((base eq s.base) && (delta eq s.delta)) s.resolved
+        else side.overlay(base, delta)
+      side.publish(db, DeltaState(base, delta, resolved, s.buf))
+      base
+    case None =>
+      val cur = side.part(db.graph)
+      val out = if (cur eq mat) cur else cur.localCheckpoint()
+      side.reset(db, out) // a stale overlay state drops
+      out
+  }
 
   /** The `*lo..` prefix-enumeration cap, resolved from the
     * `graft.cypher.prefix_cap` config key (session settings override
@@ -1494,8 +1504,8 @@ final class GraftSession(val spark: SparkSession,
         // itself contains ';' (`A;B` vs Seq("A","B") must not collide)
         st.cachedRead(s"label:${labels.sorted.map(l => s"${l.length}:$l").mkString(";")}")(
           SnapshotStore.readNodesPrunedByLabels(spark, st.dir, labels)).map { pruned =>
-          val withDisk = st.nodeDiskDelta.map(overlayNodes(pruned, _)).getOrElse(pruned)
-          mem.map(overlayNodes(withDisk, _)).getOrElse(withDisk)
+          val withDisk = st.nodeDiskDelta.map(DeltaSide.Nodes.overlay(pruned, _)).getOrElse(pruned)
+          mem.map(DeltaSide.Nodes.overlay(withDisk, _)).getOrElse(withDisk)
         }
       }
     }
@@ -1554,8 +1564,8 @@ final class GraftSession(val spark: SparkSession,
               Some(spark.read.parquet(path))
             else None)
         }.map { proj =>
-          val withDisk = st.nodeDiskDelta.map(overlayNodes(proj, _)).getOrElse(proj)
-          mem.map(overlayNodes(withDisk, _)).getOrElse(withDisk)
+          val withDisk = st.nodeDiskDelta.map(DeltaSide.Nodes.overlay(proj, _)).getOrElse(proj)
+          mem.map(DeltaSide.Nodes.overlay(withDisk, _)).getOrElse(withDisk)
         }
       }
     }
@@ -1584,8 +1594,8 @@ final class GraftSession(val spark: SparkSession,
               Some(spark.read.parquet(path))
             else None)
         }.map { proj =>
-          val withDisk = st.edgeDiskDelta.map(overlayEdges(proj, _)).getOrElse(proj)
-          mem.map(overlayEdges(withDisk, _)).getOrElse(withDisk)
+          val withDisk = st.edgeDiskDelta.map(DeltaSide.Edges.overlay(proj, _)).getOrElse(proj)
+          mem.map(DeltaSide.Edges.overlay(withDisk, _)).getOrElse(withDisk)
         }
       }
     }
@@ -2186,7 +2196,7 @@ final class GraftSession(val spark: SparkSession,
       val rows = newNodes.toSeq.map { case (id, labels, props) =>
         Row.fromSeq(Seq(id, labels) ++ propKeys.map(k => props.get(k).map(norm).orNull))
       }
-      foldNodeDeltaRows(db, spark.createDataFrame(javaList(rows), schema))
+      foldDeltaRows(db, DeltaSide.Nodes, spark.createDataFrame(javaList(rows), schema))
     }
     if (newEdges.nonEmpty) {
       val propKeys = newEdges.flatMap(_._5.keys).distinct.sorted
@@ -2198,7 +2208,7 @@ final class GraftSession(val spark: SparkSession,
       val rows = newEdges.toSeq.map { case (s0, d0, t, eid, props) =>
         Row.fromSeq(Seq(s0, d0, t, eid) ++ propKeys.map(k => props.get(k).map(norm).orNull))
       }
-      foldEdgeDeltaRows(db, spark.createDataFrame(javaList(rows), schema))
+      foldDeltaRows(db, DeltaSide.Edges, spark.createDataFrame(javaList(rows), schema))
     }
     (firstProps, firstIds)
   }
@@ -2380,7 +2390,8 @@ final class GraftSession(val spark: SparkSession,
             s"(${base.schema(f.name).dataType.simpleString} -> " +
             s"${f.dataType.simpleString}) — write the new type under a new key")
     }
-    if (isRel) foldEdgeDeltaRows(db, updated) else foldNodeDeltaRows(db, updated)
+    if (isRel) foldDeltaRows(db, DeltaSide.Edges, updated)
+    else foldDeltaRows(db, DeltaSide.Nodes, updated)
     unit()
   }
 
@@ -2572,8 +2583,7 @@ final class GraftSession(val spark: SparkSession,
               value == null || !keyPresent ||
                 PropertyGraph.literalType(value) ==
                   base.schema(base.schema.fieldIndex(key)).dataType) &&
-            db.validNodeDelta.forall(_.buf.isDefined) &&
-            db.validNodeDelta.flatMap(_.buf).forall(_.rows.size <= 100000)
+            DeltaSide.Nodes.bufferable(db)
           val bufferedIds: Option[Seq[Long]] =
             if (!bufferedOk) None
             else {
@@ -2611,8 +2621,8 @@ final class GraftSession(val spark: SparkSession,
                 updated.schema(updated.schema.fieldIndex(key)).dataType ==
                   base.schema(base.schema.fieldIndex(key)).dataType
               if (!typeStable) { if (isRel) legacyRel() else legacyNode() }
-              else if (isRel) foldEdgeDeltaRows(db, updated)
-              else foldNodeDeltaRows(db, updated)
+              else if (isRel) foldDeltaRows(db, DeltaSide.Edges, updated)
+              else foldDeltaRows(db, DeltaSide.Nodes, updated)
           }
         }
       }
@@ -2628,7 +2638,7 @@ final class GraftSession(val spark: SparkSession,
         val newLabels =
           if (ls.remove) array_except(col("labels"), typedlit(labels))
           else array_union(col("labels"), typedlit(labels))
-        foldNodeDeltaRows(db, hit.withColumn("labels", newLabels))
+        foldDeltaRows(db, DeltaSide.Nodes, hit.withColumn("labels", newLabels))
       }
     }
 
@@ -2651,8 +2661,7 @@ final class GraftSession(val spark: SparkSession,
             // jobs. Unbounded matches, or a delta that lives
             // distributed (no buffer to merge into), keep the
             // distributed tombstone fold.
-            val bufferedOk = db.validEdgeDelta.forall(_.buf.isDefined) &&
-              db.validEdgeDelta.flatMap(_.buf).forall(_.rows.size <= 100000)
+            val bufferedOk = DeltaSide.Edges.bufferable(db)
             val keys = relKeys(v)
             val hits: Option[Seq[(Long, Long, Long, String)]] =
               if (!bufferedOk) None
@@ -2666,7 +2675,7 @@ final class GraftSession(val spark: SparkSession,
               case Some(hs) => tombstoneEdgesBuffered(db, hs)
               case None =>
                 val hit = g.edges.join(keys, relKeyCond(g.edges, keys), "left_semi")
-                foldEdgeDeltaRows(db, hit.withColumn(tomb, lit(true)))
+                foldDeltaRows(db, DeltaSide.Edges, hit.withColumn(tomb, lit(true)))
             }
           } else {
             val keys = relKeys(v)
@@ -2696,8 +2705,7 @@ final class GraftSession(val spark: SparkSession,
           }
           if (d.detach) {
             if (hasEid) {
-              val edgeBufOk = db.validEdgeDelta.forall(_.buf.isDefined) &&
-                db.validEdgeDelta.flatMap(_.buf).forall(_.rows.size <= 100000)
+              val edgeBufOk = DeltaSide.Edges.bufferable(db)
               if (bounded) {
                 val pruned = g.edges.filter(col("src").isin(idVals.toIndexedSeq: _*) ||
                   col("dst").isin(idVals.toIndexedSeq: _*))
@@ -2710,12 +2718,12 @@ final class GraftSession(val spark: SparkSession,
                 hitRows match {
                   case Some(rs) => tombstoneEdgesBuffered(db, rs.toSeq.map(r =>
                     (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))))
-                  case None => foldEdgeDeltaRows(db, pruned.withColumn(tomb, lit(true)))
+                  case None => foldDeltaRows(db, DeltaSide.Edges, pruned.withColumn(tomb, lit(true)))
                 }
               } else {
                 val e1 = g.edges.join(ids, g.edges("src") === col("_mid"), "left_semi")
                 val e2 = g.edges.join(ids, g.edges("dst") === col("_mid"), "left_semi")
-                foldEdgeDeltaRows(db,
+                foldDeltaRows(db, DeltaSide.Edges,
                   e1.unionByName(e2).dropDuplicates("eid").withColumn(tomb, lit(true)))
               }
             } else {
@@ -2724,13 +2732,12 @@ final class GraftSession(val spark: SparkSession,
               db.graph = PropertyGraph(g.nodes, edges)
             }
           }
-          val nodeBufOk = db.validNodeDelta.forall(_.buf.isDefined) &&
-            db.validNodeDelta.flatMap(_.buf).forall(_.rows.size <= 100000)
+          val nodeBufOk = DeltaSide.Nodes.bufferable(db)
           if (bounded && nodeBufOk) tombstoneNodesBuffered(db, idVals.toSeq)
           else {
             val g2 = db.graph
             val hitN = g2.nodes.join(ids, g2.nodes("id") === col("_mid"), "left_semi")
-            foldNodeDeltaRows(db, hitN.withColumn(tomb, lit(true)))
+            foldDeltaRows(db, DeltaSide.Nodes, hitN.withColumn(tomb, lit(true)))
           }
         }
       }
@@ -3287,7 +3294,6 @@ final class GraftSession(val spark: SparkSession,
     // replacement-row path for huge batches, an oversized buffer, SET
     // shapes evalLocal can't run, or when a distributed delta is
     // already in flight.
-    import scala.collection.immutable.VectorMap
     def driverEvaluable(e: ast.Expr): Boolean = e match {
       case ast.Lit(_) | ast.Prop(`alias`, _) | ast.Variable(`alias`) |
            ast.Prop(`mergeVar`, _) => true
@@ -3325,13 +3331,10 @@ final class GraftSession(val spark: SparkSession,
     }
     val driverEligible = byKey.size <= 10000 && keyTypesCanonical &&
       m.onMatch.forall { case (_, e) => driverEvaluable(e) } &&
-      oldState.forall(_.buf.isDefined) &&
-      oldState.flatMap(_.buf).forall(_.rows.size <= 100000)
+      DeltaSide.Nodes.bufferable(db)
     if (driverEligible) {
-      val bufColTypes = oldState.flatMap(_.buf).map(_.colTypes)
-        .getOrElse(VectorMap.empty[String, DataType])
-      val bufRows = oldState.flatMap(_.buf).map(_.rows)
-        .getOrElse(VectorMap.empty[Long, Map[String, Any]])
+      val buf0 = oldState.flatMap(_.buf).getOrElse(DeltaSide.Nodes.emptyBuffer)
+      val (bufColTypes, bufRows) = (buf0.colTypes, buf0.rows)
       def labelsOk(v: Any): Boolean = np.labels.forall(l => v match {
         case s: scala.collection.Seq[_] => s.contains(l)
         case _ => false
@@ -3358,8 +3361,7 @@ final class GraftSession(val spark: SparkSession,
       // settled commits with NO Spark action at all. Base rows
       // superseded by a buffer row are skipped.
       val shape = (np.labels, keyNames)
-      val settled0 = oldState.flatMap(_.buf)
-        .filter(_.shape == shape).map(_.settled).getOrElse(Set.empty[Seq[Any]])
+      val settled0 = if (buf0.shape == shape) buf0.settled else Set.empty[Seq[Any]]
       val baseDf = oldState.map(_.base).getOrElse(g.nodes)
       val baseSchema = baseDf.schema
       val baseIdx = baseSchema.fieldNames.zipWithIndex.toMap
@@ -3434,46 +3436,10 @@ final class GraftSession(val spark: SparkSession,
           (id, cur)
       }
       if (typeOk) {
-        // merge into the copy-on-write buffer (latest-wins by id);
-        // column types evolve by name, first writer wins
-        val buf0 = oldState.flatMap(_.buf).getOrElse(
-          graft.core.NodeDeltaBuffer(VectorMap.empty, VectorMap.empty))
-        var colTypes = buf0.colTypes
-        if (!colTypes.contains("id")) colTypes += ("id" -> LongType)
-        if (!colTypes.contains("labels"))
-          colTypes += ("labels" -> org.apache.spark.sql.types.ArrayType(StringType))
-        if (!colTypes.contains(PropertyGraph.CdcSeqCol))
-          colTypes += (PropertyGraph.CdcSeqCol -> LongType)
-        (replacements ++ created).foreach { case (_, cur) =>
-          cur.foreach { case (n, v) =>
-            if (!colTypes.contains(n)) colTypes += (n -> colType(n, v))
-          }
-        }
-        // buffered rows carry the CDC stamp IN the buffer map — the
-        // delta LocalRelation rebuilds from the full buffer each fold,
-        // so a stamp outside the map would be lost on the next fold.
-        // Shadows stay unstamped (commit-time ordering — stampSeq doc);
-        // a replacement of an inherited stamped row DROPS the old
-        // stamp so the publishing commit re-stamps it.
-        val stamp = if (isShadow(db)) None
-          else Some(GraftSession.cdcCommitSeq.incrementAndGet())
-        var rows = buf0.rows
-        (replacements ++ created).foreach { case (id, cur) =>
-          val m = cur.toMap - PropertyGraph.CdcSeqCol
-          rows += (id -> stamp.fold(m)(s => m + (PropertyGraph.CdcSeqCol -> s)))
-        }
-        val buf = graft.core.NodeDeltaBuffer(colTypes, rows, settled, shape)
-        val deltaSchema = StructType(colTypes.toSeq.map { case (n, t) =>
-          StructField(n, t, nullable = n != "id") })
-        val deltaRows = rows.valuesIterator.map { mrow =>
-          Row.fromSeq(colTypes.keysIterator.map(n => mrow.getOrElse(n, null)).toSeq)
-        }.toSeq
-        val delta = spark.createDataFrame(javaList(deltaRows), deltaSchema)
-        val base = oldState.map(_.base).getOrElse(g.nodes)
-        val resolved = overlayNodes(base, delta)
-        db.graph = PropertyGraph(resolved, g.edges)
-        db.nodeDeltaState =
-          Some(graft.core.NodeDeltaState(base, delta, resolved, Some(buf)))
+        commitBuffered(db, DeltaSide.Nodes,
+          Seq("id" -> LongType, "labels" -> ArrayType(StringType)),
+          replacements ++ created, colType)(
+          _.copy(settled = settled, shape = shape))
         return unit()
       }
     }
@@ -3555,47 +3521,15 @@ final class GraftSession(val spark: SparkSession,
     // becomes the overlay base (the next compaction materializes a
     // dirty base exactly once — see compactIfNeeded). The swapped-in
     // node frame is base ⟵anti⟶ delta ∪ delta, so reads-after-write
-    // resolve through the delta without any table rewrite.
-    val newRows = stampSeq(db, updRows match {
+    // resolve through the delta without any table rewrite. The delta
+    // checkpoints EAGERLY, even in a transaction (see foldDeltaRows).
+    foldDeltaRows(db, DeltaSide.Nodes, updRows match {
       case Some(u) => PropertyGraph.appendByName(u, missing)
       case None    => missing
-    })
-    val (base, delta0) = db.validNodeDelta match {
-      case Some(s) =>
-        val kept = s.delta.join(newRows.select(col("id").as("_nk")),
-          s.delta("id") === col("_nk"), "left_anti")
-        (s.base, PropertyGraph.appendByName(kept, newRows))
-      case None => (g.nodes, newRows)
-    }
-    // The delta materializes EAGERLY at every commit — this IS the
-    // O(batch + delta) commit cost, and it is load-bearing: newRows
-    // reads the previous RESOLVED frame and the extension anti-joins
-    // the previous delta, so an unmaterialized chain roughly DOUBLES
-    // in plan size per commit (exponential — a 60-commit burst OOMed
-    // the driver stringifying one AQE plan before this checkpoint;
-    // deferring the checkpoint by even one commit measured 5× SLOWER
-    // at sf0.1 — the deferred job re-scans the base once per embedded
-    // copy, so eager-and-tiny beats lazy-and-compounded).
-    val delta = delta0.localCheckpoint()
-    val resolved = overlayNodes(base, delta)
-    db.graph = PropertyGraph(resolved, g.edges)
-    db.nodeDeltaState = Some(graft.core.NodeDeltaState(base, delta, resolved))
+    }, eager = true)
     unit()
   }
 
-  /** Resolve a node delta overlay — see PropertyGraph.overlayById. */
-  private def overlayNodes(base: DataFrame, delta: DataFrame): DataFrame =
-    PropertyGraph.overlayById(base, delta)
-
-  /** Resolve an edge delta overlay (latest-wins by surrogate eid). */
-  private def overlayEdges(base: DataFrame, delta: DataFrame): DataFrame =
-    PropertyGraph.overlayByKey(base, delta, "eid")
-
-  /** Fold full REPLACEMENT node rows (keyed by id) into the node delta
-    * overlay — the general MATCH…SET commit shape: O(matched + delta),
-    * never a table rewrite. Any driver write buffer drops (its
-    * rows/settled caches no longer reflect latest values); the delta
-    * checkpoints eagerly, the standing delta discipline. */
   /** A GraphDatabase that is NOT the catalog's live instance — i.e. a
     * transaction shadow. Shadow folds stay LAZY (a rolled-back
     * transaction's writes then cost nothing); COMMIT materializes
@@ -3604,40 +3538,86 @@ final class GraftSession(val spark: SparkSession,
   private def isShadow(db: GraphDatabase): Boolean =
     !(catalog.listDatabases.contains(db.name) && (catalog.database(db.name) eq db))
 
-  /** Stamp freshly-folded delta rows with the next CDC commit
-    * sequence (delta-log metadata — overlay resolution drops the
-    * column, so no query result ever sees it). One `lit` column per
-    * fold, zero extra jobs; older delta rows keep their stamps
-    * through the latest-wins union. Transaction SHADOWS stay
-    * UNSTAMPED (null) — CDC orders by commit, not statement time, so
-    * the publishing COMMIT stamps them once in [[materializeDeltas]];
-    * a null stamp reads as "this transaction / unknown" and always
+  /** The CDC commit sequence a delta-log fold stamps its rows with
+    * (metadata — overlay resolution drops the column, so no query
+    * result ever sees it); older delta rows keep their stamps through
+    * the latest-wins union. Transaction SHADOWS stay UNSTAMPED (None,
+    * a null column) — CDC orders by commit, not statement time, so the
+    * publishing COMMIT stamps them once in [[materializeDeltas]]; a
+    * null stamp reads as "this transaction / unknown" and always
     * delivers (read-your-own-writes inside the tx, conservative
     * over-delivery for pre-stamp legacy rows from disk). */
-  private def stampSeq(db: GraphDatabase, rows: DataFrame): DataFrame =
-    if (isShadow(db))
-      rows.withColumn(PropertyGraph.CdcSeqCol,
-        org.apache.spark.sql.functions.lit(null).cast("long"))
-    else rows.withColumn(PropertyGraph.CdcSeqCol,
-      org.apache.spark.sql.functions.lit(GraftSession.cdcCommitSeq.incrementAndGet()))
+  private def commitStamp(db: GraphDatabase): Option[Long] =
+    if (isShadow(db)) None else Some(GraftSession.cdcCommitSeq.incrementAndGet())
 
-  private def foldNodeDeltaRows(db: GraphDatabase, updated0: DataFrame): Unit = {
-    import org.apache.spark.sql.functions.col
-    val updated = stampSeq(db, updated0)
-    val g = db.graph
-    val (base, delta0) = db.validNodeDelta match {
-      case Some(s) =>
-        val kept = s.delta.join(updated.select(col("id").as("_dk")),
-          s.delta("id") === col("_dk"), "left_anti")
-        (s.base, PropertyGraph.appendByName(kept, updated))
-      case None => (g.nodes, updated)
+  /** The buffered delta-log commit: extend `side`'s write buffer
+    * copy-on-write with full keyed replacement `rows` (latest wins per
+    * key) and publish a LocalRelation delta rebuilt from the whole
+    * buffer — zero distributed jobs. The delta schema widens by name,
+    * first writer wins: `cols` in order, then the commit-stamp column,
+    * then any other row column typed by `typeOf`. The stamp lives IN
+    * the buffer map (the LocalRelation rebuilds from the buffer on
+    * every fold, so a stamp outside it would be lost); a replacement
+    * of an inherited stamped row drops the old stamp. `caches` updates
+    * the side's lookup caches. */
+  private def commitBuffered[B <: DeltaBuffer[B]](db: GraphDatabase, side: DeltaSide[B],
+      cols: Seq[(String, DataType)], rows: Seq[(Long, collection.Map[String, Any])],
+      typeOf: (String, Any) => DataType = (_, v) => PropertyGraph.literalType(v))(
+      caches: B => B = (b: B) => b): Unit = {
+    val seqC = PropertyGraph.CdcSeqCol
+    val old = side.valid(db)
+    val buf0 = old.flatMap(_.buf).getOrElse(side.emptyBuffer)
+    var colTypes = buf0.colTypes
+    (cols :+ (seqC -> LongType)).foreach { case (n, t) =>
+      if (!colTypes.contains(n)) colTypes += (n -> t)
     }
-    val defer = isShadow(db)
+    for ((_, r) <- rows; (n, v) <- r if !colTypes.contains(n)) colTypes += (n -> typeOf(n, v))
+    val stamp = commitStamp(db)
+    val log = rows.foldLeft(buf0.rows) { case (acc, (k, r)) =>
+      val m = r.toMap - seqC
+      acc + (k -> stamp.fold(m)(sq => m + (seqC -> sq)))
+    }
+    val deltaRows = log.valuesIterator.map { m =>
+      Row.fromSeq(colTypes.keysIterator.map(m.getOrElse(_, null)).toSeq) }.toSeq
+    val delta = spark.createDataFrame(javaList(deltaRows), StructType(colTypes.toSeq.map {
+      case (n, t) => StructField(n, t, nullable = !side.nonNull(n)) }))
+    val base = old.map(_.base).getOrElse(side.part(db.graph))
+    side.publish(db, DeltaState(base, delta, side.overlay(base, delta),
+      Some(caches(buf0).withLog(colTypes, log))))
+  }
+
+  /** The distributed delta-log fold: stamp full keyed REPLACEMENT rows
+    * ([[commitStamp]]) and extend `side`'s delta latest-wins (anti-join
+    * the standing delta on the key, then union) — or start a delta over
+    * the current frame. O(rows + delta), never a table rewrite; any
+    * driver write buffer drops (its rows and caches no longer reflect
+    * the latest values).
+    *
+    * The delta checkpoints at once, except in a transaction shadow,
+    * where COMMIT materializes it — unless `eager`. The MERGE commits
+    * pass `eager`: their new rows read the previous RESOLVED frame and
+    * the extension anti-joins the previous delta, so an unmaterialized
+    * chain roughly DOUBLES in plan size per commit (a 60-commit burst
+    * OOMed the driver stringifying one AQE plan; deferring by even one
+    * commit measured 5× SLOWER at sf0.1 — the deferred job re-scans the
+    * base once per embedded copy), and resolution consumes the delta
+    * twice (anti-join probe and union arm). */
+  private def foldDeltaRows[B <: DeltaBuffer[B]](db: GraphDatabase, side: DeltaSide[B],
+      rows: DataFrame, eager: Boolean = false): Unit = {
+    import org.apache.spark.sql.functions.{col, lit}
+    val updated = rows.withColumn(PropertyGraph.CdcSeqCol,
+      commitStamp(db).fold(lit(null).cast("long"))(lit(_)))
+    val (base, delta0) = side.valid(db) match {
+      case Some(s) =>
+        val kept = s.delta.join(updated.select(col(side.key).as("_dk")),
+          s.delta(side.key) === col("_dk"), "left_anti")
+        (s.base, PropertyGraph.appendByName(kept, updated))
+      case None => (side.part(db.graph), updated)
+    }
+    val defer = !eager && isShadow(db)
     val delta = if (defer) delta0 else delta0.localCheckpoint()
-    val resolved = overlayNodes(base, delta)
-    db.graph = PropertyGraph(resolved, g.edges)
-    db.nodeDeltaState =
-      Some(graft.core.NodeDeltaState(base, delta, resolved, materialized = !defer))
+    side.publish(db, DeltaState[B](base, delta, side.overlay(base, delta),
+      materialized = !defer))
   }
 
   /** apoc.refactor.mergeNodes core: merge the duplicate node ids into
@@ -3654,12 +3634,12 @@ final class GraftSession(val spark: SparkSession,
     * duplicate a unique value — the statement then rolls back whole). */
   private[graft] def refactorMergeNodes(ids: Seq[Long], props: String): Long = {
     import org.apache.spark.sql.functions._
-    val db = statementDatabase
+    val db = statementTarget
     db.requireStarted()
     val keep = ids.head
     val dups = ids.tail.distinct.filterNot(_ == keep)
     if (dups.isEmpty) return keep
-    withConstraintCheck(db, db) {
+    withConstraintCheck(db, statementDatabase) {
       val g = db.graph
       val all = (keep +: dups)
       val rows = g.nodes.filter(col("id").isin(all: _*)).collect()
@@ -3706,7 +3686,8 @@ final class GraftSession(val spark: SparkSession,
           }
         } :+ java.lang.Boolean.TRUE)
       }
-      foldNodeDeltaRows(db, spark.createDataFrame(javaList(keepOut +: dupOuts), outSchema))
+      foldDeltaRows(db, DeltaSide.Nodes,
+        spark.createDataFrame(javaList(keepOut +: dupOuts), outSchema))
       // relationship re-point: full replacement rows for every edge a
       // duplicate touches — self-pairs between merged nodes become
       // self-loops on the kept node (APOC's default; its mergeRels
@@ -3715,7 +3696,7 @@ final class GraftSession(val spark: SparkSession,
       val remapped = touched
         .withColumn("src", when(col("src").isin(dups: _*), lit(keep)).otherwise(col("src")))
         .withColumn("dst", when(col("dst").isin(dups: _*), lit(keep)).otherwise(col("dst")))
-      foldEdgeDeltaRows(db, remapped)
+      foldDeltaRows(db, DeltaSide.Edges, remapped)
       db.pendingMutations += 1
       unit()
     }
@@ -3734,12 +3715,12 @@ final class GraftSession(val spark: SparkSession,
   private[graft] def refactorCloneNodes(ids: Seq[Long], withRels: Boolean,
       skipProps: Set[String]): Seq[(Long, Long)] = {
     import org.apache.spark.sql.functions._
-    val db = statementDatabase
+    val db = statementTarget
     db.requireStarted()
     val orig = ids.distinct
     if (orig.isEmpty) return Nil
     var mapping: Seq[(Long, Long)] = Nil
-    withConstraintCheck(db, db) {
+    withConstraintCheck(db, statementDatabase) {
       val g = db.graph
       val rows = g.nodes.filter(col("id").isin(orig: _*)).collect()
       val byId = rows.map(r => r.getLong(r.fieldIndex("id")) -> r).toMap
@@ -3763,7 +3744,7 @@ final class GraftSession(val spark: SparkSession,
       }
       val cloneSchema = StructType(fields.toIndexedSeq.map(f =>
         f.copy(nullable = f.name != "id")))
-      foldNodeDeltaRows(db, spark.createDataFrame(javaList(cloneRows), cloneSchema))
+      foldDeltaRows(db, DeltaSide.Nodes, spark.createDataFrame(javaList(cloneRows), cloneSchema))
       if (withRels) {
         if (!db.graph.edges.columns.contains("eid"))
           throw new UnsupportedOperationException(
@@ -3794,7 +3775,7 @@ final class GraftSession(val spark: SparkSession,
             sorted.rdd.zipWithIndex.map { case (r, ix) => Row.fromSeq(r.toSeq :+ ix) },
             rnSchema)
           val eidBase = db.allocateRel(n)
-          foldEdgeDeltaRows(db,
+          foldDeltaRows(db, DeltaSide.Edges,
             numbered.withColumn("eid", lit(eidBase) + col("_rn")).drop("_rn"))
         }
       }
@@ -3811,7 +3792,7 @@ final class GraftSession(val spark: SparkSession,
     * with a fresh id). */
   private[graft] def refactorRepoint(eid: Long, nodeId: Long, end: String): Long = {
     import org.apache.spark.sql.functions._
-    val db = statementDatabase
+    val db = statementTarget
     db.requireStarted()
     val g = db.graph
     if (!g.edges.columns.contains("eid")) throw new UnsupportedOperationException(
@@ -3826,8 +3807,8 @@ final class GraftSession(val spark: SparkSession,
     // constraint-checked like node-side refactors: re-pointing an end
     // can collide with a REL_UNIQUENESS/REL_KEY-constrained (type,
     // prop) tuple, and must roll back on violation (ADVICE r16 #1)
-    withConstraintCheck(db, db) {
-      foldEdgeDeltaRows(db, hit.withColumn(endCol, lit(nodeId)))
+    withConstraintCheck(db, statementDatabase) {
+      foldDeltaRows(db, DeltaSide.Edges, hit.withColumn(endCol, lit(nodeId)))
       db.pendingMutations += 1
       unit()
     }
@@ -3840,7 +3821,7 @@ final class GraftSession(val spark: SparkSession,
     * scan), the base is never rewritten. Returns the renamed count. */
   private[graft] def refactorRenameType(oldType: String, newType: String): Long = {
     import org.apache.spark.sql.functions._
-    val db = statementDatabase
+    val db = statementTarget
     db.requireStarted()
     val g = db.graph
     if (!g.edges.columns.contains("eid")) throw new UnsupportedOperationException(
@@ -3853,8 +3834,8 @@ final class GraftSession(val spark: SparkSession,
     val n = renamed.count()
     // a bulk rename can merge the old type into a REL_*-constrained
     // target type — re-validate and roll back like the node-side twin
-    if (n > 0) withConstraintCheck(db, db) {
-      foldEdgeDeltaRows(db, renamed); db.pendingMutations += 1; unit()
+    if (n > 0) withConstraintCheck(db, statementDatabase) {
+      foldDeltaRows(db, DeltaSide.Edges, renamed); db.pendingMutations += 1; unit()
     }
     n
   }
@@ -3866,20 +3847,20 @@ final class GraftSession(val spark: SparkSession,
     * uniqueness constraint). Returns the renamed count. */
   private[graft] def refactorRenameLabel(oldLabel: String, newLabel: String): Long = {
     import org.apache.spark.sql.functions._
-    val db = statementDatabase
+    val db = statementTarget
     db.requireStarted()
     if ("^[A-Za-z_][A-Za-z0-9_]*$".r.findFirstIn(newLabel).isEmpty)
       throw new IllegalArgumentException(
         s"apoc.refactor.rename.label target `$newLabel` must be a plain identifier")
     var n = 0L
-    withConstraintCheck(db, db) {
+    withConstraintCheck(db, statementDatabase) {
       val g = db.graph
       val renamed = g.nodes.filter(array_contains(col("labels"), oldLabel))
         .withColumn("labels", array_distinct(transform(col("labels"),
           x => when(x === lit(oldLabel), lit(newLabel)).otherwise(x))))
         .localCheckpoint()
       n = renamed.count()
-      if (n > 0) { foldNodeDeltaRows(db, renamed); db.pendingMutations += 1 }
+      if (n > 0) { foldDeltaRows(db, DeltaSide.Nodes, renamed); db.pendingMutations += 1 }
       unit()
     }
     n
@@ -3910,24 +3891,24 @@ final class GraftSession(val spark: SparkSession,
   }
 
   private[graft] def refactorRenameNodeProperty(oldName: String, newName: String): Long = {
-    val db = statementDatabase
+    val db = statementTarget
     db.requireStarted()
     val g = db.graph
     if (!g.nodes.columns.contains(oldName)) return 0L
     var n = 0L
-    withConstraintCheck(db, db) {
+    withConstraintCheck(db, statementDatabase) {
       val renamed = renamePropertyFrame(g.nodes, oldName, newName,
         Set("id", "labels") ++ PropertyGraph.MetaDeltaCols,
         "apoc.refactor.rename.nodeProperty").localCheckpoint()
       n = renamed.count()
-      if (n > 0) { foldNodeDeltaRows(db, renamed); db.pendingMutations += 1 }
+      if (n > 0) { foldDeltaRows(db, DeltaSide.Nodes, renamed); db.pendingMutations += 1 }
       unit()
     }
     n
   }
 
   private[graft] def refactorRenameTypeProperty(oldName: String, newName: String): Long = {
-    val db = statementDatabase
+    val db = statementTarget
     db.requireStarted()
     val g = db.graph
     if (!g.edges.columns.contains("eid")) throw new UnsupportedOperationException(
@@ -3939,8 +3920,8 @@ final class GraftSession(val spark: SparkSession,
     val n = renamed.count()
     // values landing under a REL_*-constrained (type, prop) must
     // re-validate — same rollback contract as the node-property twin
-    if (n > 0) withConstraintCheck(db, db) {
-      foldEdgeDeltaRows(db, renamed); db.pendingMutations += 1; unit()
+    if (n > 0) withConstraintCheck(db, statementDatabase) {
+      foldDeltaRows(db, DeltaSide.Edges, renamed); db.pendingMutations += 1; unit()
     }
     n
   }
@@ -3952,7 +3933,7 @@ final class GraftSession(val spark: SparkSession,
     * fold both key on the replacement row's relType. */
   private[graft] def refactorSetType(eid: Long, newType: String): Long = {
     import org.apache.spark.sql.functions._
-    val db = statementDatabase
+    val db = statementTarget
     db.requireStarted()
     val g = db.graph
     if (!g.edges.columns.contains("eid")) throw new UnsupportedOperationException(
@@ -3964,8 +3945,8 @@ final class GraftSession(val spark: SparkSession,
     if (hit.take(1).isEmpty) throw new NoSuchElementException(
       s"apoc.refactor.setType: no relationship with id $eid")
     // the new type may be REL_*-constrained — check and roll back
-    withConstraintCheck(db, db) {
-      foldEdgeDeltaRows(db, hit.withColumn("relType", lit(newType)))
+    withConstraintCheck(db, statementDatabase) {
+      foldDeltaRows(db, DeltaSide.Edges, hit.withColumn("relType", lit(newType)))
       db.pendingMutations += 1
       unit()
     }
@@ -3976,7 +3957,7 @@ final class GraftSession(val spark: SparkSession,
     * orientation (src ↔ dst), same eid-keyed fold. */
   private[graft] def refactorInvert(eid: Long): Long = {
     import org.apache.spark.sql.functions._
-    val db = statementDatabase
+    val db = statementTarget
     db.requireStarted()
     val g = db.graph
     if (!g.edges.columns.contains("eid")) throw new UnsupportedOperationException(
@@ -3990,8 +3971,8 @@ final class GraftSession(val spark: SparkSession,
       case c     => col(c)
     }.toIndexedSeq: _*)
     // endpoint swap can collide under a REL_UNIQUENESS constraint
-    withConstraintCheck(db, db) {
-      foldEdgeDeltaRows(db, inverted)
+    withConstraintCheck(db, statementDatabase) {
+      foldDeltaRows(db, DeltaSide.Edges, inverted)
       db.pendingMutations += 1
       unit()
     }
@@ -4008,7 +3989,7 @@ final class GraftSession(val spark: SparkSession,
   private[graft] def writeNodeProperty(result: DataFrame, idCol: String,
       valueCol: String, prop: String): Long = {
     import org.apache.spark.sql.functions.col
-    val db = statementDatabase
+    val db = statementTarget
     db.requireStarted()
     val scores = result.select(col(idCol).cast("long").as("_wid"),
       col(valueCol).as("_wval")).localCheckpoint()
@@ -4016,7 +3997,7 @@ final class GraftSession(val spark: SparkSession,
     val g = db.graph
     val updated = g.nodes.join(scores, col("id") === col("_wid"))
       .withColumn(prop, col("_wval")).drop("_wid", "_wval")
-    foldNodeDeltaRows(db, updated)
+    foldDeltaRows(db, DeltaSide.Nodes, updated)
     db.pendingMutations += 1
     n
   }
@@ -4039,16 +4020,14 @@ final class GraftSession(val spark: SparkSession,
       identProps: Map[String, Any], onCreate: Map[String, Any],
       onMatch: Map[String, Any]): Boolean = {
     import org.apache.spark.sql.functions.{col, lit}
-    import scala.collection.immutable.VectorMap
-    val db = statementDatabase
+    val db = statementTarget
     db.requireStarted()
     val g = db.graph
     if (!g.edges.columns.contains("eid")) return false
-    if (!db.validEdgeDelta.forall(_.buf.isDefined)) return false
-    if (!db.validEdgeDelta.flatMap(_.buf).forall(_.rows.size <= 100000)) return false
+    if (!DeltaSide.Edges.bufferable(db)) return false
     val ident = identProps.view.mapValues(norm).toMap
     if (ident.valuesIterator.contains(null)) return false // {k: null} needs MERGE's refusal
-    withConstraintCheck(db, db) {
+    withConstraintCheck(db, statementDatabase) {
       // endpoint existence (MATCH semantics: either missing ⇒ no-op)
       val nodeHits = g.nodes.filter(col("id").isin(Seq(sid, did).distinct: _*))
         .select(col("id")).collect().map(_.getLong(0)).toSet
@@ -4065,63 +4044,25 @@ final class GraftSession(val spark: SparkSession,
         val hitRows = probe.collect()
         if (hitRows.isEmpty || onMatch.nonEmpty) {
           val schema = g.edges.schema
-          val oldState = db.validEdgeDelta
-          val buf0 = oldState.flatMap(_.buf).getOrElse(
-            graft.core.EdgeDeltaBuffer(VectorMap.empty, VectorMap.empty))
-          var colTypes = buf0.colTypes
-          Seq("src" -> LongType, "dst" -> LongType,
-            "relType" -> (StringType: DataType), "eid" -> LongType,
-            PropertyGraph.CdcSeqCol -> LongType).foreach { case (n, t) =>
-            if (!colTypes.contains(n)) colTypes += (n -> t)
-          }
-          val stamp = if (isShadow(db)) None
-            else Some(GraftSession.cdcCommitSeq.incrementAndGet())
-          def withStamp(m: Map[String, Any]): Map[String, Any] =
-            stamp.fold(m - PropertyGraph.CdcSeqCol)(s =>
-              m - PropertyGraph.CdcSeqCol + (PropertyGraph.CdcSeqCol -> s))
-          var rows = buf0.rows
-          if (hitRows.isEmpty) {
-            // miss: one created edge, ON CREATE applied
-            val eid = db.allocateRel(1L)
-            val m = Map[String, Any]("src" -> sid, "dst" -> did,
-              "relType" -> relType, "eid" -> eid) ++
-              ident ++ onCreate.view.mapValues(norm).toMap
-            m.foreach { case (n, v) =>
-              if (v != null && !colTypes.contains(n))
-                colTypes += (n -> PropertyGraph.literalType(v))
+          val om = onMatch.view.mapValues(norm).toMap
+          val rows =
+            if (hitRows.isEmpty) {
+              // miss: one created edge, ON CREATE applied
+              val eid = db.allocateRel(1L)
+              Seq(eid -> (Map[String, Any]("src" -> sid, "dst" -> did,
+                "relType" -> relType, "eid" -> eid) ++ ident ++ onCreate.view.mapValues(norm)))
+            } else hitRows.toSeq.map { r =>
+              // hits: ON MATCH applies to EVERY matched eid (parallel
+              // edges sharing the ident values), full replacement rows
+              r.getLong(r.fieldIndex("eid")) -> (r.getValuesMap[Any](schema.fieldNames) ++ om)
             }
-            rows += (eid -> withStamp(m))
-          } else {
-            // hits: ON MATCH applies to EVERY matched eid (parallel
-            // edges sharing the ident values), full replacement rows
-            val om = onMatch.view.mapValues(norm).toMap
-            om.foreach { case (n, v) =>
-              if (v != null && !colTypes.contains(n))
-                colTypes += (n -> PropertyGraph.literalType(v))
-            }
-            hitRows.foreach { r =>
-              val base: Map[String, Any] = schema.fieldNames.iterator.flatMap { n =>
-                val i = r.fieldIndex(n)
-                if (r.isNullAt(i)) None else Some(n -> r.get(i))
-              }.toMap
-              val eid = r.getLong(r.fieldIndex("eid"))
-              rows += (eid -> withStamp(base ++ om))
-            }
-          }
-          val buf = graft.core.EdgeDeltaBuffer(colTypes, rows, buf0.settled,
-            buf0.nodeBind, buf0.nodeBindRef)
-          val deltaSchema = StructType(colTypes.toSeq.map { case (n, t) =>
-            StructField(n, t,
-              nullable = !Set("src", "dst", "relType", "eid").contains(n)) })
-          val deltaRows = rows.valuesIterator.map { mrow =>
-            Row.fromSeq(colTypes.keysIterator.map(n => mrow.getOrElse(n, null)).toSeq)
-          }.toSeq
-          val delta = spark.createDataFrame(javaList(deltaRows), deltaSchema)
-          val base = oldState.map(_.base).getOrElse(g.edges)
-          val resolved = overlayEdges(base, delta)
-          db.graph = PropertyGraph(g.nodes, resolved)
-          db.edgeDeltaState =
-            Some(graft.core.EdgeDeltaState(base, delta, resolved, Some(buf)))
+          // null values stay out of the row (and of the schema); a
+          // matched row's own columns keep their base types
+          commitBuffered(db, DeltaSide.Edges, Seq("src" -> LongType, "dst" -> LongType,
+              "relType" -> StringType, "eid" -> LongType),
+            rows.map { case (k, m) => k -> m.filter(_._2 != null) },
+            (n, v) => if (hitRows.isEmpty || om.contains(n)) PropertyGraph.literalType(v)
+              else schema(n).dataType)()
           db.pendingMutations += 1
         }
       }
@@ -4143,7 +4084,7 @@ final class GraftSession(val spark: SparkSession,
   private[graft] def writeRelationships(result: DataFrame, srcCol: String,
       dstCol: String, valueCol: String, relType: String, prop: String): Long = {
     import org.apache.spark.sql.functions.{col, lit}
-    val db = statementDatabase
+    val db = statementTarget
     db.requireStarted()
     // same up-front guard as the sibling relationship mutators
     // (refactorRepoint/cloneNodes): fail clearly BEFORE advancing the
@@ -4165,14 +4106,14 @@ final class GraftSession(val spark: SparkSession,
     // the allocate + fold runs under the constraint-check/rollback
     // wrapper like the sibling mutators, so a mid-fold failure
     // restores the eid allocator and the pre-write frames
-    withConstraintCheck(db, db) {
+    withConstraintCheck(db, statementDatabase) {
       val eidBase = db.allocateRel(n)
       val updated = numbered
         .withColumn("eid", lit(eidBase) + col("_rn"))
         .withColumn("relType", lit(relType))
         .withColumn(prop, col("_wval"))
         .drop("_rn", "_wval")
-      foldEdgeDeltaRows(db, updated)
+      foldDeltaRows(db, DeltaSide.Edges, updated)
       unit()
     }
     db.pendingMutations += 1
@@ -4181,75 +4122,36 @@ final class GraftSession(val spark: SparkSession,
 
   /** Materialize any LAZY delta a transaction shadow accumulated —
     * called at COMMIT, so published overlays are always checkpointed
-    * (the read side may consume a delta twice per resolution). */
+    * (the read side may consume a delta twice per resolution).
+    *
+    * Commit-time CDC ordering (the Neo4j CDC contract: change
+    * identifiers are assigned at COMMIT): rows this transaction wrote
+    * folded UNSTAMPED ([[commitStamp]]), so the publishing commit
+    * stamps every null-sequence row with ONE fresh sequence here — a
+    * cursor minted while the transaction was open still sees its rows.
+    * Inherited live-delta rows keep their original stamps
+    * (null-coalesce). Cost: one small checkpoint per mutated side per
+    * COMMIT, on delta-sized data. */
   private def materializeDeltas(sh: GraphDatabase): Unit = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit}
-    // Commit-time CDC ordering (the Neo4j CDC contract: change
-    // identifiers are assigned at COMMIT): rows this transaction wrote
-    // folded UNSTAMPED (stampSeq's shadow branch), so the publishing
-    // commit stamps every null-sequence row with ONE fresh sequence
-    // here — a cursor minted while the transaction was open still sees
-    // its rows. Inherited live-delta rows keep their original stamps
-    // (null-coalesce). Cost: one small checkpoint per mutated side per
-    // COMMIT, on delta-sized data.
-    val seqC = PropertyGraph.CdcSeqCol
     lazy val pubSeq = GraftSession.cdcCommitSeq.incrementAndGet()
-    def restamp(delta: DataFrame): DataFrame =
-      if (delta.columns.contains(seqC))
-        delta.withColumn(seqC, coalesce(col(seqC), lit(pubSeq)))
-      else delta.withColumn(seqC, lit(pubSeq))
-    sh.validNodeDelta.foreach { s =>
-      val delta = restamp(s.delta).localCheckpoint()
-      // the driver buffer mirrors the stamps: a later buffered fold
-      // rebuilds the LocalRelation from these maps, so a stamp only on
-      // the frame would be lost at the next fold
-      val buf = s.buf.map { b =>
-        b.copy(
-          colTypes = if (b.colTypes.contains(seqC)) b.colTypes
-            else b.colTypes + (seqC -> LongType),
-          rows = b.rows.map { case (k, m) =>
-            if (m.contains(seqC)) (k, m) else (k, m + (seqC -> pubSeq)) })
-      }
-      val resolved = overlayNodes(s.base, delta)
-      sh.graph = PropertyGraph(resolved, sh.graph.edges)
-      sh.nodeDeltaState =
-        Some(graft.core.NodeDeltaState(s.base, delta, resolved, buf))
-    }
-    sh.validEdgeDelta.foreach { s =>
-      val delta = restamp(s.delta).localCheckpoint()
-      val buf = s.buf.map { b =>
-        b.copy(
-          colTypes = if (b.colTypes.contains(seqC)) b.colTypes
-            else b.colTypes + (seqC -> LongType),
-          rows = b.rows.map { case (k, m) =>
-            if (m.contains(seqC)) (k, m) else (k, m + (seqC -> pubSeq)) })
-      }
-      val resolved = overlayEdges(s.base, delta)
-      sh.graph = PropertyGraph(sh.graph.nodes, resolved)
-      sh.edgeDeltaState =
-        Some(graft.core.EdgeDeltaState(s.base, delta, resolved, buf))
-    }
+    restampSide(sh, DeltaSide.Nodes, pubSeq)
+    restampSide(sh, DeltaSide.Edges, pubSeq)
   }
 
-  /** Edge mirror of [[foldNodeDeltaRows]] (replacement rows keyed by
-    * surrogate eid). */
-  private def foldEdgeDeltaRows(db: GraphDatabase, updated0: DataFrame): Unit = {
-    import org.apache.spark.sql.functions.col
-    val updated = stampSeq(db, updated0)
-    val g = db.graph
-    val (base, delta0) = db.validEdgeDelta match {
-      case Some(s) =>
-        val kept = s.delta.join(updated.select(col("eid").as("_dk")),
-          s.delta("eid") === col("_dk"), "left_anti")
-        (s.base, PropertyGraph.appendByName(kept, updated))
-      case None => (g.edges, updated)
-    }
-    val defer = isShadow(db)
-    val delta = if (defer) delta0 else delta0.localCheckpoint()
-    val resolved = overlayEdges(base, delta)
-    db.graph = PropertyGraph(g.nodes, resolved)
-    db.edgeDeltaState =
-      Some(graft.core.EdgeDeltaState(base, delta, resolved, materialized = !defer))
+  private def restampSide[B <: DeltaBuffer[B]](sh: GraphDatabase, side: DeltaSide[B],
+      pubSeq: => Long): Unit = side.valid(sh).foreach { s =>
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
+    val seqC = PropertyGraph.CdcSeqCol
+    val delta = (if (s.delta.columns.contains(seqC))
+        s.delta.withColumn(seqC, coalesce(col(seqC), lit(pubSeq)))
+      else s.delta.withColumn(seqC, lit(pubSeq))).localCheckpoint()
+    // the driver buffer mirrors the stamps: a later buffered fold
+    // rebuilds the LocalRelation from these maps, so a stamp only on
+    // the frame would be lost at the next fold
+    val buf = s.buf.map(b => b.withLog(
+      if (b.colTypes.contains(seqC)) b.colTypes else b.colTypes + (seqC -> LongType),
+      b.rows.map { case (k, m) => if (m.contains(seqC)) (k, m) else (k, m + (seqC -> pubSeq)) }))
+    side.publish(sh, DeltaState(s.base, delta, side.overlay(s.base, delta), buf))
   }
 
   /** Buffered batch SET, node side: collect the bounded hit rows ONCE
@@ -4263,46 +4165,17 @@ final class GraftSession(val spark: SparkSession,
   private def upsertNodesBuffered(db: GraphDatabase, ids: Seq[Long],
       setKey: String, setValue: Any, setType: DataType): Unit = {
     import org.apache.spark.sql.functions.col
-    import scala.collection.immutable.VectorMap
     if (ids.isEmpty) return
-    val g = db.graph
-    val hitRows = g.nodes.filter(col("id").isin(ids: _*)).collect()
+    val nodes = db.graph.nodes
+    val hitRows = nodes.filter(col("id").isin(ids: _*)).collect()
     if (hitRows.isEmpty) return
-    val schema = g.nodes.schema
-    val oldState = db.validNodeDelta
-    val buf0 = oldState.flatMap(_.buf).getOrElse(
-      graft.core.NodeDeltaBuffer(VectorMap.empty, VectorMap.empty))
-    var colTypes = buf0.colTypes
-    schema.fields.foreach { f =>
-      if (!colTypes.contains(f.name)) colTypes += (f.name -> f.dataType)
-    }
-    if (!colTypes.contains(setKey)) colTypes += (setKey -> setType)
-    if (!colTypes.contains(PropertyGraph.CdcSeqCol))
-      colTypes += (PropertyGraph.CdcSeqCol -> LongType)
-    val stamp = if (isShadow(db)) None
-      else Some(GraftSession.cdcCommitSeq.incrementAndGet())
-    var rows = buf0.rows
-    hitRows.foreach { r =>
-      val id = r.getLong(r.fieldIndex("id"))
-      val m0: Map[String, Any] = schema.fieldNames.iterator.flatMap { n =>
-        val i = r.fieldIndex(n)
-        if (r.isNullAt(i)) None else Some(n -> r.get(i))
-      }.toMap
-      val m = m0 + (setKey -> setValue) - PropertyGraph.CdcSeqCol
-      rows += (id -> stamp.fold(m)(s => m + (PropertyGraph.CdcSeqCol -> s)))
-    }
-    val buf = graft.core.NodeDeltaBuffer(colTypes, rows, buf0.settled, buf0.shape)
-    val deltaSchema = StructType(colTypes.toSeq.map { case (n, t) =>
-      StructField(n, t, nullable = n != "id") })
-    val deltaRows = rows.valuesIterator.map { mrow =>
-      Row.fromSeq(colTypes.keysIterator.map(n => mrow.getOrElse(n, null)).toSeq)
-    }.toSeq
-    val delta = spark.createDataFrame(javaList(deltaRows), deltaSchema)
-    val base = oldState.map(_.base).getOrElse(g.nodes)
-    val resolved = overlayNodes(base, delta)
-    db.graph = PropertyGraph(resolved, g.edges)
-    db.nodeDeltaState =
-      Some(graft.core.NodeDeltaState(base, delta, resolved, Some(buf)))
+    val names = nodes.schema.fieldNames
+    commitBuffered(db, DeltaSide.Nodes,
+      nodes.schema.fields.toSeq.map(f => f.name -> f.dataType) :+ (setKey -> setType),
+      hitRows.toSeq.map { r =>
+        r.getLong(r.fieldIndex("id")) ->
+          (r.getValuesMap[Any](names).filter(_._2 != null) + (setKey -> setValue))
+      })()
   }
 
   /** Buffered batch DELETE, node side: fold driver-collected ids into
@@ -4317,31 +4190,17 @@ final class GraftSession(val spark: SparkSession,
     * absent in the merge paths, so a later MERGE on its key creates
     * fresh (resurrection with a fresh id, never this row). */
   private def tombstoneNodesBuffered(db: GraphDatabase, ids: Seq[Long]): Unit = {
-    import scala.collection.immutable.VectorMap
-    val g = db.graph
-    val oldState = db.validNodeDelta
-    val buf0 = oldState.flatMap(_.buf).getOrElse(
-      graft.core.NodeDeltaBuffer(VectorMap.empty, VectorMap.empty))
-    var colTypes = buf0.colTypes
-    if (!colTypes.contains("id")) colTypes += ("id" -> LongType)
-    if (!colTypes.contains("labels"))
-      colTypes += ("labels" -> org.apache.spark.sql.types.ArrayType(StringType))
-    if (!colTypes.contains(PropertyGraph.TombstoneCol))
-      colTypes += (PropertyGraph.TombstoneCol -> BooleanType)
-    if (!colTypes.contains(PropertyGraph.CdcSeqCol))
-      colTypes += (PropertyGraph.CdcSeqCol -> LongType)
-    val stamp = if (isShadow(db)) None
-      else Some(GraftSession.cdcCommitSeq.incrementAndGet())
+    import org.apache.spark.sql.functions.col
+    val tomb = PropertyGraph.TombstoneCol
     // tombstones carry the deleted node's LABELS (one isin-pruned
     // bounded lookup, buffer rows answered free): the CDC 'd' event's
     // detail is the label set — a minimal {id, flag} row would read
     // back empty there, diverging from the distributed fold's
     // full-row tombstones
-    import org.apache.spark.sql.functions.col
-    val idSet = ids.toSet
-    val bufLabels: Map[Long, Any] = buf0.rows.collect {
-      case (id, m) if idSet.contains(id) && m.contains("labels") => id -> m("labels")
-    }
+    val bufRows = db.validNodeDelta.flatMap(_.buf)
+      .getOrElse(DeltaSide.Nodes.emptyBuffer).rows
+    val bufLabels: Map[Long, Any] = ids.flatMap(id =>
+      bufRows.get(id).flatMap(_.get("labels")).map(id -> _)).toMap
     val missing = ids.filterNot(bufLabels.contains)
     val baseLabels: Map[Long, Any] =
       if (missing.isEmpty) Map.empty
@@ -4349,24 +4208,10 @@ final class GraftSession(val spark: SparkSession,
         .select(col("id"), col("labels")).collect()
         .map(r => r.getLong(0) -> r.get(1)).toMap
     val labelsOf = bufLabels ++ baseLabels
-    var rows = buf0.rows
-    ids.foreach { id =>
-      val m = Map[String, Any]("id" -> id, PropertyGraph.TombstoneCol -> true) ++
-        labelsOf.get(id).map("labels" -> _)
-      rows += (id -> stamp.fold(m)(s => m + (PropertyGraph.CdcSeqCol -> s)))
-    }
-    val buf = graft.core.NodeDeltaBuffer(colTypes, rows, buf0.settled, buf0.shape)
-    val deltaSchema = StructType(colTypes.toSeq.map { case (n, t) =>
-      StructField(n, t, nullable = n != "id") })
-    val deltaRows = rows.valuesIterator.map { mrow =>
-      Row.fromSeq(colTypes.keysIterator.map(n => mrow.getOrElse(n, null)).toSeq)
-    }.toSeq
-    val delta = spark.createDataFrame(javaList(deltaRows), deltaSchema)
-    val base = oldState.map(_.base).getOrElse(g.nodes)
-    val resolved = overlayNodes(base, delta)
-    db.graph = PropertyGraph(resolved, g.edges)
-    db.nodeDeltaState =
-      Some(graft.core.NodeDeltaState(base, delta, resolved, Some(buf)))
+    commitBuffered(db, DeltaSide.Nodes,
+      Seq("id" -> LongType, "labels" -> ArrayType(StringType), tomb -> BooleanType),
+      ids.map(id => id -> (Map[String, Any]("id" -> id, tomb -> true) ++
+        labelsOf.get(id).map("labels" -> _))))()
   }
 
   /** Buffered batch DELETE, relationship side — the eid-keyed mirror
@@ -4375,67 +4220,18 @@ final class GraftSession(val spark: SparkSession,
     * non-null; the merge paths skip flagged rows explicitly. */
   private def tombstoneEdgesBuffered(db: GraphDatabase,
       hits: Seq[(Long, Long, Long, String)]): Unit = {
-    import scala.collection.immutable.VectorMap
-    val g = db.graph
-    val oldState = db.validEdgeDelta
-    val buf0 = oldState.flatMap(_.buf).getOrElse(
-      graft.core.EdgeDeltaBuffer(VectorMap.empty, VectorMap.empty))
-    var colTypes = buf0.colTypes
-    Seq("src" -> LongType, "dst" -> LongType,
-      "relType" -> (StringType: DataType), "eid" -> LongType,
-      PropertyGraph.TombstoneCol -> BooleanType).foreach { case (n, t) =>
-      if (!colTypes.contains(n)) colTypes += (n -> t)
-    }
-    if (!colTypes.contains(PropertyGraph.CdcSeqCol))
-      colTypes += (PropertyGraph.CdcSeqCol -> LongType)
-    val stamp = if (isShadow(db)) None
-      else Some(GraftSession.cdcCommitSeq.incrementAndGet())
-    var rows = buf0.rows
-    hits.foreach { case (eid, s, d, rt) =>
-      val m = Map[String, Any]("eid" -> eid, "src" -> s, "dst" -> d,
-        "relType" -> rt, PropertyGraph.TombstoneCol -> true)
-      rows += (eid -> stamp.fold(m)(sq => m + (PropertyGraph.CdcSeqCol -> sq)))
-    }
-    val buf = graft.core.EdgeDeltaBuffer(colTypes, rows, buf0.settled,
-      buf0.nodeBind, buf0.nodeBindRef)
-    val deltaSchema = StructType(colTypes.toSeq.map { case (n, t) =>
-      StructField(n, t,
-        nullable = !Set("src", "dst", "relType", "eid").contains(n))
-    })
-    val deltaRows = rows.valuesIterator.map { row =>
-      Row.fromSeq(colTypes.keysIterator.map(n => row.getOrElse(n, null)).toSeq)
-    }.toSeq
-    val delta = spark.createDataFrame(javaList(deltaRows), deltaSchema)
-    val base = oldState.map(_.base).getOrElse(g.edges)
-    val resolved = overlayEdges(base, delta)
-    db.graph = PropertyGraph(g.nodes, resolved)
-    db.edgeDeltaState =
-      Some(graft.core.EdgeDeltaState(base, delta, resolved, Some(buf)))
+    val tomb = PropertyGraph.TombstoneCol
+    commitBuffered(db, DeltaSide.Edges, Seq("src" -> LongType, "dst" -> LongType,
+        "relType" -> StringType, "eid" -> LongType, tomb -> BooleanType),
+      hits.map { case (eid, s, d, rt) =>
+        eid -> Map[String, Any]("eid" -> eid, "src" -> s, "dst" -> d, "relType" -> rt, tomb -> true)
+      })()
   }
 
-  /** Batched relationship upsert — `UNWIND $batch AS row
-    * MATCH (a:L {k: row.src}), (b:M {k: row.dst}) MERGE (a)-[r:T]->(b)
-    * [ON CREATE SET …] [ON MATCH SET …]` — the second half of the Bolt
-    * drivers' batch-write idiom (node batch first, then the edge batch
-    * keyed by business ids; ref DatabaseIO.java:121-132 ships the
-    * parameter map on session.run).
-    *
-    * Declarative, constant plan depth: the batch lands as ONE local
-    * DataFrame whose per-variable key columns equi-join (broadcast)
-    * against the node table to bind each endpoint id — MATCH
-    * semantics, so keys that bind nothing drop — and the resulting
-    * binding table feeds the same anti-join/update-by-join core as
-    * MATCH … MERGE ([[mergeRelFromBindings]]): a 10k-pair batch is a
-    * handful of joins, never 10k probes.
-    *
-    * SET values are restricted to literals and the merged
-    * relationship's own properties (row fields inside SET would need
-    * per-pair value carriage through the distinct — refused loudly;
-    * batch edge payloads belong in the node/edge CREATE paths). */
   /** Driver-buffered relationship upsert over a whole MERGE pattern
     * (see the call site in [[mutateUnwindMatchMerge]]) — one or more
-    * directed typed prop-free hops, every endpoint a distinct bound
-    * variable. Whole-pattern semantics mirror the distributed path
+    * directed typed hops whose literal props join the merge identity,
+    * every endpoint a distinct bound variable. Whole-pattern semantics mirror the distributed path
     * exactly: a candidate binding is a hit only if EVERY hop exists;
     * a miss creates every hop (per-hop pairs dedupe, hops that
     * individually pre-exist gain a parallel edge); ON MATCH applies
@@ -4443,7 +4239,7 @@ final class GraftSession(val spark: SparkSession,
     * hops when two hops touch the same edge row.
     *
     * Returns None when an eligibility detail only visible here fails
-    * (undirected/multi-type hop, literal rel props, non-driver-
+    * (undirected/multi-type hop, row-field or null rel props, non-driver-
     * evaluable SET, ambiguous endpoint keys, non-canonical key types,
     * value/type mismatch) — the caller then runs the distributed
     * path. Pure until the final state assignment: a None bail leaves
@@ -4452,7 +4248,6 @@ final class GraftSession(val spark: SparkSession,
       nodePats: Seq[ast.NodePat], vars: Seq[String],
       keyCols: Seq[(String, String, Any => Any)], m: ast.Merge): Option[DataFrame] = {
     import org.apache.spark.sql.functions._
-    import scala.collection.immutable.VectorMap
     val g = db.graph
     if (!g.edges.columns.contains("eid")) return None
 
@@ -4540,8 +4335,7 @@ final class GraftSession(val spark: SparkSession,
     }
 
     val oldState = db.validEdgeDelta
-    val buf0 = oldState.flatMap(_.buf)
-      .getOrElse(graft.core.EdgeDeltaBuffer(VectorMap.empty, VectorMap.empty))
+    val buf0 = oldState.flatMap(_.buf).getOrElse(DeltaSide.Edges.emptyBuffer)
     val base = oldState.map(_.base).getOrElse(g.edges)
     if (!base.columns.contains("eid")) return None
 
@@ -4656,12 +4450,10 @@ final class GraftSession(val spark: SparkSession,
     }
 
     // ---- 4. evaluate SET driver-side (exact node-path discipline) ---
-    var colTypes = buf0.colTypes
     def colType(name: String, v: Any): DataType =
       baseIdx.get(name).map(i => baseSchema(i).dataType)
-        .orElse(colTypes.get(name))
+        .orElse(buf0.colTypes.get(name))
         .getOrElse(PropertyGraph.literalType(v))
-    def knownCol(k: String): Boolean = baseIdx.contains(k) || colTypes.contains(k)
     def fits(v: Any, t: DataType): Option[Any] = (v, t) match {
       case (null, _)                 => Some(null)
       case (x: Long, LongType)       => Some(x)
@@ -4760,38 +4552,33 @@ final class GraftSession(val spark: SparkSession,
     if (!typeOk) return None
 
     // ---- 5. commit: copy-on-write buffer → LocalRelation delta ------
-    Seq("src" -> LongType, "dst" -> LongType,
-      "relType" -> (StringType: DataType), "eid" -> LongType,
-      PropertyGraph.CdcSeqCol -> LongType).foreach {
-      case (n, t) => if (!colTypes.contains(n)) colTypes += (n -> t)
-    }
-    (replacements ++ created).foreach { case (_, cur) =>
-      cur.foreach { case (n, v) =>
-        if (!colTypes.contains(n)) colTypes += (n -> colType(n, v))
-      }
-    }
-    val cdcStamp = if (isShadow(db)) None
-      else Some(GraftSession.cdcCommitSeq.incrementAndGet())
-    var rows = buf0.rows
-    (replacements ++ created).foreach { case (eid, cur) =>
-      val m = cur - PropertyGraph.CdcSeqCol
-      rows += (eid -> cdcStamp.fold(m)(s => m + (PropertyGraph.CdcSeqCol -> s))) }
-    val buf = graft.core.EdgeDeltaBuffer(colTypes, rows, settled,
-      bindCache, Some(g.nodes))
-    val deltaSchema = StructType(colTypes.toSeq.map { case (n, t) =>
-      StructField(n, t,
-        nullable = !Set("src", "dst", "relType", "eid").contains(n))
-    })
-    val deltaRows = rows.valuesIterator.map { row =>
-      Row.fromSeq(colTypes.keysIterator.map(n => row.getOrElse(n, null)).toSeq)
-    }.toSeq
-    val delta = spark.createDataFrame(javaList(deltaRows), deltaSchema)
-    val resolved = overlayEdges(base, delta)
-    db.graph = PropertyGraph(g.nodes, resolved)
-    db.edgeDeltaState = Some(graft.core.EdgeDeltaState(base, delta, resolved, Some(buf)))
+    commitBuffered(db, DeltaSide.Edges, Seq("src" -> LongType, "dst" -> LongType,
+        "relType" -> StringType, "eid" -> LongType),
+      replacements ++ created, colType)(
+      _.copy(settled = settled, nodeBind = bindCache, nodeBindRef = Some(g.nodes)))
     Some(unit())
   }
 
+  /** Batched relationship upsert — `UNWIND $batch AS row
+    * MATCH (a:L {k: row.src}), (b:M {k: row.dst}) MERGE (a)-[r:T]->(b)
+    * [ON CREATE SET …] [ON MATCH SET …]` — the second half of the Bolt
+    * drivers' batch-write idiom (node batch first, then the edge batch
+    * keyed by business ids; ref DatabaseIO.java:121-132 ships the
+    * parameter map on session.run).
+    *
+    * Declarative, constant plan depth: the batch lands as ONE local
+    * DataFrame whose per-variable key columns equi-join (broadcast)
+    * against the node table to bind each endpoint id — MATCH
+    * semantics, so keys that bind nothing drop — and the resulting
+    * binding table feeds the same anti-join/update-by-join core as
+    * MATCH … MERGE ([[mergeRelFromBindings]]): a 10k-pair batch is a
+    * handful of joins, never 10k probes. A bounded batch first tries
+    * the driver-buffered commit ([[mutateRelUpsertBuffered]]).
+    *
+    * SET values are restricted to literals and the merged
+    * relationship's own properties (row fields inside SET would need
+    * per-pair value carriage through the distinct — refused loudly;
+    * batch edge payloads belong in the node/edge CREATE paths). */
   private def mutateUnwindMatchMerge(db: GraphDatabase, u: ast.Unwind,
       matches: Seq[ast.Match], merges: Seq[ast.Merge]): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -4866,8 +4653,7 @@ final class GraftSession(val spark: SparkSession,
     if (merges.size == 1 && merges.head.pattern.hops.nonEmpty &&
         merges.head.pattern.hops.size <= 4 &&
         elems.size <= 10000 &&
-        db.validEdgeDelta.forall(_.buf.isDefined) &&
-        db.validEdgeDelta.flatMap(_.buf).forall(_.rows.size <= 100000)) {
+        DeltaSide.Edges.bufferable(db)) {
       mutateRelUpsertBuffered(db, elems, nodePats, vars, keyCols, merges.head) match {
         case Some(out) => return out
         case None      => () // ineligible detail → distributed path below
@@ -5025,7 +4811,7 @@ final class GraftSession(val spark: SparkSession,
       // edge delta overlay — the full edge table is never rewritten,
       // so a MERGE ON MATCH commit costs O(hits + delta), not
       // O(table). This is the edge half of the mutation delta-log
-      // (node half: NodeDeltaState; ref analog: txn logs under
+      // (see [[foldDeltaRows]]; ref analog: txn logs under
       // /data/transactions, docker-entrypoint.sh:521-532).
       //
       // `working` threads earlier hops' updates into later hops'
@@ -5124,31 +4910,9 @@ final class GraftSession(val spark: SparkSession,
       appended.foreach(foldDelta)
 
       // Commit: fold the new replacement/created rows into the edge
-      // delta (latest-wins per eid across commits), checkpoint the
-      // delta EAGERLY — same load-bearing reasoning as the node path:
-      // the next commit's lookups read the resolved frame and the
-      // extension anti-joins the previous delta, so an unmaterialized
-      // chain doubles in plan size per commit — and publish the
-      // overlay. The base edge table is never rewritten.
-      deltaAcc.foreach { nd0 =>
-        val nd = stampSeq(db, nd0)
-        val (base, delta0) = db.validEdgeDelta match {
-          case Some(s) =>
-            val kept = s.delta.join(nd.select(col("eid").as("_ek2")),
-              s.delta("eid") === col("_ek2"), "left_anti")
-            (s.base, PropertyGraph.appendByName(kept, nd))
-          case None => (g.edges, nd)
-        }
-        // The delta checkpoints EAGERLY at every commit — the node
-        // path's doubling argument, plus one specific to the overlay
-        // shape: resolution consumes the delta TWICE (the anti-join
-        // probe and the union arm), so a lazy delta would re-execute
-        // its whole lookup lineage twice per read.
-        val delta = delta0.localCheckpoint()
-        val resolved = overlayEdges(base, delta)
-        db.graph = PropertyGraph(g.nodes, resolved)
-        db.edgeDeltaState = Some(graft.core.EdgeDeltaState(base, delta, resolved))
-      }
+      // delta, checkpointed EAGERLY even in a transaction (see
+      // foldDeltaRows). The base edge table is never rewritten.
+      deltaAcc.foreach(foldDeltaRows(db, DeltaSide.Edges, _, eager = true))
       // the delta checkpoint above materialized everything derived
       // from the binding caches — release them now, not at the next
       // lineage collapse (they are per-statement scratch, not lineage)
@@ -5255,9 +5019,9 @@ final class GraftSession(val spark: SparkSession,
     // rationale as the literal-CREATE path: composable index routing,
     // incremental saves, CDC cursor survival
     if (newNodes.nonEmpty)
-      foldNodeDeltaRows(db, newNodes.reduce(PropertyGraph.appendByName))
+      foldDeltaRows(db, DeltaSide.Nodes, newNodes.reduce(PropertyGraph.appendByName))
     if (newEdges.nonEmpty)
-      foldEdgeDeltaRows(db, newEdges.reduce(PropertyGraph.appendByName))
+      foldDeltaRows(db, DeltaSide.Edges, newEdges.reduce(PropertyGraph.appendByName))
 
     returns.headOption match {
       case None => unit()

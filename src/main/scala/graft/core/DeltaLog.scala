@@ -1,0 +1,118 @@
+package graft.core
+
+import scala.collection.immutable.VectorMap
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.DataType
+
+/** Driver-local write buffer of one delta-log side: present when the
+  * delta lives as a LocalRelation over `rows` (bounded batches whose
+  * SET values are driver-evaluable), so a commit runs ZERO distributed
+  * jobs beyond its bounded lookups. Immutable, insertion-ordered and
+  * keyed by the side's key (node id / relationship eid): transaction
+  * shadows share it by reference and extend it copy-on-write.
+  * `colTypes` is the delta's schema — first writer wins, and its
+  * insertion order is the delta's column order. Distributed deltas
+  * (huge batches, cluster-computed SET values) carry no buffer. */
+sealed trait DeltaBuffer[B] {
+  def colTypes: VectorMap[String, DataType]
+  def rows: VectorMap[Long, Map[String, Any]]
+  def withLog(colTypes: VectorMap[String, DataType],
+      rows: VectorMap[Long, Map[String, Any]]): B
+}
+
+/** Node write buffer. `settled` caches merge keys whose BASE lookup is
+  * already answered for this burst (base rows folded into `rows`, or
+  * proven absent) — the base is immutable while the overlay is valid,
+  * so a settled key never needs another base scan; a rerun whose keys
+  * are all settled commits with ZERO Spark actions. The cache is only
+  * valid for the (labels, keyNames) `shape` that built it. */
+final case class NodeDeltaBuffer(
+    colTypes: VectorMap[String, DataType],
+    rows: VectorMap[Long, Map[String, Any]],
+    settled: Set[Seq[Any]] = Set.empty,
+    shape: (Seq[String], Seq[String]) = (Nil, Nil)) extends DeltaBuffer[NodeDeltaBuffer] {
+  def withLog(colTypes: VectorMap[String, DataType],
+      rows: VectorMap[Long, Map[String, Any]]): NodeDeltaBuffer =
+    copy(colTypes = colTypes, rows = rows)
+}
+
+/** Relationship write buffer. `settled` caches (relType, srcId, dstId)
+  * pairs whose BASE lookup is already answered this burst, as on
+  * [[NodeDeltaBuffer]]. `nodeBind` caches endpoint-key → node-id
+  * bindings, valid only while `graph.nodes eq nodeBindRef` (an
+  * interleaved node mutation silently drops it — reference identity
+  * again, never a manual invalidation). `None` records a key proven
+  * absent. */
+final case class EdgeDeltaBuffer(
+    colTypes: VectorMap[String, DataType],
+    rows: VectorMap[Long, Map[String, Any]],
+    settled: Set[(String, Long, Long)] = Set.empty,
+    nodeBind: Map[(Seq[String], Seq[String], Seq[Any]), Option[Long]] = Map.empty,
+    nodeBindRef: Option[AnyRef] = None) extends DeltaBuffer[EdgeDeltaBuffer] {
+  def withLog(colTypes: VectorMap[String, DataType],
+      rows: VectorMap[Long, Map[String, Any]]): EdgeDeltaBuffer =
+    copy(colTypes = colTypes, rows = rows)
+}
+
+/** One side's delta overlay: `resolved` is `base ⟵anti-join⟶ delta ∪
+  * delta` (see [[GraphDatabase.nodeDeltaState]]). `buf` is the driver
+  * write buffer `delta` was built from, if any. `materialized` is false
+  * only while the delta is a LAZY plan — a distributed fold inside a
+  * transaction shadow defers its checkpoint so a rolled-back
+  * transaction costs nothing; COMMIT and compaction checkpoint it. */
+final case class DeltaState[B](
+    base: DataFrame,
+    delta: DataFrame,
+    resolved: DataFrame,
+    buf: Option[B] = None,
+    materialized: Boolean = true)
+
+/** One side of the keyed delta log — nodes keyed by `id`, relationships
+  * by their surrogate `eid`: the key column, the columns the delta
+  * schema keeps non-null, the latest-wins overlay, and where the side
+  * lives on a [[GraphDatabase]]. */
+final class DeltaSide[B <: DeltaBuffer[B]] private (
+    val key: String,
+    val nonNull: Set[String],
+    val emptyBuffer: B,
+    val part: PropertyGraph => DataFrame,
+    withPart: (PropertyGraph, DataFrame) => PropertyGraph,
+    val valid: GraphDatabase => Option[DeltaState[B]],
+    assign: (GraphDatabase, Option[DeltaState[B]]) => Unit) {
+
+  def overlay(base: DataFrame, delta: DataFrame): DataFrame =
+    PropertyGraph.overlayByKey(base, delta, key)
+
+  /** A bounded buffered commit may extend this side: no overlay yet,
+    * or one that is still a write buffer under the row cap. */
+  def bufferable(db: GraphDatabase): Boolean =
+    valid(db).forall(_.buf.exists(_.rows.size <= DeltaSide.MaxBufferRows))
+
+  /** Swap `s.resolved` in as this side of the graph and record `s`. */
+  def publish(db: GraphDatabase, s: DeltaState[B]): Unit = {
+    db.graph = withPart(db.graph, s.resolved)
+    assign(db, Some(s))
+  }
+
+  /** Swap in a side with no overlay (a stale state drops). */
+  def reset(db: GraphDatabase, frame: DataFrame): Unit = {
+    db.graph = withPart(db.graph, frame)
+    assign(db, None)
+  }
+}
+
+object DeltaSide {
+  /** Past this many buffered rows a side falls back to distributed folds. */
+  val MaxBufferRows = 100000
+
+  val Nodes: DeltaSide[NodeDeltaBuffer] = new DeltaSide(
+    "id", Set("id"), NodeDeltaBuffer(VectorMap.empty, VectorMap.empty),
+    _.nodes, (g, n) => PropertyGraph(n, g.edges),
+    _.validNodeDelta, _.nodeDeltaState = _)
+
+  val Edges: DeltaSide[EdgeDeltaBuffer] = new DeltaSide(
+    "eid", Set("src", "dst", "relType", "eid"),
+    EdgeDeltaBuffer(VectorMap.empty, VectorMap.empty),
+    _.edges, (g, e) => PropertyGraph(g.nodes, e),
+    _.validEdgeDelta, _.edgeDeltaState = _)
+}

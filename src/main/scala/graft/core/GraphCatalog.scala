@@ -4,81 +4,6 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.SparkSession
 import scala.collection.concurrent.TrieMap
 
-/** Multi-database graph catalog (SURVEY.md §1.1 "multiple logical
-  * databases per DBMS incl. `system`" — ref DatabaseIO.java:134-143,
-  * TestBackupRestore.java:146,163 STOP/START DATABASE).
-  *
-  * Databases hold an immutable `PropertyGraph` snapshot swapped
-  * atomically on mutation (append-log semantics, SURVEY §7.4.1); id
-  * allocation is a deterministic per-db counter so t2 hashes are
-  * stable across runs.
-  */
-/** See [[GraphDatabase.nodeDeltaState]]. `buf` is present when the
-  * delta lives as a DRIVER-LOCAL write buffer (batched upserts whose
-  * SET values are driver-evaluable): immutable, insertion-ordered —
-  * transaction shadows share it safely by reference and extend it
-  * copy-on-write. `delta` is then a LocalRelation over `buf`, so a
-  * commit runs ZERO distributed jobs beyond the one matched-row
-  * lookup. Distributed deltas (huge batches, cluster-computed SET
-  * values) carry buf = None. */
-/** `settled` caches merge keys whose BASE lookup is already answered
-  * for this burst (base rows folded into `rows`, or proven absent) —
-  * the base is immutable while the overlay is valid, so a settled key
-  * never needs another base scan; a rerun whose keys are all settled
-  * commits with ZERO Spark actions. The cache is only valid for the
-  * (labels, keyNames) `shape` that built it. */
-final case class NodeDeltaBuffer(
-    colTypes: scala.collection.immutable.VectorMap[String, org.apache.spark.sql.types.DataType],
-    rows: scala.collection.immutable.VectorMap[Long, Map[String, Any]],
-    settled: Set[Seq[Any]] = Set.empty,
-    shape: (Seq[String], Seq[String]) = (Nil, Nil))
-
-/** See [[GraphDatabase.nodeDeltaState]]. `materialized` is false only
-  * while the delta is a LAZY plan — the FIRST general-SET fold over a
-  * base defers its checkpoint so a statement inside a rolled-back
-  * transaction costs nothing; any extension, and compaction,
-  * checkpoint the folded chain (plan depth stays bounded — the
-  * doubling argument). Batched-upsert deltas are born materialized. */
-final case class NodeDeltaState(
-    base: org.apache.spark.sql.DataFrame,
-    delta: org.apache.spark.sql.DataFrame,
-    resolved: org.apache.spark.sql.DataFrame,
-    buf: Option[NodeDeltaBuffer] = None,
-    materialized: Boolean = true)
-
-/** Driver-local write buffer for the edge delta — the relationship
-  * mirror of [[NodeDeltaBuffer]], present when the delta lives as a
-  * LocalRelation over `rows` (batched single-hop rel upserts whose
-  * SET values are driver-evaluable). Immutable, insertion-ordered,
-  * keyed by eid; transaction shadows share it by reference and
-  * extend it copy-on-write.
-  *
-  * `settled` caches (relType, srcId, dstId) pairs whose BASE lookup
-  * is already answered this burst (base rows folded into `rows` by an
-  * ON MATCH, or proven absent) — the base is immutable while the
-  * overlay is valid, so a settled pair never re-scans; a rerun whose
-  * pairs are all settled commits with ZERO Spark actions.
-  *
-  * `nodeBind` caches endpoint-key → node-id bindings, valid only
-  * while `graph.nodes eq nodeBindRef` (an interleaved node mutation
-  * silently drops it — reference identity again, never a manual
-  * invalidation). `None` records a key proven absent. */
-final case class EdgeDeltaBuffer(
-    colTypes: scala.collection.immutable.VectorMap[String, org.apache.spark.sql.types.DataType],
-    rows: scala.collection.immutable.VectorMap[Long, Map[String, Any]],
-    settled: Set[(String, Long, Long)] = Set.empty,
-    nodeBind: Map[(Seq[String], Seq[String], Seq[Any]), Option[Long]] = Map.empty,
-    nodeBindRef: Option[AnyRef] = None)
-
-/** See [[GraphDatabase.edgeDeltaState]]. `materialized` as on
-  * [[NodeDeltaState]]. */
-final case class EdgeDeltaState(
-    base: org.apache.spark.sql.DataFrame,
-    delta: org.apache.spark.sql.DataFrame,
-    resolved: org.apache.spark.sql.DataFrame,
-    buf: Option[EdgeDeltaBuffer] = None,
-    materialized: Boolean = true)
-
 /** See [[GraphDatabase.indexAuxState]]. `nodeDiskDelta`/
   * `edgeDiskDelta` are the snapshot's on-disk delta-log frames that
   * were FOLDED into `nodesRef`/`edgesRef` at save/load time: a routed
@@ -174,8 +99,8 @@ final class GraphDatabase(val name: String) {
     * assigns `graph` without maintaining the overlay silently breaks
     * the `graph.nodes eq resolved` check and the state is ignored —
     * correctness never depends on remembering to invalidate. */
-  @volatile var nodeDeltaState: Option[NodeDeltaState] = None
-  def validNodeDelta: Option[NodeDeltaState] =
+  @volatile var nodeDeltaState: Option[DeltaState[NodeDeltaBuffer]] = None
+  def validNodeDelta: Option[DeltaState[NodeDeltaBuffer]] =
     nodeDeltaState.filter(s => graph != null && (graph.nodes eq s.resolved))
 
   /** Edge DELTA overlay — the eid-keyed mirror of [[nodeDeltaState]]:
@@ -186,8 +111,8 @@ final class GraphDatabase(val name: String) {
     * O(batch + delta), never O(edge table). Same self-validation by
     * reference identity as the node side: any path that assigns
     * `graph` without maintaining this overlay silently invalidates it. */
-  @volatile var edgeDeltaState: Option[EdgeDeltaState] = None
-  def validEdgeDelta: Option[EdgeDeltaState] =
+  @volatile var edgeDeltaState: Option[DeltaState[EdgeDeltaBuffer]] = None
+  def validEdgeDelta: Option[DeltaState[EdgeDeltaBuffer]] =
     edgeDeltaState.filter(s => graph != null && (graph.edges eq s.resolved))
 
   /** Where the materialized base came from on disk: (snapshot dir, the
@@ -342,6 +267,15 @@ final class GraphDatabase(val name: String) {
       s"database $name is stopped; START DATABASE $name first")
 }
 
+/** Multi-database graph catalog (SURVEY.md §1.1 "multiple logical
+  * databases per DBMS incl. `system`" — ref DatabaseIO.java:134-143,
+  * TestBackupRestore.java:146,163 STOP/START DATABASE).
+  *
+  * Databases hold an immutable `PropertyGraph` snapshot swapped
+  * atomically on mutation (append-log semantics, SURVEY §7.4.1); id
+  * allocation is a deterministic per-db counter so t2 hashes are
+  * stable across runs.
+  */
 final class GraphCatalog(spark: SparkSession) {
   private val dbs = TrieMap.empty[String, GraphDatabase]
   createDatabase("neo4j")

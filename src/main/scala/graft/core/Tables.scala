@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet tables (repo:TESTDATA.md).
   *
@@ -13,32 +14,19 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Memoized `spark.read.parquet` frames per (session, dir, table) —
-    * METADATA reuse, not result caching: `spark.read.parquet` runs a
-    * footer/schema-inference JOB on every call, and a fresh-session
-    * catalog row that rebuilds the 6-table tpch view pays 11 such jobs
-    * (30-275 ms each — measured as the fixed prelude of every mutation
-    * row, ~0.5-1 s per row that a metastore-backed deployment would
-    * never pay because the table schema lives in the catalog). The
-    * memoized object is a LAZY plan over immutable input files; every
-    * query still scans its parquet data per execution. Weak session
-    * keys let closed sessions collect; a new dir (scaling replicas,
-    * fresh testdata) is a new key. */
-  private val frames =
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
+  /** Memoized parquet SCHEMAS per (dir, table): `spark.read.parquet`
+    * runs a footer/schema-inference JOB on every call (30-275 ms each;
+    * a fresh session building the 6-table tpch view paid 11 of them),
+    * which a metastore-backed deployment never pays because the schema
+    * lives in the catalog. Only the StructType is kept: every call
+    * builds a fresh reader over it, so no session or frame is pinned
+    * and each read lists the files as they are now. Input files are
+    * immutable per path, so a schema never goes stale. */
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val perSession = frames.synchronized {
-      var m = frames.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-        frames.put(spark, m)
-      }
-      m
-    }
-    perSession.computeIfAbsent(s"$dir/$name.parquet",
-      p => spark.read.parquet(p))
+    val p = s"$dir/$name.parquet"
+    spark.read.schema(schemas.computeIfAbsent(p, _ => spark.read.parquet(p).schema)).parquet(p)
   }
 
   def region(s: SparkSession, d: String): DataFrame    = apply(s, d, "region")

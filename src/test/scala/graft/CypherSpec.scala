@@ -3515,6 +3515,96 @@ class CypherSpec extends AnyFunSuite {
       .collect().head.getLong(0) == 6L)
   }
 
+  test("delta-log write buffers: every buffered path keeps its buffer, stamps at COMMIT, rolls back exactly and reads like a serial run") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import graft.core.PropertyGraph.CdcSeqCol
+    // base graph with no overlay: (:dl {k, v}) with id = k, and two R
+    // edges 1→2, 2→3 carrying c and w (eids clear of fresh ones)
+    def fresh(): GraftSession = {
+      val s = new GraftSession(spark)
+      graft.procs.Packs.install(s, Seq("apoc"))
+      val nodes = spark.createDataFrame(java.util.Arrays.asList(
+        (1L to 5L).map(k => Row(k, Seq("dl"), k, k * 10)): _*), StructType(Seq(
+          StructField("id", LongType, nullable = false),
+          StructField("labels", ArrayType(StringType), nullable = false),
+          StructField("k", LongType), StructField("v", LongType))))
+      val edges = spark.createDataFrame(java.util.Arrays.asList(
+        Row(1L, 2L, "R", 100L, 1L, 7L), Row(2L, 3L, "R", 101L, 1L, 7L)),
+        StructType(graft.core.PropertyGraph.edgeBaseSchema.fields ++ Seq(
+          StructField("c", LongType), StructField("w", LongType))))
+      s.setGraph(graft.core.PropertyGraph(nodes, edges))
+      s
+    }
+    def dump(s: GraftSession): Seq[String] =
+      (s.cypher("MATCH (n:dl) RETURN n.k AS k, n.v AS v, n.flag AS f ORDER BY k").collect() ++
+        s.cypher("""MATCH (a:dl)-[r]->(b:dl) RETURN a.k AS a, b.k AS b, type(r) AS t,
+          |r.c AS c, r.w AS w, r.seen AS seen ORDER BY a, b""".stripMargin).collect())
+        .map(_.toString).toSeq
+    val relMerge =
+      """UNWIND $b AS row MATCH (a:dl {k: row.s}), (c:dl {k: row.d})
+        |MERGE (a)-[x:R]->(c) ON CREATE SET x.c = 1 ON MATCH SET x.c = x.c + 1""".stripMargin
+    // (path, node side?, the buffered statement, rows the reads must
+    // hold, rows they must not)
+    val paths: Seq[(String, Boolean, GraftSession => Unit, Seq[String], Seq[String])] = Seq(
+      ("literal MERGE", true, s => s.cypher(
+        "UNWIND [1, 9] AS x MERGE (a:dl {k: x}) ON MATCH SET a.v = a.v + 1 ON CREATE SET a.v = 0"),
+        Seq("[1,11,null]", "[9,0,null]"), Nil),
+      ("id(n) IN $chunk SET", true, s => s.cypher(
+        "MATCH (n:dl) WHERE id(n) IN $chunk SET n.flag = 1", Map("chunk" -> Seq(2L, 3L))),
+        Seq("[2,20,1]", "[3,30,1]", "[4,40,null]"), Nil),
+      ("bounded node DELETE", true, s => s.cypher("MATCH (n:dl {k: 5}) DELETE n"),
+        Seq("[4,40,null]"), Seq("[5,50,null]")),
+      ("apoc.merge.relationship", false, s => s.cypher(
+        "CALL apoc.merge.relationship(1, 'R', {}, {}, 2, {seen: true}) YIELD src RETURN src")
+        .collect(),
+        Seq("[1,2,R,1,7,true]"), Nil),
+      ("bounded relationship DELETE", false, s => s.cypher(
+        "MATCH (:dl {k: 2})-[r:R]->(:dl {k: 3}) DELETE r"),
+        Seq("[1,2,R,1,7,null]"), Seq("[2,3,R,1,7,null]")),
+      ("UNWIND … MATCH … MERGE", false, s => s.cypher(relMerge,
+        Map("b" -> Seq(Map("s" -> 1L, "d" -> 2L), Map("s" -> 3L, "d" -> 4L)))),
+        Seq("[1,2,R,2,7,null]", "[3,4,R,1,null,null]"), Nil))
+    paths.foreach { case (name, nodeSide, run, present, absent) =>
+      def buffer(s: GraftSession): Option[Map[Long, Map[String, Any]]] = {
+        val db = s.catalog.database("neo4j")
+        (if (nodeSide) db.validNodeDelta.flatMap(_.buf).map(_.rows)
+         else db.validEdgeDelta.flatMap(_.buf).map(_.rows)).map(_.toMap)
+      }
+      def stamped(rows: Map[Long, Map[String, Any]]): Boolean =
+        rows.values.forall(_.get(CdcSeqCol).exists(_ != null))
+      // autocommit: the serial reference run
+      val serial = fresh()
+      run(serial)
+      assert(buffer(serial).exists(stamped), s"$name: autocommit left no stamped write buffer")
+      val want = dump(serial)
+      present.foreach(r => assert(want.contains(r), s"$name: reads lack $r in $want"))
+      absent.foreach(r => assert(!want.contains(r), s"$name: reads still hold $r"))
+      // ROLLBACK leaves the live database exactly as it was
+      val s = fresh()
+      val db = s.catalog.database("neo4j")
+      val (g0, n0, e0) = (db.graph, db.nodeDeltaState, db.edgeDeltaState)
+      s.cypher("BEGIN"); run(s); s.cypher("ROLLBACK")
+      assert((db.graph eq g0) && (db.nodeDeltaState eq n0) && (db.edgeDeltaState eq e0),
+        s"$name: ROLLBACK moved the live state")
+      // COMMIT publishes the buffer with every row stamped
+      s.cypher("BEGIN"); run(s); s.cypher("COMMIT")
+      val committed = buffer(s).getOrElse(fail(s"$name: COMMIT dropped the write buffer"))
+      assert(stamped(committed), s"$name: COMMIT left unstamped buffer rows")
+      assert(dump(s) == want, s"$name: reads after COMMIT differ from the serial run")
+      // a second buffered fold rebuilds the delta from the buffer and
+      // keeps every committed stamp
+      if (nodeSide) s.cypher("UNWIND [50] AS x MERGE (a:dl {k: x}) ON CREATE SET a.v = 0")
+      else s.cypher(relMerge, Map("b" -> Seq(Map("s" -> 4L, "d" -> 5L))))
+      val after = buffer(s).getOrElse(fail(s"$name: the second fold dropped the write buffer"))
+      assert(stamped(after), s"$name: the second fold left unstamped rows")
+      committed.foreach { case (k, m) =>
+        assert(after.get(k).flatMap(_.get(CdcSeqCol)) == m.get(CdcSeqCol),
+          s"$name: the second fold lost the stamp of row $k")
+      }
+    }
+  }
+
   test("edge buffer under transactions: ROLLBACK discards buffered merges, COMMIT publishes them") {
     val s = new GraftSession(spark)
     (1 to 2).foreach(k => s.cypher(s"CREATE (a:ebt {k: $k})"))

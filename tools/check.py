@@ -10,7 +10,7 @@ Usage: python3 tools/check.py [sfdir] [outdir] [query ...]
 """
 import json, os, subprocess, sys, math, hashlib
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft_verify"
 ONLY = set(sys.argv[3:])
