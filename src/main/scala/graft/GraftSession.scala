@@ -68,14 +68,17 @@ final class GraftSession(val spark: SparkSession,
     * falling back to the default when invoked outside a statement. */
   private def statementDatabase: GraphDatabase =
     catalog.database(statementDb.get())
-  private def statementGraph(): PropertyGraph = statementDatabase.graph
-  /** The database a procedure body WRITES: the dispatching
+  /** The database a procedure body reads and WRITES: the dispatching
     * statement's target — inside an explicit transaction its private
-    * shadow, so a procedure write is isolated and rolls back like any
-    * other statement of the transaction. Schema metadata (indexes,
+    * shadow, so a procedure sees the transaction's own writes, and a
+    * procedure write is isolated and rolls back like any other
+    * statement of the transaction. Schema metadata (indexes,
     * constraints) stays on [[statementDatabase]]. */
   private def statementTarget: GraphDatabase =
     Option(statementTargetDb.get()).getOrElse(statementDatabase)
+  /** The graph a procedure body reads (`USE db` and transaction aware;
+    * see [[statementTarget]]). */
+  private[graft] def statementGraph(): PropertyGraph = statementTarget.graph
   /** The statement database NAME, for procedure bodies that dispatch
     * nested cypher (apoc.schema.assert): without passing it
     * explicitly, a nested `session.cypher(q)` defaults to 'neo4j' and

@@ -178,13 +178,25 @@ object SnapshotStore {
     val edgesBack = spark.read.parquet(s"$tmp/edges")
     val (edgeCount, relTypeStats) =
       if (edgesBack.columns.contains("relType") && edgesBack.columns.contains("src")) {
-        import org.apache.spark.sql.functions.{approx_count_distinct, col, count => scount, lit}
-        val rows = normalizeRelType(edgesBack).groupBy("relType")
+        import org.apache.spark.sql.functions.{approx_count_distinct, col, count => scount, lit,
+          max => smax}
+        val typed = normalizeRelType(edgesBack)
+        val rows = typed.groupBy("relType")
           .agg(scount(lit(1)).as("n"),
             approx_count_distinct(col("src")).as("s"),
             approx_count_distinct(col("dst")).as("d")).collect()
           .map(r => r.getString(0) -> RelTypeStats(r.getLong(1), r.getLong(2), r.getLong(3)))
-        (rows.iterator.map(_._2.count).sum, rows.toMap)
+        // exact per-type degree maxima (the compiler's row bounds): one
+        // grouped aggregate over both endpoint columns, tagged by side
+        val ends = typed.select(col("relType"), lit(true).as("out"), col("src").as("k"))
+          .unionByName(typed.select(col("relType"), lit(false).as("out"), col("dst").as("k")))
+        val maxima = ends.groupBy("relType", "out", "k").agg(scount(lit(1)).as("deg"))
+          .groupBy("relType", "out").agg(smax("deg")).collect()
+          .map(r => (r.getString(0), r.getBoolean(1)) -> r.getLong(2)).toMap
+        val sealedTypes = rows.map { case (t, st) =>
+          t -> st.copy(maxOut = maxima.get((t, true)), maxIn = maxima.get((t, false)))
+        }
+        (sealedTypes.iterator.map(_._2.count).sum, sealedTypes.toMap)
       } else (edgesBack.count(), Map.empty[String, RelTypeStats])
     Files.writeString(Paths.get(s"$tmp/stats.json"),
       statsJson(GraphStats(nodeCount, edgeCount, labelCounts, relTypeStats)))
@@ -858,7 +870,10 @@ object SnapshotStore {
     val labels = s.labels.toSeq.filter(e => safe(e._1)).sortBy(_._1)
       .map { case (l, n) => s""""$l": $n""" }.mkString("{", ", ", "}")
     val types = s.relTypes.toSeq.filter(e => safe(e._1)).sortBy(_._1)
-      .map { case (t, r) => s""""$t": [${r.count}, ${r.srcCount}, ${r.dstCount}]""" }
+      .map { case (t, r) =>
+        // degree maxima ride as a 4th/5th number only when both are known
+        val maxima = (for (o <- r.maxOut; i <- r.maxIn) yield s", $o, $i").getOrElse("")
+        s""""$t": [${r.count}, ${r.srcCount}, ${r.dstCount}$maxima]""" }
       .mkString("{", ", ", "}")
     s"""{"node_count": ${s.nodeCount}, "edge_count": ${s.edgeCount}, """ +
       s""""labels": $labels, "rel_types": $types}"""
@@ -888,10 +903,13 @@ object SnapshotStore {
     val labels = """"([^"]+)"\s*:\s*([0-9]+)""".r
       .findAllMatchIn(section("labels"))
       .map(m => m.group(1) -> m.group(2).toLong).toMap
-    val types = """"([^"]+)"\s*:\s*\[\s*([0-9]+)\s*,\s*([0-9]+)\s*,\s*([0-9]+)\s*\]""".r
+    // [count, srcCount, dstCount] or, since the degree maxima, [..., maxOut,
+    // maxIn]; a 3-number entry (older snapshots) reads as unknown maxima
+    val types = """"([^"]+)"\s*:\s*\[\s*([0-9]+)\s*,\s*([0-9]+)\s*,\s*([0-9]+)\s*(?:,\s*([0-9]+)\s*,\s*([0-9]+)\s*)?\]""".r
       .findAllMatchIn(section("rel_types"))
       .map(m => m.group(1) ->
-        RelTypeStats(m.group(2).toLong, m.group(3).toLong, m.group(4).toLong)).toMap
+        RelTypeStats(m.group(2).toLong, m.group(3).toLong, m.group(4).toLong,
+          Option(m.group(5)).map(_.toLong), Option(m.group(6)).map(_.toLong))).toMap
     Some(GraphStats(long("node_count"), long("edge_count"), labels, types))
   }
 

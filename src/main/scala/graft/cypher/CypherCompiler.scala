@@ -932,15 +932,20 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
     // Frontier-cardinality estimate, maintained only when the path
     // starts UNBOUND from the sealed stats (ctx present means an
     // unknown-size binding table — never hint against it). A frontier
-    // estimated under [[CypherCompiler.BroadcastFrontierRows]] gets a
-    // broadcast hint before each join: Catalyst's static size
+    // estimated under [[CypherCompiler.BroadcastFrontierRows]] is a
+    // broadcast-hint CANDIDATE before each join: Catalyst's static size
     // estimates degrade through a join chain, so without the hint a
     // tiny anchored frontier joining a huge edge table plans (and
     // pays the map side of) a full edge shuffle that AQE can only
     // partially unwind — at 100 TB the edge shuffle IS the query cost.
-    // Only this one join is hinted; the output's own estimate decides
-    // the next hop. A wrong estimate can only mis-size one broadcast
-    // (bounded by the threshold × row width), never change semantics.
+    // The estimate only decides whether to ATTEMPT a hint; whether the
+    // hint is placed is measured-then-bounded: the first attempt
+    // probes the frontier ([[probed]]), and its exact row count times
+    // each later hop's sealed maximum degree ([[maxFanout]]) is a
+    // proven bound (`frontierBound`) that hints later joins without
+    // re-running the chain. A bound past the threshold, or none,
+    // probes again — so every hint is placed exactly where a probe
+    // would place it, and a wrong estimate costs jobs, never rows.
     var frontierEst: Option[Double] =
       if (ctx.isEmpty && cur != null)
         cheapStats.map(s => estimateNodeCard(p.start, Set.empty, s))
@@ -954,6 +959,7 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
             Some(CypherCompiler.BroadcastFrontierRows.toDouble)
           else None)
       else None
+    var frontierBound: Option[Long] = None
     p.hops.foreach { case (rel, node) =>
       // seed a var-length expansion from FILTERED starts: consume any
       // pending plain conjunct whose variables are all bound already
@@ -978,7 +984,10 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
       // estimate would collapse toward zero after one hop — forcing
       // broadcast hints onto huge intermediates
       val preBound = Option(cur).map(boundIdVars).getOrElse(Set.empty[String])
-      cur = compileHop(cur, prevVar, rel, node, idsOnly, frontierEst)
+      val (next, nextBound) = compileHop(cur, prevVar, rel, node, idsOnly, frontierEst,
+        frontierBound)
+      cur = next
+      frontierBound = nextBound
       frontierEst = (frontierEst, cheapStats) match {
         case (Some(e0), Some(s)) if rel.varLength.isEmpty =>
           val far = estimateNodeCard(node, preBound, s)
@@ -1028,6 +1037,10 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
   /** Measured gate for every explicit broadcast hint (ADVICE r18): is
     * the frontier ACTUALLY within the hint bound? `limit(B+1).count`
     * short-circuits, so a genuinely tiny frontier pays one bounded job.
+    * Returns the (possibly checkpointed) frame and, when the frontier
+    * is within the bound, its exact row count — the measurement
+    * [[compilePath]] multiplies by sealed maximum degrees so that the
+    * later hints of the path need no probe of their own.
     *
     * When the session has NO free stats (rank-gated attempts on a
     * never-saved graph), the frontier is localCheckpointed FIRST and
@@ -1041,12 +1054,14 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
     * about to shuffle anyway — and stops further attempts.
     *
     * With SEALED stats the plain probe is kept instead: the estimate
-    * is already trustworthy (one confirmation probe per statement, on
-    * a chain the optimizer believes tiny), and the un-checkpointed
-    * frontier keeps the anchored scan visible to Catalyst and to plan
-    * audits — `.explain` shows the partition-pruned anchor FileScan,
-    * not an opaque ExistingRDD. */
-  private def probed(df: DataFrame): (DataFrame, Boolean) = {
+    * is already trustworthy, and the un-checkpointed frontier keeps
+    * the anchored scan visible to Catalyst and to plan audits —
+    * `.explain` shows the partition-pruned anchor FileScan, not an
+    * opaque ExistingRDD. Sealed stats also carry the degree maxima,
+    * so an anchored path pays one confirmation probe per statement:
+    * later hops hint on the measured count times those maxima and
+    * probe again only when that bound exceeds the threshold. */
+  private def probed(df: DataFrame): (DataFrame, Option[Long]) = {
     val m = if (!scanBackedGraph) df.localCheckpoint() else df
     // bounded-take probe, NOT limit().count() (r19): a count over a
     // limit plans GlobalLimit — an Exchange that ships up to B+1 rows
@@ -1057,51 +1072,89 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
     // take with no exchange that early-exits as soon as B+1 rows
     // exist, so a huge frontier pays a partial scan, not a full one.
     // The single-value projection bounds what the driver holds.
-    val small = m.select(org.apache.spark.sql.functions.lit(1))
+    val n = m.select(org.apache.spark.sql.functions.lit(1))
       .limit(CypherCompiler.BroadcastFrontierRows.toInt + 1)
-      .collect().length <= CypherCompiler.BroadcastFrontierRows
+      .collect().length.toLong
+    val small = n <= CypherCompiler.BroadcastFrontierRows
     if (!small) probeFailed = true
-    (m, small)
+    (m, if (small) Some(n) else None)
   }
 
+  /** Exact upper bound on the rows one frontier row joins to through
+    * `rel`, from the sealed degree maxima: maxOut for `->`, maxIn for
+    * `<-`, both for an undirected hop (the symmetrized edge frame
+    * meets each node from either side), summed over the listed types
+    * (all types when untyped). A type absent from the stats has no
+    * edges to join. None when any term is unknown — the maxima are
+    * only known while the sealed edges are still the edges. */
+  private def maxFanout(rel: RelPat): Option[Long] = cheapStats.flatMap { s =>
+    val sts =
+      if (rel.types.nonEmpty) rel.types.map(t => s.relTypes.getOrElse(t,
+        graft.core.RelTypeStats(0L, 0L, 0L, Some(0L), Some(0L))))
+      else s.relTypes.values.toSeq
+    val terms = sts.map { st =>
+      rel.dir match {
+        case 1  => st.maxOut
+        case -1 => st.maxIn
+        case _  => for (o <- st.maxOut; i <- st.maxIn) yield o + i
+      }
+    }
+    if (sts.isEmpty || terms.exists(_.isEmpty)) None else Some(terms.flatten.sum)
+  }
+
+  /** One hop of a path; returns the joined frame and a proven bound
+    * on its rows, given `bound` on the rows of `cur` (see the
+    * frontierEst note in compilePath). */
   private def compileHop(cur: DataFrame, prevVar: String, rel: RelPat, node: NodePat,
-      idsOnly: Boolean = false, frontierEst: Option[Double] = None): DataFrame = {
+      idsOnly: Boolean, frontierEst: Option[Double],
+      bound: Option[Long]): (DataFrame, Option[Long]) = {
     val nv = node.variable.getOrElse(fresh("n"))
     lastNodeVar = nv
     // a stats-estimated SMALL side broadcasts explicitly — see the
     // frontierEst note in compilePath. The estimate gates the ATTEMPT;
-    // the measured probe gates the HINT (ADVICE r18: explicit
-    // broadcast() bypasses autoBroadcastJoinThreshold, so degree skew
-    // or a non-selective anchor behind a small AVERAGE estimate must
-    // not ship an unbounded frontier to every executor).
-    def hinted(df: DataFrame, est: Option[Double]): DataFrame =
-      if (est.exists(_ <= CypherCompiler.BroadcastFrontierRows)) {
-        val (m, small) = probed(df)
-        if (small) org.apache.spark.sql.functions.broadcast(m) else m
-      } else df
+    // a proven row bound or the measured probe gates the HINT (ADVICE
+    // r18: explicit broadcast() bypasses autoBroadcastJoinThreshold,
+    // so degree skew or a non-selective anchor behind a small AVERAGE
+    // estimate must not ship an unbounded frontier to every executor).
+    // Returns the frame to join and the bound on its rows. A bound
+    // replaces the probe only on a scan-backed graph: elsewhere the
+    // probe also checkpoints the frontier (see [[probed]]).
+    def hinted(df: DataFrame, est: Option[Double],
+        rows: Option[Long]): (DataFrame, Option[Long]) =
+      if (!est.exists(_ <= CypherCompiler.BroadcastFrontierRows)) (df, rows)
+      else if (scanBackedGraph && rows.exists(_ <= CypherCompiler.BroadcastFrontierRows))
+        (org.apache.spark.sql.functions.broadcast(df), rows)
+      else probed(df) match {
+        case (m, Some(n)) => (org.apache.spark.sql.functions.broadcast(m), Some(n))
+        case (m, None)    => (m, None)
+      }
     rel.varLength match {
       case Some((lo, hi)) =>
         if (rel.where.nonEmpty) throw new UnsupportedOperationException(
           "inline WHERE is not supported on a var-length relationship pattern")
-        compileVarHop(cur, prevVar, rel, node, nv, lo, hi, frontierEst)
+        (compileVarHop(cur, prevVar, rel, node, nv, lo, hi, frontierEst), None)
       case None =>
         val rv = rel.variable.getOrElse(fresh("e"))
         val e = edgeDf(rv, rel)
         val nearSide = if (rel.dir == -1) s"$rv${SEP}dst" else s"$rv${SEP}src"
-        val joined =
+        // each frontier row meets at most maxFanout edges; filters and
+        // the far-node join (node ids are unique) never add rows
+        val (joined, joinedBound) =
           if (cur == null) // deferred idsOnly start: id comes from the edge
-            e.withColumn(s"$prevVar${SEP}id", col(nearSide))
+            (e.withColumn(s"$prevVar${SEP}id", col(nearSide)), None)
           else {
-            val c = hinted(cur, frontierEst)
-            rel.dir match {
+            val (c, curBound) = hinted(cur, frontierEst, bound)
+            val j = rel.dir match {
               case 1  => c.join(e, c(s"$prevVar${SEP}id") === e(s"$rv${SEP}src"))
               case -1 => c.join(e, c(s"$prevVar${SEP}id") === e(s"$rv${SEP}dst"))
               case 0  => c.join(e, c(s"$prevVar${SEP}id") === e(s"$rv${SEP}src")) // e pre-symmetrized
             }
+            (j, for (b <- curBound; f <- maxFanout(rel)) yield
+              if (f != 0 && b > Long.MaxValue / f) Long.MaxValue else b * f)
           }
         val farSide = if (rel.dir == -1) s"$rv${SEP}src" else s"$rv${SEP}dst"
         if (joined.columns.contains(s"$nv${SEP}id")) {
-          joined.filter(col(farSide) === col(s"$nv${SEP}id"))
+          (joined.filter(col(farSide) === col(s"$nv${SEP}id")), joinedBound)
         } else if ((idsOnly || node.variable.isEmpty) && node.labels.isEmpty &&
             node.props.isEmpty && node.labelExpr.isEmpty && node.where.isEmpty) {
           // an ANONYMOUS fully-unconstrained endpoint can never be
@@ -1109,7 +1162,7 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
           // like the idsOnly case — edges reference existing nodes by
           // construction, and `-->()`-shaped patterns skip a join
           // against the whole node table
-          joined.withColumn(s"$nv${SEP}id", col(farSide))
+          (joined.withColumn(s"$nv${SEP}id", col(farSide)), joinedBound)
         } else {
           val n = nodeDf(nv, node)
           // post-expand frontier estimate: one hop's fan-out over the
@@ -1120,7 +1173,8 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
             case (Some(e0), None) if !probeFailed => Some(e0) // probe decides
             case _ => None
           }
-          hinted(joined, expandedEst).join(n, col(farSide) === n(s"$nv${SEP}id"))
+          val (j, jBound) = hinted(joined, expandedEst, joinedBound)
+          (j.join(n, col(farSide) === n(s"$nv${SEP}id")), jBound)
         }
     }
   }
@@ -1202,8 +1256,8 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
           // set, which the semi join below then reads — one execution
           // per step); a failed probe aborts to the whole-set fallback
           // (superset by construction, never rows)
-          val (idsM, small) = probed(ids)
-          if (!small) ok = false
+          val (idsM, measured) = probed(ids)
+          if (measured.isEmpty) ok = false
           else {
             val stepEdges = rawOriented.join(
               org.apache.spark.sql.functions.broadcast(idsM), Seq("_s"), "left_semi")
@@ -1423,8 +1477,8 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
         val n = nodeDf(nv, node)
         // estimate attempts, measured probe decides (ADVICE r18)
         val j = if (expandedSmall) {
-          val (m, small) = probed(joined)
-          if (small) org.apache.spark.sql.functions.broadcast(m) else m
+          val (m, measured) = probed(joined)
+          if (measured.isDefined) org.apache.spark.sql.functions.broadcast(m) else m
         } else joined
         j.join(n, col(s"_vl${SEP}t") === n(s"$nv${SEP}id"))
       }

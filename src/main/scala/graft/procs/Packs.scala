@@ -967,7 +967,7 @@ object Packs {
       if (!enabled) throw new IllegalStateException(
         "Export to files not enabled, please set apoc.export.file.enabled=true in your apoc.conf")
       val file = String.valueOf(args.head)
-      val nodes = session.graph().nodes
+      val nodes = session.statementGraph().nodes
       // CSV has no array type: stringify labels (apoc's CSV export
       // flattens the same way)
       val flat = nodes.withColumn("labels", concat_ws(";", col("labels")))
@@ -982,7 +982,7 @@ object Packs {
       if (!enabled) throw new IllegalStateException(
         "Export to files not enabled, please set apoc.export.file.enabled=true in your apoc.conf")
       val file = String.valueOf(args.head)
-      val g = session.graph()
+      val g = session.statementGraph()
       // apoc's jsonl shape: one object per line, type-discriminated —
       // node/relationship sections side by side; a distributed write
       // per section (JSON keeps arrays, unlike the CSV flattening)
@@ -1011,7 +1011,7 @@ object Packs {
       "Distinct nodes reachable from start within maxLevel filtered hops; " +
         "level = BFS depth of first discovery") { args =>
       val start = String.valueOf(args.head).toLong
-      Gds.filteredBfs(spark0, session.graph(), start, optStr(args, 1),
+      Gds.filteredBfs(spark0, session.statementGraph(), start, optStr(args, 1),
         optStr(args, 3), optInt(args, 2, -1)).select("node_id", "level")
     }
     procs.register("apoc.path.spanningTree",
@@ -1020,7 +1020,7 @@ object Packs {
       "BFS spanning tree from start: each discovered node with its " +
         "smallest-id discovering neighbor (deterministic parent choice)") { args =>
       val start = String.valueOf(args.head).toLong
-      Gds.filteredBfs(spark0, session.graph(), start, optStr(args, 1),
+      Gds.filteredBfs(spark0, session.statementGraph(), start, optStr(args, 1),
         optStr(args, 3), optInt(args, 2, -1))
     }
     procs.register("apoc.path.expandConfig",
@@ -1035,7 +1035,7 @@ object Packs {
           "(RELATIONSHIP_PATH trail semantics are served by MATCH var-length patterns)")
       val minLevel = optInt(args, 3, 0)
       import org.apache.spark.sql.functions.{col, lit}
-      Gds.filteredBfs(spark0, session.graph(), start, optStr(args, 1),
+      Gds.filteredBfs(spark0, session.statementGraph(), start, optStr(args, 1),
         optStr(args, 2), optInt(args, 4, -1))
         .filter(col("level") >= lit(minLevel.toLong))
         .select("node_id", "level")
@@ -1058,7 +1058,7 @@ object Packs {
       args.lift(i).map(String.valueOf).filter(_.nonEmpty) match {
         case Some(name) if session.projectedGraphs.contains(name) =>
           (session.projectedGraphs(name), None)
-        case other => (session.graph(), other.filter(_ != "*"))
+        case other => (session.statementGraph(), other.filter(_ != "*"))
       }
     procs.register("gds.graph.project",
       "(graphName :: STRING, nodeLabel :: STRING?, relType :: STRING?, " +
@@ -1071,7 +1071,7 @@ object Packs {
       val name = String.valueOf(args.head)
       val label = relTypeArg(args, 1)
       val rel = relTypeArg(args, 2)
-      val base = session.graph()
+      val base = session.statementGraph()
       val nodes = label.map(base.nodesWithLabel).getOrElse(base.nodes)
       val ids = nodes.select(col("id"))
       val typed = rel.map(base.edgesOfType).getOrElse(base.edges)

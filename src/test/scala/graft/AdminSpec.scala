@@ -78,15 +78,23 @@ class AdminSpec extends AnyFunSuite {
     assert(t.count == 20L, t.toString)
     // approx distincts on 20 exact-small values are exact
     assert(t.srcCount == 20L && t.dstCount == 10L, t.toString)
+    // exact degree maxima: every SA has one ST edge, each SB k<10 two
+    assert(t.maxOut.contains(1L) && t.maxIn.contains(2L), t.toString)
     // incremental save: base stats carry through (the overlay is the
     // session's job, not the file's)
     s.cypher("UNWIND range(100, 119) AS x CREATE (:SB {k: x})")
+    s.cypher("MATCH (a:SA {k: 50}), (b:SB {k: 0}) MERGE (a)-[:ST]->(b)")
     s.saveDatabase(data)
     assert(Files.exists(java.nio.file.Paths.get(s"$dir/nodes_delta")))
     assert(graft.core.SnapshotStore.readStats(dir).get.labels("SB") == 11L)
+    val carried = graft.core.SnapshotStore.readStats(dir).get.relTypes("ST")
+    assert(carried.maxOut.contains(1L) && carried.maxIn.contains(2L), carried.toString)
     // compaction refreshes the sealed counts from the folded base
     graft.core.SnapshotStore.compact(spark, dir)
     assert(graft.core.SnapshotStore.readStats(dir).get.labels("SB") == 31L)
+    val refreshed = graft.core.SnapshotStore.readStats(dir).get.relTypes("ST")
+    assert(refreshed.count == 21L && refreshed.maxOut.contains(1L) &&
+      refreshed.maxIn.contains(3L), refreshed.toString)
     // a fresh load of a delta-BEARING snapshot folds the disk delta
     // into the session's stats eagerly (readNodes folds the data, so
     // statsFor must see the folded counts too) — exercised via a new
@@ -116,6 +124,13 @@ class AdminSpec extends AnyFunSuite {
     assert(st2.labels.get("Plain").contains(1L), st2.labels.toString)
     assert(!st2.labels.keys.exists(_.contains("\"")), st2.labels.toString)
     assert(st2.nodeCount == 2L)
+    // a 3-number rel_types entry (written before the degree maxima)
+    // still parses, with the maxima unknown
+    val legacy = tmp("graft-stats-legacy")
+    Files.writeString(java.nio.file.Paths.get(s"$legacy/stats.json"),
+      """{"node_count": 3, "edge_count": 2, "labels": {"L": 3}, "rel_types": {"R": [2, 2, 1]}}""")
+    val lt = graft.core.SnapshotStore.readStats(legacy).get.relTypes("R")
+    assert(lt == graft.core.RelTypeStats(2L, 2L, 1L, None, None), lt.toString)
   }
 
   test("a node property named _label_key refuses the save (derived-column collision)") {

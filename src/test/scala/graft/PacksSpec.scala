@@ -278,6 +278,28 @@ class PacksSpec extends AnyFunSuite {
     assert(pm.getLong(0) == 2L && pm.getLong(1) == 1L)
   }
 
+  test("procedure reads follow the statement target: a transaction sees its own writes") {
+    val s = sessionWith("graph-data-science")
+    s.cypher("CREATE (:aa {k: 1})")
+    def labels(q: String = "CALL db.labels() YIELD label RETURN label"): Seq[String] =
+      s.cypher(q).collect().map(_.getString(0)).toSeq
+    def projected(name: String, label: String, db: String = ""): Long =
+      s.cypher(s"$db CALL gds.graph.project('$name', '$label', '*') YIELD nodeCount")
+        .collect().head.getLong(0)
+    s.cypher("BEGIN")
+    s.cypher("CREATE (:zz {k: 2})")
+    assert(labels().contains("zz"), "db.labels() inside BEGIN missed the transaction's write")
+    assert(projected("tx_zz", "zz") == 1L, "a pack procedure read the live database")
+    s.cypher("ROLLBACK")
+    assert(labels() == Seq("aa"))
+    assert(projected("live_zz", "zz") == 0L)
+    // pack procedures read the database a USE clause names
+    s.cypher("CREATE DATABASE packdb")
+    s.cypher("USE packdb CREATE (:pp {k: 3})")
+    assert(projected("use_pp", "pp", "USE packdb") == 1L)
+    assert(projected("default_pp", "pp") == 0L)
+  }
+
   test("gds.shortestPath: hop distance to landmark along edges") {
     val s = chainSession
     val rows = s.cypher("CALL gds.shortestPath(2) YIELD node_id, distance")

@@ -810,6 +810,67 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("anchored 2-hop read probes once: later hints ride the sealed max-degree bound") {
+    // The first hint attempt of an anchored path measures the frontier
+    // (one job); each later hint is proven by that count times the
+    // sealed per-type maximum degree instead of re-running the chain.
+    // The hints themselves, and so the plan, are the probes' own.
+    val s0 = new GraftSession(spark)
+    val dataDir = java.nio.file.Files.createTempDirectory("gmb_").toString
+    s0.cypher("UNWIND range(0, 199) AS x CREATE (:MC {ck: x})")
+    s0.cypher("UNWIND range(0, 599) AS x CREATE (:MO {ok: x})")
+    s0.cypher("UNWIND range(0, 49) AS x CREATE (:MP {pk: x})")
+    // customer c places orders 3c..3c+2; order o contains parts o%50, (o+1)%50
+    s0.cypher("UNWIND $rows AS row MATCH (c:MC {ck: row.c}), (o:MO {ok: row.o}) " +
+      "MERGE (c)-[:MPL]->(o)",
+      Map("rows" -> (0 until 600).map(o => Map("c" -> (o / 3).toLong, "o" -> o.toLong))))
+    s0.cypher("UNWIND $rows AS row MATCH (o:MO {ok: row.o}), (p:MP {pk: row.p}) " +
+      "MERGE (o)-[:MCO]->(p)",
+      Map("rows" -> (0 until 600).flatMap(o =>
+        Seq(o % 50, (o + 1) % 50).map(p => Map("o" -> o.toLong, "p" -> p.toLong)))))
+    s0.cypher("CREATE INDEX mc_ck FOR (n:MC) ON (n.ck)")
+    s0.saveDatabase(dataDir)
+    val s = new GraftSession(spark)
+    s.loadDatabase(dataDir)
+    val q = "MATCH (c:MC {ck: $k})-[:MPL]->(o:MO)-[:MCO]->(p:MP) RETURN o.ok AS ok, p.pk AS pk"
+    val sc = spark.sparkContext
+    def compiled(group: String, k: Long): (org.apache.spark.sql.DataFrame, Int) = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (j.properties != null && j.properties.getProperty("spark.jobGroup.id") == group)
+            jobs.incrementAndGet()
+      }
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup(group, group)
+        val df = try s.cypher(q, Map("k" -> k)) finally sc.clearJobGroup()
+        org.apache.spark.ListenerBusDrain(sc)
+        (df, jobs.get)
+      } finally sc.removeSparkListener(listener)
+    }
+    def expected(orders: Seq[Long]): Set[(Long, Long)] =
+      orders.flatMap(o => Seq(o % 50, (o + 1) % 50).map(p => (o, p))).toSet
+    def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    compiled("gmb-warm", 3L)._1.collect() // first reads of the loaded dir
+    val (df, jobs) = compiled("gmb-sealed", 7L)
+    assert(jobs == 1, s"an anchored 2-hop compile ran $jobs jobs; one probe expected")
+    val p = df.queryExecution.executedPlan.toString
+    assert(p.contains("index_aux"), "anchor does not read the RANGE projection:\n" + p)
+    assert("BroadcastHashJoin".r.findAllMatchIn(p).length >= 4,
+      "the hop chain is no longer broadcast-hinted:\n" + p)
+    assert(rows(df) == expected(Seq(21L, 22L, 23L)))
+    // soundness: one edge merged after the load raises :MPL's degrees
+    // past the sealed maxima, which become unknown — the read probes
+    // its hops again and still answers right
+    s.cypher("MATCH (c:MC {ck: 7}), (o:MO {ok: 100}) MERGE (c)-[:MPL]->(o)")
+    compiled("gmb-delta-warm", 3L) // the delta-overlaid stats, once per state
+    val (df2, jobs2) = compiled("gmb-delta", 7L)
+    assert(jobs2 > 1, s"a delta-bearing type kept its sealed bound ($jobs2 jobs)")
+    assert(rows(df2) == expected(Seq(21L, 22L, 23L, 100L)))
+  }
+
   test("AdaptiveParts: loop widths derive from rows, clamp to the configured width, restore") {
     // r20: iterative operators (dedup_clusters labels, hopDistances,
     // betweenness, LPA, louvain) size their per-round shuffles from

@@ -70,6 +70,15 @@ def main():
     if os.path.exists(f"{OUT}/verify_errors.json"):
         errs = json.load(open(f"{OUT}/verify_errors.json"))
     con = duckdb.connect()
+    # let large oracle queries (dedup_clusters) spill to disk instead of
+    # failing at DuckDB's default memory limit on a small host; at four
+    # threads dedup_clusters still runs out of pinned memory on a 15 GB
+    # host, at two it finishes in ~25 s
+    spill = f"{OUT.rstrip('/')}.duckdb_tmp"
+    os.makedirs(spill, exist_ok=True)
+    con.execute(f"SET temp_directory = '{spill}'")
+    con.execute("SET preserve_insertion_order = false")
+    con.execute("SET threads = 2")
     import glob
     for t in ["region", "nation", "customer", "supplier", "part", "orders",
               "lineitem", "events", "documents", "embeddings"]:
