@@ -15,8 +15,8 @@ import org.apache.spark.sql.SparkSession
   * Catalyst can't prune the projection the way a bare count() allows.
   *
   * Round-12 interference fix: the r11 artifact showed up to 5.6×
-  * phantom regressions (dedup_substring 13.2 s vs 1.7 s TimeOne
-  * steady state) — cross-query interference inside the one-JVM
+  * phantom regressions (dedup_substring 13.2 s vs 1.7 s measured
+  * alone, steady state) — cross-query interference inside the one-JVM
   * catalog run (localCheckpoint debris + cached state from neighbors
   * charged to whoever runs next), not operator cost. Each row now (a)
   * starts from a quiesced JVM — clearCache + System.gc(), which lets
@@ -52,12 +52,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = SparkEntry.cpus()
+    val spark = SparkEntry.localSession("graft-bench")
     spark.sparkContext.setLogLevel("WARN")
     def materialize(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
@@ -122,7 +118,7 @@ object Bench {
       calSink.addAndGet(hashLoop(n))
       val single = (System.nanoTime() - t0) / 1e9
       val t1 = System.nanoTime()
-      val ts = (0 until cpus.toInt).map(_ =>
+      val ts = (0 until cpus).map(_ =>
         new Thread(() => { calSink.addAndGet(hashLoop(n)); () }))
       ts.foreach(_.start()); ts.foreach(_.join())
       val multi = (System.nanoTime() - t1) / 1e9
@@ -214,10 +210,9 @@ object Bench {
     * quietly turned this control into the ordered plan). PRIMARY
     * metric = shuffled records: wall-clock at probe scale understates
     * the 100 TB gap (a static broadcast rescues the textual plan at
-    * 4M rows; it cannot at 10⁹), shuffled records don't. Callable
-    * standalone via `graft.tools.ProbeMain` for plan inspection. */
+    * 4M rows; it cannot at 10⁹), shuffled records don't. */
   private[graft] def joinOrderProbeJson(spark: SparkSession, data: String,
-      nBig: Long = 4000000L, debug: Boolean = false): String = {
+      nBig: Long = 4000000L): String = {
     import org.apache.spark.sql.functions.{array, col, concat, floor, lit}
     val gs = new GraftSession(spark)
     val big = spark.range(nBig).select((col("id") * 10 + 3).as("id"),
@@ -245,26 +240,12 @@ object Bench {
     gs.saveDatabase(data)
     val q = "MATCH (a:Big)-[:R1]->(m:Mid)-[:R2]->(t:Tiny {tx: 0}) " +
       "RETURN count(*) AS n"
-    val shuffled = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          shuffled.addAndGet(t.taskMetrics.shuffleWriteMetrics.recordsWritten)
-    }
     def timeSteady(s0: GraftSession): (Double, Long) = {
       s0.cypher(q).write.format("noop").mode("overwrite").save()
       System.gc()
-      spark.sparkContext.addSparkListener(listener)
-      shuffled.set(0)
-      val t0 = System.nanoTime()
-      val df = s0.cypher(q)
-      df.write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(400) // listener events drain asynchronously
-      spark.sparkContext.removeSparkListener(listener)
-      if (debug) println(df.queryExecution.executedPlan.toString)
-      (dt, shuffled.get)
+      val (_, m) = graft.core.StatementMetrics.measure(spark) {
+        s0.cypher(q).write.format("noop").mode("overwrite").save() }
+      (m.wallMs / 1e3, m.shuffleWriteRecords)
     }
     val (ordered, shOrd) = timeSteady(gs)
     val gsT = new GraftSession(spark)

@@ -111,12 +111,17 @@ final class GraftSession(val spark: SparkSession,
     // view node.) Views that know their ceiling supply it
     // (PropertyGraph.knownMaxNodeId — GraphViews memoizes one per
     // dir); otherwise one column-pruned max scan, once per setGraph.
-    val maxId = g.knownMaxNodeId.getOrElse {
+    // Edge ids key the edge overlay the same way, so the relationship
+    // allocator moves past the frame's eids (one more max scan).
+    def maxOf(df: DataFrame, c: String): Long = {
       import org.apache.spark.sql.functions.{max => smax}
-      g.nodes.agg(smax("id")).collect().headOption
+      df.agg(smax(c)).collect().headOption
         .flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long])).getOrElse(-1L)
     }
+    val maxId = g.knownMaxNodeId.getOrElse(maxOf(g.nodes, "id"))
     d.nextId.set(math.max(d.nextId.get(), maxId + 1))
+    if (g.edges.columns.contains("eid"))
+      d.nextRelId.set(math.max(d.nextRelId.get(), maxOf(g.edges, "eid") + 1))
   }
 
   /** Authenticate against the store (the Bolt-session-open analog).

@@ -10,6 +10,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SparkEntry {
 
+  /** Worker threads of a local session: `SPARK_GRAFT_CPUS`, else every
+    * available processor. */
+  def cpus(env: Map[String, String] = sys.env): Int =
+    env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The session every entry point runs on: master `SPARK_MASTER`, else
+    * `local[cpus]`; `cpus` shuffle partitions; UI off; UTC session time
+    * zone. */
+  def localSession(app: String, env: Map[String, String] = sys.env): SparkSession = {
+    val n = cpus(env)
+    SparkSession.builder()
+      .master(env.getOrElse("SPARK_MASTER", s"local[$n]"))
+      .appName(app)
+      .config("spark.sql.shuffle.partitions", n.toString)
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC")
+      .getOrCreate()
+  }
+
   /** Every registered operator demo, in registration order. */
   def catalog: Seq[QueryDef] =
     graft.operators.Relational.all ++

@@ -162,10 +162,8 @@ final class GraphDatabase(val name: String) {
     * broadcast-probe hints — CypherCompiler.textualOrder), so the
     * session plans patterns exactly as written. With r19's lazy live
     * stats, clearing graphStats alone no longer yields a textual-plan
-    * session — statsFor would just compute fresh counts.
-    * `-Dgraft.statsOff=true` flips the default for whole-JVM control
-    * experiments (TimeOne A/B). */
-  @volatile var statsOff: Boolean = java.lang.Boolean.getBoolean("graft.statsOff")
+    * session — statsFor would just compute fresh counts. */
+  @volatile var statsOff: Boolean = false
 
   /** CDC change epoch: a MONOTONIC counter identifying the base-frame
     * generation the delta-log is relative to. `cdcBaseRefs` tracks the

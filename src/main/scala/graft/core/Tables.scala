@@ -55,7 +55,8 @@ object Tables {
   /** Normalize an events frame's `ts` to TimestampType whatever layout
     * the parquet footer declared. Works on batch and streaming frames.
     * NTZ→LTZ cast preserves the wall clock under the UTC session
-    * timezone every graft entry point pins (`Verify`/`Bench`/specs).
+    * timezone every graft entry point pins (`SparkEntry.localSession`,
+    * the specs).
     */
   def normalizeEventTs(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}

@@ -108,9 +108,9 @@ object GraftAdmin {
         if (!SnapshotStore.exists(dir)) {
           err(s"Database '$db' does not exist in $dataDir"); return 1
         }
-        val spark = org.apache.spark.sql.SparkSession.builder()
-          .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-          .appName("graft-admin").getOrCreate()
+        // an embedding caller's session is used as it is
+        val spark = org.apache.spark.sql.SparkSession.getActiveSession
+          .getOrElse(graft.SparkEntry.localSession("graft-admin"))
         val m = SnapshotStore.compact(spark, dir)
         out(s"Done: compacted database '$db' " +
           s"(${m.nodeCount} nodes, ${m.edgeCount} relationships).")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.GraftSession
 import graft.core.SnapshotStore
 
@@ -24,13 +23,7 @@ object GraftMain {
           Console.out.println(s"[extension] ${script.linesIterator.size} lines sourced"))
         Lifecycle.writePid(dataDir)
 
-        val spark = SparkSession.builder()
-          .master(env.getOrElse("SPARK_MASTER", "local[8]"))
-          .appName("graft")
-          .config("spark.sql.shuffle.partitions", env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
+        val spark = graft.SparkEntry.localSession("graft", env)
         spark.sparkContext.setLogLevel("ERROR")
 
         // /conf mount analog (SURVEY §2.8 mounts row): GRAFT_CONF dir

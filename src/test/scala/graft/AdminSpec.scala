@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.core.StatementMetrics
 import graft.tools.GraftAdmin
 
 /** Admin data-lifecycle behaviors (SURVEY.md §2.6): dump -> load
@@ -625,30 +626,15 @@ class AdminSpec extends AnyFunSuite {
     assert(Files.exists(java.nio.file.Paths.get(s"$snap/edges_delta/relType=EB")))
     // a typed scan of the RAW delta reads only the matching partition:
     // 10 EB records, never the 400 EA ones
-    val read = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null) read.addAndGet(te.taskMetrics.inputMetrics.recordsRead)
-    }
-    def settled(): Long = {
-      var last = -1L; var spins = 0
-      while (read.get() != last && spins < 50) { last = read.get(); Thread.sleep(100); spins += 1 }
-      read.get()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val (rawRead, foldRead, foldCount) =
-      try {
-        assert(spark.read.parquet(s"$snap/edges_delta")
-          .filter(col("relType") === "EB").count() == 10L)
-        val raw = settled()
-        read.set(0L)
-        // the real read path: folded snapshot edges, typed filter —
-        // the delta side prunes too (the anti-join key projection
-        // still reads every delta eid, but never the EA payload scan)
-        val n = SnapshotStore.readEdges(spark, snap)
-          .filter(col("relType") === "EB").count()
-        (raw, settled(), n)
-      } finally spark.sparkContext.removeSparkListener(listener)
+    val (rawCount, raw) = StatementMetrics.measure(spark)(spark.read.parquet(s"$snap/edges_delta")
+      .filter(col("relType") === "EB").count())
+    assert(rawCount == 10L)
+    // the real read path: folded snapshot edges, typed filter —
+    // the delta side prunes too (the anti-join key projection
+    // still reads every delta eid, but never the EA payload scan)
+    val (foldCount, fold) = StatementMetrics.measure(spark)(SnapshotStore.readEdges(spark, snap)
+      .filter(col("relType") === "EB").count())
+    val (rawRead, foldRead) = (raw.inputRecords, fold.inputRecords)
     assert(foldCount == 10L)
     assert(rawRead < 100L, s"typed raw delta scan read $rawRead records — no pruning")
     assert(foldRead < 600L, s"typed folded read $foldRead records — delta side unpruned")
@@ -768,24 +754,10 @@ class AdminSpec extends AnyFunSuite {
     // a base recount (5000 rows) or an allocator max-scan would blow
     // straight through the bound; the delta write + its stats
     // aggregate touch only O(delta) rows
-    val read = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null) read.addAndGet(te.taskMetrics.inputMetrics.recordsRead)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      s.saveDatabase(data)
-      // listener delivery is async: poll until the counter stabilizes
-      var last = -1L
-      var spins = 0
-      while (read.get() != last && spins < 50) {
-        last = read.get(); Thread.sleep(100); spins += 1
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val read = StatementMetrics.measure(spark)(s.saveDatabase(data))._2.inputRecords
     assert(Files.exists(java.nio.file.Paths.get(s"$snap/nodes_delta")))
-    assert(read.get() < 1000L,
-      s"incremental save read ${read.get()} records — it scanned the base")
+    assert(read < 1000L,
+      s"incremental save read $read records — it scanned the base")
     // and the arithmetic counts match a genuine recount
     val m = SnapshotStore.readManifest(snap)
     assert(m.nodeCount == 5020L, s"arithmetic count ${m.nodeCount} != 5020")

@@ -1034,19 +1034,17 @@ class CypherSpec extends AnyFunSuite {
 
   test("path MERGE is fully declarative: zero driver jobs until read") {
     val s = new GraftSession(spark)
-    val sc = spark.sparkContext
-    sc.setJobGroup("merge-noprobe", "path MERGE probe check", false)
-    s.cypher("MERGE (x:mcat {name:'Mio'})-[:CHASES]->(y:mcat {name:'Rut'})")
-    s.cypher("MERGE (x:mcat {name:'Mio'})-[:CHASES]->(y:mcat {name:'Rut'}) " +
-      "ON MATCH SET x.seen = 1 ON CREATE SET y.fresh = 1")
-    sc.clearJobGroup()
-    // materialize AFTER clearing the group — only the reads run jobs
+    val (_, building) = graft.core.StatementMetrics.measure(spark) {
+      s.cypher("MERGE (x:mcat {name:'Mio'})-[:CHASES]->(y:mcat {name:'Rut'})")
+      s.cypher("MERGE (x:mcat {name:'Mio'})-[:CHASES]->(y:mcat {name:'Rut'}) " +
+        "ON MATCH SET x.seen = 1 ON CREATE SET y.fresh = 1")
+    }
+    // materialize AFTER the measured scope — only the reads run jobs
     assert(s.graph().nodes.filter("name = 'Mio'").count() == 1)
     assert(s.graph().nodes.filter("name = 'Mio' AND seen = 1").count() == 1)
     assert(s.graph().nodes.filter("fresh = 1").count() == 0)
     assert(s.graph().edges.filter("relType = 'CHASES'").count() == 1)
-    Thread.sleep(300) // allow the async status store to ingest
-    assert(sc.statusTracker.getJobIdsForGroup("merge-noprobe").isEmpty,
+    assert(building.jobs.isEmpty,
       "path MERGE ran driver actions while building the mutation")
   }
 
@@ -3798,6 +3796,21 @@ class CypherSpec extends AnyFunSuite {
     val created = all.filter(r => r.getLong(1) == 777L || r.getLong(1) == 888L)
     assert(created.forall(_.getLong(0) >= 5L),
       s"created ids collide with view ids: ${created.toSeq}")
+  }
+
+  test("setGraph seeds the relationship-id allocator past the frame's eids") {
+    val s = new GraftSession(spark)
+    import org.apache.spark.sql.functions.{array, col, lit}
+    val nodes = spark.range(1, 4).select(col("id"), array(lit("p")).as("labels"), col("id").as("k"))
+    val edges = spark.createDataFrame(java.util.Arrays.asList(
+      org.apache.spark.sql.Row(1L, 2L, "R", 0L)), graft.core.PropertyGraph.edgeBaseSchema)
+    s.setGraph(graft.core.PropertyGraph(nodes, edges))
+    s.cypher("MATCH (a:p {k: 2}), (b:p {k: 3}) CREATE (a)-[:R]->(b)")
+    val got = s.cypher("MATCH (a:p)-[r:R]->(b:p) RETURN a.k AS a, b.k AS b, id(r) AS i")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
+    assert(got.map(t => (t._1, t._2)).toSeq == Seq((1L, 2L), (2L, 3L)),
+      s"a created edge replaced a setGraph edge: ${got.toSeq}")
+    assert(got.map(_._3).distinct.length == 2, s"edge ids collide: ${got.toSeq}")
   }
 
   test("RETURN p renders the path value; count(r)/DISTINCT r use relationship identity") {

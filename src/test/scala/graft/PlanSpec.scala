@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.core.StatementMetrics
+import org.apache.spark.sql.functions.col
 
 /** Physical-plan regression guards: the catalog's scale-critical plan
   * properties (no accidental cartesians, pruned scans, single-exchange
@@ -226,33 +228,29 @@ class PlanSpec extends AnyFunSuite {
   test("MATCH…MERGE statement job count stays bounded (the multi-statement floor)") {
     // r14 verdict #3: ~25 Spark jobs per buffered-mutation statement
     // dominated every multi-statement graded row at local[32]. The
-    // floor is pinned here via job groups: a regression that re-adds
-    // eager checkpoint+count pairs or distributed numbering on bounded
-    // misses fails this, not just the bench.
+    // floor is pinned here via the statement recorder: a regression
+    // that re-adds eager checkpoint+count pairs or distributed
+    // numbering on bounded misses fails this, not just the bench.
     val s = new GraftSession(spark)
     s.cypher("UNWIND range(1, 40) AS x CREATE (:jf {k: x})")
     val batch = (1L to 20L).map(k => Map("a" -> k, "b" -> (k % 40 + 1)))
     val stmt =
       """UNWIND $batch AS row MATCH (a:jf {k: row.a}), (b:jf {k: row.b})
         |MERGE (a)-[r:JF]->(b) ON MATCH SET r.seen = 1""".stripMargin
-    def jobsFor(group: String)(body: => Unit): Int = {
-      spark.sparkContext.setJobGroup(group, group)
-      try body finally spark.sparkContext.clearJobGroup()
-      spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
-    }
+    def jobsFor(body: => Unit): Int = StatementMetrics.measure(spark)(body)._2.jobs.size
     // warm one full create pass (JIT, lazy machinery, delta bootstrap)
     s.cypher(stmt, Map("batch" -> batch))
-    val createJobs = jobsFor("jf-create") {
+    val createJobs = jobsFor {
       s.cypher(stmt, Map("batch" -> (21L to 40L).map(k =>
         Map("a" -> k, "b" -> (k % 40 + 1))))) }
-    val matchJobs = jobsFor("jf-match") { s.cypher(stmt, Map("batch" -> batch)) }
+    val matchJobs = jobsFor { s.cypher(stmt, Map("batch" -> batch)) }
     assert(createJobs <= 16, s"create-path MATCH…MERGE ran $createJobs jobs")
     assert(matchJobs <= 14, s"match-path MATCH…MERGE ran $matchJobs jobs")
     // the id-IN SET chunk (MATCH-driven IN TRANSACTIONS dispatches one
     // per batch) takes the BUFFERED path: one bounded id collect, one
     // bounded hit-row collect, zero distributed fold jobs
     s.cypher("MATCH (c:jf) WHERE id(c) IN [0, 1] SET c.flag = 1") // warm
-    val setJobs = jobsFor("jf-set") {
+    val setJobs = jobsFor {
       s.cypher("MATCH (c:jf) WHERE id(c) IN [2, 3, 4] SET c.flag = 1")
     }
     assert(setJobs <= 4, s"buffered id-IN SET ran $setJobs jobs")
@@ -666,23 +664,13 @@ class PlanSpec extends AnyFunSuite {
       "MERGE (a)-[:VE]->(b)",
       Map("rows" -> (0 until 49999).map(i => Map("a" -> i.toLong, "b" -> (i + 1).toLong))))
     s.saveDatabase(dataDir)
-    val shuffled = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          shuffled.addAndGet(t.taskMetrics.shuffleWriteMetrics.recordsWritten)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val df = s.cypher(
-        "MATCH (a:VN {vk: 100})-[:VE*1..2]->(b:VN) RETURN count(*) AS n")
-      assert(df.collect().head.getLong(0) == 2L) // 101 and 102
-      Thread.sleep(500) // listener events drain asynchronously
-      val got = shuffled.get
-      assert(got < 5000L,
-        s"var-length expansion shuffled $got records — the whole-set " +
-          "materialization is back")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (n, m) = StatementMetrics.measure(spark)(s.cypher(
+      "MATCH (a:VN {vk: 100})-[:VE*1..2]->(b:VN) RETURN count(*) AS n").collect().head.getLong(0))
+    assert(n == 2L) // 101 and 102
+    val got = m.shuffleWriteRecords
+    assert(got < 5000L,
+      s"var-length expansion shuffled $got records — the whole-set " +
+        "materialization is back")
   }
 
   test("label-expression scans route through the covering partition set") {
@@ -789,25 +777,15 @@ class PlanSpec extends AnyFunSuite {
     s.saveDatabase(dataDir)
     val prevAuto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val shuffled = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          shuffled.addAndGet(t.taskMetrics.shuffleWriteMetrics.recordsWritten)
-    }
-    spark.sparkContext.addSparkListener(listener)
     try {
-      val df = s.cypher("MATCH (a:PV {vk: 7})-[:PE]->(b:PV) RETURN count(*) AS n")
-      assert(df.collect().head.getLong(0) == 49999L)
-      Thread.sleep(500) // listener events drain asynchronously
-      val got = shuffled.get
+      val (n, m) = StatementMetrics.measure(spark)(s.cypher(
+        "MATCH (a:PV {vk: 7})-[:PE]->(b:PV) RETURN count(*) AS n").collect().head.getLong(0))
+      assert(n == 49999L)
+      val got = m.shuffleWriteRecords
       assert(got > 20000L,
         s"only $got records shuffled — the 50k-row frontier was " +
           "broadcast-hinted despite the probe")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevAuto)
-    }
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevAuto)
   }
 
   test("anchored 2-hop read probes once: later hints ride the sealed max-degree bound") {
@@ -833,28 +811,16 @@ class PlanSpec extends AnyFunSuite {
     val s = new GraftSession(spark)
     s.loadDatabase(dataDir)
     val q = "MATCH (c:MC {ck: $k})-[:MPL]->(o:MO)-[:MCO]->(p:MP) RETURN o.ok AS ok, p.pk AS pk"
-    val sc = spark.sparkContext
-    def compiled(group: String, k: Long): (org.apache.spark.sql.DataFrame, Int) = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          if (j.properties != null && j.properties.getProperty("spark.jobGroup.id") == group)
-            jobs.incrementAndGet()
-      }
-      sc.addSparkListener(listener)
-      try {
-        sc.setJobGroup(group, group)
-        val df = try s.cypher(q, Map("k" -> k)) finally sc.clearJobGroup()
-        org.apache.spark.ListenerBusDrain(sc)
-        (df, jobs.get)
-      } finally sc.removeSparkListener(listener)
+    def compiled(k: Long): (org.apache.spark.sql.DataFrame, Int) = {
+      val (df, m) = StatementMetrics.measure(spark)(s.cypher(q, Map("k" -> k)))
+      (df, m.jobs.size)
     }
     def expected(orders: Seq[Long]): Set[(Long, Long)] =
       orders.flatMap(o => Seq(o % 50, (o + 1) % 50).map(p => (o, p))).toSet
     def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    compiled("gmb-warm", 3L)._1.collect() // first reads of the loaded dir
-    val (df, jobs) = compiled("gmb-sealed", 7L)
+    compiled(3L)._1.collect() // first reads of the loaded dir
+    val (df, jobs) = compiled(7L)
     assert(jobs == 1, s"an anchored 2-hop compile ran $jobs jobs; one probe expected")
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("index_aux"), "anchor does not read the RANGE projection:\n" + p)
@@ -865,8 +831,8 @@ class PlanSpec extends AnyFunSuite {
     // past the sealed maxima, which become unknown — the read probes
     // its hops again and still answers right
     s.cypher("MATCH (c:MC {ck: 7}), (o:MO {ok: 100}) MERGE (c)-[:MPL]->(o)")
-    compiled("gmb-delta-warm", 3L) // the delta-overlaid stats, once per state
-    val (df2, jobs2) = compiled("gmb-delta", 7L)
+    compiled(3L) // the delta-overlaid stats, once per state
+    val (df2, jobs2) = compiled(7L)
     assert(jobs2 > 1, s"a delta-bearing type kept its sealed bound ($jobs2 jobs)")
     assert(rows(df2) == expected(Seq(21L, 22L, 23L, 100L)))
   }
@@ -988,5 +954,79 @@ class PlanSpec extends AnyFunSuite {
     assert(n2 == 98L)
     assert(GraftSession.liveStatsRuns.get() == before + 1,
       "a label-label tie should have computed live stats exactly once")
+  }
+
+  test("statement recorder: a scope counts its own shuffle records and jobs exactly") {
+    val (_, m) = StatementMetrics.measure(spark)(
+      spark.range(1000).repartition(4).write.format("noop").mode("overwrite").save())
+    assert(m.shuffleWriteRecords == 1000L, m.line)
+    assert(m.jobs.nonEmpty, m.line)
+  }
+
+  test("statement recorder: concurrent scopes on one session see only their own jobs") {
+    // both scopes are open while both actions run, so a time-window
+    // attribution would hand each scope the other's jobs
+    val barrier = new java.util.concurrent.CyclicBarrier(2)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    val scopes = try Seq(300L, 700L).map { n =>
+      pool.submit(() => StatementMetrics.measure(spark) {
+        barrier.await()
+        val c = spark.range(n).repartition(3).groupBy((col("id") % 7).as("g")).count().collect()
+        barrier.await()
+        c
+      }._2)
+    }.map(_.get(300, java.util.concurrent.TimeUnit.SECONDS))
+    finally pool.shutdown()
+    val Seq(a, b) = scopes.map(m => m.jobs.map(_.id).toSet)
+    assert(a.nonEmpty && b.nonEmpty)
+    assert(a.intersect(b).isEmpty, s"scopes share jobs: $a / $b")
+    scopes.foreach { m =>
+      assert(spark.sparkContext.statusTracker.getJobIdsForTag(m.tag).toSet == m.jobs.map(_.id).toSet,
+        m.line)
+    }
+  }
+
+  test("statement recorder: a scope without an action reports no jobs at once") {
+    val (_, m) = StatementMetrics.measure(spark)(spark.range(10).filter(col("id") > 3))
+    assert(m.jobs.isEmpty && m.tasks == 0L, m.line)
+  }
+
+  test("statement recorder: a caller's job group and tags survive a nested scope") {
+    val sc = spark.sparkContext
+    sc.setJobGroup("caller-group", "caller group")
+    sc.addJobTag("caller-tag")
+    try {
+      val ((_, inner), outer) = StatementMetrics.measure(spark)(
+        StatementMetrics.measure(spark)(spark.range(100).repartition(2).count()))
+      assert(sc.getLocalProperty("spark.jobGroup.id") == "caller-group")
+      assert(sc.getJobTags() == Set("caller-tag"))
+      assert(inner.jobs.nonEmpty && outer.jobs.map(_.id) == inner.jobs.map(_.id))
+      assert(sc.statusTracker.getJobIdsForGroup("caller-group").toSet.subsetOf(
+        sc.statusTracker.getJobIdsForTag("caller-tag").toSet))
+      assert(inner.jobs.map(_.id).toSet.subsetOf(sc.statusTracker.getJobIdsForGroup("caller-group").toSet))
+    } finally { sc.clearJobGroup(); sc.removeJobTag("caller-tag") }
+  }
+
+  test("one statement recorder and one session builder: the consolidation cannot regrow") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    def sources(root: String): Seq[Path] = {
+      val dir = Paths.get(root)
+      assert(Files.isDirectory(dir), s"$root not found from ${Paths.get("").toAbsolutePath}")
+      Files.walk(dir).iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+    }
+    def holders(paths: Seq[Path], needle: String): Set[String] =
+      paths.filter(p => Files.readString(p).contains(needle)).map(_.getFileName.toString).toSet
+    val main = sources("src/main/scala")
+    val all = main ++ sources("src/test/scala")
+    // the needles are split so this file does not hold them itself
+    assert(holders(all, "addSparkListener" + "(") ==
+      Set("StatementMetrics.scala"), "a second SparkListener copy: count through StatementMetrics")
+    // the status store is read only after a recorder's drain (the
+    // cross-checks above), never after a sleep
+    assert(holders(all, "status" + "Tracker") == Set("PlanSpec.scala"),
+      "a status-store read outside the recorder's cross-checks")
+    assert(holders(main, "SparkSession" + ".builder()") == Set("SparkEntry.scala"),
+      "an entry point builds its own session: use SparkEntry.localSession")
   }
 }
