@@ -458,7 +458,7 @@ object Bench {
       // so the 12M-edge table is scanned once and never shuffled) and
       // one with stats stripped (textual order: the Big ⋈ R1 join
       // runs before anything cuts it down). Label routing is identical
-      // in both (indexAuxState untouched), so the delta is the join
+      // in both (the snapshot anchor untouched), so the delta is the join
       // ORDER + hints alone. Shuffle volume ships next to the seconds:
       // wall-clock at probe scale understates the 100 TB gap (the
       // textual plan here survives on a 4M-row static broadcast that

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 import graft.auth.{Auth, AuthStore}
 import graft.core.{DeltaBuffer, DeltaSide, DeltaState, GraphCatalog, GraphDatabase, PropertyGraph,
-  SnapshotStore}
+  SnapshotAnchor, SnapshotStore}
 import graft.cypher.{CypherCompiler, CypherParser, Params, ast}
 import graft.procs.ProcedureRegistry
 
@@ -96,32 +96,27 @@ final class GraftSession(val spark: SparkSession,
     d.pendingMutations = 0
     d.nodeDeltaState = None
     d.edgeDeltaState = None
-    // wholesale replacement: sealed stats describe frames that are no
-    // longer the graph (they'd never validate again), and a stale live
-    // memo must not drift-serve the REPLACED graph's counts (r19 lazy
-    // stats recompute for the new frames on first pattern compile)
-    d.graphStats = None
+    // wholesale replacement: the frames no longer come from the
+    // anchored snapshot (a save/load re-anchors right after), so its
+    // routing, stats and incremental-save shortcut must not serve
+    // them; and a stale live memo must not drift-serve the REPLACED
+    // graph's counts (r19 lazy stats recompute for the new frames on
+    // first pattern compile)
+    d.anchor = None
     d.statsMemo = None
     d.statsDrift = 0
-    // Seed the node-id allocator PAST the view's ids: nodes created by
-    // later upserts must never collide with existing ones — id
-    // identity keys the delta overlay, Bolt wire entities, and
-    // SET/DELETE targeting. (Before this, a fresh view-backed session
-    // minted ids from 0 and a MERGE-create could silently shadow a
-    // view node.) Views that know their ceiling supply it
-    // (PropertyGraph.knownMaxNodeId — GraphViews memoizes one per
-    // dir); otherwise one column-pruned max scan, once per setGraph.
-    // Edge ids key the edge overlay the same way, so the relationship
-    // allocator moves past the frame's eids (one more max scan).
-    def maxOf(df: DataFrame, c: String): Long = {
-      import org.apache.spark.sql.functions.{max => smax}
-      df.agg(smax(c)).collect().headOption
-        .flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long])).getOrElse(-1L)
-    }
-    val maxId = g.knownMaxNodeId.getOrElse(maxOf(g.nodes, "id"))
+    // Seed both id allocators PAST the frames' ids: nodes and edges
+    // created by later writes must never collide with existing ones —
+    // node ids and edge eids key the delta overlays, Bolt wire
+    // entities and SET/DELETE targeting. Frames that know their
+    // ceilings supply them (PropertyGraph.knownMaxIds: a snapshot's
+    // manifest, GraphViews' per-dir memo); otherwise one column-pruned
+    // max scan per side.
+    import org.apache.spark.sql.functions.col
+    val (maxId, maxRelId) = g.knownMaxIds.getOrElse((PropertyGraph.maxOf(g.nodes, col("id")),
+      if (g.edges.columns.contains("eid")) PropertyGraph.maxOf(g.edges, col("eid")) else -1L))
     d.nextId.set(math.max(d.nextId.get(), maxId + 1))
-    if (g.edges.columns.contains("eid"))
-      d.nextRelId.set(math.max(d.nextRelId.get(), maxOf(g.edges, "eid") + 1))
+    d.nextRelId.set(math.max(d.nextRelId.get(), maxRelId + 1))
   }
 
   /** Authenticate against the store (the Bolt-session-open analog).
@@ -157,21 +152,14 @@ final class GraftSession(val spark: SparkSession,
     val dir = s"$dataDir/databases/$db"
     val d = catalog.database(db)
     // INCREMENTAL save (v5 nodes_delta/edges_delta, the stretch of
-    // r11 verdict #8): when the session's mutations are pure deltas —
-    // each mutated side a valid overlay over the exact base this
-    // snapshot dir already holds (provenance manifest equality —
-    // anyone else touching the dir falls back to a full write), the
-    // other side untouched — persist ONLY the deltas: an unchanged
-    // 100 TB base is never rewritten for a 30-row commit.
-    val nd = d.validNodeDelta.filter(_.base eq d.matNodes)
-    val ed = d.validEdgeDelta.filter(_.base eq d.matEdges)
-    val nodesClean = nd.isDefined || (graph(db).nodes eq d.matNodes)
-    val edgesClean = ed.isDefined || (graph(db).edges eq d.matEdges)
-    val provOk = d.snapshotProvenance.exists { case (pdir, pm) =>
-      pdir == dir && SnapshotStore.exists(dir) &&
-        (try SnapshotStore.readManifest(dir) == pm
-         catch { case _: Exception => false })
-    }
+    // r11 verdict #8): when each side is the snapshot this dir holds
+    // (the anchor, still intact — anyone else touching the dir falls
+    // back to a full write) or a live overlay over it, persist ONLY
+    // the deltas: an unchanged 100 TB base is never rewritten for a
+    // 30-row commit.
+    val live = d.anchor.filter(a => a.dir == dir && a.intact).flatMap(a =>
+      a.liveDelta(DeltaSide.Nodes, d, d.graph.nodes)
+        .zip(a.liveDelta(DeltaSide.Edges, d, d.graph.edges)))
     // the epoch the session's delta-log belongs to, settled BEFORE the
     // save re-points anything: an incremental save carries it through
     // (the merged on-disk delta still holds every change an
@@ -189,85 +177,63 @@ final class GraftSession(val spark: SparkSession,
     // per DDL batch keeps every anchored lookup index-backed.
     val indexDefsCurrent =
       !SnapshotStore.exists(dir) || SnapshotStore.readSealedAux(dir) == d.indexes.toMap
-    val m =
-      if (provOk && nodesClean && edgesClean && indexDefsCurrent &&
-          (nd.isDefined || ed.isDefined))
-        SnapshotStore.writeDelta(spark, nd.map(_.delta), ed.map(_.delta), dir, db,
-          d.nextId.get(), d.nextRelId.get(), schemaMeta(db),
-          changeEpoch = preEpoch)
-      else
+    val m = live.filter { case (nd, ed) =>
+      indexDefsCurrent && (nd.isDefined || ed.isDefined) } match {
+      case Some((nd, ed)) =>
+        SnapshotStore.writeDelta(spark, nd, ed, dir, db,
+          d.nextId.get(), d.nextRelId.get(), schemaMeta(db), changeEpoch = preEpoch)
+      case None =>
         SnapshotStore.write(graph(db), d.nextId.get(), dir, db,
           schemaMeta(db), d.nextRelId.get(), changeEpoch = preEpoch + 1)
-    // the manifest's next_id IS the id ceiling — hand it to setGraph
-    // so re-pointing at the snapshot never max-scans the base
-    setGraph(PropertyGraph(SnapshotStore.readNodes(spark, dir),
-      SnapshotStore.readEdges(spark, dir), knownMaxNodeId = Some(m.nextId - 1)), db)
-    d.snapshotProvenance = Some((dir, m))
-    // re-seed the epoch tracking against the re-pointed frames: the
-    // MANIFEST's epoch is authoritative (kept by a pure incremental
-    // save, bumped by a full write or an on-disk compaction)
+    }
+    reanchor(d, dir, m)
+    // the MANIFEST's epoch is authoritative (kept by a pure
+    // incremental save, bumped by a full write or an on-disk
+    // compaction)
     d.changeEpoch = m.changeEpoch
     if (m.changeEpoch != preEpoch)
-      d.epochStartIds = Some((d.nextId.get(), d.nextRelId.get()))
-    d.cdcBaseRefs = Some((graph(db).nodes, graph(db).edges))
-    // the re-pointed frames are what the dir's projections were built
-    // from — composed with any on-disk delta-log the incremental-save
-    // path kept (the projections survive a delta now and a routed
-    // lookup overlays them with it). The sealed index defs come from
-    // the dir itself (index_aux/sealed_schema.json, written by the
-    // full write that BUILT the projections): a DROP + re-CREATE
-    // under a reused name between saves must not route.
-    d.indexAuxState = Some(graft.core.IndexAuxState(
-      graph(db).nodes, graph(db).edges, dir, SnapshotStore.readSealedAux(dir),
-      SnapshotStore.readNodesDelta(spark, dir),
-      SnapshotStore.readEdgesDelta(spark, dir)))
-    refreshGraphStats(d, dir)
-    // the durable snapshot replaced the append-log lineage: any
-    // mutation-pinned caches it referenced can be freed now
-    d.releasePinned()
+      d.epochStartIds = Some((m.nextId, m.nextRelId))
   }
 
   /** Load a database from the data-dir snapshot. */
   def loadDatabase(dataDir: String, db: String = "neo4j"): Unit = {
     val dir = s"$dataDir/databases/$db"
-    val (g, m) = SnapshotStore.read(spark, dir)
-    catalog.createDatabase(db)
-    setGraph(g, db)
-    val d = catalog.database(db)
-    d.nextId.set(m.nextId)
-    d.nextRelId.set(m.nextRelId)
-    d.snapshotProvenance = Some((dir, m))
+    val m = SnapshotStore.open(spark, dir)
+    val d = catalog.createDatabase(db)
+    applySchemaMeta(db, SnapshotStore.readSchema(dir))
+    reanchor(d, dir, m)
     // a load re-points the session at frames no outstanding cursor
     // was minted against: start a fresh epoch past BOTH the session's
     // and the manifest's (monotonic across restarts)
     d.changeEpoch = math.max(d.changeEpoch, m.changeEpoch) + 1
     d.epochStartIds = Some((m.nextId, m.nextRelId))
-    d.cdcBaseRefs = Some((g.nodes, g.edges))
-    applySchemaMeta(db, SnapshotStore.readSchema(dir))
-    d.indexAuxState = Some(graft.core.IndexAuxState(
-      g.nodes, g.edges, dir, SnapshotStore.readSealedAux(dir),
-      SnapshotStore.readNodesDelta(spark, dir),
-      SnapshotStore.readEdgesDelta(spark, dir)))
-    refreshGraphStats(d, dir)
-    d.releasePinned()
   }
 
-  /** Re-key the database's cardinality stats to its just-re-pointed
-    * frames: the sealed pure-base stats (stats.json, written by the
-    * last FULL write) overlaid ONCE with the on-disk delta-log's
-    * counts — the frames fold that delta in, so the stats must too.
-    * Eager (one small aggregate per delta side, paid at save/load,
-    * never per statement); LIVE deltas overlay lazily in [[statsFor]].
-    * A dir without stats.json leaves ordering textual. */
-  private def refreshGraphStats(d: GraphDatabase, dir: String): Unit = {
-    d.graphStats = SnapshotStore.readStats(dir).map { s0 =>
-      val s1 = statsOverlaid(s0,
-        SnapshotStore.readNodesDelta(spark, dir),
-        SnapshotStore.readEdgesDelta(spark, dir))
-      (d.graph.nodes, d.graph.edges, s1)
-    }
-    d.statsMemo = None
-    d.statsDrift = 0
+  /** Re-point `d` at the snapshot `m` in `dir` and anchor it there —
+    * the one writer of [[GraphDatabase.anchor]]. The frames fold the
+    * on-disk delta-logs in, and so do the anchor's stats: the sealed
+    * pure-base stats (stats.json, written by the last FULL write)
+    * overlaid ONCE with the deltas' counts (one small aggregate per
+    * delta side, paid here, never per statement; LIVE deltas overlay
+    * lazily in [[statsFor]]). Both id allocators take the manifest's
+    * next ids; the CDC epoch rule stays with the caller. */
+  private def reanchor(d: GraphDatabase, dir: String, m: SnapshotStore.Manifest): Unit = {
+    val g = SnapshotStore.graphOf(spark, dir, m)
+    setGraph(g, d.name)
+    d.nextId.set(m.nextId)
+    d.nextRelId.set(m.nextRelId)
+    val (nodeDisk, edgeDisk) =
+      (SnapshotStore.readNodesDelta(spark, dir), SnapshotStore.readEdgesDelta(spark, dir))
+    // the sealed index defs come from the dir itself
+    // (index_aux/sealed_schema.json, written by the full write that
+    // BUILT the projections): a DROP + re-CREATE under a reused name
+    // between saves must not route
+    d.anchor = Some(new SnapshotAnchor(dir, m, g, SnapshotStore.readSealedAux(dir),
+      nodeDisk, edgeDisk, SnapshotStore.readStats(dir).map(statsOverlaid(_, nodeDisk, edgeDisk))))
+    d.cdcBaseRefs = Some((g.nodes, g.edges))
+    // the durable snapshot replaced the append-log lineage: any
+    // mutation-pinned caches it referenced can be freed now
+    d.releasePinned()
   }
 
   /** Overlay delta-log counts onto sealed stats: each non-tombstone
@@ -307,32 +273,28 @@ final class GraftSession(val spark: SparkSession,
   }
 
   /** The cardinality stats valid for the statement frames, if any —
-    * the sealed+disk-delta stats when the frames ARE the save/load
-    * frames, or those overlaid with the LIVE delta counts when the
-    * frames are a delta overlay whose base is the save/load frame
-    * (the rangeAnchorFor two-layer identity proof, applied to the
-    * cost model). Memoized per resolved frame pair: the delta-count
-    * jobs run once per mutation state, not once per statement. Any
-    * foreign re-point returns None — join ordering then stays
-    * textual rather than mis-estimating. */
+    * the anchor's sealed+disk-delta stats when the frames ARE the
+    * save/load frames, or those overlaid with the LIVE delta counts
+    * when a frame is a delta overlay over them (the anchor's identity
+    * proof, applied to the cost model). Memoized per resolved frame
+    * pair: the delta-count jobs run once per mutation state, not once
+    * per statement. Any foreign re-point returns None — join ordering
+    * then stays textual rather than mis-estimating. */
   private def statsFor(db: GraphDatabase, g: PropertyGraph): Option[graft.core.GraphStats] =
     if (db.statsOff) None
-    else db.graphStats match {
-      case Some((nRef, eRef, sealedStats)) =>
-        val nodePure = g.nodes eq nRef
-        val edgePure = g.edges eq eRef
-        val nodeOk = nodePure || db.validNodeDelta.exists(_.base eq nRef)
-        val edgeOk = edgePure || db.validEdgeDelta.exists(_.base eq eRef)
-        if (!nodeOk || !edgeOk) None
-        else if (nodePure && edgePure) Some(sealedStats)
-        else db.statsMemo match {
-          case Some((mn, me, s)) if (mn eq g.nodes) && (me eq g.edges) => Some(s)
-          case _ =>
-            val s = statsOverlaid(sealedStats,
-              if (nodePure) None else db.validNodeDelta.map(_.delta),
-              if (edgePure) None else db.validEdgeDelta.map(_.delta))
-            db.statsMemo = Some((g.nodes, g.edges, s))
-            Some(s)
+    else db.anchor.flatMap(a => a.stats.map(a -> _)) match {
+      case Some((a, sealedStats)) =>
+        (a.liveDelta(DeltaSide.Nodes, db, g.nodes),
+            a.liveDelta(DeltaSide.Edges, db, g.edges)) match {
+          case (Some(None), Some(None)) => Some(sealedStats)
+          case (Some(nodeLive), Some(edgeLive)) => db.statsMemo match {
+            case Some((mn, me, s)) if (mn eq g.nodes) && (me eq g.edges) => Some(s)
+            case _ =>
+              val s = statsOverlaid(sealedStats, nodeLive, edgeLive)
+              db.statsMemo = Some((g.nodes, g.edges, s))
+              Some(s)
+          }
+          case _ => None
         }
       // never saved/loaded (r18 verdict #4): compute live stats once,
       // memoized by frame identity. A mutation re-points the frames on
@@ -367,7 +329,7 @@ final class GraftSession(val spark: SparkSession,
     * for a decision an anchor-rank gap already forces. */
   private def statsCheapFor(db: GraphDatabase, g: PropertyGraph): Option[graft.core.GraphStats] =
     if (db.statsOff) None
-    else if (db.graphStats.isDefined) statsFor(db, g)
+    else if (db.anchor.exists(_.stats.isDefined)) statsFor(db, g)
     else db.statsMemo match {
       case Some((mn, me, s)) if (mn eq g.nodes) && (me eq g.edges) => Some(s)
       case Some((_, _, s)) if db.statsDrift < GraftSession.MaxStatsDrift =>
@@ -477,22 +439,25 @@ final class GraftSession(val spark: SparkSession,
     * explicit overwrite consent (ref TestBackupRestore.java:149-163). */
   def restoreDatabase(fromPath: String, db: String = "neo4j",
       overwriteDestination: Boolean = false): Unit = {
-    if (!catalog.database(db).stopped)
+    val d = catalog.database(db)
+    if (!d.stopped)
       throw new IllegalStateException(
         s"database $db is started; STOP DATABASE $db before restoring")
-    if (graph(db).nodes.take(1).nonEmpty && !overwriteDestination)
+    if (d.graph.nodes.take(1).nonEmpty && !overwriteDestination)
       throw new IllegalStateException(
         s"database $db is not empty; use overwriteDestination=true to replace it")
-    val (g, m) = SnapshotStore.read(spark, s"$fromPath/$db.backup")
+    val from = s"$fromPath/$db.backup"
+    val (g, m) = SnapshotStore.read(spark, from)
+    // the backup's frames are not the data dir's snapshot: setGraph
+    // drops the anchor, so the next save is a full write
     setGraph(g, db)
-    catalog.database(db).nextId.set(m.nextId)
-    catalog.database(db).nextRelId.set(m.nextRelId)
+    d.nextId.set(m.nextId)
+    d.nextRelId.set(m.nextRelId)
     // a restore is an epoch event like a load: fresh monotonic epoch
-    catalog.database(db).changeEpoch =
-      math.max(catalog.database(db).changeEpoch, m.changeEpoch) + 1
-    catalog.database(db).epochStartIds = Some((m.nextId, m.nextRelId))
-    catalog.database(db).cdcBaseRefs = Some((g.nodes, g.edges))
-    applySchemaMeta(db, SnapshotStore.readSchema(s"$fromPath/$db.backup"))
+    d.changeEpoch = math.max(d.changeEpoch, m.changeEpoch) + 1
+    d.epochStartIds = Some((m.nextId, m.nextRelId))
+    d.cdcBaseRefs = Some((g.nodes, g.edges))
+    applySchemaMeta(db, SnapshotStore.readSchema(from))
   }
 
   // ----------------------------------------------------------------
@@ -1438,10 +1403,10 @@ final class GraftSession(val spark: SparkSession,
   private def compactSide[B <: DeltaBuffer[B]](db: GraphDatabase, side: DeltaSide[B],
       mat: DataFrame): DataFrame = side.valid(db) match {
     case Some(s) =>
-      val base = if (s.base eq mat) s.base else s.base.localCheckpoint()
+      val baseKept = mat eq s.base
+      val base = if (baseKept) mat else s.base.localCheckpoint()
       val delta = if (s.materialized) s.delta else s.delta.localCheckpoint()
-      val resolved = if ((base eq s.base) && (delta eq s.delta)) s.resolved
-        else side.overlay(base, delta)
+      val resolved = if (baseKept && s.materialized) s.resolved else side.overlay(base, delta)
       side.publish(db, DeltaState(base, delta, resolved, s.buf))
       base
     case None =>
@@ -1465,8 +1430,9 @@ final class GraftSession(val spark: SparkSession,
   private def compiler(db: GraphDatabase, wire: Boolean = false) = {
     val g = db.graph
     new CypherCompiler(spark, g, procedures.procedure, procedures.scalar,
-      entityStructs = wire, rangeAnchor = rangeAnchorFor(db, g),
-      relRangeAnchor = relRangeAnchorFor(db, g),
+      entityStructs = wire,
+      rangeAnchor = indexAnchorFor(db, g, DeltaSide.Nodes, Set("RANGE", "TEXT")),
+      relRangeAnchor = indexAnchorFor(db, g, DeltaSide.Edges, Set("REL_RANGE", "REL_TEXT")),
       labelScan = labelScanFor(db, g),
       prefixCap = prefixEnumerationCap,
       statsIn = () => statsFor(db, g),
@@ -1484,18 +1450,17 @@ final class GraftSession(val spark: SparkSession,
       // probes and pre-reduction pay scan-cost, not view-build cost;
       // setGraph frames are arbitrary computed views (see probed /
       // compileVarHop base0)
-      scanBackedGraph = db.graphStats.isDefined)
+      scanBackedGraph = db.anchor.exists(_.stats.isDefined))
   }
 
   /** Label-scan routing (r17 — the label-scan-store analog): an
     * unanchored `MATCH (n:L …)` swaps the node scan for the snapshot
     * base's label-partition-pruned read (`_label_key` directories
     * whose sorted label set contains L — zero other-label data files
-    * opened), composed with the on-disk and live node deltas exactly
-    * like [[rangeAnchorFor]]: same two-layer reference-identity proof,
-    * same latest-wins overlay, and the compiler re-applies every label
-    * and property predicate on the routed frame, so semantics are
-    * untouched. A label SET routes as one union-pruned read (r17
+    * opened), composed with the on-disk and live node deltas by the
+    * anchor (SnapshotAnchor.routed), and the compiler re-applies every
+    * label and property predicate on the routed frame, so semantics
+    * are untouched. A label SET routes as one union-pruned read (r17
     * verdict #2: `MATCH (n:A|B)` prunes to the A ∪ B directories; the
     * compiler passes a covering set whenever the label expression's
     * boolean shape admits one). Typed EDGE scans need no twin: relType
@@ -1503,132 +1468,63 @@ final class GraftSession(val spark: SparkSession,
     * typed filter prunes through the ordinary frame. */
   private def labelScanFor(db: GraphDatabase, g: PropertyGraph)(
       labels: Seq[String]): Option[DataFrame] =
-    db.indexAuxState.flatMap { st =>
-      val memDelta: Option[Option[DataFrame]] =
-        if (st.nodesRef eq g.nodes) Some(None)
-        else db.validNodeDelta.filter(_.base eq st.nodesRef).map(s => Some(s.delta))
-      memDelta.flatMap { mem =>
-        // length-prefixed key: injective even when a backticked label
-        // itself contains ';' (`A;B` vs Seq("A","B") must not collide)
-        st.cachedRead(s"label:${labels.sorted.map(l => s"${l.length}:$l").mkString(";")}")(
-          SnapshotStore.readNodesPrunedByLabels(spark, st.dir, labels)).map { pruned =>
-          val withDisk = st.nodeDiskDelta.map(DeltaSide.Nodes.overlay(pruned, _)).getOrElse(pruned)
-          mem.map(DeltaSide.Nodes.overlay(withDisk, _)).getOrElse(withDisk)
-        }
-      }
+    db.anchor.flatMap { a =>
+      // length-prefixed key: injective even when a backticked label
+      // itself contains ';' (`A;B` vs Seq("A","B") must not collide)
+      a.routed(DeltaSide.Nodes, db, g.nodes,
+        s"label:${labels.sorted.map(l => s"${l.length}:$l").mkString(";")}")(
+        SnapshotStore.readNodesPrunedByLabels(spark, a.dir, labels))
     }
 
   /** Index-backed anchored lookups (r15 verdict #1, DELTA-COMPOSED in
     * r17 — r16 verdict #1): an anchored `MATCH (n:L {p: v})` on a
-    * RANGE-indexed (label, prop) routes through the snapshot's
-    * `index_aux/<name>/` projection — the label's non-null-prop rows,
-    * clustered and sorted by the property, so the pushed equality/
-    * range predicate row-group-prunes instead of scanning the whole
-    * unsorted node base.
-    *
-    * Validity is PROVEN by reference identity, in two composable
-    * layers, mirroring how the base itself resolves:
-    *   1. the statement frame IS the save/load frame (`st.nodesRef eq
-    *      g.nodes`) → route `projection ⟵overlay⟶ on-disk delta-log`
-    *      (the projections are built from the pure base; an
-    *      incremental save keeps them plus the delta they compose
-    *      with — exactly the frames readNodes folded into nodesRef);
-    *   2. the frame is the save/load frame plus a LIVE delta overlay
-    *      (`validNodeDelta.base eq st.nodesRef`) → overlay the
-    *      in-memory delta on top, O(delta) extra work.
-    * Any other re-point (external setGraph, a non-overlay mutation
-    * path) silently falls back to the ordinary scan — the house
-    * self-validation pattern; correctness never depends on
-    * remembering to invalidate. Semantics are untouched either way:
-    * the compiler re-applies every label and property predicate on
-    * the routed frame, and overlay resolution (anti-join by id +
-    * union of live rows) is the same operation the base read uses, so
-    * the routed frame's label-L/non-null-p slice equals the resolved
-    * frame's. Filters push into BOTH union branches, so the
-    * projection side still row-group-prunes. */
-  private def rangeAnchorFor(db: GraphDatabase, g: PropertyGraph)(
-      label: String, prop: String): Option[DataFrame] =
-    db.indexAuxState.flatMap { st =>
-      val memDelta: Option[Option[DataFrame]] =
-        if (st.nodesRef eq g.nodes) Some(None)
-        else db.validNodeDelta.filter(_.base eq st.nodesRef).map(s => Some(s.delta))
-      memDelta.flatMap { mem =>
-        db.indexes.collectFirst {
-          // the LIVE entry must equal the entry SEALED when the
-          // projection was BUILT — DROP + re-CREATE under a reused
-          // name re-points no frame, so only the schema equality
-          // protects against routing through a projection built for a
-          // different (label, prop)
-          // a COMPOSITE key routes on its FIRST property (the prefix
-          // rule): the projection holds exactly the label's rows with
-          // that property non-null, whatever the rest of the key
-          case (name, e @ (l, p, "RANGE" | "TEXT"))
-              if l == label && p.split(",").head == prop &&
-                st.sealedIndexes.get(name).contains(e) =>
-            s"${st.dir}/index_aux/$name"
-        }.flatMap { path =>
-          st.cachedRead(path)(
-            if (java.nio.file.Files.exists(java.nio.file.Paths.get(path)))
-              Some(spark.read.parquet(path))
-            else None)
-        }.map { proj =>
-          val withDisk = st.nodeDiskDelta.map(DeltaSide.Nodes.overlay(proj, _)).getOrElse(proj)
-          mem.map(DeltaSide.Nodes.overlay(withDisk, _)).getOrElse(withDisk)
-        }
+    * RANGE/TEXT-indexed (label, prop) — or a typed edge scan on a
+    * REL_RANGE/REL_TEXT-indexed (relType, prop) — routes through the
+    * snapshot's `index_aux/<name>/` projection: the owner's
+    * non-null-prop rows, clustered and sorted by the property, so the
+    * pushed equality/range predicate row-group-prunes instead of
+    * scanning the whole unsorted base. The anchor proves the frame
+    * (the snapshot's own, or a live overlay over it — any other
+    * re-point falls back to the ordinary scan) and composes
+    * `projection ⟵ on-disk delta ⟵ live delta` by the side's key, the
+    * same overlay the base read resolves with, so the routed frame's
+    * owner/non-null-p slice equals the frame's; the compiler re-applies
+    * every predicate, and filters push into every union branch, so the
+    * projection side still row-group-prunes. The LIVE index entry must
+    * equal the one SEALED when the projection was built. A COMPOSITE
+    * key routes on its FIRST property (the prefix rule): the
+    * projection holds exactly the owner's rows with that property
+    * non-null, whatever the rest of the key. */
+  private def indexAnchorFor[B <: DeltaBuffer[B]](db: GraphDatabase, g: PropertyGraph,
+      side: DeltaSide[B], kinds: Set[String])(owner: String, prop: String): Option[DataFrame] =
+    db.anchor.flatMap { a =>
+      db.indexes.collectFirst {
+        case (name, e @ (o, p, kind)) if kinds(kind) && o == owner &&
+            p.split(",").head == prop && a.sealedIndexes.get(name).contains(e) =>
+          s"${a.dir}/index_aux/$name"
+      }.flatMap { path =>
+        a.routed(side, db, side.part(g), path)(
+          Some(path).filter(p => java.nio.file.Files.exists(java.nio.file.Paths.get(p)))
+            .map(spark.read.parquet(_)))
       }
     }
 
-  /** Edge-side twin of [[rangeAnchorFor]]: a REL_RANGE-indexed
-    * (relType, prop) typed scan routes through the snapshot's
-    * prop-clustered edge projection, composed with the on-disk and
-    * live edge delta-logs by eid the same way. Validity is the EDGES
-    * frame reference (node mutations re-point only the node side, so
-    * edge projections survive them). */
-  private def relRangeAnchorFor(db: GraphDatabase, g: PropertyGraph)(
-      relType: String, prop: String): Option[DataFrame] =
-    db.indexAuxState.flatMap { st =>
-      val memDelta: Option[Option[DataFrame]] =
-        if (st.edgesRef eq g.edges) Some(None)
-        else db.validEdgeDelta.filter(_.base eq st.edgesRef).map(s => Some(s.delta))
-      memDelta.flatMap { mem =>
-        db.indexes.collectFirst {
-          case (name, e @ (t, p, "REL_RANGE" | "REL_TEXT"))
-              if t == relType && p.split(",").head == prop &&
-                st.sealedIndexes.get(name).contains(e) =>
-            s"${st.dir}/index_aux/$name"
-        }.flatMap { path =>
-          st.cachedRead(path)(
-            if (java.nio.file.Files.exists(java.nio.file.Paths.get(path)))
-              Some(spark.read.parquet(path))
-            else None)
-        }.map { proj =>
-          val withDisk = st.edgeDiskDelta.map(DeltaSide.Edges.overlay(proj, _)).getOrElse(proj)
-          mem.map(DeltaSide.Edges.overlay(withDisk, _)).getOrElse(withDisk)
-        }
-      }
-    }
-
-  /** VECTOR/IVF routing state: the on-disk `index_aux/<name>` dir
-    * plus the NODE delta the probe must compose with — on-disk
-    * (folded into the save/load frame) and/or live — under the same
-    * two-layer reference-identity proof as [[rangeAnchorFor]]. The
-    * probe then answers `pruned cells ⟵anti-join touched ids⟶ ∪
-    * brute-forced delta slice`: exact relative to the trained
+  /** VECTOR/IVF routing: the anchor, its `index_aux/<name>` dir and
+    * the node delta-log the probe composes with (on-disk, folded into
+    * the save/load frame, and/or live), under the anchor's identity
+    * proof. The probe then answers `pruned cells ⟵anti-join touched
+    * ids⟶ ∪ brute-forced delta slice`: exact relative to the trained
     * quantizer, O(delta) extra work per query. */
-  private def indexAuxVectorRoute(name: String): Option[
-      (String, Option[DataFrame], Option[DataFrame], graft.core.IndexAuxState)] = {
+  private def indexAuxVectorRoute(
+      name: String): Option[(SnapshotAnchor, String, Option[DataFrame])] = {
     val d = statementDatabase
-    d.indexAuxState.flatMap { st =>
-      val memDelta: Option[Option[DataFrame]] =
-        if (st.nodesRef eq d.graph.nodes) Some(None)
-        else d.validNodeDelta.filter(_.base eq st.nodesRef).map(s => Some(s.delta))
-      memDelta.flatMap { mem =>
-        if (!d.indexes.get(name).exists(e => st.sealedIndexes.get(name).contains(e))) None
-        else Some(s"${st.dir}/index_aux/$name")
-          .filter(p => java.nio.file.Files.exists(java.nio.file.Paths.get(p)))
-          .map(p => (p, st.nodeDiskDelta, mem, st))
-      }
-    }
+    for {
+      a <- d.anchor
+      live <- a.liveDelta(DeltaSide.Nodes, d, d.graph.nodes)
+      e <- d.indexes.get(name) if a.sealedIndexes.get(name).contains(e)
+      dir = s"${a.dir}/index_aux/$name"
+      if java.nio.file.Files.exists(java.nio.file.Paths.get(dir))
+    } yield (a, dir, a.deltaLog(DeltaSide.Nodes, live))
   }
 
   private def changePassword(from: String, to: String): Unit = {
@@ -2326,13 +2222,11 @@ final class GraftSession(val spark: SparkSession,
   private def typedPlus(frame: DataFrame, lc: org.apache.spark.sql.Column,
       rc: org.apache.spark.sql.Column, l: ast.Expr, r: ast.Expr): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions._
-    def typ(c: org.apache.spark.sql.Column): Option[DataType] =
-      try Some(frame.select(c).schema.head.dataType) catch { case _: Throwable => None }
     def isStrLit(e: ast.Expr): Boolean = e match {
       case ast.Lit(_: String) => true
       case _                  => false
     }
-    val (tl, tr) = (typ(lc), typ(rc))
+    val (tl, tr) = (CypherCompiler.colType(lc, frame), CypherCompiler.colType(rc, frame))
     if (tl.contains(StringType) || tr.contains(StringType) || isStrLit(l) || isStrLit(r))
       concat(lc.cast("string"), rc.cast("string"))
     else (tl, tr) match {
@@ -5465,10 +5359,10 @@ final class GraftSession(val spark: SparkSession,
       // quantizer. Falls back to the exact scan only when the frame
       // moved by a non-overlay path, or the session never saved.
       val ivfRoute = probes.filter(_ > 0).flatMap(_ => indexAuxVectorRoute(name))
-        .filter { case (d, _, _, _) =>
+        .filter { case (_, d, _) =>
           java.nio.file.Files.exists(java.nio.file.Paths.get(s"$d/centroids")) }
       ivfRoute match {
-        case Some((dir, diskDelta, memDelta, st)) =>
+        case Some((st, dir, combined)) =>
           def cos(a: Seq[Double], b: Seq[Double]): Double = {
             val dot = a.lazyZip(b).map(_ * _).sum
             val na = math.sqrt(a.map(x => x * x).sum)
@@ -5504,13 +5398,6 @@ final class GraftSession(val spark: SparkSession,
               cellScan0.filter(col("_ivf_cell") === col("_ivf_primary") ||
                 !col("_ivf_primary").isin(cells.toIndexedSeq: _*))
             else cellScan0
-          // latest-wins combination of the two delta layers (the live
-          // overlay is newer than the persisted log)
-          val combined = (diskDelta, memDelta) match {
-            case (Some(dk), Some(o)) => Some(PropertyGraph.appendByName(
-              dk.join(o.select(col("id").as("_ck")), dk("id") === col("_ck"), "left_anti"), o))
-            case (dk, o) => o.orElse(dk)
-          }
           def scoreOf(df: DataFrame) = df.select(col("id").as("nodeId"),
             V.cosine(col(prop).cast("array<double>"), qCol).as("score"))
           val scored = combined match {
@@ -5719,46 +5606,33 @@ final class GraftSession(val spark: SparkSession,
             "replaced by a load/compaction/full save or a non-delta write) — " +
             "restart from db.cdc.earliest")
       val cursorSeq = m.group(5).toLong
-      // this epoch's delta-log may live in TWO places: the snapshot
-      // dir's persisted delta (flushed by an incremental save — the
-      // provenance manifest must still match AND carry this epoch)
-      // and the live overlay. Union latest-wins (overlay newer). A
-      // provenance dir claiming THIS epoch whose manifest no longer
-      // matches means someone else touched the snapshot (an external
-      // compaction folds the persisted log away) — refuse loudly
-      // rather than silently dropping the flushed events.
-      val prov = d.snapshotProvenance.filter { case (_, pm) =>
-        pm.changeEpoch == d.changeEpoch
+      // this epoch's delta-log may live in TWO places: the anchored
+      // snapshot's persisted delta (flushed by an incremental save —
+      // the anchor must still be intact AND carry this epoch) and the
+      // live overlay, unioned latest-wins (overlay newer). An anchor
+      // claiming THIS epoch that is no longer intact means someone
+      // else touched the snapshot (an external compaction folds the
+      // persisted log away) — refuse loudly rather than silently
+      // dropping the flushed events.
+      val prov = d.anchor.filter(_.manifest.changeEpoch == d.changeEpoch)
+      if (prov.exists(!_.intact)) throw new IllegalStateException(
+        "the snapshot holding this change epoch's persisted delta-log " +
+          "was modified externally (compaction or another writer) — " +
+          "restart from db.cdc.earliest")
+      def epochLog[B <: DeltaBuffer[B]](side: DeltaSide[B]): Option[DataFrame] = {
+        val live = side.valid(d).map(_.delta)
+        prov.fold(live)(_.deltaLog(side, live))
       }
-      prov.foreach { case (dir, pm) =>
-        val intact = SnapshotStore.exists(dir) &&
-          (try SnapshotStore.readManifest(dir) == pm
-           catch { case _: Exception => false })
-        if (!intact) throw new IllegalStateException(
-          "the snapshot holding this change epoch's persisted delta-log " +
-            "was modified externally (compaction or another writer) — " +
-            "restart from db.cdc.earliest")
-      }
-      def combined(overlay: Option[DataFrame], disk: Option[DataFrame],
-          key: String): Option[DataFrame] = (overlay, disk) match {
-        case (Some(o), Some(k)) => Some(PropertyGraph.appendByName(
-          k.join(o.select(col(key).as("_ck")), k(key) === col("_ck"), "left_anti"), o))
-        case (Some(o), None) => Some(o)
-        case (None, k)       => k
-      }
-      val nodeDelta = combined(d.validNodeDelta.map(_.delta),
-        prov.flatMap { case (dir, _) => SnapshotStore.readNodesDelta(spark, dir) }, "id")
-      val edgeDelta = combined(d.validEdgeDelta.map(_.delta),
-        prov.flatMap { case (dir, _) => SnapshotStore.readEdgesDelta(spark, dir) }, "eid")
+      val nodeDelta = epochLog(DeltaSide.Nodes)
+      val edgeDelta = epochLog(DeltaSide.Edges)
       val tombC = PropertyGraph.TombstoneCol
       // epoch-start bases for the OPTIONAL before-image: the pure
-      // on-disk base when the epoch is provenance-backed (the in-memory
+      // on-disk base when the epoch is anchor-backed (the in-memory
       // frames fold the flushed delta in after a save), else the live
       // overlay's base / the unmutated frames
       def epochBase(fromDisk: String => DataFrame,
           overlayBase: Option[DataFrame], live: DataFrame): DataFrame =
-        prov.map { case (dir, _) => fromDisk(dir) }
-          .orElse(overlayBase).getOrElse(live)
+        prov.map(a => fromDisk(a.dir)).orElse(overlayBase).getOrElse(live)
       // the anchored at-mint graph, when the cursor's sequence still
       // has one (same epoch; anchors drop on pinned-cache release):
       // before-images then read the TRUE at-cursor state directly,

@@ -1,32 +1,94 @@
 package graft.core
 
 import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
 import scala.collection.concurrent.TrieMap
+import scala.util.control.NonFatal
 
-/** See [[GraphDatabase.indexAuxState]]. `nodeDiskDelta`/
-  * `edgeDiskDelta` are the snapshot's on-disk delta-log frames that
-  * were FOLDED into `nodesRef`/`edgesRef` at save/load time: a routed
-  * lookup composes `projection ⟵overlay⟶ diskDelta` to reconstruct
-  * exactly the folded frame's slice, since the projections themselves
-  * are built from the pure base only. */
-final case class IndexAuxState(
-    nodesRef: AnyRef,
-    edgesRef: AnyRef,
-    dir: String,
-    sealedIndexes: Map[String, (String, String, String)],
-    nodeDiskDelta: Option[org.apache.spark.sql.DataFrame] = None,
-    edgeDiskDelta: Option[org.apache.spark.sql.DataFrame] = None) {
+/** The snapshot a database was last re-pointed at by a save or a
+  * load: its `dir` and `manifest`, the node and edge `frames` read
+  * from it, the index defs SEALED when its `index_aux/<name>/`
+  * projections were built (name → (label, prop, kind)), its on-disk
+  * delta-logs (folded into `frames`, never into the projections,
+  * which are built from the pure base) and its sealed cardinality
+  * `stats` overlaid with those deltas (None for a dir without
+  * stats.json: join ordering then stays live/textual).
+  *
+  * Index routing, label-scan routing, the IVF probe, the cost model,
+  * the incremental-save shortcut and the CDC disk-log read all ask it
+  * one question through [[liveDelta]]: is this frame the snapshot's
+  * frame, or that frame under a live delta overlay? The proof is
+  * reference identity per side (the house self-validation pattern: a
+  * node mutation re-points only `graph.nodes`, so edge-side routing
+  * survives it and vice versa); any other frame gets None and the
+  * caller falls back to the ordinary scan. A routed lookup must also
+  * find the LIVE index def equal to the sealed one: DROP + re-CREATE
+  * under a reused name re-points no frame.
+  *
+  * `GraftSession.reanchor` (save, load) is its only writer and
+  * `GraftSession.setGraph` its only reset. A programmatic re-point or
+  * a restore installs frames that never came from `dir`; an anchor
+  * that outlived them would let the next save write an INCREMENTAL
+  * delta against the old on-disk base (the re-pointed rows vanish on
+  * reload) and let a later overlay inherit routing and stats meant
+  * for other frames. Immutable and rebuilt by every save/load, so
+  * its per-generation memos below can never go stale. */
+final class SnapshotAnchor(
+    val dir: String,
+    val manifest: SnapshotStore.Manifest,
+    frames: PropertyGraph,
+    val sealedIndexes: Map[String, (String, String, String)],
+    nodeDiskDelta: Option[DataFrame],
+    edgeDiskDelta: Option[DataFrame],
+    val stats: Option[GraphStats]) {
+
+  private def diskDelta[B <: DeltaBuffer[B]](side: DeltaSide[B]): Option[DataFrame] =
+    if (side eq DeltaSide.Nodes) nodeDiskDelta else edgeDiskDelta
+
+  /** The two-layer identity proof: `Some(None)` when `frame` IS this
+    * snapshot's frame on `side`, `Some(Some(delta))` when it is the
+    * side's valid live overlay over that frame, None otherwise. */
+  def liveDelta[B <: DeltaBuffer[B]](side: DeltaSide[B], db: GraphDatabase,
+      frame: DataFrame): Option[Option[DataFrame]] = {
+    val snap = side.part(frames)
+    if (frame eq snap) Some(None)
+    else side.valid(db).filter(s => (s.base eq snap) && (s.resolved eq frame))
+      .map(s => Some(s.delta))
+  }
+
+  /** `read` (memoized under `key`) composed up to `frame`: projection
+    * ⟵ on-disk delta ⟵ live delta, latest wins per key — the same
+    * overlay the base read itself resolves with, so the routed
+    * frame's slice equals `frame`'s. None unless [[liveDelta]] proves
+    * `frame`. */
+  def routed[B <: DeltaBuffer[B]](side: DeltaSide[B], db: GraphDatabase, frame: DataFrame,
+      key: String)(read: => Option[DataFrame]): Option[DataFrame] =
+    liveDelta(side, db, frame).flatMap { live =>
+      cachedRead(key)(read).map(proj => (diskDelta(side) ++ live).foldLeft(proj)(side.overlay))
+    }
+
+  /** The side's delta-log since the snapshot's pure base: the on-disk
+    * delta with `live` (newer) winning per key. Raw rows — tombstones
+    * and commit stamps kept for the IVF probe and the CDC feed. */
+  def deltaLog[B <: DeltaBuffer[B]](side: DeltaSide[B],
+      live: Option[DataFrame]): Option[DataFrame] = (diskDelta(side), live) match {
+    case (Some(k), Some(o)) => Some(PropertyGraph.appendByName(
+      k.join(o.select(col(side.key).as("_ck")), k(side.key) === col("_ck"), "left_anti"), o))
+    case (k, o) => o.orElse(k)
+  }
+
+  /** `dir` still holds exactly this snapshot: no compaction or other
+    * writer touched it since. */
+  def intact: Boolean = SnapshotStore.exists(dir) &&
+    (try SnapshotStore.readManifest(dir) == manifest catch { case NonFatal(_) => false })
+
   /** Memoized routed reads, keyed per projection/label — a
     * `spark.read.parquet` re-lists the file index on every call, and
     * at 100 TB a projection is tens of thousands of files: the listing
-    * must be paid once per SAVE GENERATION (this state object), not
-    * once per statement. The state is rebuilt by every save/load, so
-    * staleness is impossible by construction. */
-  private val reads =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame]()
-  def cachedRead(key: String)(mk: => Option[org.apache.spark.sql.DataFrame])
-      : Option[org.apache.spark.sql.DataFrame] =
+    * is paid once per anchor, not once per statement. */
+  private val reads = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  def cachedRead(key: String)(mk: => Option[DataFrame]): Option[DataFrame] =
     Option(reads.get(key)).orElse {
       val v = mk; v.foreach(reads.put(key, _)); v
     }
@@ -35,14 +97,10 @@ final case class IndexAuxState(
     * centroid table: one row per coarse cell, ≤ a few hundred rows by
     * construction). The r19 probe cached the DataFrame but still ran a
     * collect() JOB per probe statement — 24 scheduler round-trips in
-    * the recall row for rows that cannot change within a save
-    * generation (this state object is rebuilt by every save/load, so
-    * staleness is impossible by construction — same lifecycle argument
-    * as [[reads]]). Index METADATA only; never query results. */
-  private val collected =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[org.apache.spark.sql.Row]]()
-  def cachedCollect(key: String)(mk: => Option[org.apache.spark.sql.DataFrame])
-      : Option[Array[org.apache.spark.sql.Row]] =
+    * the recall row for rows that cannot change within one anchor.
+    * Index METADATA only; never query results. */
+  private val collected = new java.util.concurrent.ConcurrentHashMap[String, Array[Row]]()
+  def cachedCollect(key: String)(mk: => Option[DataFrame]): Option[Array[Row]] =
     Option(collected.get(key)).orElse {
       cachedRead(key)(mk).map { df =>
         val rows = df.collect(); collected.put(key, rows); rows
@@ -66,7 +124,7 @@ final case class IndexAuxState(
             .map(m => Integer.valueOf(m.group(1).toInt))
             .getOrElse(Integer.valueOf(Int.MaxValue))
         else Integer.valueOf(Int.MaxValue)
-      } catch { case _: Throwable => Integer.valueOf(Int.MaxValue) }
+      } catch { case NonFatal(_) => Integer.valueOf(Int.MaxValue) }
     }).intValue
 }
 
@@ -115,34 +173,8 @@ final class GraphDatabase(val name: String) {
   def validEdgeDelta: Option[DeltaState[EdgeDeltaBuffer]] =
     edgeDeltaState.filter(s => graph != null && (graph.edges eq s.resolved))
 
-  /** Where the materialized base came from on disk: (snapshot dir, the
-    * manifest as loaded/written). An incremental save may skip
-    * rewriting the base ONLY while the target dir's manifest still
-    * equals this one — anyone else touching the snapshot invalidates
-    * the shortcut, never correctness. */
-  @volatile var snapshotProvenance: Option[(String, SnapshotStore.Manifest)] = None
-
-  /** Index auxiliary projections on disk: the node AND edge frames
-    * the `index_aux/<name>/` dirs under `dir` are EXACT for (reference
-    * identity per side — the house self-validation pattern; a node
-    * mutation re-points only `graph.nodes`, so edge-side projections
-    * stay valid through it and vice versa), that snapshot dir, and the
-    * index schema SEALED at save time (name → (label, prop, kind)).
-    * Set on full save / load. A lookup must check the LIVE index entry
-    * still equals the sealed one: DROP + re-CREATE under the same name
-    * with a different (label, prop) re-points no frame, and without
-    * the seal it would route through the old projection and silently
-    * return wrong rows. */
-  @volatile var indexAuxState: Option[IndexAuxState] = None
-
-  /** Graph-cardinality statistics (join-ordering cost model): the
-    * stats sealed by the snapshot the session last saved/loaded, valid
-    * for exactly the (nodes, edges) frames recorded here — reference
-    * identity, the house self-validation pattern. A live delta overlay
-    * whose base IS one of these frames composes on top
-    * (GraftSession.statsFor); any other re-point silently disables
-    * ordering rather than mis-estimating against foreign frames. */
-  @volatile var graphStats: Option[(AnyRef, AnyRef, GraphStats)] = None
+  /** See [[SnapshotAnchor]]. */
+  @volatile var anchor: Option[SnapshotAnchor] = None
 
   /** One-slot memo for the delta-overlaid stats: keyed by the RESOLVED
     * frames (immutable per mutation state), so the small delta-count
@@ -161,8 +193,8 @@ final class GraphDatabase(val name: String) {
     * path orientation, comma reordering of MATCH patterns, and
     * broadcast-probe hints — CypherCompiler.textualOrder), so the
     * session plans patterns exactly as written. With r19's lazy live
-    * stats, clearing graphStats alone no longer yields a textual-plan
-    * session — statsFor would just compute fresh counts. */
+    * stats, dropping the sealed stats alone no longer yields a
+    * textual-plan session — statsFor would just compute fresh counts. */
   @volatile var statsOff: Boolean = false
 
   /** CDC change epoch: a MONOTONIC counter identifying the base-frame

@@ -79,32 +79,26 @@ object GraphViews {
       edge(li, "l_suppkey", TAG_SUPPLIER, "l_partkey", TAG_PART, "SUPPLIED"))
       .reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
 
-    PropertyGraph(nodes, edges, knownMaxNodeId = Some(tpchMaxId(spark, dir)))
+    PropertyGraph(nodes, edges, knownMaxIds = Some(tpchMaxIds(spark, dir, edges)))
   }
 
-  // Memoized id ceiling per test-data dir: max over the six key
-  // columns, derived ONCE — every later view-backed session seeds its
-  // id allocator without re-scanning (GraftSession.setGraph would
-  // otherwise pay a full key-column pass per session open; at sf0.1
+  // Memoized (node id, edge eid) ceilings per test-data dir: the max
+  // over the six key columns and over the edges' hash eids, derived
+  // ONCE — every later view-backed session seeds both allocators
+  // without re-scanning (GraftSession.setGraph would otherwise pay a
+  // key-column pass and a full edge pass per session open; at sf0.1
   // that was the dominant cost of every mutation catalog row's setup,
   // and at 100 TB it would be a full pass over six tables).
-  private val maxIdCache = new java.util.concurrent.ConcurrentHashMap[String, Long]()
-  private def tpchMaxId(spark: SparkSession, dir: String): Long =
+  private val maxIdCache = new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
+  private def tpchMaxIds(spark: SparkSession, dir: String, edges: DataFrame): (Long, Long) =
     maxIdCache.computeIfAbsent(dir, _ => {
       val keys = Seq(
-        "region" -> "r_regionkey", "nation" -> "n_nationkey",
-        "customer" -> "c_custkey", "supplier" -> "s_suppkey",
-        "part" -> "p_partkey", "orders" -> "o_orderkey")
-      keys.map { case (tbl, k) =>
-        val tag = tbl match {
-          case "region" => TAG_REGION; case "nation" => TAG_NATION
-          case "customer" => TAG_CUSTOMER; case "supplier" => TAG_SUPPLIER
-          case "part" => TAG_PART; case "orders" => TAG_ORDER
-        }
-        Tables(spark, dir, tbl).agg(max(col(k).cast("long"))).collect()
-          .headOption.flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
-          .getOrElse(-1L) * 10L + tag
-      }.max
+        ("region", "r_regionkey", TAG_REGION), ("nation", "n_nationkey", TAG_NATION),
+        ("customer", "c_custkey", TAG_CUSTOMER), ("supplier", "s_suppkey", TAG_SUPPLIER),
+        ("part", "p_partkey", TAG_PART), ("orders", "o_orderkey", TAG_ORDER))
+      (keys.map { case (tbl, k, tag) =>
+        PropertyGraph.maxOf(Tables(spark, dir, tbl), col(k).cast("long")) * 10L + tag
+      }.max, PropertyGraph.maxOf(edges, col("eid")))
     })
 
   /** Bounded part co-purchase graph: nodes = parts appearing in orders

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -40,15 +40,16 @@ import org.apache.spark.sql.types._
   * StubPluginHelper.java:131-134). A corpus with genuinely unbounded
   * dynamic keys would want the map-overflow design instead.
   *
-  * `knownMaxNodeId`: a view that can derive its id ceiling without a
-  * data scan (GraphViews memoizes one per test-data dir) attaches it
-  * so `GraftSession.setGraph` seeds the id allocator without the
-  * column scan — at 100 TB that scan is a full pass over every key
-  * column just to open a session. Purely an optimization hint:
-  * absent → setGraph falls back to the max scan.
+  * `knownMaxIds`: the (node id, relationship eid) ceilings, for a
+  * graph that knows them without a data scan — a snapshot from its
+  * manifest, a GraphViews view from its per-dir memo — so
+  * `GraftSession.setGraph` seeds both id allocators without the two
+  * max scans (at 100 TB a full pass over every key column just to
+  * open a session). Purely an optimization hint: absent → setGraph
+  * falls back to the scans.
   */
 final case class PropertyGraph(nodes: DataFrame, edges: DataFrame,
-    knownMaxNodeId: Option[Long] = None) {
+    knownMaxIds: Option[(Long, Long)] = None) {
 
   def nodesWithLabel(label: String): DataFrame =
     nodes.filter(array_contains(col("labels"), label))
@@ -57,7 +58,7 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame,
     edges.filter(col("relType") === relType)
 
   def persist(): PropertyGraph =
-    PropertyGraph(nodes.persist(), edges.persist(), knownMaxNodeId)
+    PropertyGraph(nodes.persist(), edges.persist(), knownMaxIds)
 }
 
 object PropertyGraph {
@@ -94,6 +95,12 @@ object PropertyGraph {
     case null       => StringType
     case other => throw new IllegalArgumentException(s"unsupported property type: $other")
   }
+
+  /** max(`c`) over `df` as a Long, -1 when `df` is empty: one
+    * column-pruned aggregate job. */
+  def maxOf(df: DataFrame, c: Column): Long =
+    df.agg(max(c)).collect().headOption
+      .flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long])).getOrElse(-1L)
 
   /** Append rows with a possibly-new property schema (schema-optional
     * writes): missing columns null-fill on both sides. */

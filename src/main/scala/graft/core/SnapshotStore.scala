@@ -410,6 +410,14 @@ object SnapshotStore {
     * data, next id = max node id + 1 — and the snapshot loads like any
     * current one. */
   def read(spark: SparkSession, dir: String): (PropertyGraph, Manifest) = {
+    val m = open(spark, dir)
+    (graphOf(spark, dir, m), m)
+  }
+
+  /** The snapshot's manifest, migrated to the current format (see
+    * [[read]]). */
+  def open(spark: SparkSession, dir: String): Manifest = {
+    import org.apache.spark.sql.functions.col
     val m0 =
       if (Files.exists(Paths.get(s"$dir/manifest.json"))) readManifest(dir)
       else if (Files.exists(Paths.get(s"$dir/nodes"))) {
@@ -418,29 +426,27 @@ object SnapshotStore {
         // rewrite must not resurrect node ids / relationship eids the
         // on-disk delta already minted
         val nodes = readNodes(spark, dir)
-        val maxId = nodes.agg(org.apache.spark.sql.functions.max("id")).collect()
-          .headOption.flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long])).getOrElse(-1L)
         val edges = readEdges(spark, dir)
         val edgeCount = edges.count()
         val nextRel =
           if (!edges.columns.contains("eid")) edgeCount
-          else math.max(edgeCount,
-            edges.agg(org.apache.spark.sql.functions.max("eid")).collect()
-              .headOption.flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
-              .getOrElse(-1L) + 1)
-        Manifest(0, dir.split('/').last, nodes.count(), edgeCount, maxId + 1, nextRel)
+          else math.max(edgeCount, PropertyGraph.maxOf(edges, col("eid")) + 1)
+        Manifest(0, dir.split('/').last, nodes.count(), edgeCount,
+          PropertyGraph.maxOf(nodes, col("id")) + 1, nextRel)
       } else throw new java.io.FileNotFoundException(s"no snapshot at $dir")
     if (m0.formatVersion > FormatVersion)
       throw new IllegalStateException(
         s"snapshot at $dir has format version ${m0.formatVersion}, " +
           s"but this engine supports at most $FormatVersion")
-    val m = if (m0.formatVersion < FormatVersion) migrateInPlace(spark, dir, m0) else m0
-    // the manifest's next_id is the sealed id ceiling: attach it so
-    // session open (setGraph's allocator seed) costs no base scan
-    val g = PropertyGraph(readNodes(spark, dir), readEdges(spark, dir),
-      knownMaxNodeId = Some(m.nextId - 1))
-    (g, m)
+    if (m0.formatVersion < FormatVersion) migrateInPlace(spark, dir, m0) else m0
   }
+
+  /** The snapshot's frames, delta-logs folded in. The manifest's next
+    * ids are the sealed id ceilings: attached, so a session re-pointed
+    * at them (setGraph's allocator seeds) costs no scan. */
+  def graphOf(spark: SparkSession, dir: String, m: Manifest): PropertyGraph =
+    PropertyGraph(readNodes(spark, dir), readEdges(spark, dir),
+      knownMaxIds = Some((m.nextId - 1, m.nextRelId - 1)))
 
   /** The node base's label-set hive-partition column (derived at
     * write, dropped at read — never a property). */
@@ -630,15 +636,12 @@ object SnapshotStore {
         // then seal pure-base stats — max(id)+1 is a valid watermark
         // (every delta create was minted past the base's own ceiling)
         // — so the NEXT save never scans the base again
-        import org.apache.spark.sql.functions.{max => smax}
-        def maxKey(df: org.apache.spark.sql.DataFrame, key: String): Long =
-          df.agg(smax(key)).collect().headOption
-            .flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long])).getOrElse(-1L)
+        import org.apache.spark.sql.functions.col
         val baseN = spark.read.parquet(s"$dir/nodes")
         val baseE = normalizeRelType(spark.read.parquet(s"$dir/edges"))
         val bs = BaseStats(baseN.count(), baseE.count(),
-          maxKey(baseN, "id") + 1,
-          if (baseE.columns.contains("eid")) maxKey(baseE, "eid") + 1 else 0L)
+          PropertyGraph.maxOf(baseN, col("id")) + 1,
+          if (baseE.columns.contains("eid")) PropertyGraph.maxOf(baseE, col("eid")) + 1 else 0L)
         val nc = nodeTmp.map(t => PropertyGraph.overlayById(
           baseN, spark.read.parquet(t)).count()).getOrElse(old.nodeCount)
         val ec = edgeTmp.map(t => PropertyGraph.overlayByKey(
@@ -842,8 +845,8 @@ object SnapshotStore {
   }
 
   /** The one manifest serializer — every writer goes through it so
-    * readManifest round-trips Manifest exactly (provenance checks
-    * compare by equality). `base_*` fields appear only when pure-base
+    * readManifest round-trips Manifest exactly (SnapshotAnchor.intact
+    * compares by equality). `base_*` fields appear only when pure-base
     * stats are sealed; older engines ignore the extra keys. */
   private def manifestJson(m: Manifest): String = {
     val baseFields = m.base.map { bs =>

@@ -2,6 +2,7 @@ package graft.cypher
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 import graft.core.PropertyGraph
 import ast._
 
@@ -2023,7 +2024,7 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
     // property predicate on a RANGE-indexed (label, prop) swaps the
     // scan base for the snapshot's property-clustered projection (the
     // session supplies it only while provably exact — see
-    // GraftSession.rangeAnchorFor). Every predicate below is still
+    // GraftSession.indexAnchorFor). Every predicate below is still
     // applied, so the swap is pure plan shape: the pushed equality
     // row-group-prunes a sorted scan instead of reading the whole
     // unsorted base. Null-prop rows absent from the projection can
@@ -2639,10 +2640,7 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
     * the residual truly-unresolvable cases refuse loudly (ADVICE r9). */
   private var lambdaTypes: Map[String, org.apache.spark.sql.types.DataType] = Map.empty
 
-  /** Probe a column's type against the frame; None when the column
-    * references an in-flight lambda argument (unresolvable by design). */
-  private def colType(c: Column, df: DataFrame): Option[org.apache.spark.sql.types.DataType] =
-    try Some(df.select(c).schema.head.dataType) catch { case _: Throwable => None }
+  import CypherCompiler.colType
 
   /** Best-effort static type of an expression: lambda vars from the
     * propagated environment, struct fields through it, everything else
@@ -2695,9 +2693,7 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
         // post-WITH value: temporal components on date/timestamp
         // (openCypher `d.year` accessor family), getField otherwise
         import org.apache.spark.sql.types.{DateType, TimestampType, TimestampNTZType}
-        val dt = try Some(df.select(col(v)).schema.head.dataType)
-                 catch { case _: Throwable => None }
-        dt match {
+        colType(col(v), df) match {
           case Some(DateType | TimestampType | TimestampNTZType) =>
             temporalComponent(col(v), k)
           // spatial point accessors: p.x/p.y/p.latitude/p.longitude/
@@ -2825,11 +2821,12 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
             .filterNot(entityInternal).sorted.toSeq
             .map(k => k -> col(s"$prefix$k"))
         case ProjAll =>
-          df.select(col(v)).schema.head.dataType match {
-            case st: org.apache.spark.sql.types.StructType =>
+          colType(col(v), df) match {
+            case Some(st: org.apache.spark.sql.types.StructType) =>
               st.fieldNames.toSeq.map(k => k -> col(v).getField(k))
             case other => throw new UnsupportedOperationException(
-              s"`$v {.*}` needs an entity or map value, got ${other.simpleString}")
+              s"`$v {.*}` needs an entity or map value, got " +
+                other.fold("an unresolvable value")(_.simpleString))
           }
         case ProjExpr(k, e0) => Seq(k -> compileExpr(e0, df))
       }
@@ -2955,7 +2952,7 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
     // per-row type dispatch.
     case TypePred(x, tpe, neg) =>
       val c = compileExpr(x, df)
-      val dt = scala.util.Try(df.select(c).schema.head.dataType).getOrElse(
+      val dt = colType(c, df).getOrElse(
         throw new UnsupportedOperationException(
           s"IS :: $tpe needs an operand with a resolvable type"))
       import org.apache.spark.sql.types._
@@ -3377,7 +3374,7 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
       // types yield null — type-resolved at plan time like keys()
       case "tostringornull" =>
         import org.apache.spark.sql.types.{ArrayType, MapType, StructType, NullType}
-        scala.util.Try(df.select(a(0)).schema.head.dataType).toOption match {
+        colType(a(0), df) match {
           case Some(_: ArrayType) | Some(_: MapType) | Some(_: StructType) =>
             lit(null).cast("string")
           case Some(_: NullType) => lit(null).cast("string")
@@ -3388,7 +3385,7 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
       // suffix decided per row
       case "valuetype" =>
         import org.apache.spark.sql.types._
-        val dt = scala.util.Try(df.select(a(0)).schema.head.dataType).getOrElse(
+        val dt = colType(a(0), df).getOrElse(
           throw new UnsupportedOperationException(
             "valueType() needs an operand with a resolvable type"))
         val name = dt match {
@@ -3442,7 +3439,7 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
           // MapType) — their keys are the field names, known at plan
           // time. Resolution against df can fail for lambda-bound
           // args; those fall through to map_keys (a genuine MapType).
-          scala.util.Try(df.select(a(0)).schema.head.dataType).toOption match {
+          colType(a(0), df) match {
             case Some(st: org.apache.spark.sql.types.StructType) =>
               typedLit(st.fieldNames.toSeq)
             case _ => map_keys(a(0))
@@ -3511,11 +3508,17 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
   }
 
   private def isArrayCol(c: Column, df: DataFrame): Boolean =
-    try df.select(c).schema.head.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType]
-    catch { case _: Throwable => false }
+    colType(c, df).exists(_.isInstanceOf[org.apache.spark.sql.types.ArrayType])
 }
 
 object CypherCompiler {
+
+  /** A column's type against `df`, probed by analysing the one-column
+    * projection; None when it does not resolve (an in-flight lambda
+    * argument is unresolvable by design). Only non-fatal errors read
+    * as "type unknown": an OOM or an interrupt propagates. */
+  def colType(c: Column, df: DataFrame): Option[org.apache.spark.sql.types.DataType] =
+    try Some(df.select(c).schema.head.dataType) catch { case NonFatal(_) => None }
 
   /** Reachability-fixpoint visited-set compaction interval (r19,
     * measured): checkpoint the growing visited union every N rounds.

@@ -533,6 +533,55 @@ class PlanSpec extends AnyFunSuite {
     assert(df5.collect().map(_.getLong(0)).sameElements(Array(41L)))
   }
 
+  test("a foreign re-point drops every snapshot route: same answers from the ordinary scans") {
+    // setGraph with the SAME rows as fresh frames: no frame is the
+    // snapshot's any more, so RANGE, REL_RANGE, label-partition and
+    // IVF routing must all fall back — and answer exactly as before
+    import scala.jdk.CollectionConverters._
+    val s = new GraftSession(spark)
+    val dataDir = java.nio.file.Files.createTempDirectory("graft_repoint_").toString
+    s.cypher("UNWIND range(0, 40) AS x CREATE (:re {k: x})")
+    (0 to 39).groupBy(_ % 7).foreach { case (w, xs) =>
+      s.cypher(
+        s"""UNWIND $$rows AS row MATCH (a:re {k: row.a}), (b:re {k: row.b})
+           |MERGE (a)-[:KN {w: $w}]->(b)""".stripMargin,
+        Map("rows" -> xs.map(x => Map("a" -> x.toLong, "b" -> (x + 1).toLong))))
+    }
+    s.cypher("UNWIND $rows AS row CREATE (:doc {embedding: row})",
+      Map("rows" -> Seq(Seq(1.0, 0.0), Seq(0.8, 0.6), Seq(0.0, 1.0), Seq(-1.0, 0.0))))
+    s.cypher("CREATE INDEX re_k FOR (n:re) ON (n.k)")
+    s.cypher("CREATE INDEX kn_w FOR ()-[r:KN]-() ON (r.w)")
+    s.cypher("CREATE VECTOR INDEX doc_vec FOR (d:doc) ON d.embedding " +
+      "OPTIONS {indexConfig: {`vector.similarity_function`: 'cosine'}}")
+    s.saveDatabase(dataDir)
+    // (statement, the plan marker of its snapshot route)
+    val table = Seq(
+      "MATCH (n:re {k: 7}) RETURN n.k AS k" -> "index_aux",
+      "MATCH (a:re)-[r:KN {w: 5}]->(b:re) RETURN a.k AS k" -> "index_aux",
+      "MATCH (n:re) RETURN n.k AS k" -> "_label_key",
+      ("CALL db.index.vector.queryNodes('doc_vec', 2, [1.0, 0.0], {probes: 2}) " +
+        "YIELD nodeId, score RETURN nodeId, score") -> "_ivf_cell")
+    def run(q: String): (String, Seq[String]) = {
+      val df = s.cypher(q)
+      (df.queryExecution.executedPlan.toString, df.collect().map(_.toString).toSeq.sorted)
+    }
+    val routed = table.map { case (q, marker) =>
+      val (p, rows) = run(q)
+      assert(p.contains(marker), s"not routed before the re-point: $q\n$p")
+      rows
+    }
+    def fresh(df: org.apache.spark.sql.DataFrame) =
+      spark.createDataFrame(df.collect().toList.asJava, df.schema)
+    s.setGraph(graft.core.PropertyGraph(fresh(s.graph().nodes), fresh(s.graph().edges)))
+    table.zip(routed).foreach { case ((q, _), before) =>
+      val (p, rows) = run(q)
+      assert(!p.contains("index_aux") && !p.contains("_label_key"),
+        s"a foreign frame still routes through the snapshot: $q\n$p")
+      assert(rows == before, s"$q: ${rows.mkString(",")} != ${before.mkString(",")}")
+    }
+    graft.core.SnapshotStore.deleteDir(dataDir)
+  }
+
   /** The FIRST node scan compiled is the bottom-left leaf of the
     * left-deep join tree — in the executed-plan print, the first
     * FileScan over the node base. Returns that scan's text (its
@@ -1028,5 +1077,22 @@ class PlanSpec extends AnyFunSuite {
       "a status-store read outside the recorder's cross-checks")
     assert(holders(main, "SparkSession" + ".builder()") == Set("SparkEntry.scala"),
       "an entry point builds its own session: use SparkEntry.localSession")
+    // one snapshot anchor: the identity proof over a delta overlay's
+    // base, the disk+live delta-log merge and the manifest-intact check
+    // live in SnapshotAnchor; setGraph and reanchor alone assign it
+    def occurrences(paths: Seq[Path], needle: String): Map[String, Int] =
+      paths.map(p => p.getFileName.toString -> (Files.readString(p).split(
+        java.util.regex.Pattern.quote(needle), -1).length - 1)).filter(_._2 > 0).toMap
+    assert(holders(main, ".base" + " eq") == Set("GraphCatalog.scala"),
+      "a second copy of the snapshot identity proof: use SnapshotAnchor.liveDelta")
+    assert(holders(main, "\"_c" + "k\"") == Set("GraphCatalog.scala"),
+      "a second disk+live delta-log merge: use SnapshotAnchor.deltaLog")
+    assert(holders(main, "readManifest(dir)" + " ==") == Set("GraphCatalog.scala"),
+      "a second manifest-intact check: use SnapshotAnchor.intact")
+    assert(occurrences(main, ".anchor" + " = ") == Map("GraftSession.scala" -> 2),
+      "the snapshot anchor is assigned outside setGraph/reanchor")
+    // one column-type probe, catching non-fatal errors only
+    assert(occurrences(main, "schema.head" + ".dataType") == Map("CypherCompiler.scala" -> 1),
+      "a second column-type probe: use CypherCompiler.colType")
   }
 }
