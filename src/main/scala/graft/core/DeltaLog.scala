@@ -1,7 +1,7 @@
 package graft.core
 
 import scala.collection.immutable.VectorMap
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types.DataType
 
 /** Driver-local write buffer of one delta-log side: present when the
@@ -104,6 +104,15 @@ final class DeltaSide[B <: DeltaBuffer[B]] private (
 object DeltaSide {
   /** Past this many buffered rows a side falls back to distributed folds. */
   val MaxBufferRows = 100000
+
+  /** Past this many rows one statement's matched keys, batch or miss set
+    * stay distributed instead of being collected to the driver. */
+  val MaxDriverRows = 10000
+
+  /** `df`'s rows when there are at most [[MaxDriverRows]] of them (one
+    * bounded collect), else None. */
+  def collectBounded(df: DataFrame): Option[Array[Row]] =
+    Some(df.limit(MaxDriverRows + 1).collect()).filter(_.length <= MaxDriverRows)
 
   val Nodes: DeltaSide[NodeDeltaBuffer] = new DeltaSide(
     "id", Set("id"), NodeDeltaBuffer(VectorMap.empty, VectorMap.empty),

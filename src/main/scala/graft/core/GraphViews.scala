@@ -39,7 +39,11 @@ object GraphViews {
     * logical relationship (graded `cy_varlen_paths` counts paths at
     * that granularity). This differs from PropertyGraph's allocator
     * eids, which DO distinguish parallel edges; mutable session
-    * graphs mint those instead (GraftSession append paths). */
+    * graphs mint those instead (GraftSession append paths).
+    *
+    * `GraftSession.setGraph` gives the same derived eid to any edge
+    * frame that arrives without an `eid` column, so such input has
+    * this (src, dst, relType) granularity too. */
   def viewEid: org.apache.spark.sql.Column =
     xxhash64(col("src"), col("dst"), col("relType"))
 

@@ -18,9 +18,10 @@ import org.apache.spark.sql.types._
   * uniqueness, and Bolt Relationship ids. Analytic views derive a
   * deterministic (src, dst, relType)-hash eid instead — which does
   * NOT distinguish parallel same-type rows (GraphViews.viewEid
-  * documents that deviation); ad-hoc projection graphs MAY omit the column,
-  * and every consumer falls back to (src, dst, relType) granularity
-  * when it is absent (the pre-eid documented deviation).
+  * documents that deviation). Every database graph carries `eid`:
+  * `GraftSession.setGraph`, the one way a caller-supplied frame
+  * becomes a database graph, adds the derived eid to an edge frame
+  * without the column, and snapshots migrate pre-v4 edges on open.
   *
   * Schema-optional: property columns appear on first CREATE
   * (`unionByName(allowMissingColumns = true)`), mirroring the

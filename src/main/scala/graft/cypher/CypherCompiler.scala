@@ -1189,12 +1189,10 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
     * distinct is on (start, end, edge-set) — set-canonicalized
     * (sorted, deduped), so equivalent edge orders collapse and the
     * frontier is bounded by distinct trail edge-SETS, far fewer than
-    * raw trails. Edge keys are endpoint-pair granular (canonical
-    * (min,max) when undirected): the graph stores no surrogate edge
-    * ids (README "Deliberate deviations"), so parallel same-type
-    * edges collapse for uniqueness purposes — visible only when a
-    * path needs the same endpoint pair twice via distinct parallel
-    * edges (SURVEY §7.4.2).
+    * raw trails. Edge keys are the relationships' `eid`s, so parallel
+    * same-type edges with their own eids stay distinct traversable
+    * relationships; edges sharing a derived (src, dst, relType) eid
+    * (GraphViews.viewEid) are one relationship for uniqueness.
     *
     * The frontier is SEEDED from the bound start ids (semi join before
     * iterating): `MATCH (x {id:1})-[:T*1..5]->(y)` walks only edges
@@ -1206,10 +1204,8 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
   private def compileVarHop(cur: DataFrame, prevVar: String, rel: RelPat,
       node: NodePat, nv: String, lo: Int, hi: Int,
       seedEst: Option[Double] = None): DataFrame = {
-    val hasEid = graph.edges.columns.contains("eid")
     def oriented(s: String, t: String)(e: DataFrame) =
-      if (hasEid) e.select(col(s).as("_s"), col(t).as("_t"), col("eid"))
-      else e.select(col(s).as("_s"), col(t).as("_t"))
+      e.select(col(s).as("_s"), col(t).as("_t"), col("eid"))
     val rawOriented = rel.dir match {
       case 1  => oriented("src", "dst")(typedEdges(rel))
       case -1 => oriented("dst", "src")(typedEdges(rel))
@@ -1269,26 +1265,19 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
         if (ok && hops.nonEmpty) hops.reduce(_ union _) else rawOriented
       case _ => rawOriented
     }
-    // edge key for trail uniqueness: the surrogate eid when the edge
-    // set carries one — orientation-free by construction (both
-    // traversal directions of one edge share it), and parallel
-    // same-type edges between one endpoint pair stay DISTINCT
-    // traversable relationships, the openCypher semantics. Edge sets
-    // without eid fall back to endpoint-pair granularity (canonical
-    // (min, max) when undirected) — the documented pre-eid deviation.
-    val edgeKey =
-      if (hasEid) col("eid")
-      else if (rel.dir == 0) struct(least(col("_s"), col("_t")), greatest(col("_s"), col("_t")))
-      else struct(col("_s"), col("_t"))
-    // The typed edge set is referenced by EVERY expansion step, every
+    // The edge key `_k` for trail uniqueness is the eid: orientation-
+    // free by construction (both traversal directions of one edge
+    // share it), and parallel same-type edges between one endpoint
+    // pair stay DISTINCT traversable relationships, the openCypher
+    // semantics. The typed edge set is referenced by EVERY expansion step, every
     // fixpoint probe, and the final pairs evaluation — materialize it
     // once (localCheckpoint: executor-local, GC-reclaimed, no cache
     // entry leaked across catalog invocations) instead of re-running
     // the scan+distinct subtree per reference. Frontiers stay lazy:
     // they are seeded-small and their joins now read the materialized
     // base.
-    val base = base0.distinct().withColumn("_k", edgeKey)
-      .select(col("_s"), col("_t"), col("_k"))
+    val base = base0.distinct()
+      .select(col("_s"), col("_t"), col("eid").as("_k"))
       .localCheckpoint()
 
     // UNBOUNDED expand `[:T*]` / `[:T*1..]` / `+`: a TRUE reachability
@@ -1561,11 +1550,7 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
           array().cast("array<struct<__rel_id:bigint,__rel_src:bigint," +
             "__rel_dst:bigint,__rel_type:string,__rel_props:string>>")
         else array(relVars.map { rv =>
-          val wireId =
-            if (df.columns.contains(s"$rv${SEP}eid")) col(s"$rv${SEP}eid")
-            else xxhash64(col(s"$rv${SEP}src"), col(s"$rv${SEP}dst"),
-              col(s"$rv${SEP}relType"))
-          struct(wireId.as("__rel_id"),
+          struct(col(s"$rv${SEP}eid").as("__rel_id"),
             col(s"$rv${SEP}src").as("__rel_src"),
             col(s"$rv${SEP}dst").as("__rel_dst"),
             col(s"$rv${SEP}relType").as("__rel_type"),
@@ -1680,11 +1665,8 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
     seedOnlyWhere.foreach(e => cur = cur.filter(compileExpr(e, cur)))
 
     val te = typedEdges(rel)
-    val idCol =
-      if (te.columns.contains("eid")) col("eid")
-      else xxhash64(col("src"), col("dst"), col("relType"))
     def orient(s: String, t: String) = te.select(col(s).as("_f"), col(t).as("_g"),
-      idCol.as("_id"),
+      col("eid").as("_id"),
       struct(col("src"), col("dst"), col("relType")).as("_rel"))
     val base0 = walkDir match {
       case 1  => orient("src", "dst")
@@ -2373,16 +2355,10 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
               val props =
                 if (propCols.isEmpty) lit(null).cast("string")
                 else struct(propCols.map(c => col(c).as(c.stripPrefix(s"$v$SEP"))): _*)
-              // wire id = the relationship's surrogate eid (stable
-              // across queries and runs); edge sets without the column
-              // (ad-hoc projections) fall back to the deterministic
-              // (src, dst, type) hash — the pre-eid identity
-              val wireId =
-                if (df.columns.contains(s"$v${SEP}eid")) col(s"$v${SEP}eid")
-                else xxhash64(col(s"$v${SEP}src"), col(s"$v${SEP}dst"),
-                  col(s"$v${SEP}relType"))
+              // wire id = the relationship's eid (stable across
+              // queries and runs)
               Seq(struct(
-                wireId.as("__rel_id"),
+                col(s"$v${SEP}eid").as("__rel_id"),
                 col(s"$v${SEP}src").as("__rel_src"),
                 col(s"$v${SEP}dst").as("__rel_dst"),
                 col(s"$v${SEP}relType").as("__rel_type"),
@@ -2510,13 +2486,10 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
     val eprops =
       if (edgePropCols.isEmpty) lit(null).cast("string")
       else struct(edgePropCols.map(col): _*)
-    val wireId =
-      if (e0.columns.contains("eid")) col("eid")
-      else xxhash64(col("src"), col("dst"), col("relType"))
-    val relStruct = struct(wireId.as("__rel_id"), col("src").as("__rel_src"),
+    val relStruct = struct(col("eid").as("__rel_id"), col("src").as("__rel_src"),
       col("dst").as("__rel_dst"), col("relType").as("__rel_type"),
       eprops.as("__rel_props"))
-    val ordKey = struct(col("relType"), wireId.as("_w"))
+    val ordKey = struct(col("relType"), col("eid").as("_w"))
     val fwd = e0.groupBy(col("src").as("_a"), col("dst").as("_b"))
       .agg(min_by(relStruct, ordKey).as("_fe"))
     val bwd = e0.groupBy(col("dst").as("_a"), col("src").as("_b"))
@@ -2765,8 +2738,6 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
             Seq(col(s"$n${SEP}rels").as("relationships")) else Nil)
         struct(parts: _*)
       }
-      // eid-less edge sets (ad-hoc projections): relType stands in
-      else if (df.columns.contains(s"$n${SEP}relType")) col(s"$n${SEP}relType")
       else throw new NoSuchElementException(s"Variable `$n` not defined")
     case ListComp(v, l, w, p) =>
       var arr = compileExpr(l, df)

@@ -446,8 +446,8 @@ object Packs {
       // values are scalars, so the merge folds straight through the
       // edge write buffer (~3 bounded jobs instead of the MATCH…MERGE
       // machinery's ~15 — r14 verdict #3); shapes it can't serve
-      // (eid-less edges, distributed delta, null ident values) fall
-      // back to the ordinary synthesized statement. Non-scalar
+      // (distributed delta, null ident values) fall back to the
+      // ordinary synthesized statement. Non-scalar
       // property VALUES (list/map params) must dispatch the fallback
       // too — they'd throw inside the buffered literal folds, and the
       // fast path's contract is return-false-and-fall-back, not crash
@@ -1092,8 +1092,7 @@ object Packs {
           if (missing.nonEmpty) throw new IllegalArgumentException(
             s"relationshipProperties ${missing.mkString(", ")} not found " +
               "on the relationship set")
-          val keep = (graft.core.PropertyGraph.edgeBaseSchema.fieldNames.toSeq
-            .filter(edges0.columns.contains) ++ ps).distinct
+          val keep = (graft.core.PropertyGraph.edgeBaseSchema.fieldNames.toSeq ++ ps).distinct
           edges0.select(keep.map(col): _*)
         case None => edges0
       }

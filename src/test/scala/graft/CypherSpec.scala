@@ -3813,6 +3813,20 @@ class CypherSpec extends AnyFunSuite {
     assert(got.map(_._3).distinct.length == 2, s"edge ids collide: ${got.toSeq}")
   }
 
+  test("a retyping SET widens to STRING both ways, non-numeric strings included") {
+    val s = new GraftSession(spark)
+    s.cypher("CREATE (:rt {k: 1, t: 10, s: 'abc'})-[:RT {w: 3}]->(:rt {k: 2, t: 20, s: 'xyz'})")
+    // LONG column SET to a non-numeric string, node and relationship
+    s.cypher("MATCH (n:rt {k: 1}) SET n.t = 'one'")
+    s.cypher("MATCH (:rt)-[r:RT]->(:rt) SET r.w = 'heavy'")
+    // STRING column of non-numeric strings SET to a number
+    s.cypher("MATCH (n:rt {k: 2}) SET n.s = 5")
+    val got = s.cypher("MATCH (n:rt) RETURN n.k AS k, n.t AS t, n.s AS s ORDER BY k")
+      .collect().map(r => (r.getLong(0), r.get(1), r.get(2))).toSeq
+    assert(got == Seq((1L, "one", "abc"), (2L, "20", "5")), got.toString)
+    assert(s.cypher("MATCH (:rt)-[r:RT]->(:rt) RETURN r.w AS w").collect().head.get(0) == "heavy")
+  }
+
   test("RETURN p renders the path value; count(r)/DISTINCT r use relationship identity") {
     val s = new GraftSession(spark)
     s.cypher("CREATE (a:pw {name:'a'})-[:T {tag:1}]->(b:pw {name:'b'})")

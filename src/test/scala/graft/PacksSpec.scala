@@ -1624,20 +1624,46 @@ class PacksSpec extends AnyFunSuite {
       .collect().head.getLong(0) == 1L)
   }
 
-  test("gds.nodeSimilarity.write refuses an eid-less edge set up front") {
+  test("setGraph derives eid for an eid-less edge frame: reads, SET, DELETE, gds writes") {
     import org.apache.spark.sql.functions._
     val s = sessionWith("graph-data-science")
-    val nodes = spark.range(3).select(col("id"), array(lit("nw")).as("labels"))
-    val edges = spark.createDataFrame(Seq((0L, 2L, "NW"), (1L, 2L, "NW")))
-      .toDF("src", "dst", "relType") // deliberately NO eid column
+    val nodes = spark.range(4).select(col("id"), array(lit("nw")).as("labels"))
+    // no eid column: a parallel NW pair 0->2 and a second type on the
+    // same endpoint pair
+    val edges = spark.createDataFrame(Seq((0L, 2L, "NW"), (0L, 2L, "NW"), (1L, 2L, "NW"),
+      (0L, 2L, "XT"), (1L, 3L, "XT"))).toDF("src", "dst", "relType")
     s.setGraph(graft.core.PropertyGraph(nodes, edges))
-    val preRel = s.catalog.database("neo4j").nextRelId.get()
-    val err = intercept[UnsupportedOperationException] {
-      s.cypher("CALL gds.nodeSimilarity.write('NW', 1, 10, 'SIM', 'jac') " +
-        "YIELD relationshipsWritten RETURN relationshipsWritten").collect()
-    }
-    assert(err.getMessage.contains("eid"))
-    // the guard fires BEFORE the allocator advances (ADVICE r15)
-    assert(s.catalog.database("neo4j").nextRelId.get() == preRel)
+    val db = s.catalog.database("neo4j")
+    val setEdges = db.graph.edges
+    def count(q: String): Long = s.cypher(q).collect().head.getLong(0)
+    assert(count("MATCH (:nw)-[r]->(:nw) RETURN count(r) AS c") == 5L)
+    assert(count("MATCH (:nw)-[r:NW]->(:nw) RETURN count(r) AS c") == 3L)
+    // id(r) is the (src, dst, relType) hash, the wire id eid-less
+    // frames always had
+    val derived = edges.select(col("src"), col("dst"), col("relType"),
+      xxhash64(col("src"), col("dst"), col("relType"))).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3))).toSet
+    val read = s.cypher("MATCH (a:nw)-[r]->(b:nw) RETURN id(a) AS a, id(b) AS b, " +
+      "type(r) AS t, id(r) AS i").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3))).toSet
+    assert(read == derived)
+    // SET and DELETE fold into the eid-keyed edge delta over the
+    // setGraph frame (no whole-table rewrite); the parallel pair
+    // shares its eid, so both rows take the value
+    s.cypher("MATCH (a:nw)-[r:NW]->(:nw) WHERE id(a) = 0 SET r.x = 7")
+    assert(db.validEdgeDelta.exists(_.base eq setEdges), "SET r.x did not go through the edge delta")
+    assert(s.cypher("MATCH (:nw)-[r:NW]->(:nw) RETURN r.x AS x").collect()
+      .map(r => Option(r.get(0))).toSeq.sortBy(_.toString) == Seq(None, Some(7L), Some(7L)))
+    s.cypher("MATCH (a:nw)-[r:XT]->(:nw) WHERE id(a) = 1 DELETE r")
+    assert(db.validEdgeDelta.exists(_.base eq setEdges), "DELETE r did not go through the edge delta")
+    assert(count("MATCH (:nw)-[r]->(:nw) RETURN count(r) AS c") == 4L)
+    // the gds relationship write mints eids past every derived one
+    val written = s.cypher("CALL gds.nodeSimilarity.write('NW', 1, 10, 'SIM', 'jac') " +
+      "YIELD relationshipsWritten RETURN relationshipsWritten").collect().head.getLong(0)
+    assert(written > 0L)
+    val minted = s.cypher("MATCH (:nw)-[r:SIM]->(:nw) RETURN id(r) AS i").collect().map(_.getLong(0))
+    assert(minted.length == written && minted.distinct.length == minted.length)
+    assert(minted.min > derived.map(_._4).max, s"minted ${minted.toSeq} collide with derived eids")
+    assert(count("MATCH (:nw)-[r]->(:nw) RETURN count(r) AS c") == 4L + written)
   }
 }

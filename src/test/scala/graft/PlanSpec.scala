@@ -1094,5 +1094,16 @@ class PlanSpec extends AnyFunSuite {
     // one column-type probe, catching non-fatal errors only
     assert(occurrences(main, "schema.head" + ".dataType") == Map("CypherCompiler.scala" -> 1),
       "a second column-type probe: use CypherCompiler.colType")
+    // one relationship identity: setGraph alone decides whether an
+    // edge frame carries eid (SnapshotStore reads pre-v4 snapshots)
+    val eidProbes = occurrences(main, "columns.contains(\"" + "eid\")")
+    assert(eidProbes.keySet == Set("GraftSession.scala", "SnapshotStore.scala") &&
+      eidProbes("GraftSession.scala") == 1,
+      s"an eid-less fallback outside setGraph: $eidProbes")
+    assert(holders(main, "xxhash64" + "(") == Set("GraphViews.scala"),
+      "a second derived relationship id: use GraphViews.viewEid")
+    // one driver-side row cap
+    assert(holders(all, "limit(1000" + "1)").isEmpty,
+      "a hand-copied bounded collect: use DeltaSide.collectBounded")
   }
 }
