@@ -1403,7 +1403,8 @@ final class GraftSession(val spark: SparkSession,
     * materialized frame. Each side resolves independently (node and
     * edge deltas can be live at once — a tx that upserts nodes then
     * MERGEs edges). Delta-shaped write burst: the delta is ALREADY
-    * materialized (it checkpoints at each commit), so compaction only
+    * materialized (a distributed fold checkpoints at each commit, a
+    * write buffer's delta is driver-resident), so compaction only
     * needs to materialize a base that is itself an unmaterialized
     * chain (a non-delta mutation ran before the burst) — exactly once;
     * the full table is never rewritten for delta-shaped commits. This
@@ -3436,13 +3437,10 @@ final class GraftSession(val spark: SparkSession,
       val m = r.toMap - seqC
       acc + (k -> stamp.fold(m)(sq => m + (seqC -> sq)))
     }
-    val deltaRows = log.valuesIterator.map { m =>
-      Row.fromSeq(colTypes.keysIterator.map(m.getOrElse(_, null)).toSeq) }.toSeq
-    val delta = spark.createDataFrame(javaList(deltaRows), StructType(colTypes.toSeq.map {
-      case (n, t) => StructField(n, t, nullable = !side.nonNull(n)) }))
+    val buf = caches(buf0).withLog(colTypes, log)
+    val delta = side.localFrame(spark, buf)
     val base = old.map(_.base).getOrElse(side.part(db.graph))
-    side.publish(db, DeltaState(base, delta, side.overlay(base, delta),
-      Some(caches(buf0).withLog(colTypes, log))))
+    side.publish(db, DeltaState(base, delta, side.overlay(base, delta), Some(buf)))
   }
 
   /** The distributed delta-log fold: stamp full keyed REPLACEMENT rows
@@ -3964,9 +3962,10 @@ final class GraftSession(val spark: SparkSession,
     n
   }
 
-  /** Materialize any LAZY delta a transaction shadow accumulated —
-    * called at COMMIT, so published overlays are always checkpointed
-    * (the read side may consume a delta twice per resolution).
+  /** Stamp and publish the deltas a transaction shadow accumulated —
+    * called at COMMIT, so a published distributed delta is always
+    * checkpointed (the read side may consume a delta twice per
+    * resolution).
     *
     * Commit-time CDC ordering (the Neo4j CDC contract: change
     * identifiers are assigned at COMMIT): rows this transaction wrote
@@ -3974,8 +3973,9 @@ final class GraftSession(val spark: SparkSession,
     * stamps every null-sequence row with ONE fresh sequence here — a
     * cursor minted while the transaction was open still sees its rows.
     * Inherited live-delta rows keep their original stamps
-    * (null-coalesce). Cost: one small checkpoint per mutated side per
-    * COMMIT, on delta-sized data. */
+    * (null-coalesce). Cost: a buffered side restamps its driver buffer
+    * and rebuilds its LocalRelation, no Spark job; a distributed side
+    * pays one small checkpoint on delta-sized data. */
   private def materializeDeltas(sh: GraphDatabase): Unit = {
     lazy val pubSeq = GraftSession.cdcCommitSeq.incrementAndGet()
     restampSide(sh, DeltaSide.Nodes, pubSeq)
@@ -3986,15 +3986,16 @@ final class GraftSession(val spark: SparkSession,
       pubSeq: => Long): Unit = side.valid(sh).foreach { s =>
     import org.apache.spark.sql.functions.{coalesce, col, lit}
     val seqC = PropertyGraph.CdcSeqCol
-    val delta = (if (s.delta.columns.contains(seqC))
-        s.delta.withColumn(seqC, coalesce(col(seqC), lit(pubSeq)))
-      else s.delta.withColumn(seqC, lit(pubSeq))).localCheckpoint()
-    // the driver buffer mirrors the stamps: a later buffered fold
-    // rebuilds the LocalRelation from these maps, so a stamp only on
-    // the frame would be lost at the next fold
+    // a write buffer holds the stamps itself: a later buffered fold
+    // rebuilds the LocalRelation from its maps, so a stamp only on the
+    // frame would be lost at the next fold
     val buf = s.buf.map(b => b.withLog(
       if (b.colTypes.contains(seqC)) b.colTypes else b.colTypes + (seqC -> LongType),
       b.rows.map { case (k, m) => if (m.contains(seqC)) (k, m) else (k, m + (seqC -> pubSeq)) }))
+    val delta = buf.map(side.localFrame(spark, _)).getOrElse(
+      (if (s.delta.columns.contains(seqC))
+        s.delta.withColumn(seqC, coalesce(col(seqC), lit(pubSeq)))
+      else s.delta.withColumn(seqC, lit(pubSeq))).localCheckpoint())
     side.publish(sh, DeltaState(s.base, delta, side.overlay(s.base, delta), buf))
   }
 

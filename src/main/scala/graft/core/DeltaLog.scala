@@ -1,8 +1,9 @@
 package graft.core
 
 import scala.collection.immutable.VectorMap
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.types.DataType
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** Driver-local write buffer of one delta-log side: present when the
   * delta lives as a LocalRelation over `rows` (bounded batches whose
@@ -54,12 +55,15 @@ final case class EdgeDeltaBuffer(
     copy(colTypes = colTypes, rows = rows)
 }
 
-/** One side's delta overlay: `resolved` is `base ⟵anti-join⟶ delta ∪
-  * delta` (see [[GraphDatabase.nodeDeltaState]]). `buf` is the driver
-  * write buffer `delta` was built from, if any. `materialized` is false
-  * only while the delta is a LAZY plan — a distributed fold inside a
-  * transaction shadow defers its checkpoint so a rolled-back
-  * transaction costs nothing; COMMIT and compaction checkpoint it. */
+/** One side's delta overlay: `resolved` is the base minus the delta's
+  * keys, plus the delta's live rows ([[PropertyGraph.overlayByKey]];
+  * see [[GraphDatabase.nodeDeltaState]]). `buf` is the driver write
+  * buffer `delta` was built from, if any: then `delta` is its
+  * [[DeltaSide.localFrame]], driver-resident and never checkpointed.
+  * `materialized` is false only while the delta is a LAZY plan — a
+  * distributed fold inside a transaction shadow defers its checkpoint
+  * so a rolled-back transaction costs nothing; COMMIT and compaction
+  * checkpoint it. */
 final case class DeltaState[B](
     base: DataFrame,
     delta: DataFrame,
@@ -82,6 +86,15 @@ final class DeltaSide[B <: DeltaBuffer[B]] private (
 
   def overlay(base: DataFrame, delta: DataFrame): DataFrame =
     PropertyGraph.overlayByKey(base, delta, key)
+
+  /** The delta a write buffer publishes: a LocalRelation over `buf`'s
+    * rows, columns in `colTypes` order, built without a Spark job. */
+  def localFrame(spark: SparkSession, buf: B): DataFrame = {
+    val rows = buf.rows.valuesIterator.map(m =>
+      Row.fromSeq(buf.colTypes.keysIterator.map(m.getOrElse(_, null)).toSeq)).toSeq
+    spark.createDataFrame(rows.asJava, StructType(buf.colTypes.toSeq.map {
+      case (n, t) => StructField(n, t, nullable = !nonNull(n)) }))
+  }
 
   /** A bounded buffered commit may extend this side: no overlay yet,
     * or one that is still a write buffer under the row cap. */
@@ -106,7 +119,9 @@ object DeltaSide {
   val MaxBufferRows = 100000
 
   /** Past this many rows one statement's matched keys, batch or miss set
-    * stay distributed instead of being collected to the driver. */
+    * stay distributed instead of being collected to the driver, and a
+    * driver-resident delta is overlaid by an anti join instead of its
+    * literal key set ([[PropertyGraph.overlayByKey]]). */
   val MaxDriverRows = 10000
 
   /** `df`'s rows when there are at most [[MaxDriverRows]] of them (one

@@ -145,11 +145,12 @@ final class GraphDatabase(val name: String) {
   @volatile var matEdges: org.apache.spark.sql.DataFrame = _
 
   /** Node DELTA overlay (mutation log): when set, and `graph.nodes eq
-    * resolved` still holds, the node side is exactly
-    * `base ⟵anti-join⟶ delta ∪ delta` — `delta` carries one full
-    * REPLACEMENT row per touched/created node id, so a batched-upsert
-    * commit costs O(batch), never O(table): compaction checkpoints
-    * only the delta and snapshot writes fold it into the base. The
+    * resolved` still holds, the node side is exactly `base` minus
+    * the delta's keys, plus `delta` ([[PropertyGraph.overlayByKey]]) —
+    * `delta` carries one full REPLACEMENT row per touched/created node
+    * id, so a batched-upsert commit costs O(batch), never O(table):
+    * compaction checkpoints at most the delta and snapshot writes fold
+    * it into the base. The
     * reference analog is its transaction log under /data/transactions
     * (docker-entrypoint.sh:521-532) replayed against the store.
     *
@@ -163,7 +164,7 @@ final class GraphDatabase(val name: String) {
 
   /** Edge DELTA overlay — the eid-keyed mirror of [[nodeDeltaState]]:
     * when set, and `graph.edges eq resolved` still holds, the edge
-    * side is exactly `base ⟵anti-join(eid)⟶ delta ∪ delta`, one full
+    * side is exactly `base` minus the delta's eids, plus `delta`, one full
     * REPLACEMENT row per touched/created relationship eid. A
     * relationship MERGE ON MATCH or batched edge append then commits
     * O(batch + delta), never O(edge table). Same self-validation by

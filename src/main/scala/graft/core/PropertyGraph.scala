@@ -1,6 +1,8 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.InSet
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -110,9 +112,9 @@ object PropertyGraph {
 
   /** Latest-wins overlay by id: base rows whose id the delta doesn't
     * replace, plus the delta's replacement/created rows (schema widens
-    * by name). One anti join + one union; the base is never
-    * rewritten — the resolution step of the mutation delta-log and of
-    * v5 snapshot `nodes_delta` overlays. */
+    * by name); the base is never rewritten — the resolution step of
+    * the mutation delta-log and of v5 snapshot `nodes_delta` overlays.
+    * See [[overlayByKey]] for the two plans. */
   def overlayById(base: DataFrame, delta: DataFrame): DataFrame =
     overlayByKey(base, delta, "id")
 
@@ -142,10 +144,24 @@ object PropertyGraph {
   /** [[overlayById]] generalized over the key column — nodes overlay
     * on `id`, relationships on their surrogate `eid`. Tombstone-aware:
     * flagged delta rows suppress without re-emitting; delta-log
-    * metadata columns never reach the resolved frame. */
+    * metadata columns never reach the resolved frame.
+    *
+    * The delta decides the plan. A driver-resident delta (a
+    * LocalRelation, as a write buffer publishes it) of at most
+    * `DeltaSide.MaxDriverRows` rows removes its keys by a literal set
+    * filter: no join, so no broadcast stage and none of its jobs in
+    * the read or in the compile-time probes over it. Any other delta
+    * (checkpointed folds, on-disk `nodes_delta`/`edges_delta`) is
+    * removed by one anti join. Either way one union adds the live
+    * delta rows. A base row with a null key is never replaced. */
   def overlayByKey(base: DataFrame, delta: DataFrame, key: String): DataFrame = {
-    val kept = base.join(delta.select(col(key).as("_ov_k")),
-      base(key) === col("_ov_k"), "left_anti")
+    val kept = literalKeys(base, delta, key) match {
+      case Some(ks) if ks.isEmpty => base
+      case Some(ks) => base.filter(base(key).isNull ||
+        !GraftSqlBridge.column(InSet(GraftSqlBridge.expression(base(key)), ks)))
+      case None => base.join(delta.select(col(key).as("_ov_k")),
+        base(key) === col("_ov_k"), "left_anti")
+    }
     val tombFiltered =
       if (delta.columns.contains(TombstoneCol))
         delta.filter(!coalesce(col(TombstoneCol), lit(false))).drop(TombstoneCol)
@@ -155,4 +171,19 @@ object PropertyGraph {
       else tombFiltered
     appendByName(kept, live)
   }
+
+  /** The non-null keys of a driver-resident `delta` of at most
+    * `DeltaSide.MaxDriverRows` rows, read from its LocalRelation
+    * without a job; None for any other delta, or when the key is not
+    * LONG on both sides. The set goes straight into an `InSet`, so the
+    * analyzer never walks thousands of literals. */
+  private def literalKeys(base: DataFrame, delta: DataFrame, key: String): Option[Set[Any]] =
+    delta.queryExecution.analyzed match {
+      case r: LocalRelation if r.data.size <= DeltaSide.MaxDriverRows &&
+          base.schema(key).dataType == LongType =>
+        val i = r.output.indexWhere(_.name == key)
+        if (i < 0 || r.output(i).dataType != LongType) None
+        else Some(r.data.iterator.filterNot(_.isNullAt(i)).map(row => row.getLong(i): Any).toSet)
+      case _ => None
+    }
 }

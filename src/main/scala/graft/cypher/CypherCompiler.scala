@@ -1310,19 +1310,19 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
     // vertices, diameter-bounded rounds, each frontier checkpointed.
     if (hi == Int.MaxValue) {
       val reachPairs: DataFrame = if (lo <= 1) {
-        var visited = base.join(startIds, Seq("_s"), "left_semi")
-          .select(col("_s"), col("_t")).distinct().localCheckpoint()
+        val (seed, seedRows) = CypherCompiler.checkpointed(
+          base.join(startIds, Seq("_s"), "left_semi").select(col("_s"), col("_t")).distinct())
+        var visited = seed
         var frontier = visited
-        var exhausted0 = frontier.isEmpty
+        var exhausted0 = seedRows == 0
         var round = 0
         while (!exhausted0) {
           round += 1
-          val next = frontier
+          val (next, nextRows) = CypherCompiler.checkpointed(frontier
             .join(base.select(col("_s").as("_m"), col("_t").as("_u")), col("_t") === col("_m"))
             .select(col("_s"), col("_u").as("_t")).distinct()
-            .join(visited, Seq("_s", "_t"), "left_anti")
-            .localCheckpoint()
-          if (next.isEmpty) exhausted0 = true
+            .join(visited, Seq("_s", "_t"), "left_anti"))
+          if (nextRows == 0) exhausted0 = true
           else {
             // hybrid visited maintenance (r19, measured): re-checkpointing
             // the union EVERY round copies O(V) settled pairs per round
@@ -1350,16 +1350,17 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
         // hop-cap-refusal philosophy.
         var pref = base.join(startIds, Seq("_s"), "left_semi")
           .select(col("_s"), col("_t"), array(col("_k")).as("_e"))
+        var prefRows = 0L
         (2 to lo).foreach { step =>
-          pref = pref
+          val (next, cnt) = CypherCompiler.checkpointed(pref
             .join(base.select(col("_s").as("_m"), col("_t").as("_u"), col("_k")),
               col("_t") === col("_m"))
             .filter(!array_contains(col("_e"), col("_k")))
             .select(col("_s"), col("_u").as("_t"),
               sort_array(array_union(col("_e"), array(col("_k")))).as("_e"))
-            .distinct()
-            .localCheckpoint()
-          val cnt = pref.count()
+            .distinct())
+          pref = next
+          prefRows = cnt
           if (cnt > prefixCap)
             throw new UnsupportedOperationException(
               s"var-length pattern `*$lo..` enumerated $cnt length-$step trail " +
@@ -1369,21 +1370,20 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
         }
         var visited = pref
         var frontier = visited
-        var exhausted0 = frontier.isEmpty
+        var exhausted0 = prefRows == 0
         var round = 0
         while (!exhausted0) {
           round += 1
           // extension steps avoid ONLY the fixed prefix edges (`_e`
           // never grows): walk-reachability in G ∖ prefix — excision
           // makes the combined object a genuine ≥lo trail
-          val next = frontier
+          val (next, nextRows) = CypherCompiler.checkpointed(frontier
             .join(base.select(col("_s").as("_m"), col("_t").as("_u"), col("_k")),
               col("_t") === col("_m"))
             .filter(!array_contains(col("_e"), col("_k")))
             .select(col("_s"), col("_u").as("_t"), col("_e")).distinct()
-            .join(visited, Seq("_s", "_t", "_e"), "left_anti")
-            .localCheckpoint()
-          if (next.isEmpty) exhausted0 = true
+            .join(visited, Seq("_s", "_t", "_e"), "left_anti"))
+          if (nextRows == 0) exhausted0 = true
           else {
             // hybrid visited maintenance — see the lo <= 1 arm
             visited = visited.union(next)
@@ -3499,6 +3499,15 @@ object CypherCompiler {
     * (2-3× slower wall at 15 rounds, sf0.1). N balances the two:
     * copies drop N-fold, task count per round stays ≤ N× bounded. */
   private[cypher] val VisitedCompactEvery = 4
+
+  /** `df` local-checkpointed, and its row count, from ONE job: a lazy
+    * checkpoint materializes on its first action, and that action is
+    * the count (an eager checkpoint and then `isEmpty` or `count` cost
+    * two). Later reads hit the checkpointed blocks. */
+  private[cypher] def checkpointed(df: DataFrame): (DataFrame, Long) = {
+    val m = df.localCheckpoint(eager = false)
+    (m, m.queryExecution.toRdd.count())
+  }
 
   /** SKIP/LIMIT resolver: by compile time the expression must be an
     * integer literal (parameters were substituted by Params); an

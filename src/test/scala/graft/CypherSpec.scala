@@ -3514,8 +3514,10 @@ class CypherSpec extends AnyFunSuite {
   }
 
   test("delta-log write buffers: every buffered path keeps its buffer, stamps at COMMIT, rolls back exactly and reads like a serial run") {
-    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.catalyst.plans.logical.Join
     import org.apache.spark.sql.types._
+    import graft.core.{DeltaBuffer, DeltaSide, PropertyGraph}
     import graft.core.PropertyGraph.CdcSeqCol
     // base graph with no overlay: (:dl {k, v}) with id = k, and two R
     // edges 1→2, 2→3 carrying c and w (eids clear of fresh ones)
@@ -3562,7 +3564,27 @@ class CypherSpec extends AnyFunSuite {
         Seq("[1,2,R,1,7,null]"), Seq("[2,3,R,1,7,null]")),
       ("UNWIND … MATCH … MERGE", false, s => s.cypher(relMerge,
         Map("b" -> Seq(Map("s" -> 1L, "d" -> 2L), Map("s" -> 3L, "d" -> 4L)))),
-        Seq("[1,2,R,2,7,null]", "[3,4,R,1,null,null]"), Nil))
+        Seq("[1,2,R,2,7,null]", "[3,4,R,1,null,null]"), Nil),
+      ("buffered DETACH DELETE", true, s => s.cypher("MATCH (n:dl {k: 2}) DETACH DELETE n"),
+        Seq("[1,10,null]", "[3,30,null]"), Seq("[2,20,null]", "[1,2,R,1,7,null]", "[2,3,R,1,7,null]")))
+    // the two overlay plans resolve every live delta alike: a
+    // driver-resident delta of at most MaxDriverRows rows removes its
+    // keys by their literal set (no join), any other by an anti join —
+    // here the same delta checkpointed
+    def joins(df: DataFrame): Int = df.queryExecution.analyzed.collect { case j: Join => j }.size
+    def sorted(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+    def overlaysAgree(s: GraftSession, name: String): Unit = {
+      val db = s.catalog.database("neo4j")
+      def agree[B <: DeltaBuffer[B]](side: DeltaSide[B]): Unit = side.valid(db).foreach { st =>
+        val literal = st.buf.exists(_.rows.size <= DeltaSide.MaxDriverRows)
+        val anti = side.overlay(st.base, st.delta.localCheckpoint())
+        assert(joins(st.resolved) == joins(st.base) + (if (literal) 0 else 1),
+          s"$name: the ${side.key} overlay took the wrong plan")
+        assert(joins(anti) == joins(st.base) + 1)
+        assert(sorted(st.resolved) == sorted(anti), s"$name: the ${side.key} overlays disagree")
+      }
+      agree(DeltaSide.Nodes); agree(DeltaSide.Edges)
+    }
     paths.foreach { case (name, nodeSide, run, present, absent) =>
       def buffer(s: GraftSession): Option[Map[Long, Map[String, Any]]] = {
         val db = s.catalog.database("neo4j")
@@ -3589,7 +3611,10 @@ class CypherSpec extends AnyFunSuite {
       s.cypher("BEGIN"); run(s); s.cypher("COMMIT")
       val committed = buffer(s).getOrElse(fail(s"$name: COMMIT dropped the write buffer"))
       assert(stamped(committed), s"$name: COMMIT left unstamped buffer rows")
+      assert(committed.values.map(_(CdcSeqCol)).toSet.size == 1,
+        s"$name: one COMMIT stamped its rows with more than one sequence")
       assert(dump(s) == want, s"$name: reads after COMMIT differ from the serial run")
+      overlaysAgree(s, name)
       // a second buffered fold rebuilds the delta from the buffer and
       // keeps every committed stamp
       if (nodeSide) s.cypher("UNWIND [50] AS x MERGE (a:dl {k: x}) ON CREATE SET a.v = 0")
@@ -3600,7 +3625,67 @@ class CypherSpec extends AnyFunSuite {
         assert(after.get(k).flatMap(_.get(CdcSeqCol)) == m.get(CdcSeqCol),
           s"$name: the second fold lost the stamp of row $k")
       }
+      overlaysAgree(s, s"$name, second fold")
     }
+    // a base row with a null key is never replaced, on either plan
+    val kv = StructType(Seq(StructField("id", LongType), StructField("p", StringType)))
+    def frame(rs: Row*): DataFrame = spark.createDataFrame(java.util.Arrays.asList(rs: _*), kv)
+    val nb = frame(Row(null, "n"), Row(1L, "a"), Row(2L, "b"))
+    val nd = frame(Row(1L, "a2"), Row(null, "x"), Row(3L, "c"))
+    val byLiteral = PropertyGraph.overlayById(nb, nd)
+    assert(joins(byLiteral) == 0)
+    assert(sorted(byLiteral) == Seq("[1,a2]", "[2,b]", "[3,c]", "[null,n]", "[null,x]"))
+    assert(sorted(PropertyGraph.overlayById(nb, nd.localCheckpoint())) == sorted(byLiteral))
+    // a buffer past MaxDriverRows rows stays a buffer and resolves by
+    // the anti join
+    val big = fresh()
+    Seq(1000L, 7000L).foreach(lo => big.cypher(
+      s"UNWIND range($lo, ${lo + 5499}) AS x MERGE (a:dl {k: x}) ON CREATE SET a.v = x"))
+    assert(big.catalog.database("neo4j").validNodeDelta.flatMap(_.buf)
+      .exists(_.rows.size > DeltaSide.MaxDriverRows), "the 11000-row burst left no write buffer")
+    overlaysAgree(big, "a buffer past MaxDriverRows")
+    assert(big.cypher("MATCH (n:dl) RETURN count(*) AS n, sum(n.v) AS v").collect().head.toString ==
+      s"[11005,${150 + (1000L to 6499L).sum + (7000L to 12499L).sum}]")
+    // an anchored database: a RANGE-routed read, the CDC feed and an
+    // incremental save all read a buffered COMMIT's delta
+    val dir = java.nio.file.Files.createTempDirectory("graft_dlbuf_").toString
+    val s0 = fresh()
+    s0.cypher("CREATE INDEX dl_v FOR (n:dl) ON (n.v)")
+    s0.saveDatabase(dir)
+    val a = new GraftSession(spark)
+    a.loadDatabase(dir)
+    def cursor(): String = a.cypher("CALL db.cdc.current() YIELD id RETURN id").collect().head.getString(0)
+    def feed(c: String): Seq[String] = sorted(a.cypher(s"CALL db.cdc.query('$c') YIELD op, id RETURN op, id"))
+    def stamps(): Map[Long, Any] = a.catalog.database("neo4j").validNodeDelta.flatMap(_.buf)
+      .map(_.rows.map { case (k, m) => k -> m(CdcSeqCol) }.toMap).getOrElse(Map.empty)
+    val c0 = cursor()
+    a.cypher("BEGIN")
+    a.cypher("UNWIND [1, 9] AS x MERGE (a:dl {k: x}) ON MATCH SET a.v = a.v + 1 ON CREATE SET a.v = 0")
+    a.cypher("COMMIT")
+    val stale = a.cypher("MATCH (n:dl {v: 10}) RETURN n.k AS k")
+    assert(stale.queryExecution.executedPlan.toString.contains("index_aux"),
+      "the read does not route through the RANGE projection")
+    assert(stale.collect().isEmpty, "a RANGE-routed read returned the base row the COMMIT replaced")
+    assert(a.cypher("MATCH (n:dl {v: 11}) RETURN n.k AS k").collect().map(_.getLong(0)).toSeq == Seq(1L))
+    overlaysAgree(a, "anchored")
+    val committed = stamps()
+    assert(committed.size == 2 && committed.values.toSet.size == 1)
+    val e0 = feed(c0)
+    assert(e0.map(_.take(2)) == Seq("[c", "[u") && e0.distinct == e0,
+      s"the COMMIT's rows did not reach the feed once each: $e0")
+    val c1 = cursor()
+    assert(feed(c1).isEmpty, "a cursor minted after the COMMIT replays it")
+    a.cypher("UNWIND [50] AS x MERGE (a:dl {k: x}) ON CREATE SET a.v = 0")
+    assert(committed.forall { case (k, sq) => stamps().get(k).contains(sq) },
+      "a later buffered fold restamped the committed rows")
+    assert(feed(c1).length == 1 && feed(c0).length == 3)
+    a.saveDatabase(dir)
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/databases/neo4j/nodes_delta")),
+      "the save after a buffered COMMIT was not incremental")
+    val reloaded = new GraftSession(spark)
+    reloaded.loadDatabase(dir)
+    assert(dump(reloaded) == dump(a), "the reloaded incremental save differs from the live graph")
+    graft.core.SnapshotStore.deleteDir(dir)
   }
 
   test("edge buffer under transactions: ROLLBACK discards buffered merges, COMMIT publishes them") {

@@ -876,6 +876,33 @@ class PlanSpec extends AnyFunSuite {
     assert("BroadcastHashJoin".r.findAllMatchIn(p).length >= 4,
       "the hop chain is no longer broadcast-hinted:\n" + p)
     assert(rows(df) == expected(Seq(21L, 22L, 23L)))
+    // a transactional MERGE publishes its write buffer at COMMIT as a
+    // driver-resident delta, without a job; reads over it remove the
+    // delta's keys by their literal set, so no broadcast stage is
+    // added: a read of a key the delta does not hold compiles and runs
+    // with the jobs it had before. (A read of a key it does hold also
+    // scans the delta's rows, a second partition for the probe's
+    // bounded take.)
+    def firstRun(k: Long): (Set[(Long, Long)], Seq[String], Int) = {
+      val (d, c) = StatementMetrics.measure(spark)(s.cypher(q, Map("k" -> k)))
+      val (got, m) = StatementMetrics.measure(spark)(rows(d))
+      (got, c.jobs.map(_.callSite), m.jobs.size)
+    }
+    val (_, _, runJobs) = firstRun(8L)
+    s.cypher("BEGIN")
+    s.cypher("MERGE (c:MC {ck: 7}) ON MATCH SET c.seen = 1")
+    val (_, commit) = StatementMetrics.measure(spark)(s.cypher("COMMIT"))
+    assert(commit.jobs.isEmpty, s"COMMIT of a buffered MERGE ran ${commit.jobs.size} jobs")
+    assert(s.catalog.database("neo4j").validNodeDelta.exists(_.buf.isDefined),
+      "the committed MERGE published no write buffer")
+    compiled(3L) // the delta-overlaid stats, once per state
+    val (txRows, txCompileJobs, txRunJobs) = firstRun(8L)
+    assert(txCompileJobs.size == 1, "after a committed MERGE the 2-hop compile ran jobs at " +
+      txCompileJobs.mkString(", ") + "; one probe expected")
+    assert(txRunJobs <= runJobs,
+      s"after a committed MERGE the 2-hop read ran $txRunJobs jobs, $runJobs before it")
+    assert(txRows == expected(Seq(24L, 25L, 26L)))
+    assert(rows(compiled(7L)._1) == expected(Seq(21L, 22L, 23L)))
     // soundness: one edge merged after the load raises :MPL's degrees
     // past the sealed maxima, which become unknown — the read probes
     // its hops again and still answers right
@@ -1102,6 +1129,15 @@ class PlanSpec extends AnyFunSuite {
       s"an eid-less fallback outside setGraph: $eidProbes")
     assert(holders(main, "xxhash64" + "(") == Set("GraphViews.scala"),
       "a second derived relationship id: use GraphViews.viewEid")
+    // one driver-resident delta: the write buffer's LocalRelation is
+    // built in DeltaSide.localFrame, for the buffered commit and the
+    // COMMIT restamp, and only overlayByKey resolves by anti join
+    assert(holders(main, "colTypes" + ".keysIterator") == Set("DeltaLog.scala"),
+      "a second buffer-to-LocalRelation construction: use DeltaSide.localFrame")
+    assert(occurrences(main, "localFrame" + "(") == Map("DeltaLog.scala" -> 1, "GraftSession.scala" -> 2),
+      "the buffered commit and the COMMIT restamp share DeltaSide.localFrame")
+    assert(holders(main, "\"_ov" + "_k\"") == Set("PropertyGraph.scala"),
+      "a second overlay anti join: use PropertyGraph.overlayByKey")
     // one driver-side row cap
     assert(holders(all, "limit(1000" + "1)").isEmpty,
       "a hand-copied bounded collect: use DeltaSide.collectBounded")
