@@ -5,7 +5,7 @@ import org.apache.spark.sql.types._
 import graft.auth.{Auth, AuthStore}
 import graft.core.{DeltaBuffer, DeltaSide, DeltaState, GraphCatalog, GraphDatabase, GraphViews,
   PropertyGraph, SnapshotAnchor, SnapshotStore}
-import graft.cypher.{CypherCompiler, CypherParser, Params, ast}
+import graft.cypher.{CypherCompiler, CypherParser, DriverEval, Params, ast}
 import graft.procs.ProcedureRegistry
 
 /** Session façade — the engine's equivalent of a Bolt session against
@@ -1050,11 +1050,7 @@ final class GraftSession(val spark: SparkSession,
           val d = catalog.database(database); d.requireStarted(); d
       }
       val parsed = Params.substitute(CypherParser.parse(rest), params)
-      val isMut = parsed.clauses.exists {
-        case _: ast.Create | _: ast.SetProps | _: ast.SetPropsReplace | _: ast.SetPropsParam | _: ast.RemoveProps |
-             _: ast.SetLabels | _: ast.Delete | _: ast.Merge | _: ast.Foreach => true
-        case _ => false
-      }
+      val isMut = parsed.clauses.exists(ast.mutates)
       val schema = StructType(Seq(StructField("plan", StringType)))
       if (isMut) {
         if (mode.equalsIgnoreCase("profile")) throw new UnsupportedOperationException(
@@ -1220,12 +1216,7 @@ final class GraftSession(val spark: SparkSession,
             "CALL { … } IN TRANSACTIONS is not allowed inside an open transaction")
           return mutateCallInTx(db, parsed)
         }
-        val isMutation = parsed.clauses.exists {
-          case _: ast.Create | _: ast.SetProps | _: ast.SetPropsReplace | _: ast.SetPropsParam | _: ast.RemoveProps |
-               _: ast.SetLabels | _: ast.Delete | _: ast.Merge | _: ast.Foreach => true
-          case _ => false
-        }
-        if (isMutation) {
+        if (parsed.clauses.exists(ast.mutates)) {
           if (parsed.unions.nonEmpty)
             throw new UnsupportedOperationException("UNION of mutating queries is not supported")
           tx.foreach(_.mutated += database)
@@ -2139,20 +2130,18 @@ final class GraftSession(val spark: SparkSession,
     (df, boundVars)
   }
 
-  /** MATCH … SET / (DETACH) DELETE — both are joins against the
-    * matched id set, applied to the immutable snapshot and swapped in:
-    * SET rewrites the property column via a left join (update-by-join,
-    * the scale-correct shape); DELETE anti-joins nodes (and, for
-    * DETACH, incident edges). A plain DELETE of a node that still has
-    * relationships refuses, like the reference engine. */
   /** SET RHS over the target row's own columns: `SET n.x = n.y + 1`
     * compiles to a Column over them — still one update-by-join. A
     * property that does not exist as a column reads as null
-    * (reference semantics for absent properties). */
-  private def setValueColumn(base: DataFrame, v: String, isRel: Boolean,
-      rhs: ast.Expr): org.apache.spark.sql.Column = {
+    * (reference semantics for absent properties). `row` binds other
+    * leaves (a batch row's fields) to columns of `base`. The driver
+    * twin of this contract is [[graft.cypher.DriverEval]]. */
+  private[graft] def setValueColumn(base: DataFrame, v: String, isRel: Boolean,
+      rhs: ast.Expr, row: PartialFunction[ast.Expr, org.apache.spark.sql.Column] =
+        PartialFunction.empty): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions._
     def exprCol(e0: ast.Expr): org.apache.spark.sql.Column = e0 match {
+      case e1 if row.isDefinedAt(e1) => row(e1)
       case ast.Lit(x) => lit(norm(x))
       // list literal (incl. a substituted list parameter — SET
       // r.tags = $tags): element-wise compile into one array column
@@ -2181,8 +2170,8 @@ final class GraftSession(val spark: SparkSession,
       // full compileExpr needs a frame; these are frame-free)
       case ast.FnCall(fn, args, _) if SetRhsFns.contains(fn.toLowerCase) =>
         SetRhsFns(fn.toLowerCase)(args.map(exprCol))
-      case ast.Arith("+", l, r0) =>
-        typedPlus(base, exprCol(l), exprCol(r0), l, r0)
+      case ast.Arith(op @ ("+" | "||"), l, r0) =>
+        typedConcat(base, op, exprCol(l), exprCol(r0), l, r0)
       case ast.Arith(op, l, r0) =>
         val (lc, rc) = (exprCol(l), exprCol(r0))
         op match {
@@ -2225,11 +2214,12 @@ final class GraftSession(val spark: SparkSession,
 
   /** openCypher `+` is type-directed, and the WRITE path must agree
     * with the read path (`SET n.tag = n.name + '-x'` concatenates, it
-    * does not cast the string to double and null out): string concat
-    * when either operand resolves to a string against the frame or is
-    * a string literal, list concat on two arrays, numeric add
-    * otherwise. */
-  private def typedPlus(frame: DataFrame, lc: org.apache.spark.sql.Column,
+    * does not cast the string to double and null out): list concat on
+    * two arrays, string concat when either operand resolves to a
+    * string against the frame or is a string literal, numeric add
+    * otherwise. `||` (GQL) is the read path's concatenation only: two
+    * lists concatenate, anything else as strings. */
+  private def typedConcat(frame: DataFrame, op: String, lc: org.apache.spark.sql.Column,
       rc: org.apache.spark.sql.Column, l: ast.Expr, r: ast.Expr): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions._
     def isStrLit(e: ast.Expr): Boolean = e match {
@@ -2237,19 +2227,14 @@ final class GraftSession(val spark: SparkSession,
       case _                  => false
     }
     val (tl, tr) = (CypherCompiler.colType(lc, frame), CypherCompiler.colType(rc, frame))
-    if (tl.contains(StringType) || tr.contains(StringType) || isStrLit(l) || isStrLit(r))
-      concat(lc.cast("string"), rc.cast("string"))
-    else (tl, tr) match {
-      case (Some(_: org.apache.spark.sql.types.ArrayType),
-            Some(_: org.apache.spark.sql.types.ArrayType)) => concat(lc, rc)
+    (tl, tr) match {
+      case (Some(_: ArrayType), Some(_: ArrayType)) => concat(lc, rc)
+      case _ if op == "||" || tl.contains(StringType) || tr.contains(StringType) ||
+          isStrLit(l) || isStrLit(r) => concat(lc.cast("string"), rc.cast("string"))
       case _ => lc + rc
     }
   }
 
-  /** `lazyRewrite`: the declarative whole-pattern MERGE path promises
-    * ZERO driver actions at build (EXPLAIN of a mutation must not
-    * execute; CypherSpec pins it) — it opts out of the eager delta
-    * fold and keeps the lazy update-by-join. */
   /** `MATCH … SET n = {map}` — full property replace as ONE delta
     * fold: the matched rows project to (meta columns, mapped values,
     * null for every other property) and fold as replacement rows.
@@ -2303,6 +2288,17 @@ final class GraftSession(val spark: SparkSession,
     unit()
   }
 
+  /** MATCH … SET / (DETACH) DELETE — both are joins against the
+    * matched id set, applied to the immutable snapshot and swapped in:
+    * SET rewrites the property column via a left join (update-by-join,
+    * the scale-correct shape); DELETE anti-joins nodes (and, for
+    * DETACH, incident edges). A plain DELETE of a node that still has
+    * relationships refuses, like the reference engine.
+    *
+    * `lazyRewrite`: the declarative whole-pattern MERGE path promises
+    * ZERO driver actions at build (EXPLAIN of a mutation must not
+    * execute; CypherSpec pins it) — it opts out of the eager delta
+    * fold and keeps the lazy update-by-join. */
   private def mutateSetDelete(db: GraphDatabase, matches: Seq[ast.Match],
       sets: Seq[ast.SetProps], deletes: Seq[ast.Delete],
       labelSets: Seq[ast.SetLabels] = Nil, lazyRewrite: Boolean = false,
@@ -2456,25 +2452,22 @@ final class GraftSession(val spark: SparkSession,
         else {
           // BUFFERED first (the batch-flag / IN TRANSACTIONS chunk
           // shape — `MATCH … WHERE id(n) IN $chunk SET n.flag = 1`):
-          // a bounded matched-id set with a driver-evaluable literal
-          // value collects its hit rows ONCE (isin-pruned scan) and
-          // folds them into the node write buffer with the value
-          // applied — LocalRelation delta, ZERO distributed fold
+          // a bounded matched-id set with a literal value collects
+          // its hit rows ONCE (isin-pruned scan) and folds them into
+          // the node write buffer with the value applied —
+          // LocalRelation delta, ZERO distributed fold
           // jobs, the same discipline as the buffered DELETE below.
           // This halves the per-chunk job floor of MATCH-driven
           // CALL { } IN TRANSACTIONS (r14 verdict #3). Unbounded
           // matches, non-literal values, retyping writes, and
           // distributed deltas keep the general fold.
+          val colType = DriverEval.colType(base.schema, Map.empty) _
           val litValue: Option[Any] = rhs match {
-            case ast.Lit(value0) => Some(norm(value0))
-            case _               => None
+            case ast.Lit(_) => DriverEval.eval(rhs, _ => None)
+              .flatMap { case (value, _) => DriverEval.fits(value, colType(key, value)) }
+            case _ => None
           }
-          val bufferedOk = !isRel && litValue.isDefined &&
-            litValue.forall(value =>
-              value == null || !keyPresent ||
-                PropertyGraph.literalType(value) ==
-                  base.schema(base.schema.fieldIndex(key)).dataType) &&
-            DeltaSide.Nodes.bufferable(db)
+          val bufferedOk = !isRel && litValue.isDefined && DeltaSide.Nodes.bufferable(db)
           // OPTIONAL MATCH miss rows carry null ids; the general
           // semi-join path ignores them (null never equals), so the
           // buffered path must drop them too rather than NPE.
@@ -2485,10 +2478,7 @@ final class GraftSession(val spark: SparkSession,
           bufferedIds match {
             case Some(idVals) =>
               val value = litValue.get
-              val setType =
-                if (keyPresent) base.schema(base.schema.fieldIndex(key)).dataType
-                else PropertyGraph.literalType(value)
-              upsertNodesBuffered(db, idVals, key, value, setType)
+              upsertNodesBuffered(db, idVals, key, value, colType(key, value))
             case None =>
               val vc = rhs match {
                 case ast.Lit(value0) if norm(value0) == null && keyPresent =>
@@ -2787,12 +2777,7 @@ final class GraftSession(val spark: SparkSession,
       // than silently executing only the first branch
       if (cs.unions.nonEmpty) throw new UnsupportedOperationException(
         "UNION inside CALL { … } IN TRANSACTIONS is not supported")
-      val isMut = cs.clauses.exists {
-        case _: ast.Create | _: ast.SetProps | _: ast.SetPropsReplace | _: ast.SetPropsParam | _: ast.RemoveProps |
-             _: ast.SetLabels | _: ast.Delete | _: ast.Merge | _: ast.Foreach => true
-        case _ => false
-      }
-      if (!isMut) throw new UnsupportedOperationException(
+      if (!cs.clauses.exists(ast.mutates)) throw new UnsupportedOperationException(
         "CALL { … } IN TRANSACTIONS expects a mutating body")
     }
     def batchSize(cs: ast.CallSub): Int = {
@@ -2957,12 +2942,11 @@ final class GraftSession(val spark: SparkSession,
     *   sequential outcome for row-valued SETs. A duplicate key whose
     *   ON MATCH reads the merge variable's own properties is refused
     *   (a sequential self-increment cannot collapse into one join).
-    */
-  /** Batched single-node upsert (`UNWIND … MERGE`) and, with
-    * `matchOnly`, the key-list batch UPDATE (`UNWIND … MATCH … SET`):
-    * identical buffered machinery, but match-only mints no create
-    * candidates — an unmatched key is a no-op, and an element whose
-    * key value is null matches nothing (openCypher `{k: null}`)
+    *
+    * With `matchOnly` it is the key-list batch UPDATE (`UNWIND … MATCH
+    * … SET`): identical buffered machinery, but match-only mints no
+    * create candidates — an unmatched key is a no-op, and an element
+    * whose key value is null matches nothing (openCypher `{k: null}`)
     * where MERGE must refuse. */
   private def mutateUnwindMerge(db: GraphDatabase, u: ast.Unwind, m: ast.Merge,
       matchOnly: Boolean = false): DataFrame = {
@@ -3014,79 +2998,38 @@ final class GraftSession(val spark: SparkSession,
       }
       ks
     }
-    def rowFields(e: ast.Expr): Set[String] = e match {
-      case ast.Prop(`alias`, k)  => Set(k)
-      case ast.Variable(`alias`) => Set(ELEM)
-      case ast.Arith(_, l, r)    => rowFields(l) ++ rowFields(r)
-      case ast.Cmp(_, l, r)      => rowFields(l) ++ rowFields(r)
-      case ast.CaseExpr(ws, o) =>
-        ws.flatMap { case (c, v) => rowFields(c) ++ rowFields(v) }.toSet ++
-          o.toSeq.flatMap(rowFields)
-      case _ => Set.empty
+    def rowFields(e: ast.Expr): Seq[String] = ast.reads(e).collect {
+      case ast.Prop(`alias`, k)  => k
+      case ast.Variable(`alias`) => ELEM
     }
-    def refsMergeVar(e: ast.Expr): Boolean = e match {
-      case ast.Prop(`mergeVar`, _)  => true
-      case ast.Variable(`mergeVar`) => true
-      case ast.Arith(_, l, r)       => refsMergeVar(l) || refsMergeVar(r)
-      case ast.Cmp(_, l, r)         => refsMergeVar(l) || refsMergeVar(r)
-      case ast.CaseExpr(ws, o) =>
-        ws.exists { case (c, v) => refsMergeVar(c) || refsMergeVar(v) } ||
-          o.exists(refsMergeVar)
+    def refsMergeVar(e: ast.Expr): Boolean = ast.reads(e).exists {
+      case ast.Prop(`mergeVar`, _) | ast.Variable(`mergeVar`) => true
       case _ => false
-    }
-    // driver-side evaluation for row-only values (the create branch,
-    // and — given a matched node's current values via `nodeVal` — the
-    // driver-buffered ON MATCH path)
-    def evalLocal(e: ast.Expr, elem: Any,
-        nodeVal: String => Option[Any] = _ => None): Any = e match {
-      case ast.Lit(v)            => norm(v)
-      case ast.Prop(`alias`, k)  => field(elem, k)
-      case ast.Variable(`alias`) => norm(elem)
-      // SET n.p = row[1] — positional list access, the headerless
-      // LOAD CSV tail; the inner target must resolve to a list
-      case ast.Subscript(inner, idx) =>
-        val i = evalLocal(idx, elem, nodeVal) match {
-          case l: Long => l
-          case other => throw new UnsupportedOperationException(
-            s"$verb subscript index must be an integer, got $other")
-        }
-        evalLocal(inner, elem, nodeVal) match {
-          case null => null
-          case s: scala.collection.Seq[_] =>
-            val n = s.size
-            val ix = if (i < 0) n + i else i
-            if (ix >= 0 && ix < n) norm(s(ix.toInt)) else null
-          case other => throw new UnsupportedOperationException(
-            s"$verb subscript needs a list, got $other")
-        }
-      case ast.Prop(`mergeVar`, k) if nodeVal(k).isDefined => nodeVal(k).get
-      case ast.Prop(`mergeVar`, k) if keyNames.contains(k) =>
-        keyOf(elem)(keyNames.indexOf(k)) // pattern prop of the node being created
-      case ast.Arith(op, l, r) =>
-        (evalLocal(l, elem, nodeVal), evalLocal(r, elem, nodeVal)) match {
-          case (null, _) | (_, null) => null // SQL null propagation
-          case (x: Long, y: Long) => op match {
-            case "+" => x + y; case "-" => x - y; case "*" => x * y
-            case "/" => x / y; case "%" => x % y
-          }
-          case (x: String, y: String) if op == "+" => x + y
-          case (a, b) =>
-            def toD(v: Any): Double = v match {
-              case l0: Long => l0.toDouble; case d0: Double => d0
-              case other => throw new UnsupportedOperationException(
-                s"non-numeric operand $other in UNWIND … MERGE SET arithmetic")
-            }
-            val (x, y) = (toD(a), toD(b))
-            op match {
-              case "+" => x + y; case "-" => x - y; case "*" => x * y
-              case "/" => x / y; case "%" => x % y
-            }
-        }
-      case other => throw new UnsupportedOperationException(
-        s"$verb SET value supports row fields, literals and arithmetic, got $other")
     }
     def firstType(vs: Iterable[Any]): DataType =
       vs.find(_ != null).map(PropertyGraph.literalType).getOrElse(StringType)
+    // batch-row fields as driver-evaluator leaves, a null one typed like
+    // the distributed path's `_bf_` column (first non-null value)
+    val fieldType: Map[String, Option[DataType]] =
+      (m.onCreate ++ m.onMatch).flatMap { case (_, e) => rowFields(e) }.distinct.map { f =>
+        f -> elems.iterator.map(field(_, f)).find(_ != null)
+          .fold(Option[DataType](StringType))(DriverEval.typeOf)
+      }.toMap
+    def rowLeaf(elem: Any): PartialFunction[ast.Expr, Option[DriverEval.Typed]] = {
+      case ast.Prop(`alias`, f)  => fieldType(f).map(field(elem, f) -> _)
+      case ast.Variable(`alias`) => fieldType(ELEM).map(field(elem, ELEM) -> _)
+    }
+    // ON CREATE (and a duplicate key's ON MATCH, on its own created
+    // row) reads the row being created: its key values and the SET
+    // items before it. There is no distributed create branch, so a
+    // value the driver evaluator declines refuses the statement.
+    def createValue(e: ast.Expr, elem: Any, props: collection.Map[String, Any]): Any =
+      DriverEval.eval(e, rowLeaf(elem).orElse {
+        case ast.Prop(`mergeVar`, k) => Some((props.getOrElse(k, null), NullType))
+        case _ => None
+      }).map(_._1).getOrElse(throw new UnsupportedOperationException(
+        s"$verb cannot evaluate the SET value $e: it takes row fields, literals and " +
+          s"$mergeVar's own properties under + - * / % ||, without overflow or a zero divisor"))
 
     // ---- collapse the batch per merge key ----------------------------
     // (first occurrence, last occurrence, count)
@@ -3138,50 +3081,29 @@ final class GraftSession(val spark: SparkSession,
       else byKey.toSeq.zipWithIndex.map { case ((k, (first, last, cnt)), i) =>
         val props = collection.mutable.LinkedHashMap.empty[String, Any]
         keyNames.zip(k).foreach { case (kn, kv) => props(kn) = kv }
-        m.onCreate.foreach { case (p, e) => props(p.key) = evalLocal(e, first) }
-        if (cnt > 1) m.onMatch.foreach { case (p, e) => props(p.key) = evalLocal(e, last) }
+        m.onCreate.foreach { case (p, e) => props(p.key) = createValue(e, first, props) }
+        if (cnt > 1) m.onMatch.foreach { case (p, e) => props(p.key) = createValue(e, last, props) }
         (createBase + i, k, props)
       }
 
     // ---- driver-buffered delta (the fast path, r11 verdict #5) -------
-    // A literal batch with driver-evaluable SET values commits with ONE
-    // distributed action: an isin-pruned lookup of the matched rows
-    // (collect — bounded by the batch size). Replacement and created
+    // A literal batch whose SET values the driver evaluator takes
+    // ([[DriverEval]]) commits with ONE distributed action: an
+    // isin-pruned lookup of the matched rows (collect — bounded by
+    // the batch size). Replacement and created
     // rows are assembled on the driver into an immutable, insertion-
     // ordered write buffer whose DataFrame is a LocalRelation — so the
     // commit itself runs no checkpoint job, and the read-side overlay
     // plans against local rows. Falls back to the distributed
     // replacement-row path for huge batches, an oversized buffer, SET
-    // shapes evalLocal can't run, or when a distributed delta is
-    // already in flight.
-    def driverEvaluable(e: ast.Expr): Boolean = e match {
-      case ast.Lit(_) | ast.Prop(`alias`, _) | ast.Variable(`alias`) |
-           ast.Prop(`mergeVar`, _) => true
-      case ast.Arith(_, l, r) => driverEvaluable(l) && driverEvaluable(r)
-      case _ => false
-    }
-    def fits(v: Any, t: DataType): Option[Any] = (v, t) match {
-      case (null, _)                       => Some(null)
-      case (x: Long, LongType)             => Some(x)
-      case (x: Long, DoubleType)           => Some(x.toDouble)
-      case (x: Double, DoubleType)         => Some(x)
-      case (x: String, StringType)         => Some(x)
-      case (x: Boolean, BooleanType)       => Some(x)
-      case _                               => None
-    }
+    // values the driver evaluator declines or whose type does not fit
+    // the column, or when a distributed delta is already in flight.
     val oldState = db.validNodeDelta
     val nodeSchema = g.nodes.schema
     val idx = nodeSchema.fieldNames.zipWithIndex.toMap
     // driver-side key comparison is by canonical Scala value (ints
     // widen to Long) — key columns in types it can't canonicalize
     // (decimal, date) keep the distributed path's cast semantics
-    def canon(v: Any): Any = v match {
-      case i: java.lang.Integer => i.longValue
-      case s: java.lang.Short   => s.longValue
-      case b: java.lang.Byte    => b.longValue
-      case f: java.lang.Float   => f.doubleValue
-      case other                => other
-    }
     val keyTypesCanonical = keyNames.forall { kn =>
       !idx.contains(kn) || (nodeSchema(idx(kn)).dataType match {
         case LongType | org.apache.spark.sql.types.IntegerType |
@@ -3190,7 +3112,10 @@ final class GraftSession(val spark: SparkSession,
       })
     }
     val driverEligible = byKey.size <= DeltaSide.MaxDriverRows && keyTypesCanonical &&
-      m.onMatch.forall { case (_, e) => driverEvaluable(e) } &&
+      m.onMatch.forall { case (_, e) => DriverEval.covers(e, {
+        case ast.Prop(`alias` | `mergeVar`, _) | ast.Variable(`alias`) => true
+        case _ => false
+      }) } &&
       DeltaSide.Nodes.bufferable(db)
     if (driverEligible) {
       val buf0 = oldState.flatMap(_.buf).getOrElse(DeltaSide.Nodes.emptyBuffer)
@@ -3209,11 +3134,11 @@ final class GraftSession(val spark: SparkSession,
           case (id, mrow) if !mrow.get(PropertyGraph.TombstoneCol).contains(true) &&
               keyNames.forall(mrow.contains) &&
               labelsOk(mrow.getOrElse("labels", null)) &&
-              byKey.contains(keyNames.map(kn => canon(mrow(kn)))) =>
+              byKey.contains(keyNames.map(kn => DriverEval.canon(mrow(kn)))) =>
             (id, mrow)
         }
       val bufMatchedKeys = bufMatched.map { case (_, mrow) =>
-        keyNames.map(kn => canon(mrow(kn))) }.toSet
+        keyNames.map(kn => DriverEval.canon(mrow(kn))) }.toSet
       // 2. only keys the base hasn't answered THIS BURST scan the BASE
       // — a plain isin-pruned scan with no overlay anti-join; the base
       // is immutable while the overlay is valid, so an answered
@@ -3238,7 +3163,7 @@ final class GraftSession(val spark: SparkSession,
           p.filter(labelCond(p)).collect().toSeq.flatMap { r =>
             // exact key-tuple membership re-checked on the driver: the
             // per-column isin conjunction is a superset for multi-key
-            val kt = keyNames.map(kn => canon(r.get(baseIdx(kn))))
+            val kt = keyNames.map(kn => DriverEval.canon(r.get(baseIdx(kn))))
             val id = r.get(baseIdx("id")).asInstanceOf[Long]
             if (!scanKeys.contains(kt) || bufRows.contains(id)) None
             else {
@@ -3250,7 +3175,7 @@ final class GraftSession(val spark: SparkSession,
           }
         }
       val baseFoundKeys = baseMatched.map { case (_, mrow) =>
-        keyNames.map(kn => canon(mrow(kn))) }.toSet
+        keyNames.map(kn => DriverEval.canon(mrow(kn))) }.toSet
       // a scanned key settles when its base rows fold into the buffer
       // (ON MATCH ran) or when the base proved it absent
       val settled = settled0 ++
@@ -3258,22 +3183,19 @@ final class GraftSession(val spark: SparkSession,
          else scanKeys.diff(baseFoundKeys))
       // replacement rows: current values + SET columns, evaluated here
       var typeOk = true
-      def colType(name: String, v: Any): DataType =
-        idx.get(name).map(i => nodeSchema(i).dataType)
-          .orElse(bufColTypes.get(name))
-          .getOrElse(PropertyGraph.literalType(v))
-      def knownCol(k: String): Boolean = idx.contains(k) || bufColTypes.contains(k)
+      val colType = DriverEval.colType(nodeSchema, bufColTypes) _
       val replacements = (bufMatched ++ baseMatched).map { case (id, mrow) =>
         val cur = collection.mutable.LinkedHashMap.empty[String, Any]
         mrow.foreach { case (n, v) => cur(n) = v }
-        val kt = keyNames.map(kn => canon(mrow(kn)))
+        val kt = keyNames.map(kn => DriverEval.canon(mrow(kn)))
         val (_, last, _) = byKey(kt)
         m.onMatch.foreach { case (p, e) =>
-          val v = evalLocal(e, last,
-            // a schema-known column absent from this row reads null
-            k => if (cur.contains(k)) Some(cur(k))
-                 else if (knownCol(k)) Some(null) else None)
-          fits(v, colType(p.key, v)) match {
+          DriverEval.eval(e, rowLeaf(last).orElse {
+            // a column absent from this row reads null
+            case ast.Prop(`mergeVar`, k) => Some((cur.getOrElse(k, null),
+              DriverEval.known(nodeSchema, bufColTypes)(k).getOrElse(NullType)))
+            case _ => None
+          }).flatMap { case (v, _) => DriverEval.fits(v, colType(p.key, v)) } match {
             case Some(cv) => cur(p.key) = cv
             case None     => typeOk = false
           }
@@ -3281,14 +3203,14 @@ final class GraftSession(val spark: SparkSession,
         (id, cur)
       }
       val matchedKeys = bufMatchedKeys ++ baseMatched.map { case (_, mrow) =>
-        keyNames.map(kn => canon(mrow(kn))) }
+        keyNames.map(kn => DriverEval.canon(mrow(kn))) }
       val created = candProps.collect {
         case (id, k, props) if !keyColsPresent || !matchedKeys.contains(k) =>
           val cur = collection.mutable.LinkedHashMap.empty[String, Any]
           cur("id") = id
           cur("labels") = np.labels
           props.foreach { case (n, v) =>
-            fits(v, colType(n, v)) match {
+            DriverEval.fits(v, colType(n, v)) match {
               case Some(cv) => cur(n) = cv
               case None     => typeOk = false
             }
@@ -3328,26 +3250,12 @@ final class GraftSession(val spark: SparkSession,
       // they simply stay in the base untouched
       var upd = pruned.join(broadcast(batchDf), cond, "inner")
         .filter(labelCond(pruned))
-      def colExpr(e: ast.Expr): org.apache.spark.sql.Column = e match {
-        case ast.Lit(v)            => lit(norm(v))
+      val rowCols: PartialFunction[ast.Expr, org.apache.spark.sql.Column] = {
         case ast.Prop(`alias`, f)  => col(s"_bf_$f")
         case ast.Variable(`alias`) => col(s"_bf_$ELEM")
-        case ast.Prop(`mergeVar`, k) if g.nodes.columns.contains(k) => col(k)
-        case ast.Prop(`mergeVar`, _) => lit(null)
-        case ast.Arith("+", l, r) =>
-          typedPlus(upd, colExpr(l), colExpr(r), l, r)
-        case ast.Arith(op, l, r) =>
-          val (lc, rc) = (colExpr(l), colExpr(r))
-          op match {
-            case "-" => lc - rc; case "*" => lc * rc
-            case "/" => lc / rc; case "%" => lc % rc
-          }
-        case other => throw new UnsupportedOperationException(
-          s"$verb SET value supports row fields, literals, " +
-            s"arithmetic and $mergeVar's own properties, got $other")
       }
-      m.onMatch.foreach { case (p, e) =>
-        upd = upd.withColumn(p.key, colExpr(e)) // every joined row matched
+      m.onMatch.foreach { case (p, e) => // every joined row matched
+        upd = upd.withColumn(p.key, setValueColumn(upd, mergeVar, isRel = false, e, rowCols))
       }
       updRows = Some(upd.drop(schema.fieldNames.toIndexedSeq: _*))
     }
@@ -3845,77 +3753,37 @@ final class GraftSession(val spark: SparkSession,
     n
   }
 
-  /** apoc.merge.relationship fast path: MERGE one relationship of a
-    * known type between two DRIVER-KNOWN node ids, straight through
-    * the edge write buffer — two bounded pruned probes (endpoint
-    * existence, edge existence by (src, dst, type, identProps)) and a
-    * LocalRelation fold, ~3 Spark jobs instead of the MATCH…MERGE
-    * machinery's ~15 (binding cross-join + existence joins + append
-    * numbering — r14 verdict #3's last holdout). Returns false when
-    * the shape needs the general path (distributed delta, null ident
-    * values, hit rows sharing an eid, >100k buffered rows) — the caller then
-    * dispatches the ordinary statement. Semantics mirror the general
-    * path: MATCH binds or no-op (missing endpoint ⇒ no-op), merge
-    * identity is (type, src, dst, identProps), parallel edges with
-    * different ident values stay distinct, ON MATCH applies to every
-    * matched eid. Constraint-checked like any mutation. */
-  private[graft] def mergeRelByIdsBuffered(sid: Long, did: Long, relType: String,
+  /** apoc.merge.relationship between two DRIVER-KNOWN node ids: the
+    * buffered relationship upsert of `UNWIND … MATCH … MERGE`
+    * ([[mutateRelUpsertBuffered]]) as a one-row batch, both endpoints
+    * bound by id — MERGE (a)-[r:relType {identProps}]->(b) ON CREATE
+    * SET r += onCreate ON MATCH SET r += onMatch. A missing endpoint is
+    * a no-op (MATCH semantics). Constraint-checked like any mutation.
+    * Returns false when that path declines (a distributed edge delta,
+    * a null or non-scalar value, a value that does not fit its column,
+    * hit rows sharing an eid); the caller then dispatches the ordinary
+    * statement. */
+  private[graft] def mergeRelByIds(sid: Long, did: Long, relType: String,
       identProps: Map[String, Any], onCreate: Map[String, Any],
       onMatch: Map[String, Any]): Boolean = {
-    import org.apache.spark.sql.functions.{col, lit}
     val db = statementTarget
     db.requireStarted()
-    val g = db.graph
     if (!DeltaSide.Edges.bufferable(db)) return false
-    val ident = identProps.view.mapValues(norm).toMap
-    if (ident.valuesIterator.contains(null)) return false // {k: null} needs MERGE's refusal
-    var handled = true
+    val ends = Seq("a", "b").map(v => ast.NodePat(Some(v), Nil, Map.empty))
+    def items(props: Map[String, Any]) =
+      props.toSeq.map { case (k, v) => (ast.Prop("r", k), ast.Lit(v)) }
+    val rel = ast.RelPat(Some("r"), Seq(relType),
+      identProps.map { case (k, v) => k -> ast.Lit(v) }, dir = 1, varLength = None)
+    val merge = ast.Merge(ast.PathPat(ends.head, Seq(rel -> ends(1))),
+      items(onCreate), items(onMatch))
+    var handled = false
     withConstraintCheck(db, statementDatabase) {
-      // endpoint existence (MATCH semantics: either missing ⇒ no-op)
-      val nodeHits = g.nodes.filter(col("id").isin(Seq(sid, did).distinct: _*))
-        .select(col("id")).collect().map(_.getLong(0)).toSet
-      if (nodeHits.contains(sid) && nodeHits.contains(did)) {
-        // edge existence scoped exactly like existingEither: type AND
-        // the literal ident props (null-safe equality; a missing
-        // column matches nothing)
-        var probe = g.edges.filter(col("src") === lit(sid) && col("dst") === lit(did) &&
-          col("relType") === lit(relType))
-        ident.toSeq.sortBy(_._1).foreach { case (k, v) =>
-          probe = if (g.edges.columns.contains(k)) probe.filter(col(k) <=> lit(v))
-            else probe.filter(lit(false))
-        }
-        val hitRows = probe.collect()
-        // exact parallel rows of an eid-less setGraph frame share their
-        // derived eid: one eid-keyed replacement row would stand in for
-        // all of them, so the general path serves that shape
-        if (hitRows.map(r => r.getLong(r.fieldIndex("eid"))).distinct.length < hitRows.length)
-          handled = false
-        else if (hitRows.isEmpty || onMatch.nonEmpty) {
-          val schema = g.edges.schema
-          val om = onMatch.view.mapValues(norm).toMap
-          val rows =
-            if (hitRows.isEmpty) {
-              // miss: one created edge, ON CREATE applied
-              val eid = db.allocateRel(1L)
-              Seq(eid -> (Map[String, Any]("src" -> sid, "dst" -> did,
-                "relType" -> relType, "eid" -> eid) ++ ident ++ onCreate.view.mapValues(norm)))
-            } else hitRows.toSeq.map { r =>
-              // hits: ON MATCH applies to EVERY matched eid (parallel
-              // edges sharing the ident values), full replacement rows
-              r.getLong(r.fieldIndex("eid")) -> (r.getValuesMap[Any](schema.fieldNames) ++ om)
-            }
-          // null values stay out of the row (and of the schema); a
-          // matched row's own columns keep their base types
-          commitBuffered(db, DeltaSide.Edges, Seq("src" -> LongType, "dst" -> LongType,
-              "relType" -> StringType, "eid" -> LongType),
-            rows.map { case (k, m) => k -> m.filter(_._2 != null) },
-            (n, v) => if (hitRows.isEmpty || om.contains(n)) PropertyGraph.literalType(v)
-              else schema(n).dataType)()
-          db.pendingMutations += 1
-        }
-      }
-      unit()
+      val out = mutateRelUpsertBuffered(db, Seq(()), ends, Seq("a", "b"),
+        Seq(("a", "id", _ => sid), ("b", "id", _ => did)), merge)
+      handled = out.isDefined
+      out.getOrElse(unit())
     }
+    if (handled) db.pendingMutations += 1
     handled
   }
 
@@ -4083,12 +3951,20 @@ final class GraftSession(val spark: SparkSession,
     * to the pre-existing edges of hit bindings only, composing across
     * hops when two hops touch the same edge row.
     *
-    * Returns None when an eligibility detail only visible here fails
-    * (undirected/multi-type hop, row-field or null rel props, non-driver-
-    * evaluable SET, ambiguous endpoint keys, non-canonical key types,
-    * value/type mismatch, base hit rows sharing an eid) — the caller
-    * then runs the distributed path. Pure until the final state
-    * assignment: a None bail leaves nothing half-committed. */
+    * Returns None when an eligibility detail only visible here fails —
+    * the caller then runs the distributed path:
+    *  - an undirected or multi-type hop, or a self-pair binding;
+    *  - a relationship pattern prop from a row field, null or not a
+    *    scalar;
+    *  - a SET item on anything but a merged relationship variable;
+    *  - a SET value [[DriverEval]] declines, or whose type does not fit
+    *    the column;
+    *  - an ambiguous endpoint key, a key column type the driver cannot
+    *    canonicalize, or more than 100k collected rows;
+    *  - base hit rows sharing an eid.
+    * Pure until the final state assignment: a None bail leaves nothing
+    * half-committed, not even an allocated eid. Nothing binding is a
+    * no-op (MATCH drops every row). */
   private def mutateRelUpsertBuffered(db: GraphDatabase, elems: Seq[Any],
       nodePats: Seq[ast.NodePat], vars: Seq[String],
       keyCols: Seq[(String, String, Any => Any)], m: ast.Merge): Option[DataFrame] = {
@@ -4116,9 +3992,11 @@ final class GraftSession(val spark: SparkSession,
             case ast.VarRefValue(_) | ast.PropRefValue(_, _) |
                  ast.SubscriptRefValue(_, _, _) => return None
             case v =>
-              val nv = norm(v)
-              if (nv == null) return None
-              (k, nv)
+              val nv = DriverEval.canon(norm(v))
+              DriverEval.typeOf(nv) match {
+                case Some(LongType | DoubleType | StringType | BooleanType) => (k, nv)
+                case _ => return None
+              }
           }
         }
         Hop(s, d, rel.types.head, rel.variable.getOrElse(s"_anon$i"), props)
@@ -4132,32 +4010,20 @@ final class GraftSession(val spark: SparkSession,
         s"$k=${v.getClass.getSimpleName}:$v" }.mkString(",")
     val relVarHop: Map[String, Int] = m.pattern.hops.zipWithIndex
       .flatMap { case ((rel, _), i) => rel.variable.map(_ -> i) }.toMap
-    // SET items must target a merged rel var; values driver-evaluable
-    // (literals, that rel's own properties, arithmetic thereof)
-    def evaluable(rv: String)(e: ast.Expr): Boolean = e match {
-      case ast.Lit(_)          => true
-      case ast.Prop(`rv`, _)   => true
-      case ast.Arith(_, l, r)  => evaluable(rv)(l) && evaluable(rv)(r)
-      case _                   => false
-    }
+    // SET items must target a merged rel var, with values the driver
+    // evaluator takes over that rel's own properties
     def itemsOf(items: Seq[(ast.Prop, ast.Expr)]): Option[Seq[(Int, String, ast.Expr)]] = {
       val mapped = items.map {
-        case (ast.Prop(v, k), e) if relVarHop.contains(v) && evaluable(v)(e) =>
-          (relVarHop(v), k, e)
+        case (ast.Prop(v, k), e) if relVarHop.contains(v) && DriverEval.covers(e, {
+            case ast.Prop(`v`, _) => true
+            case _ => false
+          }) => (relVarHop(v), k, e)
         case _ => return None
       }
       Some(mapped)
     }
     val onCreate = itemsOf(m.onCreate).getOrElse(return None)
     val onMatch = itemsOf(m.onMatch).getOrElse(return None)
-
-    def canon(v: Any): Any = v match {
-      case i: java.lang.Integer => i.longValue
-      case s: java.lang.Short   => s.longValue
-      case b: java.lang.Byte    => b.longValue
-      case f: java.lang.Float   => f.doubleValue
-      case other                => other
-    }
     val nodeIdx = g.nodes.schema.fieldNames.zipWithIndex.toMap
     val perVar: Map[String, (Seq[String], Seq[(String, Any => Any)])] =
       nodePats.zip(vars).map { case (np, v) =>
@@ -4185,12 +4051,13 @@ final class GraftSession(val spark: SparkSession,
     // ---- 1. bind endpoints (cached while the node frame is stable) --
     var bindCache: Map[(Seq[String], Seq[String], Seq[Any]), Option[Long]] =
       if (buf0.nodeBindRef.exists(_ eq g.nodes)) buf0.nodeBind else Map.empty
-    def tupleOf(v: String, e: Any): Seq[Any] = perVar(v)._2.map { case (_, get) => canon(get(e)) }
-    for (v <- bindVars) {
-      val (labels, keys) = perVar(v)
-      val keyNames = keys.map(_._1)
+    def tupleOf(v: String, e: Any): Seq[Any] = perVar(v)._2.map { case (_, get) => DriverEval.canon(get(e)) }
+    // one lookup per endpoint shape: variables with the same labels and
+    // key names (apoc.merge.relationship's two ids) bind together
+    def shapeOf(v: String): (Seq[String], Seq[String]) = (perVar(v)._1, perVar(v)._2.map(_._1))
+    for (((labels, keyNames), vs) <- bindVars.groupBy(shapeOf)) {
       val cacheKey = (t: Seq[Any]) => (labels, keyNames, t)
-      val need = elems.map(e => tupleOf(v, e)).distinct
+      val need = vs.flatMap(v => elems.map(e => tupleOf(v, e))).distinct
         .filterNot(t => bindCache.contains(cacheKey(t)))
       if (need.nonEmpty) {
         val labeled = labels.foldLeft(g.nodes)((d, l) =>
@@ -4202,7 +4069,7 @@ final class GraftSession(val spark: SparkSession,
         val found = pruned.select((keyNames.map(col) :+ col("id")): _*).collect()
         if (found.length > 100000) return None
         val byTuple = found.groupBy(r =>
-          keyNames.indices.map(i => canon(r.get(i))): Seq[Any])
+          keyNames.indices.map(i => DriverEval.canon(r.get(i))): Seq[Any])
         if (byTuple.valuesIterator.exists(_.length > 1)) return None // ambiguous key
         need.foreach { t =>
           bindCache += (cacheKey(t) ->
@@ -4210,8 +4077,10 @@ final class GraftSession(val spark: SparkSession,
         }
       }
     }
-    def bindOf(v: String, e: Any): Option[Long] =
-      bindCache((perVar(v)._1, perVar(v)._2.map(_._1), tupleOf(v, e)))
+    def bindOf(v: String, e: Any): Option[Long] = {
+      val (labels, keyNames) = shapeOf(v)
+      bindCache((labels, keyNames, tupleOf(v, e)))
+    }
 
     // ---- 2. candidate bindings, batch order, deduped ----------------
     // (one candidate = the tuple of endpoint ids; per-hop pairs derive
@@ -4221,6 +4090,7 @@ final class GraftSession(val spark: SparkSession,
       val bound = bindVars.map(v => bindOf(v, e))
       if (bound.forall(_.isDefined)) candidates += bound.map(_.get)
     }
+    if (candidates.isEmpty) return Some(unit())
     val varPos = bindVars.zipWithIndex.toMap
     def pairOf(c: Seq[Long], h: Hop): (Long, Long) =
       (c(varPos(h.srcVar)), c(varPos(h.dstVar)))
@@ -4234,7 +4104,7 @@ final class GraftSession(val spark: SparkSession,
     val baseIdx = baseSchema.fieldNames.zipWithIndex.toMap
     // canonical scalar compare for prop-identity matching (the driver
     // form of the distributed path's `col(k) <=> lit(v)`)
-    def propMatches(value: Any, want: Any): Boolean = canon(value) == canon(want)
+    def propMatches(value: Any, want: Any): Boolean = DriverEval.canon(value) == DriverEval.canon(want)
     val pairRows: Seq[Map[(Long, Long), Seq[(Long, Map[String, Any])]]] =
       hops.zipWithIndex.map { case (h, i) =>
         val pairs = hopPairs(i)
@@ -4297,47 +4167,20 @@ final class GraftSession(val spark: SparkSession,
     }
 
     // ---- 4. evaluate SET driver-side (exact node-path discipline) ---
-    def colType(name: String, v: Any): DataType =
-      baseIdx.get(name).map(i => baseSchema(i).dataType)
-        .orElse(buf0.colTypes.get(name))
-        .getOrElse(PropertyGraph.literalType(v))
-    def fits(v: Any, t: DataType): Option[Any] = (v, t) match {
-      case (null, _)                 => Some(null)
-      case (x: Long, LongType)       => Some(x)
-      case (x: Long, DoubleType)     => Some(x.toDouble)
-      case (x: Double, DoubleType)   => Some(x)
-      case (x: String, StringType)   => Some(x)
-      case (x: Boolean, BooleanType) => Some(x)
-      case _                         => None
-    }
-    def evalRel(e: ast.Expr, rv: String, cur: collection.Map[String, Any]): Any = e match {
-      case ast.Lit(v) => norm(v)
-      case ast.Prop(`rv`, k) =>
-        if (cur.contains(k)) cur(k) else null // absent property reads null
-      case ast.Arith(op, l, r) =>
-        (evalRel(l, rv, cur), evalRel(r, rv, cur)) match {
-          case (null, _) | (_, null) => null
-          case (x: Long, y: Long) => op match {
-            case "+" => x + y; case "-" => x - y; case "*" => x * y
-            case "/" => x / y; case "%" => x % y
-          }
-          case (x: String, y: String) if op == "+" => x + y
-          case (a, b) =>
-            def toD(v: Any): Option[Double] = v match {
-              case l0: Long => Some(l0.toDouble); case d0: Double => Some(d0)
-              case _        => None
-            }
-            (toD(a), toD(b)) match {
-              case (Some(x), Some(y)) => op match {
-                case "+" => x + y; case "-" => x - y; case "*" => x * y
-                case "/" => x / y; case "%" => x % y
-              }
-              case _ => null
-            }
-        }
-      case _ => null // unreachable: evaluable() pre-checked
-    }
+    val colType = DriverEval.colType(baseSchema, buf0.colTypes) _
     var typeOk = true
+    // a SET item's value over the row `cur` of relationship `rv`; an
+    // absent property reads null
+    def setItem(cur: collection.mutable.Map[String, Any], rv: String, k: String,
+        e: ast.Expr): Unit =
+      DriverEval.eval(e, {
+        case ast.Prop(`rv`, p) => Some((cur.getOrElse(p, null),
+          DriverEval.known(baseSchema, buf0.colTypes)(p).getOrElse(NullType)))
+        case _ => None
+      }).flatMap { case (v, _) => DriverEval.fits(v, colType(k, v)) } match {
+        case Some(cv) => cur(k) = cv
+        case None     => typeOk = false
+      }
     // ON MATCH per hop, applied to the pre-existing edges of HIT
     // bindings; `updatedAcc` threads earlier hops' updates into later
     // hops touching the same edge row (the distributed path's
@@ -4351,13 +4194,7 @@ final class GraftSession(val spark: SparkSession,
           pairRows(i).getOrElse(p, Nil).foreach { case (eid, row0) =>
             val cur = collection.mutable.LinkedHashMap.empty[String, Any]
             updatedAcc.getOrElse(eid, row0).foreach { case (n, v) => cur(n) = v }
-            items.foreach { case (k, e) =>
-              val v = evalRel(e, h.relVar, cur)
-              fits(v, colType(k, v)) match {
-                case Some(cv) => cur(k) = cv
-                case None     => typeOk = false
-              }
-            }
+            items.foreach { case (k, e) => setItem(cur, h.relVar, k, e) }
             updatedAcc(eid) = cur.toMap
           }
           settled += ((idSig(h), p._1, p._2))
@@ -4366,37 +4203,33 @@ final class GraftSession(val spark: SparkSession,
     }
     val replacements = updatedAcc.toSeq
     // misses create EVERY hop (whole-pattern create), per-hop pairs
-    // deduped in batch order; eids mint contiguously per hop
+    // deduped in batch order; eids mint contiguously in hop order from
+    // the allocator's next value, allocated once nothing can decline
+    // (statements serialize, so nothing allocates meanwhile)
+    val eidBase = db.nextRelId.get()
     val created = collection.mutable.ArrayBuffer.empty[(Long, Map[String, Any])]
     hops.zipWithIndex.foreach { case (h, i) =>
       val createPairs = collection.mutable.LinkedHashSet.empty[(Long, Long)]
       missCands.foreach(c => createPairs += pairOf(c, h))
-      if (createPairs.nonEmpty) {
-        val eidBase = db.allocateRel(createPairs.size.toLong)
-        createPairs.toSeq.zipWithIndex.foreach { case ((s, d), j) =>
-          val cur = collection.mutable.LinkedHashMap.empty[String, Any]
-          cur("src") = s; cur("dst") = d; cur("relType") = h.relType
-          cur("eid") = eidBase + j
-          // pattern props land first; ON CREATE may overwrite them
-          // (the distributed createCols fold order)
-          h.props.foreach { case (k, v) =>
-            fits(v, colType(k, v)) match {
-              case Some(cv) => cur(k) = cv
-              case None     => typeOk = false
-            }
+      createPairs.foreach { case (s, d) =>
+        val eid = eidBase + created.size
+        val cur = collection.mutable.LinkedHashMap[String, Any](
+          "src" -> s, "dst" -> d, "relType" -> h.relType, "eid" -> eid)
+        // pattern props land first; ON CREATE may overwrite them
+        // (the distributed createCols fold order)
+        h.props.foreach { case (k, v) =>
+          DriverEval.fits(v, colType(k, v)) match {
+            case Some(cv) => cur(k) = cv
+            case None     => typeOk = false
           }
-          onCreate.collect { case (`i`, k, e) => (k, e) }.foreach { case (k, e) =>
-            val v = evalRel(e, h.relVar, cur)
-            fits(v, colType(k, v)) match {
-              case Some(cv) => cur(k) = cv
-              case None     => typeOk = false
-            }
-          }
-          created += ((eidBase + j, cur.toMap))
         }
+        onCreate.collect { case (`i`, k, e) => (k, e) }.foreach { case (k, e) =>
+          setItem(cur, h.relVar, k, e) }
+        created += ((eid, cur.toMap))
       }
     }
     if (!typeOk) return None
+    db.allocateRel(created.size.toLong)
 
     // ---- 5. commit: copy-on-write buffer → LocalRelation delta ------
     commitBuffered(db, DeltaSide.Edges, Seq("src" -> LongType, "dst" -> LongType,
@@ -4451,15 +4284,11 @@ final class GraftSession(val spark: SparkSession,
     }
     merges.foreach { m =>
       (m.onCreate ++ m.onMatch).foreach { case (_, e) =>
-        def refsRow(e0: ast.Expr): Boolean = e0 match {
+        val refsRow = ast.reads(e).exists {
           case ast.Prop(`alias`, _) | ast.Variable(`alias`) => true
-          case ast.Arith(_, l, r) => refsRow(l) || refsRow(r)
-          case ast.Cmp(_, l, r)   => refsRow(l) || refsRow(r)
-          case ast.CaseExpr(ws, o) =>
-            ws.exists { case (c, v) => refsRow(c) || refsRow(v) } || o.exists(refsRow)
           case _ => false
         }
-        if (refsRow(e)) throw new UnsupportedOperationException(
+        if (refsRow) throw new UnsupportedOperationException(
           "SET values on UNWIND … MATCH … MERGE support literals and the merged " +
             "relationship's own properties only (no batch-row fields)")
       }
@@ -4491,8 +4320,8 @@ final class GraftSession(val spark: SparkSession,
     }
     // ---- driver-buffered edge delta (fast path) ----------------------
     // The relationship mirror of mutateUnwindMerge's write buffer: a
-    // bounded literal batch upserting ONE directed typed hop, with
-    // driver-evaluable SET values, commits via a LocalRelation edge
+    // bounded literal batch upserting directed typed hops, with SET
+    // values the driver evaluator takes, commits via a LocalRelation edge
     // delta — endpoint binding, existence and SET all resolve on the
     // driver against the buffer + settled-pair cache, so a burst costs
     // at most a couple of isin-pruned lookups per call and a rerun

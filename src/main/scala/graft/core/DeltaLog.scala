@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** Driver-local write buffer of one delta-log side: present when the
   * delta lives as a LocalRelation over `rows` (bounded batches whose
-  * SET values are driver-evaluable), so a commit runs ZERO distributed
+  * SET values the driver evaluates), so a commit runs ZERO distributed
   * jobs beyond its bounded lookups. Immutable, insertion-ordered and
   * keyed by the side's key (node id / relationship eid): transaction
   * shadows share it by reference and extend it copy-on-write.

@@ -240,6 +240,29 @@ object ast {
     * by column name; plain UNION dedups (openCypher set semantics). */
   final case class Query(clauses: Seq[Clause], unions: Seq[(Boolean, Query)] = Nil)
 
+  /** Whether a clause writes: a statement holding one runs through the
+    * mutation engine, and read-only surfaces refuse it. */
+  def mutates(c: Clause): Boolean = c match {
+    case _: Create | _: SetProps | _: SetPropsReplace | _: SetPropsParam | _: RemoveProps |
+         _: SetLabels | _: Delete | _: Merge | _: Foreach => true
+    case _ => false
+  }
+
+  /** The property and variable leaves an expression reads, through the
+    * operators, CASE, lists, subscripts, maps and function arguments
+    * (the SET-value shapes); other forms read nothing here. */
+  def reads(e: Expr): Seq[Expr] = e match {
+    case _: Prop | _: Variable => Seq(e)
+    case Arith(_, l, r)        => reads(l) ++ reads(r)
+    case Cmp(_, l, r)          => reads(l) ++ reads(r)
+    case CaseExpr(ws, o)       => ws.flatMap { case (c, v) => reads(c) ++ reads(v) } ++ o.toSeq.flatMap(reads)
+    case Subscript(b, i)       => reads(b) ++ reads(i)
+    case ListLit(items)        => items.flatMap(reads)
+    case MapLit(items)         => items.flatMap { case (_, v) => reads(v) }
+    case FnCall(_, args, _)    => args.flatMap(reads)
+    case _                     => Nil
+  }
+
   def defaultName(e: Expr): String = e match {
     case Prop(v, k)        => s"$v.$k"
     case Variable(n)       => n

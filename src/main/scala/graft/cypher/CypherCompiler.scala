@@ -2094,10 +2094,11 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
   // ------------------------------------------------------------------
 
   /** Driver-side constant evaluation for procedure arguments:
-    * literals, literal lists, and arithmetic over them (so
-    * `CALL gds.pageRank($iters + 1)` composes with parameters, which
-    * substitute to literals pre-compile). Non-constant expressions
-    * return None and are refused by the caller. */
+    * literals, literal lists and maps, and arithmetic over literals
+    * through the SET-value evaluator (so `CALL gds.pageRank($iters +
+    * 1)` composes with parameters, which substitute to literals
+    * pre-compile, and `5 / 2` reads 2.5 as in RETURN). Non-constant
+    * expressions return None and are refused by the caller. */
   private def constEval(e: Expr): Option[Any] = e match {
     case Lit(v) => Some(v)
     case ListLit(items) =>
@@ -2106,23 +2107,7 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
     case MapLit(items) =>
       val vs = items.map { case (k, v) => constEval(v).map(k -> _) }
       if (vs.forall(_.isDefined)) Some(vs.flatten.toMap) else None
-    case Arith(op, l, r) =>
-      (constEval(l), constEval(r)) match {
-        case (Some(a: Long), Some(b: Long)) => op match {
-          case "+" => Some(a + b); case "-" => Some(a - b); case "*" => Some(a * b)
-          case "/" => if (b == 0) None else Some(a / b)
-          case "%" => if (b == 0) None else Some(a % b)
-          case _   => None
-        }
-        case (Some(a: String), Some(b: String)) if op == "+" => Some(a + b)
-        case (Some(a: Number), Some(b: Number)) =>
-          val (x, y) = (a.doubleValue(), b.doubleValue())
-          op match {
-            case "+" => Some(x + y); case "-" => Some(x - y); case "*" => Some(x * y)
-            case "/" => Some(x / y); case "%" => Some(x % y); case _ => None
-          }
-        case _ => None
-      }
+    case a: Arith => DriverEval.eval(a, _ => None).map(_._1)
     case _ => None
   }
 

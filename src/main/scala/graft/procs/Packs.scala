@@ -442,24 +442,14 @@ object Packs {
       val omTxt =
         if (onMatch.isEmpty) ""
         else " ON MATCH SET " + onMatch.keys.map(k => s"r.$k = $$_om_$k").mkString(", ")
-      // driver fast path first: both endpoints are KNOWN ids and all
-      // values are scalars, so the merge folds straight through the
-      // edge write buffer (~3 bounded jobs instead of the MATCH…MERGE
-      // machinery's ~15 — r14 verdict #3); shapes it can't serve
-      // (distributed delta, null ident values) fall back to the
-      // ordinary synthesized statement. Non-scalar
-      // property VALUES (list/map params) must dispatch the fallback
-      // too — they'd throw inside the buffered literal folds, and the
-      // fast path's contract is return-false-and-fall-back, not crash
-      // (ADVICE r15).
-      def scalar(v: Any): Boolean = v match {
-        case null | _: String | _: java.lang.Boolean | _: Number => true
-        case _ => false
-      }
-      val fastShaped =
-        (identProps.values ++ onCreate.values ++ onMatch.values).forall(scalar)
-      val handled = fastShaped && session.mergeRelByIdsBuffered(
-        sid, did, relType, identProps, onCreate, onMatch)
+      // driver fast path first: both endpoints are KNOWN ids, so the
+      // merge folds straight through the edge write buffer (the
+      // buffered upsert of UNWIND … MATCH … MERGE, ~3 bounded jobs
+      // instead of the MATCH…MERGE machinery's ~15 — r14 verdict #3).
+      // Shapes it declines (distributed delta, null ident values,
+      // non-scalar property values, a value that does not fit its
+      // column) fall back to the ordinary synthesized statement.
+      val handled = session.mergeRelByIds(sid, did, relType, identProps, onCreate, onMatch)
       if (!handled) {
         val stmt = s"MATCH (a), (b) WHERE id(a) = $$_sid AND id(b) = $$_did " +
           s"MERGE (a)-[r:$relType$pat]->(b)$ocTxt$omTxt"
@@ -490,14 +480,7 @@ object Packs {
         case _ => Map.empty[String, Any]
       }
       val parsed = graft.cypher.CypherParser.parse(stmt)
-      val mutates = parsed.clauses.exists {
-        case _: graft.cypher.ast.Create | _: graft.cypher.ast.SetProps | _: graft.cypher.ast.SetPropsReplace | _: graft.cypher.ast.SetPropsParam |
-             _: graft.cypher.ast.RemoveProps | _: graft.cypher.ast.SetLabels |
-             _: graft.cypher.ast.Delete | _: graft.cypher.ast.Merge |
-             _: graft.cypher.ast.Foreach => true
-        case _ => false
-      }
-      if (mutates) throw new UnsupportedOperationException(
+      if (parsed.clauses.exists(graft.cypher.ast.mutates)) throw new UnsupportedOperationException(
         "apoc.cypher.run is read-only — drive writes through " +
           "apoc.periodic.iterate / apoc.periodic.commit")
       val df = session.cypher(stmt, params)
@@ -560,14 +543,7 @@ object Packs {
       if (stmt.trim.isEmpty)
         return session.spark.range(0).select(lit("").as("value"))
       val parsed = graft.cypher.CypherParser.parse(stmt)
-      val mutates = parsed.clauses.exists {
-        case _: graft.cypher.ast.Create | _: graft.cypher.ast.SetProps | _: graft.cypher.ast.SetPropsReplace | _: graft.cypher.ast.SetPropsParam |
-             _: graft.cypher.ast.RemoveProps | _: graft.cypher.ast.SetLabels |
-             _: graft.cypher.ast.Delete | _: graft.cypher.ast.Merge |
-             _: graft.cypher.ast.Foreach => true
-        case _ => false
-      }
-      if (mutates) throw new UnsupportedOperationException(
+      if (parsed.clauses.exists(graft.cypher.ast.mutates)) throw new UnsupportedOperationException(
         s"$what is read-only — use the apoc.do.* write twins")
       val df = session.cypher(stmt, params)
       df.select(to_json(struct(df.columns.map(col).toIndexedSeq: _*)).as("value"))

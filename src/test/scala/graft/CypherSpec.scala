@@ -3688,6 +3688,159 @@ class CypherSpec extends AnyFunSuite {
     graft.core.SnapshotStore.deleteDir(dir)
   }
 
+  test("SET-value path agreement: a buffered write and the general path read the same value") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.util.Try
+    // no delta, so the buffered paths run: (:pa {k: 1, c: 5}),
+    // (:pa {k: 2, c: 6}) and one R edge 1→2 with c = 7
+    def fresh(): GraftSession = {
+      val s = new GraftSession(spark)
+      graft.procs.Packs.install(s, Seq("apoc"))
+      val nodes = spark.createDataFrame(java.util.Arrays.asList(
+        Row(1L, Seq("pa"), 1L, 5L), Row(2L, Seq("pa"), 2L, 6L)), StructType(Seq(
+          StructField("id", LongType, nullable = false),
+          StructField("labels", ArrayType(StringType), nullable = false),
+          StructField("k", LongType), StructField("c", LongType))))
+      val edges = spark.createDataFrame(java.util.Arrays.asList(Row(1L, 2L, "R", 100L, 7L)),
+        StructType(graft.core.PropertyGraph.edgeBaseSchema.fields :+ StructField("c", LongType)))
+      s.setGraph(graft.core.PropertyGraph(nodes, edges))
+      s
+    }
+    // (name, node side?, buffered statements, general-path statements,
+    // the read, the value it must give, whether the buffered run keeps
+    // a write buffer)
+    def node(value: String) = (true,
+      Seq(s"UNWIND [1] AS x MERGE (n:pa {k: x}) ON MATCH SET n.v = $value"),
+      Seq(s"MATCH (n:pa {k: 1}) SET n.v = $value"),
+      "MATCH (n:pa {k: 1}) RETURN n.v AS v")
+    def rel(value: String) = (false,
+      Seq("UNWIND $rows AS row MATCH (a:pa {k: row.s}), (b:pa {k: row.d}) " +
+        s"MERGE (a)-[r:R]->(b) ON MATCH SET r.v = $value"),
+      Seq(s"MATCH (a:pa {k: 1}), (b:pa {k: 2}) MERGE (a)-[r:R]->(b) ON MATCH SET r.v = $value"),
+      "MATCH (:pa {k: 1})-[r:R]->(:pa {k: 2}) RETURN r.v AS v")
+    val apoc = (false,
+      Seq("CALL apoc.merge.relationship(1, 'Q', {}, {v: 1}, 2, {}) YIELD src RETURN src",
+        "CALL apoc.merge.relationship(1, 'Q', {}, {}, 2, {v: 2.5}) YIELD src RETURN src"),
+      Seq("MATCH (a), (b) WHERE id(a) = 1 AND id(b) = 2 MERGE (a)-[r:Q]->(b) ON CREATE SET r.v = 1",
+        "MATCH (a), (b) WHERE id(a) = 1 AND id(b) = 2 MERGE (a)-[r:Q]->(b) ON MATCH SET r.v = 2.5"),
+      "MATCH (:pa {k: 1})-[r:Q]->(:pa {k: 2}) RETURN r.v AS v")
+    val rows: Seq[(String, (Boolean, Seq[String], Seq[String], String), Any, Boolean)] = Seq(
+      ("node string +", node("n.c + '-x'"), "5-x", true),
+      ("rel string +", rel("r.c + '-x'"), "7-x", true),
+      ("node integer /", node("n.c / 2"), 2.5, true),
+      ("rel integer /", rel("r.c / 2"), 3.5, true),
+      ("node ||", node("n.c || 'y'"), "5y", true),
+      ("rel ||", rel("r.c || 'y'"), "7y", true),
+      ("node null +", node("n.missing + 1"), null, true),
+      ("rel list +", rel("[r.c] + [1]"), Seq(7L, 1L), false),
+      // the evaluator declines; both paths raise Spark's ANSI error
+      ("node overflow", node("n.c + 9223372036854775807"), null, false),
+      ("rel zero divisor", rel("r.c % 0"), null, false),
+      // the second write no longer fits the buffered LONG column
+      ("apoc.merge.relationship retype", apoc, 2.5, false))
+    rows.foreach { case (name, (nodeSide, buffered, general, read), want, keepsBuffer) =>
+      def run(stmts: Seq[String]): (Boolean, Any, GraftSession) = {
+        val s = fresh()
+        val ok = Try(stmts.foreach(s.cypher(_, Map("rows" -> Seq(Map("s" -> 1L, "d" -> 2L))))
+          .collect())).isSuccess
+        val rs = s.cypher(read).collect()
+        assert(rs.length == 1, s"$name: $read read ${rs.length} rows")
+        (ok, rs.head.get(0) match {
+          case xs: scala.collection.Seq[_] => xs.toSeq
+          case v => v
+        }, s)
+      }
+      val (bOk, bv, b) = run(buffered)
+      val (gOk, gv, _) = run(general)
+      assert(bOk == gOk, s"$name: the buffered path ${if (bOk) "wrote" else "raised"}, " +
+        s"the general path ${if (gOk) "wrote" else "raised"}")
+      assert(bv == gv, s"$name: buffered read $bv, general read $gv")
+      assert(bv == want, s"$name: read $bv, want $want")
+      val db = b.catalog.database("neo4j")
+      val buf = if (nodeSide) db.validNodeDelta.flatMap(_.buf) else db.validEdgeDelta.flatMap(_.buf)
+      assert(buf.isDefined == keepsBuffer,
+        s"$name: the buffered run ${if (keepsBuffer) "left no" else "left a"} write buffer")
+    }
+  }
+
+  test("UNWIND … MERGE ON CREATE reads a batch row's list elements by their own types") {
+    // a parameter row may mix element types; the create branch has no
+    // distributed twin, so the driver evaluator must take it
+    val s = new GraftSession(spark)
+    s.cypher("UNWIND $rows AS row MERGE (n:mixrow {k: row[0]}) " +
+      "ON CREATE SET n.name = row[1], n.next = row[0] + 1",
+      Map("rows" -> Seq(Seq(1L, "a"), Seq(2L, "b"))))
+    assert(s.cypher("MATCH (n:mixrow) RETURN n.k AS k, n.name AS name, n.next AS next ORDER BY k")
+      .collect().map(_.toString).toSeq == Seq("[1,a,2]", "[2,b,3]"))
+  }
+
+  test("driver SET-value evaluator agrees with setValueColumn on generated values and operators") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import org.scalacheck.{Gen, rng}
+    import graft.cypher.{DriverEval, ast}
+    // one row whose columns hold the operands: `n.<col>` reads them
+    // with their column type, literals inline the same values
+    val cols: Seq[(String, DataType, Any)] = Seq(
+      ("z", LongType, 0L), ("seven", LongType, 7L), ("neg", LongType, -3L),
+      ("big", LongType, Long.MaxValue - 2), ("small", LongType, Long.MinValue + 2),
+      ("half", DoubleType, 2.5), ("dz", DoubleType, 0.0), ("str", StringType, "ab"),
+      ("flag", BooleanType, true), ("ln", LongType, null), ("sn", StringType, null),
+      ("dn", DoubleType, null), ("xs", ArrayType(LongType), Seq(1L, 2L)),
+      ("ss", ArrayType(StringType), Seq("p", null)), ("xn", ArrayType(LongType), null))
+    val typeOf = cols.map(c => c._1 -> c._2).toMap
+    val valueOf = cols.map(c => c._1 -> c._3).toMap
+    val schema = StructType(StructField("id", LongType) +: cols.map(c => StructField(c._1, c._2)))
+    val row = spark.createDataFrame(java.util.Arrays.asList(Row.fromSeq(0L +: cols.map(_._3))), schema)
+    val s = new GraftSession(spark)
+    def literal(v: Any): ast.Expr = v match {
+      case xs: Seq[_] => ast.ListLit(xs.map(ast.Lit(_)))
+      case x          => ast.Lit(x)
+    }
+    val leaf: Gen[ast.Expr] = Gen.oneOf(
+      Gen.oneOf(cols).map(c => ast.Prop("n", c._1)),
+      Gen.oneOf(cols).map(c => literal(c._3)),
+      Gen.const(ast.Lit(null)),
+      Gen.const(ast.ListLit(Seq(ast.Lit(1L), ast.Lit(2.5)))))
+    def expr(depth: Int): Gen[ast.Expr] =
+      if (depth == 0) leaf
+      else Gen.frequency(1 -> leaf, 4 -> (for {
+        op <- Gen.oneOf("+", "-", "*", "/", "%", "||")
+        l  <- expr(depth - 1)
+        r  <- expr(depth - 1)
+      } yield ast.Arith(op, l, r)))
+    def same(a: Any, b: Any): Boolean = (a, b) match {
+      case (x: Double, y: Double)                       => java.lang.Double.compare(x, y) == 0
+      case (x: scala.collection.Seq[_], y: scala.collection.Seq[_]) =>
+        x.size == y.size && x.zip(y).forall { case (p, q) => same(p, q) }
+      case _                                            => a == b
+    }
+    val exprs = Gen.listOfN(800, expr(2)).apply(Gen.Parameters.default, rng.Seed(10L)).get
+    var accepted = 0
+    exprs.foreach { e =>
+      DriverEval.eval(e, {
+        case ast.Prop("n", k) => Some((valueOf(k), typeOf(k)))
+        case _                => None
+      }).foreach { case (v, t) =>
+        accepted += 1
+        val out = scala.util.Try(row.select(s.setValueColumn(row, "n", isRel = false, e).as("v")))
+          .flatMap(df => scala.util.Try((df.collect().head.get(0), df.schema.head.dataType)))
+        out match {
+          case scala.util.Failure(err) =>
+            fail(s"$e: the evaluator gave $v but the distributed path raised $err")
+          case scala.util.Success((sv, st)) =>
+            assert(same(v, sv), s"$e: evaluator $v, distributed $sv")
+            if (v != null) assert(t.catalogString == st.catalogString,
+              s"$e: evaluator type $t, distributed type $st")
+        }
+      }
+    }
+    // the check is not vacuous: a good share of the generated values is
+    // evaluated, and some are declined
+    assert(accepted > 150 && accepted < exprs.size, s"$accepted of ${exprs.size} evaluated")
+  }
+
   test("edge buffer under transactions: ROLLBACK discards buffered merges, COMMIT publishes them") {
     val s = new GraftSession(spark)
     (1 to 2).foreach(k => s.cypher(s"CREATE (a:ebt {k: $k})"))

@@ -1141,5 +1141,14 @@ class PlanSpec extends AnyFunSuite {
     // one driver-side row cap
     assert(holders(all, "limit(1000" + "1)").isEmpty,
       "a hand-copied bounded collect: use DeltaSide.collectBounded")
+    // one driver SET-value evaluator: its arithmetic and its column fit
+    // exist once, and apoc.merge.relationship shares the buffered
+    // relationship upsert instead of keeping its own
+    assert(occurrences(main, "=> x " + "/ y") == Map("DriverEval.scala" -> 1),
+      "a second driver SET-value evaluator: use DriverEval.eval")
+    assert(occurrences(main, "case (x: Long, " + "DoubleType)") == Map("DriverEval.scala" -> 1),
+      "a second buffered column fit: use DriverEval.fits")
+    assert(holders(all, "mergeRelByIds" + "Buffered").isEmpty,
+      "a second buffered relationship MERGE: use mutateRelUpsertBuffered")
   }
 }
