@@ -4217,12 +4217,7 @@ final class GraftSession(val spark: SparkSession,
           "src" -> s, "dst" -> d, "relType" -> h.relType, "eid" -> eid)
         // pattern props land first; ON CREATE may overwrite them
         // (the distributed createCols fold order)
-        h.props.foreach { case (k, v) =>
-          DriverEval.fits(v, colType(k, v)) match {
-            case Some(cv) => cur(k) = cv
-            case None     => typeOk = false
-          }
-        }
+        h.props.foreach { case (k, v) => setItem(cur, h.relVar, k, ast.Lit(v)) }
         onCreate.collect { case (`i`, k, e) => (k, e) }.foreach { case (k, e) =>
           setItem(cur, h.relVar, k, e) }
         created += ((eid, cur.toMap))

@@ -3780,8 +3780,8 @@ class CypherSpec extends AnyFunSuite {
     import org.apache.spark.sql.types._
     import org.scalacheck.{Gen, rng}
     import graft.cypher.{DriverEval, ast}
-    // one row whose columns hold the operands: `n.<col>` reads them
-    // with their column type, literals inline the same values
+    // one row whose columns hold typed operands (`n.<col>` reads them
+    // with their column type, nulls included), beside literal operands
     val cols: Seq[(String, DataType, Any)] = Seq(
       ("z", LongType, 0L), ("seven", LongType, 7L), ("neg", LongType, -3L),
       ("big", LongType, Long.MaxValue - 2), ("small", LongType, Long.MinValue + 2),
@@ -3794,22 +3794,22 @@ class CypherSpec extends AnyFunSuite {
     val schema = StructType(StructField("id", LongType) +: cols.map(c => StructField(c._1, c._2)))
     val row = spark.createDataFrame(java.util.Arrays.asList(Row.fromSeq(0L +: cols.map(_._3))), schema)
     val s = new GraftSession(spark)
-    def literal(v: Any): ast.Expr = v match {
-      case xs: Seq[_] => ast.ListLit(xs.map(ast.Lit(_)))
-      case x          => ast.Lit(x)
-    }
-    val leaf: Gen[ast.Expr] = Gen.oneOf(
-      Gen.oneOf(cols).map(c => ast.Prop("n", c._1)),
-      Gen.oneOf(cols).map(c => literal(c._3)),
-      Gen.const(ast.Lit(null)),
-      Gen.const(ast.ListLit(Seq(ast.Lit(1L), ast.Lit(2.5)))))
-    def expr(depth: Int): Gen[ast.Expr] =
-      if (depth == 0) leaf
-      else Gen.frequency(1 -> leaf, 4 -> (for {
-        op <- Gen.oneOf("+", "-", "*", "/", "%", "||")
-        l  <- expr(depth - 1)
-        r  <- expr(depth - 1)
-      } yield ast.Arith(op, l, r)))
+    val ops = Seq("+", "-", "*", "/", "%", "||")
+    val leaf: Gen[ast.Expr] = Gen.frequency(
+      6 -> Gen.oneOf(0L, 1L, 2L, 7L, -3L, Long.MaxValue - 2, Long.MinValue + 2).map(ast.Lit(_)),
+      3 -> Gen.oneOf(2.5, -0.5, 0.0).map(ast.Lit(_)),
+      2 -> Gen.oneOf("ab", "").map(ast.Lit(_)),
+      1 -> Gen.const(ast.Lit(true)),
+      1 -> Gen.const(ast.Lit(null)),
+      2 -> Gen.oneOf(Seq(Seq(1L, 2L), Seq("p", null), Seq(1L, 2.5)))
+        .map(xs => ast.ListLit(xs.map(ast.Lit(_)))),
+      8 -> Gen.oneOf(cols).map(c => ast.Prop("n", c._1)))
+    // an operator at the top, its operands leaves or operators again
+    def expr(depth: Int): Gen[ast.Expr] = for {
+      op <- Gen.oneOf(ops)
+      l  <- if (depth == 1) leaf else Gen.frequency(1 -> leaf, 1 -> expr(depth - 1))
+      r  <- if (depth == 1) leaf else Gen.frequency(1 -> leaf, 1 -> expr(depth - 1))
+    } yield ast.Arith(op, l, r)
     def same(a: Any, b: Any): Boolean = (a, b) match {
       case (x: Double, y: Double)                       => java.lang.Double.compare(x, y) == 0
       case (x: scala.collection.Seq[_], y: scala.collection.Seq[_]) =>
@@ -3818,12 +3818,14 @@ class CypherSpec extends AnyFunSuite {
     }
     val exprs = Gen.listOfN(800, expr(2)).apply(Gen.Parameters.default, rng.Seed(10L)).get
     var accepted = 0
+    val valued = collection.mutable.Map.empty[String, Int].withDefaultValue(0)
     exprs.foreach { e =>
       DriverEval.eval(e, {
         case ast.Prop("n", k) => Some((valueOf(k), typeOf(k)))
         case _                => None
       }).foreach { case (v, t) =>
         accepted += 1
+        if (v != null) valued(e.asInstanceOf[ast.Arith].op) += 1
         val out = scala.util.Try(row.select(s.setValueColumn(row, "n", isRel = false, e).as("v")))
           .flatMap(df => scala.util.Try((df.collect().head.get(0), df.schema.head.dataType)))
         out match {
@@ -3836,9 +3838,10 @@ class CypherSpec extends AnyFunSuite {
         }
       }
     }
-    // the check is not vacuous: a good share of the generated values is
-    // evaluated, and some are declined
-    assert(accepted > 150 && accepted < exprs.size, s"$accepted of ${exprs.size} evaluated")
+    // the check is not vacuous: every operator yields values, and some
+    // expressions are declined
+    assert(ops.forall(valued(_) >= 10) && accepted < exprs.size,
+      s"$accepted of ${exprs.size} evaluated, non-null per operator: $valued")
   }
 
   test("edge buffer under transactions: ROLLBACK discards buffered merges, COMMIT publishes them") {
