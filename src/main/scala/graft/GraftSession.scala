@@ -3022,14 +3022,25 @@ final class GraftSession(val spark: SparkSession,
     // ON CREATE (and a duplicate key's ON MATCH, on its own created
     // row) reads the row being created: its key values and the SET
     // items before it. There is no distributed create branch, so a
-    // value the driver evaluator declines refuses the statement.
-    def createValue(e: ast.Expr, elem: Any, props: collection.Map[String, Any]): Any =
-      DriverEval.eval(e, rowLeaf(elem).orElse {
-        case ast.Prop(`mergeVar`, k) => Some((props.getOrElse(k, null), NullType))
-        case _ => None
-      }).map(_._1).getOrElse(throw new UnsupportedOperationException(
-        s"$verb cannot evaluate the SET value $e: it takes row fields, literals and " +
-          s"$mergeVar's own properties under + - * / % ||, without overflow or a zero divisor"))
+    // value the driver evaluator declines (Left) refuses the statement
+    // once its key turns out to be created; a key that exists never
+    // runs ON CREATE.
+    def createProps(k: Seq[Any], first: Any, last: Any,
+        cnt: Int): Either[ast.Expr, collection.Map[String, Any]] = {
+      val props = collection.mutable.LinkedHashMap.empty[String, Any]
+      keyNames.zip(k).foreach { case (kn, kv) => props(kn) = kv }
+      val items = m.onCreate.map(_ -> first) ++ (if (cnt > 1) m.onMatch.map(_ -> last) else Nil)
+      items.foreach { case ((p, e), elem) =>
+        props(p.key) = DriverEval.eval(e, rowLeaf(elem).orElse {
+          case ast.Prop(`mergeVar`, pk) => Some((props.getOrElse(pk, null), NullType))
+          case _ => None
+        }).getOrElse(return Left(e))._1
+      }
+      Right(props)
+    }
+    def refuseCreate(e: ast.Expr) = new UnsupportedOperationException(
+      s"$verb cannot evaluate the SET value $e: it takes row fields, literals and " +
+        s"$mergeVar's own properties under + - * / % ||, without overflow or a zero divisor")
 
     // ---- collapse the batch per merge key ----------------------------
     // (first occurrence, last occurrence, count)
@@ -3079,11 +3090,7 @@ final class GraftSession(val spark: SparkSession,
     val createBase = if (matchOnly) 0L else db.allocate(byKey.size.toLong)
     val candProps = if (matchOnly) Nil
       else byKey.toSeq.zipWithIndex.map { case ((k, (first, last, cnt)), i) =>
-        val props = collection.mutable.LinkedHashMap.empty[String, Any]
-        keyNames.zip(k).foreach { case (kn, kv) => props(kn) = kv }
-        m.onCreate.foreach { case (p, e) => props(p.key) = createValue(e, first, props) }
-        if (cnt > 1) m.onMatch.foreach { case (p, e) => props(p.key) = createValue(e, last, props) }
-        (createBase + i, k, props)
+        (createBase + i, k, createProps(k, first, last, cnt))
       }
 
     // ---- driver-buffered delta (the fast path, r11 verdict #5) -------
@@ -3209,7 +3216,7 @@ final class GraftSession(val spark: SparkSession,
           val cur = collection.mutable.LinkedHashMap.empty[String, Any]
           cur("id") = id
           cur("labels") = np.labels
-          props.foreach { case (n, v) =>
+          props.fold(e => throw refuseCreate(e), identity).foreach { case (n, v) =>
             DriverEval.fits(v, colType(n, v)) match {
               case Some(cv) => cur(n) = cv
               case None     => typeOk = false
@@ -3261,13 +3268,27 @@ final class GraftSession(val spark: SparkSession,
     }
 
     // ---- create branch (distributed): candidates anti-joined against
-    // existing keys
-    val propKeys = candProps.flatMap(_._3.keys).distinct.sorted
+    // existing keys. Keys whose ON CREATE declined are probed first
+    // (one pruned lookup, only when there are such keys): one that is
+    // absent refuses the statement; one that exists stays a candidate
+    // of its key values alone, which the anti-join drops.
+    val declined = candProps.collect { case (_, k, Left(e)) => (k, e) }
+    if (declined.nonEmpty) {
+      val exists = if (!keyColsPresent) Set.empty[Seq[Any]] else {
+        val p = keyNames.zipWithIndex.foldLeft(g.nodes) { case (d, (kn, i)) =>
+          d.filter(col(kn).isin(declined.map(_._1(i)).distinct: _*)) }
+        p.filter(labelCond(p)).select(keyNames.map(col): _*).collect()
+          .map(r => keyNames.indices.map(i => DriverEval.canon(r.get(i))): Seq[Any]).toSet
+      }
+      declined.find(d => !exists(d._1)).foreach { case (_, e) => throw refuseCreate(e) }
+    }
+    val cands = candProps.map { case (id, k, props) => (id, props.getOrElse(keyNames.zip(k).toMap)) }
+    val propKeys = cands.flatMap(_._2.keys).distinct.sorted
     val candSchema = StructType(
       PropertyGraph.nodeBaseSchema.fields.toSeq ++
       propKeys.map(k => StructField(k,
-        firstType(candProps.flatMap(_._3.get(k))))))
-    val candRows = candProps.map { case (id, _, props) =>
+        firstType(cands.flatMap(_._2.get(k))))))
+    val candRows = cands.map { case (id, props) =>
       Row.fromSeq(Seq(id, np.labels) ++ propKeys.map(k => props.getOrElse(k, null)))
     }
     val cand = spark.createDataFrame(javaList(candRows), candSchema)
@@ -3760,9 +3781,10 @@ final class GraftSession(val spark: SparkSession,
     * SET r += onCreate ON MATCH SET r += onMatch. A missing endpoint is
     * a no-op (MATCH semantics). Constraint-checked like any mutation.
     * Returns false when that path declines (a distributed edge delta,
-    * a null or non-scalar value, a value that does not fit its column,
-    * hit rows sharing an eid); the caller then dispatches the ordinary
-    * statement. */
+    * a null identProps value, a list or map value, a value that does
+    * not fit its column, hit rows sharing an eid); the caller then
+    * dispatches the ordinary statement. A null value sets nothing new:
+    * ON CREATE leaves the property absent, ON MATCH clears it. */
   private[graft] def mergeRelByIds(sid: Long, did: Long, relType: String,
       identProps: Map[String, Any], onCreate: Map[String, Any],
       onMatch: Map[String, Any]): Boolean = {
@@ -3776,15 +3798,14 @@ final class GraftSession(val spark: SparkSession,
       identProps.map { case (k, v) => k -> ast.Lit(v) }, dir = 1, varLength = None)
     val merge = ast.Merge(ast.PathPat(ends.head, Seq(rel -> ends(1))),
       items(onCreate), items(onMatch))
-    var handled = false
+    var out: Option[Boolean] = None
     withConstraintCheck(db, statementDatabase) {
-      val out = mutateRelUpsertBuffered(db, Seq(()), ends, Seq("a", "b"),
+      out = mutateRelUpsertBuffered(db, Seq(()), ends, Seq("a", "b"),
         Seq(("a", "id", _ => sid), ("b", "id", _ => did)), merge)
-      handled = out.isDefined
-      out.getOrElse(unit())
+      unit()
     }
-    if (handled) db.pendingMutations += 1
-    handled
+    if (out.contains(true)) db.pendingMutations += 1
+    out.isDefined
   }
 
   /** GDS relationship-write core: materialize an algorithm's
@@ -3957,17 +3978,20 @@ final class GraftSession(val spark: SparkSession,
     *  - a relationship pattern prop from a row field, null or not a
     *    scalar;
     *  - a SET item on anything but a merged relationship variable;
+    *  - a list or map literal SET value (a parameter), before any
+    *    lookup;
     *  - a SET value [[DriverEval]] declines, or whose type does not fit
     *    the column;
     *  - an ambiguous endpoint key, a key column type the driver cannot
     *    canonicalize, or more than 100k collected rows;
     *  - base hit rows sharing an eid.
     * Pure until the final state assignment: a None bail leaves nothing
-    * half-committed, not even an allocated eid. Nothing binding is a
-    * no-op (MATCH drops every row). */
+    * half-committed, not even an allocated eid. Otherwise returns
+    * whether it wrote a row: nothing binding is a no-op (MATCH drops
+    * every row), and so is a hit without ON MATCH items. */
   private def mutateRelUpsertBuffered(db: GraphDatabase, elems: Seq[Any],
       nodePats: Seq[ast.NodePat], vars: Seq[String],
-      keyCols: Seq[(String, String, Any => Any)], m: ast.Merge): Option[DataFrame] = {
+      keyCols: Seq[(String, String, Any => Any)], m: ast.Merge): Option[Boolean] = {
     import org.apache.spark.sql.functions._
     val g = db.graph
 
@@ -4011,13 +4035,23 @@ final class GraftSession(val spark: SparkSession,
     val relVarHop: Map[String, Int] = m.pattern.hops.zipWithIndex
       .flatMap { case ((rel, _), i) => rel.variable.map(_ -> i) }.toMap
     // SET items must target a merged rel var, with values the driver
-    // evaluator takes over that rel's own properties
+    // evaluator takes over that rel's own properties; a list or map
+    // literal (a parameter) fits no buffered column, so it declines
+    // here, before any lookup runs
+    def scalarLit(e: ast.Expr): Boolean = e match {
+      case ast.Lit(v) => DriverEval.typeOf(DriverEval.canon(norm(v))).exists {
+        case NullType | LongType | DoubleType | StringType | BooleanType => true
+        case _ => false
+      }
+      case _ => true
+    }
     def itemsOf(items: Seq[(ast.Prop, ast.Expr)]): Option[Seq[(Int, String, ast.Expr)]] = {
       val mapped = items.map {
-        case (ast.Prop(v, k), e) if relVarHop.contains(v) && DriverEval.covers(e, {
-            case ast.Prop(`v`, _) => true
-            case _ => false
-          }) => (relVarHop(v), k, e)
+        case (ast.Prop(v, k), e) if relVarHop.contains(v) && scalarLit(e) &&
+            DriverEval.covers(e, {
+              case ast.Prop(`v`, _) => true
+              case _ => false
+            }) => (relVarHop(v), k, e)
         case _ => return None
       }
       Some(mapped)
@@ -4036,7 +4070,7 @@ final class GraftSession(val spark: SparkSession,
     // all key columns present and driver-canonicalizable, like the
     // node buffer path
     for (v <- bindVars; (k, _) <- perVar(v)._2) {
-      if (!nodeIdx.contains(k)) return Some(unit()) // unbindable key → MATCH drops all
+      if (!nodeIdx.contains(k)) return Some(false) // unbindable key → MATCH drops all
       g.nodes.schema(nodeIdx(k)).dataType match {
         case LongType | org.apache.spark.sql.types.IntegerType |
              StringType | BooleanType | DoubleType => ()
@@ -4090,7 +4124,7 @@ final class GraftSession(val spark: SparkSession,
       val bound = bindVars.map(v => bindOf(v, e))
       if (bound.forall(_.isDefined)) candidates += bound.map(_.get)
     }
-    if (candidates.isEmpty) return Some(unit())
+    if (candidates.isEmpty) return Some(false)
     val varPos = bindVars.zipWithIndex.toMap
     def pairOf(c: Seq[Long], h: Hop): (Long, Long) =
       (c(varPos(h.srcVar)), c(varPos(h.dstVar)))
@@ -4170,14 +4204,17 @@ final class GraftSession(val spark: SparkSession,
     val colType = DriverEval.colType(baseSchema, buf0.colTypes) _
     var typeOk = true
     // a SET item's value over the row `cur` of relationship `rv`; an
-    // absent property reads null
+    // absent property reads null. A null into a column neither the
+    // frame nor the buffer knows stays out of the row (it reads null
+    // all the same), so it fixes no column type for a later value.
+    val known = DriverEval.known(baseSchema, buf0.colTypes) _
     def setItem(cur: collection.mutable.Map[String, Any], rv: String, k: String,
         e: ast.Expr): Unit =
       DriverEval.eval(e, {
-        case ast.Prop(`rv`, p) => Some((cur.getOrElse(p, null),
-          DriverEval.known(baseSchema, buf0.colTypes)(p).getOrElse(NullType)))
+        case ast.Prop(`rv`, p) => Some((cur.getOrElse(p, null), known(p).getOrElse(NullType)))
         case _ => None
       }).flatMap { case (v, _) => DriverEval.fits(v, colType(k, v)) } match {
+        case Some(null) if known(k).isEmpty => cur -= k
         case Some(cv) => cur(k) = cv
         case None     => typeOk = false
       }
@@ -4231,7 +4268,7 @@ final class GraftSession(val spark: SparkSession,
         "relType" -> StringType, "eid" -> LongType),
       replacements ++ created, colType)(
       _.copy(settled = settled, nodeBind = bindCache, nodeBindRef = Some(g.nodes)))
-    Some(unit())
+    Some(replacements.nonEmpty || created.nonEmpty)
   }
 
   /** Batched relationship upsert — `UNWIND $batch AS row
@@ -4326,8 +4363,8 @@ final class GraftSession(val spark: SparkSession,
         elems.size <= DeltaSide.MaxDriverRows &&
         DeltaSide.Edges.bufferable(db)) {
       mutateRelUpsertBuffered(db, elems, nodePats, vars, keyCols, merges.head) match {
-        case Some(out) => return out
-        case None      => () // ineligible detail → distributed path below
+        case Some(_) => return unit()
+        case None    => () // ineligible detail → distributed path below
       }
     }
 

@@ -3764,6 +3764,54 @@ class CypherSpec extends AnyFunSuite {
     }
   }
 
+  test("UNWIND … MERGE refuses an ON CREATE value it cannot evaluate only for a created key") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.util.Try
+    def fresh(): GraftSession = {
+      val s = new GraftSession(spark)
+      val nodes = spark.createDataFrame(java.util.Arrays.asList(Row(1L, Seq("pz"), 1L)),
+        StructType(Seq(StructField("id", LongType, nullable = false),
+          StructField("labels", ArrayType(StringType), nullable = false), StructField("k", LongType))))
+      s.setGraph(graft.core.PropertyGraph(nodes, spark.createDataFrame(
+        java.util.Collections.emptyList[Row](), graft.core.PropertyGraph.edgeBaseSchema)))
+      s
+    }
+    def read(s: GraftSession, k: Long, p: String): Any =
+      s.cypher(s"MATCH (n:pz {k: $k}) RETURN n.$p AS v").collect().map(_.get(0)).toSeq
+    // k 1 exists, so ON CREATE (a zero divisor) never runs: through the
+    // write buffer, and through the distributed path when ON MATCH
+    // computes a value only Spark renders (a float as a string)
+    val a = fresh()
+    a.cypher("UNWIND [1] AS x MERGE (n:pz {k: x}) ON CREATE SET n.q = x / 0 ON MATCH SET n.seen = 1")
+    assert(read(a, 1, "seen") == Seq(1L) && read(a, 1, "q") == Seq(null))
+    assert(a.catalog.database("neo4j").validNodeDelta.flatMap(_.buf).isDefined)
+    val b = fresh()
+    b.cypher("UNWIND [1] AS x MERGE (n:pz {k: x}) ON CREATE SET n.q = x / 0 " +
+      "ON MATCH SET n.t = 1.5 + 'a'")
+    assert(read(b, 1, "t") == Seq("1.5a"))
+    // a created key runs it: the statement refuses and creates nothing,
+    // also when a distributed delta sends it down the distributed path
+    for (batch <- Seq("[2]", "[1, 2]"); onMatch <- Seq("n.seen = 1", "n.t = 1.5 + 'a'");
+         distributed <- Seq(false, true)) {
+      val c = fresh()
+      if (distributed) {
+        c.cypher("MATCH (n:pz) SET n.z = n.k * 2").collect()
+        assert(c.catalog.database("neo4j").validNodeDelta.exists(_.buf.isEmpty))
+      }
+      val r = Try(c.cypher(s"UNWIND $batch AS x MERGE (n:pz {k: x}) ON CREATE SET n.q = x / 0 " +
+        s"ON MATCH SET $onMatch").collect())
+      assert(r.failed.toOption.exists(_.isInstanceOf[UnsupportedOperationException]),
+        s"$batch / $onMatch / distributed $distributed: $r")
+      assert(read(c, 2, "k") == Nil && read(c, 1, "k") == Seq(1L))
+    }
+    // and a distributed run whose keys all exist writes ON MATCH
+    val d = fresh()
+    d.cypher("MATCH (n:pz) SET n.z = n.k * 2").collect()
+    d.cypher("UNWIND [1] AS x MERGE (n:pz {k: x}) ON CREATE SET n.q = x / 0 ON MATCH SET n.seen = 1")
+    assert(read(d, 1, "seen") == Seq(1L) && read(d, 1, "z") == Seq(2L))
+  }
+
   test("UNWIND … MERGE ON CREATE reads a batch row's list elements by their own types") {
     // a parameter row may mix element types; the create branch has no
     // distributed twin, so the driver evaluator must take it

@@ -1624,6 +1624,32 @@ class PacksSpec extends AnyFunSuite {
       .collect().head.getLong(0) == 1L)
   }
 
+  test("apoc.merge.relationship: a null value fixes no column type for a later value") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types.LongType
+    val s = sessionWith("apoc")
+    val nodes = spark.range(2).select(col("id"), array(lit("nv")).as("labels"))
+    val edges = spark.createDataFrame(Seq((0L, 1L, "OTHER"))).toDF("src", "dst", "relType")
+    s.setGraph(graft.core.PropertyGraph(nodes, edges))
+    val db = s.catalog.database("neo4j")
+    def merge(oc: String, om: String): Unit =
+      s.cypher(s"CALL apoc.merge.relationship(0, 'NV', {}, $oc, 1, $om) YIELD src RETURN src")
+        .collect()
+    def w(): Any = s.cypher("MATCH (:nv)-[r:NV]->(:nv) RETURN r.w AS w").collect().head.get(0)
+    // created with w null: the row reads null and the buffer has no w column
+    merge("{w: null}", "{}")
+    assert(w() == null)
+    assert(db.validEdgeDelta.flatMap(_.buf).exists(b => !b.colTypes.contains("w")))
+    // a later integer takes its own type, still through the write buffer
+    merge("{}", "{w: 5}")
+    assert(w() == 5L)
+    assert(db.validEdgeDelta.flatMap(_.buf).exists(_.colTypes.get("w").contains(LongType)))
+    // a null ON MATCH value clears the property
+    merge("{}", "{w: null}")
+    assert(w() == null)
+    assert(db.validEdgeDelta.flatMap(_.buf).isDefined)
+  }
+
   test("setGraph derives eid for an eid-less edge frame: reads, SET, DELETE, gds writes") {
     import org.apache.spark.sql.functions._
     val s = sessionWith("graph-data-science")
