@@ -5,7 +5,7 @@ import org.apache.spark.sql.types._
 import graft.auth.{Auth, AuthStore}
 import graft.core.{DeltaBuffer, DeltaSide, DeltaState, GraphCatalog, GraphDatabase, GraphViews,
   PropertyGraph, SnapshotAnchor, SnapshotStore}
-import graft.cypher.{CypherCompiler, CypherParser, DriverEval, Params, ast}
+import graft.cypher.{CypherCompiler, CypherParser, Params, ast}
 import graft.procs.ProcedureRegistry
 
 /** Session façade — the engine's equivalent of a Bolt session against
@@ -2134,8 +2134,9 @@ final class GraftSession(val spark: SparkSession,
     * compiles to a Column over them — still one update-by-join. A
     * property that does not exist as a column reads as null
     * (reference semantics for absent properties). `row` binds other
-    * leaves (a batch row's fields) to columns of `base`. The driver
-    * twin of this contract is [[graft.cypher.DriverEval]]. */
+    * leaves (a batch row's fields) to columns of `base`. It is the one
+    * SET-value evaluator: the buffered writes project it over their
+    * driver rows ([[setValues]]). */
   private[graft] def setValueColumn(base: DataFrame, v: String, isRel: Boolean,
       rhs: ast.Expr, row: PartialFunction[ast.Expr, org.apache.spark.sql.Column] =
         PartialFunction.empty): org.apache.spark.sql.Column = {
@@ -2233,6 +2234,58 @@ final class GraftSession(val spark: SparkSession,
           isStrLit(l) || isStrLit(r) => concat(lc.cast("string"), rc.cast("string"))
       case _ => lc + rc
     }
+  }
+
+  /** SET items of one [[setValues]] group: they apply to the rows `on`
+    * selects and read through `read`. `folded` when the distributed
+    * path projects them unguarded, so that Spark folds their constant
+    * parts before any row runs. */
+  private case class SetGroup(on: org.apache.spark.sql.Column, items: Seq[(ast.Prop, ast.Expr)],
+      read: PartialFunction[ast.Expr, org.apache.spark.sql.Column], folded: Boolean)
+
+  /** SET values for `n` rows the driver holds, by [[setValueColumn]]:
+    * every item of `groups` projects over `frame` (a LocalRelation of
+    * those rows) in ONE select, and `collect` evaluates it on the
+    * driver without a Spark job. A group's items apply to the rows its
+    * condition selects (null elsewhere), in order: an item reads the
+    * latest earlier item of its group that wrote the same property of
+    * `v`, else its group's bindings, else the frame's columns. Returns
+    * each row's values, all groups' items in order. When every item is
+    * a literal (parameters are substituted by now) there is nothing to
+    * project and `frame` is never built. A value Spark raises on raises
+    * here, before the caller writes anything. */
+  private def setValues(n: Int, frame: => DataFrame, v: String, isRel: Boolean,
+      groups: Seq[SetGroup]): Seq[Seq[Any]] = {
+    import org.apache.spark.sql.functions.{lit, when}
+    val items = groups.flatMap(_.items)
+    if (items.forall(_._2.isInstanceOf[ast.Lit])) {
+      val vs = items.map { case (_, e) => DeltaBuffer.canon(norm(e.asInstanceOf[ast.Lit].v)) }
+      return Seq.fill(n)(vs)
+    }
+    val df = frame
+    val cols = groups.map { g =>
+      var written = Map.empty[ast.Expr, org.apache.spark.sql.Column]
+      g.items.map { case (p, e) =>
+        val c = setValueColumn(df, v, isRel, e, written.orElse(g.read))
+        written += (ast.Prop(v, p.key) -> c)
+        c
+      }
+    }
+    // Spark optimizes a distributed plan's values before any row runs:
+    // it drops what a null makes moot (`'ab' * null`) and folds the
+    // constant parts, raising when a fold fails even where no row would
+    // evaluate it (a cast beside a null divisor). It evaluates a
+    // projection over a LocalRelation first, unless a node stands
+    // between them: the sort on a constant, which the optimizer drops
+    // once the values are optimized, so they evaluate on the driver
+    // after all. The guards make folding lenient, so the groups the
+    // distributed path projects unguarded are optimized once more,
+    // unguarded, over a non-local child (the repartition); nothing runs.
+    val folded = groups.zip(cols).filter(_._1.folded).flatMap(_._2)
+    if (folded.nonEmpty) df.repartition(1).select(folded: _*).queryExecution.optimizedPlan
+    df.orderBy(lit(true)).select(groups.zip(cols).flatMap { case (g, cs) => cs.map(when(g.on, _)) }
+        .zipWithIndex.map { case (c, i) => c.as(s"_sv_$i") }: _*)
+      .collect().toSeq.map(_.toSeq)
   }
 
   /** `MATCH … SET n = {map}` — full property replace as ONE delta
@@ -2461,10 +2514,11 @@ final class GraftSession(val spark: SparkSession,
           // CALL { } IN TRANSACTIONS (r14 verdict #3). Unbounded
           // matches, non-literal values, retyping writes, and
           // distributed deltas keep the general fold.
-          val colType = DriverEval.colType(base.schema, Map.empty) _
+          val colType = DeltaBuffer.colType(base.schema, Map.empty) _
           val litValue: Option[Any] = rhs match {
-            case ast.Lit(_) => DriverEval.eval(rhs, _ => None)
-              .flatMap { case (value, _) => DriverEval.fits(value, colType(key, value)) }
+            case ast.Lit(value0) =>
+              val value = DeltaBuffer.canon(norm(value0))
+              DeltaBuffer.fits(value, colType(key, value))
             case _ => None
           }
           val bufferedOk = !isRel && litValue.isDefined && DeltaSide.Nodes.bufferable(db)
@@ -2936,7 +2990,14 @@ final class GraftSession(val spark: SparkSession,
     *   come from the unwind alias or literals; a null key value
     *   errors like the reference ("cannot merge … null property");
     * - SET values combine row fields, literals, arithmetic and the
-    *   merge variable's own properties (`n.cnt + 1`);
+    *   merge variable's own properties (`n.cnt + 1`); each batch-row
+    *   read (a field, the row, a constant subscript `row[0]`) is a
+    *   column typed by its own values, and one whose values mix types
+    *   refuses;
+    * - a value Spark raises on (zero divisor, overflow) raises on the
+    *   buffered path as on the distributed one, before any write; ON
+    *   CREATE runs over the created keys' rows only, so a key that
+    *   exists never raises there;
     * - duplicate keys in one batch collapse: the first occurrence
     *   drives ON CREATE, the last drives ON MATCH — exactly the
     *   sequential outcome for row-valued SETs. A duplicate key whose
@@ -2969,15 +3030,12 @@ final class GraftSession(val spark: SparkSession,
     }
 
     // ---- per-element access ------------------------------------------
-    val ELEM = "__elem" // pseudo-field: the alias itself (scalar batches)
-    def field(elem: Any, key: String): Any =
-      if (key == ELEM) norm(elem)
-      else elem match {
-        case mp: collection.Map[_, _] =>
-          norm(mp.asInstanceOf[collection.Map[String, Any]].getOrElse(key, null))
-        case other => throw new UnsupportedOperationException(
-          s"`$alias.$key` needs map elements in the UNWIND batch, got $other")
-      }
+    def field(elem: Any, key: String): Any = elem match {
+      case mp: collection.Map[_, _] =>
+        norm(mp.asInstanceOf[collection.Map[String, Any]].getOrElse(key, null))
+      case other => throw new UnsupportedOperationException(
+        s"`$alias.$key` needs map elements in the UNWIND batch, got $other")
+    }
     def keyOfRaw(elem: Any): Seq[Any] = keyNames.map { k =>
       np.props(k).v match {
         case ast.VarRefValue(`alias`)     => norm(elem)
@@ -2998,49 +3056,47 @@ final class GraftSession(val spark: SparkSession,
       }
       ks
     }
-    def rowFields(e: ast.Expr): Seq[String] = ast.reads(e).collect {
-      case ast.Prop(`alias`, k)  => k
-      case ast.Variable(`alias`) => ELEM
-    }
     def refsMergeVar(e: ast.Expr): Boolean = ast.reads(e).exists {
       case ast.Prop(`mergeVar`, _) | ast.Variable(`mergeVar`) => true
       case _ => false
     }
-    def firstType(vs: Iterable[Any]): DataType =
-      vs.find(_ != null).map(PropertyGraph.literalType).getOrElse(StringType)
-    // batch-row fields as driver-evaluator leaves, a null one typed like
-    // the distributed path's `_bf_` column (first non-null value)
-    val fieldType: Map[String, Option[DataType]] =
-      (m.onCreate ++ m.onMatch).flatMap { case (_, e) => rowFields(e) }.distinct.map { f =>
-        f -> elems.iterator.map(field(_, f)).find(_ != null)
-          .fold(Option[DataType](StringType))(DriverEval.typeOf)
-      }.toMap
-    def rowLeaf(elem: Any): PartialFunction[ast.Expr, Option[DriverEval.Typed]] = {
-      case ast.Prop(`alias`, f)  => fieldType(f).map(field(elem, f) -> _)
-      case ast.Variable(`alias`) => fieldType(ELEM).map(field(elem, ELEM) -> _)
+    // A SET value's batch-row reads — a field, the row itself, or a
+    // constant subscript of either — each bind as their own column,
+    // typed by their own values, so a row may mix element types. The
+    // buffered projection and the distributed joins share this binding:
+    // ON CREATE reads a key's first occurrence (`_bc_` columns), ON
+    // MATCH its last (`_bf_`).
+    def constSub(e: ast.Expr): Boolean = e match {
+      case ast.Subscript(ast.Variable(`alias`) | ast.Prop(`alias`, _), ast.Lit(_: Long)) => true
+      case _ => false
     }
-    // ON CREATE (and a duplicate key's ON MATCH, on its own created
-    // row) reads the row being created: its key values and the SET
-    // items before it. There is no distributed create branch, so a
-    // value the driver evaluator declines (Left) refuses the statement
-    // once its key turns out to be created; a key that exists never
-    // runs ON CREATE.
-    def createProps(k: Seq[Any], first: Any, last: Any,
-        cnt: Int): Either[ast.Expr, collection.Map[String, Any]] = {
-      val props = collection.mutable.LinkedHashMap.empty[String, Any]
-      keyNames.zip(k).foreach { case (kn, kv) => props(kn) = kv }
-      val items = m.onCreate.map(_ -> first) ++ (if (cnt > 1) m.onMatch.map(_ -> last) else Nil)
-      items.foreach { case ((p, e), elem) =>
-        props(p.key) = DriverEval.eval(e, rowLeaf(elem).orElse {
-          case ast.Prop(`mergeVar`, pk) => Some((props.getOrElse(pk, null), NullType))
-          case _ => None
-        }).getOrElse(return Left(e))._1
-      }
-      Right(props)
+    def rowCols(items: Seq[(ast.Prop, ast.Expr)], prefix: String): Seq[(ast.Expr, String)] =
+      items.flatMap { case (_, e) => ast.reads(e, constSub) }.filter {
+        case ast.Prop(`alias`, _) | ast.Variable(`alias`) => true
+        case r => constSub(r)
+      }.distinct.zipWithIndex.map { case (r, i) => r -> s"$prefix$i" }
+    def readValue(elem: Any, r: ast.Expr): Any = r match {
+      case ast.Subscript(b, ast.Lit(i: Long)) =>
+        subscriptVal(elem, Some(b).collect { case ast.Prop(_, f) => f }, i, alias)
+      case ast.Prop(_, f) => field(elem, f)
+      case _              => norm(elem)
     }
-    def refuseCreate(e: ast.Expr) = new UnsupportedOperationException(
-      s"$verb cannot evaluate the SET value $e: it takes row fields, literals and " +
-        s"$mergeVar's own properties under + - * / % ||, without overflow or a zero divisor")
+    // the one Spark type of a batch column's values; values of mixed
+    // types (a list's elements included) have none and refuse
+    def readType(what: String, vs: Iterable[Any]): DataType = {
+      val ts = vs.filter(_ != null).map {
+        case s: Seq[_] if s.filter(_ != null).map(PropertyGraph.literalType).distinct.size > 1 => null
+        case v => PropertyGraph.literalType(v)
+      }.toSeq.distinct
+      if (ts.size > 1 || ts.contains(null)) throw new UnsupportedOperationException(
+        s"$verb: `$what` mixes value types across the batch; a SET value reads a " +
+          s"mixed list only through constant subscripts like `$alias[0]`")
+      ts.headOption.getOrElse(StringType)
+    }
+    val createCols = rowCols(m.onCreate, "_bc_")
+    val matchCols = rowCols(m.onMatch, "_bf_")
+    def bind(cols: Seq[(ast.Expr, String)]): PartialFunction[ast.Expr, org.apache.spark.sql.Column] =
+      cols.toMap.andThen(col(_))
 
     // ---- collapse the batch per merge key ----------------------------
     // (first occurrence, last occurrence, count)
@@ -3054,11 +3110,26 @@ final class GraftSession(val spark: SparkSession,
       }
     }
     if (byKey.isEmpty) return unit()
-    val onMatchReadsNode = m.onMatch.exists { case (_, e) => refsMergeVar(e) }
-    if (onMatchReadsNode && byKey.valuesIterator.exists(_._3 > 1))
+    val dupKeys = byKey.valuesIterator.exists(_._3 > 1)
+    if (m.onMatch.exists { case (_, e) => refsMergeVar(e) } && dupKeys)
       throw new UnsupportedOperationException(
         s"duplicate keys in one $verb batch cannot compose with a SET " +
           "that reads the pattern variable's own properties")
+    def keyFields(prefix: String): Seq[StructField] = keyNames.zipWithIndex.map { case (kn, i) =>
+      StructField(prefix + kn, readType(kn, byKey.keysIterator.map(_(i)).toSeq)) }
+    def readFields(cols: Seq[(ast.Expr, String)], elemOf: ((Any, Any, Int)) => Any): Seq[StructField] =
+      cols.map { case (r, n) =>
+        StructField(n, readType(r.toString, byKey.valuesIterator.map(o => readValue(elemOf(o), r)).toSeq)) }
+    // a created key's row: id, labels, key values and batch-row reads —
+    // the buffered projection's created rows and the distributed
+    // candidates alike; `_sg` is 2 when a repeated key also runs ON
+    // MATCH on its own created row (row-only values: the n-reading
+    // case was refused above)
+    lazy val candFields = PropertyGraph.nodeBaseSchema.fields.toSeq ++ keyFields("") ++
+      readFields(createCols, _._1) ++ readFields(matchCols, _._2) :+ StructField("_sg", IntegerType)
+    def candRow(id: Long, k: Seq[Any], occ: (Any, Any, Int)): Seq[Any] =
+      Seq(id, np.labels) ++ k ++ createCols.map(c => readValue(occ._1, c._1)) ++
+        matchCols.map(c => readValue(occ._2, c._1)) :+ (if (occ._3 > 1) 2 else 1)
 
     val g = db.graph
     def labelCond(nodesDf: DataFrame): org.apache.spark.sql.Column =
@@ -3078,33 +3149,29 @@ final class GraftSession(val spark: SparkSession,
       if (byKey.size > DeltaSide.MaxDriverRows || !keyColsPresent) df
       else keyNames.foldLeft(df)((d, kn) => d.filter(col(kn).isin(keyLits(kn): _*)))
 
-    // ---- create candidates: ids minted per distinct key up front ----
-    // (run-deterministic); keys that turn out to exist just skip their
-    // candidate row. A key that repeats in the batch applies the last
-    // occurrence's ON MATCH to its own created row (row-only values —
-    // the n-reading case was refused above).
-    // match-only mints nothing: a key the graph can't match is a no-op
-    // (and without the key columns NOTHING can match — whole statement
-    // is a no-op, skip even the id allocation)
+    // ---- create candidates: ids minted per distinct key -------------
+    // (run-deterministic: byKey position); keys that turn out to exist
+    // just skip their candidate row. The ids are allocated once the
+    // statement can no longer raise. Match-only mints nothing: a key
+    // the graph can't match is a no-op (and without the key columns
+    // NOTHING can match — the whole statement is a no-op).
     if (matchOnly && !keyColsPresent) return unit()
-    val createBase = if (matchOnly) 0L else db.allocate(byKey.size.toLong)
-    val candProps = if (matchOnly) Nil
-      else byKey.toSeq.zipWithIndex.map { case ((k, (first, last, cnt)), i) =>
-        (createBase + i, k, createProps(k, first, last, cnt))
-      }
+    val createBase = db.nextId.get()
 
     // ---- driver-buffered delta (the fast path, r11 verdict #5) -------
-    // A literal batch whose SET values the driver evaluator takes
-    // ([[DriverEval]]) commits with ONE distributed action: an
-    // isin-pruned lookup of the matched rows (collect — bounded by
-    // the batch size). Replacement and created
-    // rows are assembled on the driver into an immutable, insertion-
-    // ordered write buffer whose DataFrame is a LocalRelation — so the
-    // commit itself runs no checkpoint job, and the read-side overlay
-    // plans against local rows. Falls back to the distributed
-    // replacement-row path for huge batches, an oversized buffer, SET
-    // values the driver evaluator declines or whose type does not fit
-    // the column, or when a distributed delta is already in flight.
+    // A literal batch commits with ONE distributed action: an isin-
+    // pruned lookup of the matched rows (collect — bounded by the batch
+    // size). The SET values of the matched and created rows come from
+    // ONE projection of the distributed path's own expression over a
+    // LocalRelation of those rows ([[setValues]]). Replacement and
+    // created rows are assembled on the driver into an immutable,
+    // insertion-ordered write buffer whose DataFrame is a LocalRelation
+    // — so the commit itself runs no checkpoint job, and the read-side
+    // overlay plans against local rows. Falls back to the distributed
+    // replacement-row path for huge batches, an oversized buffer, key
+    // columns the driver cannot canonicalize, SET values whose type
+    // does not fit the column, or when a distributed delta is already
+    // in flight.
     val oldState = db.validNodeDelta
     val nodeSchema = g.nodes.schema
     val idx = nodeSchema.fieldNames.zipWithIndex.toMap
@@ -3118,19 +3185,16 @@ final class GraftSession(val spark: SparkSession,
         case _ => false
       })
     }
-    val driverEligible = byKey.size <= DeltaSide.MaxDriverRows && keyTypesCanonical &&
-      m.onMatch.forall { case (_, e) => DriverEval.covers(e, {
-        case ast.Prop(`alias` | `mergeVar`, _) | ast.Variable(`alias`) => true
-        case _ => false
-      }) } &&
-      DeltaSide.Nodes.bufferable(db)
-    if (driverEligible) {
+    if (byKey.size <= DeltaSide.MaxDriverRows && keyTypesCanonical &&
+        DeltaSide.Nodes.bufferable(db)) {
       val buf0 = oldState.flatMap(_.buf).getOrElse(DeltaSide.Nodes.emptyBuffer)
       val (bufColTypes, bufRows) = (buf0.colTypes, buf0.rows)
       def labelsOk(v: Any): Boolean = np.labels.forall(l => v match {
         case s: scala.collection.Seq[_] => s.contains(l)
         case _ => false
       })
+      def keyTuple(mrow: collection.Map[String, Any]): Seq[Any] =
+        keyNames.map(kn => DeltaBuffer.canon(mrow(kn)))
       // 1. satisfy matches from the DRIVER buffer first (zero Spark):
       // a key already written this burst has its LATEST row right here
       val bufMatched: Seq[(Long, Map[String, Any])] =
@@ -3141,11 +3205,9 @@ final class GraftSession(val spark: SparkSession,
           case (id, mrow) if !mrow.get(PropertyGraph.TombstoneCol).contains(true) &&
               keyNames.forall(mrow.contains) &&
               labelsOk(mrow.getOrElse("labels", null)) &&
-              byKey.contains(keyNames.map(kn => DriverEval.canon(mrow(kn)))) =>
+              byKey.contains(keyTuple(mrow)) =>
             (id, mrow)
         }
-      val bufMatchedKeys = bufMatched.map { case (_, mrow) =>
-        keyNames.map(kn => DriverEval.canon(mrow(kn))) }.toSet
       // 2. only keys the base hasn't answered THIS BURST scan the BASE
       // — a plain isin-pruned scan with no overlay anti-join; the base
       // is immutable while the overlay is valid, so an answered
@@ -3170,64 +3232,74 @@ final class GraftSession(val spark: SparkSession,
           p.filter(labelCond(p)).collect().toSeq.flatMap { r =>
             // exact key-tuple membership re-checked on the driver: the
             // per-column isin conjunction is a superset for multi-key
-            val kt = keyNames.map(kn => DriverEval.canon(r.get(baseIdx(kn))))
+            val kt = keyNames.map(kn => DeltaBuffer.canon(r.get(baseIdx(kn))))
             val id = r.get(baseIdx("id")).asInstanceOf[Long]
             if (!scanKeys.contains(kt) || bufRows.contains(id)) None
-            else {
-              val cur = collection.mutable.LinkedHashMap.empty[String, Any]
-              baseSchema.fieldNames.zipWithIndex.foreach { case (n, i) =>
-                cur(n) = r.get(i) }
-              Some((id, cur.toMap))
-            }
+            else Some((id, baseSchema.fieldNames.zip(r.toSeq).toMap))
           }
         }
-      val baseFoundKeys = baseMatched.map { case (_, mrow) =>
-        keyNames.map(kn => DriverEval.canon(mrow(kn))) }.toSet
+      val baseFoundKeys = baseMatched.map(r => keyTuple(r._2)).toSet
       // a scanned key settles when its base rows fold into the buffer
       // (ON MATCH ran) or when the base proved it absent
       val settled = settled0 ++
         (if (m.onMatch.nonEmpty) scanKeys
          else scanKeys.diff(baseFoundKeys))
-      // replacement rows: current values + SET columns, evaluated here
+      val matched = bufMatched ++ baseMatched
+      val matchedKeys = matched.map(r => keyTuple(r._2)).toSet
+      val created = if (matchOnly) Nil else byKey.toSeq.zipWithIndex.collect {
+        case ((k, occ), i) if !keyColsPresent || !matchedKeys.contains(k) => (createBase + i, k, occ)
+      }
+      // the projection's rows: the created candidates' columns, and for
+      // a matched row (`_sg` 0) the node properties ON MATCH reads, as
+      // `_cur_` columns of the frame's type
+      val known = DeltaBuffer.known(nodeSchema, bufColTypes) _
+      val curCols = m.onMatch.flatMap { case (_, e) => ast.reads(e) }
+        .collect { case ast.Prop(`mergeVar`, k) if k != "id" => k }.distinct
+        .flatMap(k => known(k).map(t => k -> StructField(s"_cur_$k", t)))
+      def rows = matched.map { case (id, mrow) =>
+        Row.fromSeq(candRow(id, keyTuple(mrow), byKey(keyTuple(mrow))).init ++ (0 +:
+          curCols.map(c => mrow.getOrElse(c._1, null))))
+      } ++ created.map { case (id, k, occ) =>
+        Row.fromSeq(candRow(id, k, occ) ++ curCols.map(_ => null)) }
+      val curRead: PartialFunction[ast.Expr, org.apache.spark.sql.Column] = {
+        case ast.Prop(`mergeVar`, k) if k != "id" =>
+          curCols.find(_._1 == k).fold(lit(null))(c => col(c._2.name))
+      }
+      // as on the distributed path, ON CREATE runs on created rows
+      // only, and ON MATCH folds like the distributed join's projection
+      val values = setValues(matched.size + created.size,
+        spark.createDataFrame(javaList(rows), StructType(candFields ++ curCols.map(_._2))),
+        mergeVar, isRel = false, Seq(
+          SetGroup(col("_sg") > 0, m.onCreate, bind(createCols), folded = false),
+          SetGroup(col("_sg") =!= 1, m.onMatch, bind(matchCols).orElse(curRead),
+            folded = keyColsPresent)))
+      val nCreate = m.onCreate.size
       var typeOk = true
-      val colType = DriverEval.colType(nodeSchema, bufColTypes) _
-      val replacements = (bufMatched ++ baseMatched).map { case (id, mrow) =>
-        val cur = collection.mutable.LinkedHashMap.empty[String, Any]
-        mrow.foreach { case (n, v) => cur(n) = v }
-        val kt = keyNames.map(kn => DriverEval.canon(mrow(kn)))
-        val (_, last, _) = byKey(kt)
-        m.onMatch.foreach { case (p, e) =>
-          DriverEval.eval(e, rowLeaf(last).orElse {
-            // a column absent from this row reads null
-            case ast.Prop(`mergeVar`, k) => Some((cur.getOrElse(k, null),
-              DriverEval.known(nodeSchema, bufColTypes)(k).getOrElse(NullType)))
-            case _ => None
-          }).flatMap { case (v, _) => DriverEval.fits(v, colType(p.key, v)) } match {
-            case Some(cv) => cur(p.key) = cv
-            case None     => typeOk = false
-          }
+      val colType = DeltaBuffer.colType(nodeSchema, bufColTypes) _
+      def put(cur: collection.mutable.Map[String, Any], k: String, v: Any): Unit =
+        DeltaBuffer.fits(v, colType(k, v)) match {
+          case Some(cv) => cur(k) = cv
+          case None     => typeOk = false
         }
+      def onMatch(cur: collection.mutable.Map[String, Any], vs: Seq[Any]): Unit =
+        m.onMatch.zip(vs.drop(nCreate)).foreach { case ((p, _), v) => put(cur, p.key, v) }
+      val replacements = matched.zip(values).map { case ((id, mrow), vs) =>
+        val cur = collection.mutable.LinkedHashMap.from(mrow)
+        onMatch(cur, vs)
         (id, cur)
       }
-      val matchedKeys = bufMatchedKeys ++ baseMatched.map { case (_, mrow) =>
-        keyNames.map(kn => DriverEval.canon(mrow(kn))) }
-      val created = candProps.collect {
-        case (id, k, props) if !keyColsPresent || !matchedKeys.contains(k) =>
-          val cur = collection.mutable.LinkedHashMap.empty[String, Any]
-          cur("id") = id
-          cur("labels") = np.labels
-          props.fold(e => throw refuseCreate(e), identity).foreach { case (n, v) =>
-            DriverEval.fits(v, colType(n, v)) match {
-              case Some(cv) => cur(n) = cv
-              case None     => typeOk = false
-            }
-          }
-          (id, cur)
+      val createdBuf = created.zip(values.drop(matched.size)).map { case ((id, k, occ), vs) =>
+        val cur = collection.mutable.LinkedHashMap[String, Any]("id" -> id, "labels" -> np.labels)
+        keyNames.zip(k).foreach { case (kn, kv) => put(cur, kn, kv) }
+        m.onCreate.zip(vs).foreach { case ((p, _), v) => put(cur, p.key, v) }
+        if (occ._3 > 1) onMatch(cur, vs)
+        (id, cur)
       }
       if (typeOk) {
+        if (!matchOnly) db.allocate(byKey.size.toLong)
         commitBuffered(db, DeltaSide.Nodes,
           Seq("id" -> LongType, "labels" -> ArrayType(StringType)),
-          replacements ++ created, colType)(
+          replacements ++ createdBuf, colType)(
           _.copy(settled = settled, shape = shape))
         return unit()
       }
@@ -3241,15 +3313,10 @@ final class GraftSession(val spark: SparkSession,
     // keyed delta that overlays the unchanged base.
     var updRows: Option[DataFrame] = None
     if (m.onMatch.nonEmpty && keyColsPresent) {
-      val fields = m.onMatch.flatMap { case (_, e) => rowFields(e) }.distinct
       val rows = byKey.toSeq.map { case (k, (_, last, _)) =>
-        Row.fromSeq(k ++ fields.map(f => field(last, f)))
+        Row.fromSeq(k ++ matchCols.map(c => readValue(last, c._1)))
       }
-      val schema = StructType(
-        keyNames.zipWithIndex.map { case (kn, i) =>
-          StructField(s"_bk_$kn", firstType(byKey.keysIterator.map(_(i)).toSeq)) } ++
-        fields.map { f =>
-          StructField(s"_bf_$f", firstType(byKey.valuesIterator.map(v => field(v._2, f)).toSeq)) })
+      val schema = StructType(keyFields("_bk_") ++ readFields(matchCols, _._2))
       val batchDf = spark.createDataFrame(javaList(rows), schema)
       val pruned = pruneByKeys(g.nodes)
       val cond = keyNames.map(kn => pruned(kn) === col(s"_bk_$kn")).reduce(_ && _)
@@ -3257,52 +3324,50 @@ final class GraftSession(val spark: SparkSession,
       // they simply stay in the base untouched
       var upd = pruned.join(broadcast(batchDf), cond, "inner")
         .filter(labelCond(pruned))
-      val rowCols: PartialFunction[ast.Expr, org.apache.spark.sql.Column] = {
-        case ast.Prop(`alias`, f)  => col(s"_bf_$f")
-        case ast.Variable(`alias`) => col(s"_bf_$ELEM")
-      }
       m.onMatch.foreach { case (p, e) => // every joined row matched
-        upd = upd.withColumn(p.key, setValueColumn(upd, mergeVar, isRel = false, e, rowCols))
+        upd = upd.withColumn(p.key, setValueColumn(upd, mergeVar, isRel = false, e, bind(matchCols)))
       }
       updRows = Some(upd.drop(schema.fieldNames.toIndexedSeq: _*))
     }
 
-    // ---- create branch (distributed): candidates anti-joined against
-    // existing keys. Keys whose ON CREATE declined are probed first
-    // (one pruned lookup, only when there are such keys): one that is
-    // absent refuses the statement; one that exists stays a candidate
-    // of its key values alone, which the anti-join drops.
-    val declined = candProps.collect { case (_, k, Left(e)) => (k, e) }
-    if (declined.nonEmpty) {
-      val exists = if (!keyColsPresent) Set.empty[Seq[Any]] else {
-        val p = keyNames.zipWithIndex.foldLeft(g.nodes) { case (d, (kn, i)) =>
-          d.filter(col(kn).isin(declined.map(_._1(i)).distinct: _*)) }
-        p.filter(labelCond(p)).select(keyNames.map(col): _*).collect()
-          .map(r => keyNames.indices.map(i => DriverEval.canon(r.get(i))): Seq[Any]).toSet
+    // ---- create branch (distributed): the candidates anti-joined
+    // against the existing keys, then ON CREATE (and a repeated key's
+    // ON MATCH) projected over the created keys' rows only.
+    val missing = if (matchOnly) None else Some {
+      db.allocate(byKey.size.toLong)
+      val cand = spark.createDataFrame(javaList(byKey.toSeq.zipWithIndex.map {
+        case ((k, occ), i) => Row.fromSeq(candRow(createBase + i, k, occ)) }), StructType(candFields))
+      var created =
+        if (!keyColsPresent) cand // no such property column: nothing can match
+        else {
+          // only keys IN the candidate set matter — same isin pruning
+          val prunedEx = pruneByKeys(g.nodes)
+          val existingKeys = prunedEx.filter(labelCond(prunedEx))
+            .select(keyNames.map(kn => col(kn).as(s"_ek_$kn")): _*).distinct()
+          cand.join(existingKeys,
+            keyNames.map(kn => cand(kn) === col(s"_ek_$kn")).reduce(_ && _), "left_anti")
+        }
+      // every candidate row is a created one (`_sg` > 0): the guard only
+      // keeps Spark from folding a failing constant part before it knows
+      // whether any key is created
+      m.onCreate.foreach { case (p, e) =>
+        created = created.withColumn(p.key, when(col("_sg") > 0,
+          setValueColumn(created, mergeVar, isRel = false, e, bind(createCols))))
       }
-      declined.find(d => !exists(d._1)).foreach { case (_, e) => throw refuseCreate(e) }
-    }
-    val cands = candProps.map { case (id, k, props) => (id, props.getOrElse(keyNames.zip(k).toMap)) }
-    val propKeys = cands.flatMap(_._2.keys).distinct.sorted
-    val candSchema = StructType(
-      PropertyGraph.nodeBaseSchema.fields.toSeq ++
-      propKeys.map(k => StructField(k,
-        firstType(cands.flatMap(_._2.get(k))))))
-    val candRows = cands.map { case (id, props) =>
-      Row.fromSeq(Seq(id, np.labels) ++ propKeys.map(k => props.getOrElse(k, null)))
-    }
-    val cand = spark.createDataFrame(javaList(candRows), candSchema)
-    val missing =
-      if (matchOnly) cand // empty by construction: match-only creates nothing
-      else if (!keyColsPresent) cand // no such property column: nothing can match
-      else {
-        // only keys IN the candidate set matter — same isin pruning
-        val prunedEx = pruneByKeys(g.nodes)
-        val existingKeys = prunedEx.filter(labelCond(prunedEx))
-          .select(keyNames.map(kn => col(kn).as(s"_ek_$kn")): _*).distinct()
-        cand.join(existingKeys,
-          keyNames.map(kn => cand(kn) === col(s"_ek_$kn")).reduce(_ && _), "left_anti")
+      if (dupKeys) m.onMatch.foreach { case (p, e) =>
+        val v = when(col("_sg") === 2, setValueColumn(created, mergeVar, isRel = false, e,
+          bind(matchCols)))
+        created = created.withColumn(p.key,
+          if (created.columns.contains(p.key)) v.otherwise(col(p.key)) else v)
       }
+      // the batch columns drop; a property only ever set to null gets
+      // the STRING column a buffered null gets
+      val batchCols = (createCols ++ matchCols).map(_._2).toSet + "_sg"
+      created.select(created.schema.fields.toSeq.collect {
+        case f if f.dataType == NullType => col(f.name).cast(StringType).as(f.name)
+        case f if !batchCols(f.name) => col(f.name)
+      }: _*)
+    }
     // ---- delta-log commit: O(batch), never O(table) ------------------
     // New rows = replacement rows for matched keys + created rows.
     // They extend (latest-wins) the database's node delta when the
@@ -3312,10 +3377,8 @@ final class GraftSession(val spark: SparkSession,
     // node frame is base ⟵anti⟶ delta ∪ delta, so reads-after-write
     // resolve through the delta without any table rewrite. The delta
     // checkpoints EAGERLY, even in a transaction (see foldDeltaRows).
-    foldDeltaRows(db, DeltaSide.Nodes, updRows match {
-      case Some(u) => PropertyGraph.appendByName(u, missing)
-      case None    => missing
-    }, eager = true)
+    (updRows ++ missing).reduceOption(PropertyGraph.appendByName)
+      .foreach(foldDeltaRows(db, DeltaSide.Nodes, _, eager = true))
     unit()
   }
 
@@ -3980,13 +4043,14 @@ final class GraftSession(val spark: SparkSession,
     *  - a SET item on anything but a merged relationship variable;
     *  - a list or map literal SET value (a parameter), before any
     *    lookup;
-    *  - a SET value [[DriverEval]] declines, or whose type does not fit
-    *    the column;
+    *  - a SET value whose type does not fit the column;
     *  - an ambiguous endpoint key, a key column type the driver cannot
     *    canonicalize, or more than 100k collected rows;
     *  - base hit rows sharing an eid.
-    * Pure until the final state assignment: a None bail leaves nothing
-    * half-committed, not even an allocated eid. Otherwise returns
+    * SET values come from one [[setValues]] projection per hop; a value
+    * Spark raises on raises here, as on the distributed path. Pure
+    * until the final state assignment: a None bail or a raise leaves
+    * nothing half-committed, not even an allocated eid. Otherwise returns
     * whether it wrote a row: nothing binding is a no-op (MATCH drops
     * every row), and so is a hit without ON MATCH items. */
   private def mutateRelUpsertBuffered(db: GraphDatabase, elems: Seq[Any],
@@ -4016,11 +4080,9 @@ final class GraftSession(val spark: SparkSession,
             case ast.VarRefValue(_) | ast.PropRefValue(_, _) |
                  ast.SubscriptRefValue(_, _, _) => return None
             case v =>
-              val nv = DriverEval.canon(norm(v))
-              DriverEval.typeOf(nv) match {
-                case Some(LongType | DoubleType | StringType | BooleanType) => (k, nv)
-                case _ => return None
-              }
+              val nv = DeltaBuffer.canon(norm(v))
+              if (nv == null || !DeltaBuffer.scalar(nv)) return None
+              (k, nv)
           }
         }
         Hop(s, d, rel.types.head, rel.variable.getOrElse(s"_anon$i"), props)
@@ -4034,24 +4096,16 @@ final class GraftSession(val spark: SparkSession,
         s"$k=${v.getClass.getSimpleName}:$v" }.mkString(",")
     val relVarHop: Map[String, Int] = m.pattern.hops.zipWithIndex
       .flatMap { case ((rel, _), i) => rel.variable.map(_ -> i) }.toMap
-    // SET items must target a merged rel var, with values the driver
-    // evaluator takes over that rel's own properties; a list or map
-    // literal (a parameter) fits no buffered column, so it declines
-    // here, before any lookup runs
+    // SET items must target a merged rel var; a list or map literal (a
+    // parameter) fits no buffered column, so it declines here, before
+    // any lookup runs
     def scalarLit(e: ast.Expr): Boolean = e match {
-      case ast.Lit(v) => DriverEval.typeOf(DriverEval.canon(norm(v))).exists {
-        case NullType | LongType | DoubleType | StringType | BooleanType => true
-        case _ => false
-      }
+      case ast.Lit(v) => DeltaBuffer.scalar(DeltaBuffer.canon(norm(v)))
       case _ => true
     }
     def itemsOf(items: Seq[(ast.Prop, ast.Expr)]): Option[Seq[(Int, String, ast.Expr)]] = {
       val mapped = items.map {
-        case (ast.Prop(v, k), e) if relVarHop.contains(v) && scalarLit(e) &&
-            DriverEval.covers(e, {
-              case ast.Prop(`v`, _) => true
-              case _ => false
-            }) => (relVarHop(v), k, e)
+        case (ast.Prop(v, k), e) if relVarHop.contains(v) && scalarLit(e) => (relVarHop(v), k, e)
         case _ => return None
       }
       Some(mapped)
@@ -4085,7 +4139,7 @@ final class GraftSession(val spark: SparkSession,
     // ---- 1. bind endpoints (cached while the node frame is stable) --
     var bindCache: Map[(Seq[String], Seq[String], Seq[Any]), Option[Long]] =
       if (buf0.nodeBindRef.exists(_ eq g.nodes)) buf0.nodeBind else Map.empty
-    def tupleOf(v: String, e: Any): Seq[Any] = perVar(v)._2.map { case (_, get) => DriverEval.canon(get(e)) }
+    def tupleOf(v: String, e: Any): Seq[Any] = perVar(v)._2.map { case (_, get) => DeltaBuffer.canon(get(e)) }
     // one lookup per endpoint shape: variables with the same labels and
     // key names (apoc.merge.relationship's two ids) bind together
     def shapeOf(v: String): (Seq[String], Seq[String]) = (perVar(v)._1, perVar(v)._2.map(_._1))
@@ -4103,7 +4157,7 @@ final class GraftSession(val spark: SparkSession,
         val found = pruned.select((keyNames.map(col) :+ col("id")): _*).collect()
         if (found.length > 100000) return None
         val byTuple = found.groupBy(r =>
-          keyNames.indices.map(i => DriverEval.canon(r.get(i))): Seq[Any])
+          keyNames.indices.map(i => DeltaBuffer.canon(r.get(i))): Seq[Any])
         if (byTuple.valuesIterator.exists(_.length > 1)) return None // ambiguous key
         need.foreach { t =>
           bindCache += (cacheKey(t) ->
@@ -4138,7 +4192,7 @@ final class GraftSession(val spark: SparkSession,
     val baseIdx = baseSchema.fieldNames.zipWithIndex.toMap
     // canonical scalar compare for prop-identity matching (the driver
     // form of the distributed path's `col(k) <=> lit(v)`)
-    def propMatches(value: Any, want: Any): Boolean = DriverEval.canon(value) == DriverEval.canon(want)
+    def propMatches(value: Any, want: Any): Boolean = DeltaBuffer.canon(value) == DeltaBuffer.canon(want)
     val pairRows: Seq[Map[(Long, Long), Seq[(Long, Map[String, Any])]]] =
       hops.zipWithIndex.map { case (h, i) =>
         val pairs = hopPairs(i)
@@ -4200,45 +4254,29 @@ final class GraftSession(val spark: SparkSession,
       hops.zipWithIndex.forall { case (h, i) => pairRows(i).contains(pairOf(c, h)) }
     }
 
-    // ---- 4. evaluate SET driver-side (exact node-path discipline) ---
-    val colType = DriverEval.colType(baseSchema, buf0.colTypes) _
+    // ---- 4. SET values: one projection per hop ---------------------
+    // A hop's rows — the pre-existing edges of HIT bindings (ON MATCH)
+    // and its created edges (pattern props land first, then ON CREATE
+    // may overwrite them) — form one LocalRelation, and [[setValues]]
+    // projects the hop's items over it. `updatedAcc` threads earlier
+    // hops' updates into later hops touching the same edge row (the
+    // distributed path's `working` overlay, driver form). A created
+    // edge reads only its endpoints, type and eid, as on the
+    // distributed path. Folded base pairs settle.
+    val colType = DeltaBuffer.colType(baseSchema, buf0.colTypes) _
+    val known = DeltaBuffer.known(baseSchema, buf0.colTypes) _
     var typeOk = true
-    // a SET item's value over the row `cur` of relationship `rv`; an
-    // absent property reads null. A null into a column neither the
-    // frame nor the buffer knows stays out of the row (it reads null
-    // all the same), so it fixes no column type for a later value.
-    val known = DriverEval.known(baseSchema, buf0.colTypes) _
-    def setItem(cur: collection.mutable.Map[String, Any], rv: String, k: String,
-        e: ast.Expr): Unit =
-      DriverEval.eval(e, {
-        case ast.Prop(`rv`, p) => Some((cur.getOrElse(p, null), known(p).getOrElse(NullType)))
-        case _ => None
-      }).flatMap { case (v, _) => DriverEval.fits(v, colType(k, v)) } match {
+    // a null into a column neither the frame nor the buffer knows stays
+    // out of the row (it reads null all the same), so it fixes no
+    // column type for a later value
+    def put(cur: collection.mutable.Map[String, Any], k: String, v: Any): Unit =
+      DeltaBuffer.fits(v, colType(k, v)) match {
         case Some(null) if known(k).isEmpty => cur -= k
         case Some(cv) => cur(k) = cv
         case None     => typeOk = false
       }
-    // ON MATCH per hop, applied to the pre-existing edges of HIT
-    // bindings; `updatedAcc` threads earlier hops' updates into later
-    // hops touching the same edge row (the distributed path's
-    // `working` overlay, driver form). Folded base pairs settle.
+    val edgeFields = PropertyGraph.edgeBaseSchema.fields.toSeq
     val updatedAcc = collection.mutable.LinkedHashMap.empty[Long, Map[String, Any]]
-    hops.zipWithIndex.foreach { case (h, i) =>
-      val items = onMatch.collect { case (`i`, k, e) => (k, e) }
-      if (items.nonEmpty) {
-        val hitPairs = hitCands.map(c => pairOf(c, h)).distinct
-        hitPairs.foreach { p =>
-          pairRows(i).getOrElse(p, Nil).foreach { case (eid, row0) =>
-            val cur = collection.mutable.LinkedHashMap.empty[String, Any]
-            updatedAcc.getOrElse(eid, row0).foreach { case (n, v) => cur(n) = v }
-            items.foreach { case (k, e) => setItem(cur, h.relVar, k, e) }
-            updatedAcc(eid) = cur.toMap
-          }
-          settled += ((idSig(h), p._1, p._2))
-        }
-      }
-    }
-    val replacements = updatedAcc.toSeq
     // misses create EVERY hop (whole-pattern create), per-hop pairs
     // deduped in batch order; eids mint contiguously in hop order from
     // the allocator's next value, allocated once nothing can decline
@@ -4246,20 +4284,54 @@ final class GraftSession(val spark: SparkSession,
     val eidBase = db.nextRelId.get()
     val created = collection.mutable.ArrayBuffer.empty[(Long, Map[String, Any])]
     hops.zipWithIndex.foreach { case (h, i) =>
-      val createPairs = collection.mutable.LinkedHashSet.empty[(Long, Long)]
-      missCands.foreach(c => createPairs += pairOf(c, h))
-      createPairs.foreach { case (s, d) =>
-        val eid = eidBase + created.size
-        val cur = collection.mutable.LinkedHashMap[String, Any](
-          "src" -> s, "dst" -> d, "relType" -> h.relType, "eid" -> eid)
-        // pattern props land first; ON CREATE may overwrite them
-        // (the distributed createCols fold order)
-        h.props.foreach { case (k, v) => setItem(cur, h.relVar, k, ast.Lit(v)) }
-        onCreate.collect { case (`i`, k, e) => (k, e) }.foreach { case (k, e) =>
-          setItem(cur, h.relVar, k, e) }
-        created += ((eid, cur.toMap))
+      def items(of: Seq[(Int, String, ast.Expr)]) =
+        of.collect { case (`i`, k, e) => (ast.Prop(h.relVar, k), e) }
+      val matchItems = items(onMatch)
+      val hitRows = if (matchItems.isEmpty) Nil
+        else hitCands.map(c => pairOf(c, h)).distinct.flatMap { p =>
+          settled += ((idSig(h), p._1, p._2))
+          pairRows(i).getOrElse(p, Nil).map { case (eid, row0) =>
+            (eid, updatedAcc.getOrElse(eid, row0)) }
+        }
+      val firstEid = eidBase + created.size
+      val newRows = missCands.map(c => pairOf(c, h)).distinct.zipWithIndex.map { case ((s, d), j) =>
+        firstEid + j -> Map[String, Any]("src" -> s, "dst" -> d, "relType" -> h.relType, "eid" -> (firstEid + j))
+      }
+      // as on the distributed path: ON MATCH items always, the created
+      // edges' items when the pattern misses
+      val cItems = if (newRows.isEmpty) Nil
+        else h.props.map { case (k, v) => (ast.Prop(h.relVar, k), ast.Lit(v)) } ++ items(onCreate)
+      // hit rows carry the properties ON MATCH reads as `_cur_` columns
+      val curCols = matchItems.flatMap { case (_, e) => ast.reads(e) }.collect {
+        case ast.Prop(v, k) if v == h.relVar && !edgeFields.exists(_.name == k) => k
+      }.distinct.flatMap { k =>
+        known(k).orElse(hitRows.iterator.map(_._2.getOrElse(k, null)).find(_ != null)
+          .map(PropertyGraph.literalType)).map(t => k -> StructField(s"_cur_$k", t))
+      }
+      def row(r: Map[String, Any], group: Int, cur: Boolean): Row = Row.fromSeq(
+        edgeFields.map(f => r(f.name)) ++ (group +: curCols.map(c => if (cur) r.getOrElse(c._1, null) else null)))
+      def ownRead(cols: Seq[(String, StructField)]): PartialFunction[ast.Expr, org.apache.spark.sql.Column] = {
+        case ast.Prop(v, k) if v == h.relVar && !edgeFields.exists(_.name == k) =>
+          cols.find(_._1 == k).fold(lit(null))(c => col(c._2.name))
+      }
+      val values = setValues(hitRows.size + newRows.size, spark.createDataFrame(
+          javaList(hitRows.map(r => row(r._2, 0, cur = true)) ++ newRows.map(r => row(r._2, 1, cur = false))),
+          StructType(edgeFields ++ (StructField("_sg", IntegerType) +: curCols.map(_._2)))),
+        h.relVar, isRel = true, Seq(
+          SetGroup(col("_sg") === 0, matchItems, ownRead(curCols), folded = true),
+          SetGroup(col("_sg") === 1, cItems, ownRead(Nil), folded = true)))
+      (hitRows ++ newRows).zip(values).zipWithIndex.foreach { case (((eid, r), vs), j) =>
+        val cur = collection.mutable.LinkedHashMap.from(r)
+        if (j < hitRows.size) {
+          matchItems.zip(vs).foreach { case ((p, _), v) => put(cur, p.key, v) }
+          updatedAcc(eid) = cur.toMap
+        } else {
+          cItems.zip(vs.drop(matchItems.size)).foreach { case ((p, _), v) => put(cur, p.key, v) }
+          created += ((eid, cur.toMap))
+        }
       }
     }
+    val replacements = updatedAcc.toSeq
     if (!typeOk) return None
     db.allocateRel(created.size.toLong)
 
@@ -4353,7 +4425,7 @@ final class GraftSession(val spark: SparkSession,
     // ---- driver-buffered edge delta (fast path) ----------------------
     // The relationship mirror of mutateUnwindMerge's write buffer: a
     // bounded literal batch upserting directed typed hops, with SET
-    // values the driver evaluator takes, commits via a LocalRelation edge
+    // values that fit the buffered columns, commits via a LocalRelation edge
     // delta — endpoint binding, existence and SET all resolve on the
     // driver against the buffer + settled-pair cache, so a burst costs
     // at most a couple of isin-pruned lookups per call and a rerun

@@ -3,7 +3,7 @@ package graft.core
 import scala.collection.immutable.VectorMap
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.sql.types._
 
 /** Driver-local write buffer of one delta-log side: present when the
   * delta lives as a LocalRelation over `rows` (bounded batches whose
@@ -19,6 +19,50 @@ sealed trait DeltaBuffer[B] {
   def rows: VectorMap[Long, Map[String, Any]]
   def withLog(colTypes: VectorMap[String, DataType],
       rows: VectorMap[Long, Map[String, Any]]): B
+}
+
+/** The column rules of a write buffer: which driver values a buffered
+  * column holds and with which type. A value that fits no column sends
+  * the write down the distributed path. */
+object DeltaBuffer {
+  /** The canonical driver form of a scalar: narrow integers widen to
+    * Long, Float to Double. Keys compare in this form. */
+  def canon(v: Any): Any = v match {
+    case i: java.lang.Integer => i.longValue
+    case s: java.lang.Short   => s.longValue
+    case b: java.lang.Byte    => b.longValue
+    case f: java.lang.Float   => f.doubleValue
+    case other                => other
+  }
+
+  /** Whether a canonical value is one a buffered column can hold. */
+  def scalar(v: Any): Boolean = v match {
+    case null | _: Long | _: Double | _: String | _: Boolean => true
+    case _ => false
+  }
+
+  /** `v` as a buffered column of type `t` holds it; None when it does
+    * not fit (the write then takes the distributed path). `t` is only
+    * asked for a scalar. */
+  def fits(v: Any, t: => DataType): Option[Any] = if (!scalar(v)) None else (v, t) match {
+    case (null, _)                 => Some(null)
+    case (x: Long, LongType)       => Some(x)
+    case (x: Long, DoubleType)     => Some(x.toDouble)
+    case (x: Double, DoubleType)   => Some(x)
+    case (x: String, StringType)   => Some(x)
+    case (x: Boolean, BooleanType) => Some(x)
+    case _                         => None
+  }
+
+  /** The column type of a buffered write: the frame's type when it has
+    * the column, else the write buffer's, else the value's. */
+  def colType(schema: StructType, buffered: collection.Map[String, DataType])(
+      name: String, v: Any): DataType =
+    known(schema, buffered)(name).getOrElse(PropertyGraph.literalType(v))
+
+  def known(schema: StructType, buffered: collection.Map[String, DataType])(
+      name: String): Option[DataType] =
+    schema.fields.find(_.name == name).map(_.dataType).orElse(buffered.get(name))
 }
 
 /** Node write buffer. `settled` caches merge keys whose BASE lookup is

@@ -250,17 +250,22 @@ object ast {
 
   /** The property and variable leaves an expression reads, through the
     * operators, CASE, lists, subscripts, maps and function arguments
-    * (the SET-value shapes); other forms read nothing here. */
-  def reads(e: Expr): Seq[Expr] = e match {
-    case _: Prop | _: Variable => Seq(e)
-    case Arith(_, l, r)        => reads(l) ++ reads(r)
-    case Cmp(_, l, r)          => reads(l) ++ reads(r)
-    case CaseExpr(ws, o)       => ws.flatMap { case (c, v) => reads(c) ++ reads(v) } ++ o.toSeq.flatMap(reads)
-    case Subscript(b, i)       => reads(b) ++ reads(i)
-    case ListLit(items)        => items.flatMap(reads)
-    case MapLit(items)         => items.flatMap { case (_, v) => reads(v) }
-    case FnCall(_, args, _)    => args.flatMap(reads)
-    case _                     => Nil
+    * (the SET-value shapes); other forms read nothing here. A `leaf`
+    * expression counts as one read, whole. */
+  def reads(e: Expr, leaf: Expr => Boolean = _ => false): Seq[Expr] = {
+    def go(e: Expr): Seq[Expr] = e match {
+      case _ if leaf(e)          => Seq(e)
+      case _: Prop | _: Variable => Seq(e)
+      case Arith(_, l, r)        => go(l) ++ go(r)
+      case Cmp(_, l, r)          => go(l) ++ go(r)
+      case CaseExpr(ws, o)       => ws.flatMap { case (c, v) => go(c) ++ go(v) } ++ o.toSeq.flatMap(go)
+      case Subscript(b, i)       => go(b) ++ go(i)
+      case ListLit(items)        => items.flatMap(go)
+      case MapLit(items)         => items.flatMap { case (_, v) => go(v) }
+      case FnCall(_, args, _)    => args.flatMap(go)
+      case _                     => Nil
+    }
+    go(e)
   }
 
   def defaultName(e: Expr): String = e match {

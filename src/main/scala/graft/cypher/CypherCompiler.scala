@@ -2093,12 +2093,13 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
   // CALL … YIELD
   // ------------------------------------------------------------------
 
-  /** Driver-side constant evaluation for procedure arguments:
-    * literals, literal lists and maps, and arithmetic over literals
-    * through the SET-value evaluator (so `CALL gds.pageRank($iters +
-    * 1)` composes with parameters, which substitute to literals
-    * pre-compile, and `5 / 2` reads 2.5 as in RETURN). Non-constant
-    * expressions return None and are refused by the caller. */
+  /** Constant evaluation for procedure arguments: literals, literal
+    * lists and maps, and arithmetic over literals, which Spark itself
+    * evaluates over a one-row LocalRelation on the driver, without a
+    * job (so `CALL gds.pageRank($iters + 1)` composes with parameters,
+    * which substitute to literals pre-compile, and `5 / 2` reads 2.5
+    * as in RETURN). Expressions that read a variable return None and
+    * are refused by the caller. */
   private def constEval(e: Expr): Option[Any] = e match {
     case Lit(v) => Some(v)
     case ListLit(items) =>
@@ -2107,7 +2108,13 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
     case MapLit(items) =>
       val vs = items.map { case (k, v) => constEval(v).map(k -> _) }
       if (vs.forall(_.isDefined)) Some(vs.flatten.toMap) else None
-    case a: Arith => DriverEval.eval(a, _ => None).map(_._1)
+    case a: Arith if reads(a).isEmpty =>
+      val one = spark.createDataFrame(java.util.List.of(org.apache.spark.sql.Row.empty),
+        org.apache.spark.sql.types.StructType(Nil))
+      Some(one.select(compileExpr(a, one)).collect().head.get(0) match {
+        case xs: scala.collection.Seq[_] => xs.toList
+        case v => v
+      })
     case _ => None
   }
 

@@ -3734,7 +3734,10 @@ class CypherSpec extends AnyFunSuite {
       ("rel ||", rel("r.c || 'y'"), "7y", true),
       ("node null +", node("n.missing + 1"), null, true),
       ("rel list +", rel("[r.c] + [1]"), Seq(7L, 1L), false),
-      // the evaluator declines; both paths raise Spark's ANSI error
+      // a float rendered as a string: Spark's own rendering, buffered
+      ("node float string +", node("n.c * 0.5 + 'x'"), "2.5x", true),
+      ("rel float string +", rel("r.c * 0.5 + 'x'"), "3.5x", true),
+      // both paths raise Spark's ANSI error
       ("node overflow", node("n.c + 9223372036854775807"), null, false),
       ("rel zero divisor", rel("r.c % 0"), null, false),
       // the second write no longer fits the buffered LONG column
@@ -3801,8 +3804,12 @@ class CypherSpec extends AnyFunSuite {
       }
       val r = Try(c.cypher(s"UNWIND $batch AS x MERGE (n:pz {k: x}) ON CREATE SET n.q = x / 0 " +
         s"ON MATCH SET $onMatch").collect())
-      assert(r.failed.toOption.exists(_.isInstanceOf[UnsupportedOperationException]),
-        s"$batch / $onMatch / distributed $distributed: $r")
+      assert(r.failed.toOption.exists {
+        // SparkArithmeticException is private to Spark: match its parts
+        case e: ArithmeticException with org.apache.spark.SparkThrowable =>
+          e.getClass.getSimpleName == "SparkArithmeticException" && e.getCondition == "DIVIDE_BY_ZERO"
+        case _ => false
+      }, s"$batch / $onMatch / distributed $distributed: $r")
       assert(read(c, 2, "k") == Nil && read(c, 1, "k") == Seq(1L))
     }
     // and a distributed run whose keys all exist writes ON MATCH
@@ -3813,22 +3820,48 @@ class CypherSpec extends AnyFunSuite {
   }
 
   test("UNWIND … MERGE ON CREATE reads a batch row's list elements by their own types") {
-    // a parameter row may mix element types; the create branch has no
-    // distributed twin, so the driver evaluator must take it
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    // a parameter row may mix element types: each constant subscript
+    // binds as its own column, typed by its own values
     val s = new GraftSession(spark)
     s.cypher("UNWIND $rows AS row MERGE (n:mixrow {k: row[0]}) " +
       "ON CREATE SET n.name = row[1], n.next = row[0] + 1",
       Map("rows" -> Seq(Seq(1L, "a"), Seq(2L, "b"))))
     assert(s.cypher("MATCH (n:mixrow) RETURN n.k AS k, n.name AS name, n.next AS next ORDER BY k")
       .collect().map(_.toString).toSeq == Seq("[1,a,2]", "[2,b,3]"))
+    // ON MATCH reads them the same way through the write buffer and,
+    // after a distributed delta, through the distributed join
+    for (distributed <- Seq(false, true)) {
+      val d = new GraftSession(spark)
+      d.setGraph(graft.core.PropertyGraph(spark.createDataFrame(
+        java.util.Arrays.asList(Row(1L, Seq("pz"), 1L)),
+        StructType(Seq(StructField("id", LongType, nullable = false),
+          StructField("labels", ArrayType(StringType), nullable = false), StructField("k", LongType)))),
+        spark.createDataFrame(java.util.Collections.emptyList[Row](),
+          graft.core.PropertyGraph.edgeBaseSchema)))
+      if (distributed) d.cypher("MATCH (n:pz) SET n.z = n.k * 2").collect()
+      assert(d.catalog.database("neo4j").validNodeDelta.exists(_.buf.isEmpty) == distributed)
+      d.cypher("UNWIND $rows AS row MERGE (n:pz {k: row[0]}) " +
+        "ON MATCH SET n.name = row[1], n.nx = row[0] + 1", Map("rows" -> Seq(Seq(1L, "a"))))
+      assert(d.cypher("MATCH (n:pz) RETURN n.name AS name, n.nx AS nx")
+        .collect().map(_.toString).toSeq == Seq("[a,2]"), s"distributed $distributed")
+      // a non-constant subscript reads the whole row, which has no one
+      // element type: a clear refusal, not a ClassCastException
+      val err = intercept[UnsupportedOperationException](d.cypher(
+        "UNWIND $rows AS row MERGE (n:pz {k: row[0]}) ON MATCH SET n.last = row[size(row) - 1]",
+        Map("rows" -> Seq(Seq(1L, "a")))).collect())
+      assert(err.getMessage.contains("mixes value types"), err.getMessage)
+    }
   }
 
   test("driver SET-value evaluator agrees with setValueColumn on generated values and operators") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     import org.scalacheck.{Gen, rng}
-    import graft.cypher.{DriverEval, ast}
-    // one row whose columns hold typed operands (`n.<col>` reads them
+    import graft.cypher.ast
+    import scala.util.{Failure, Success, Try}
+    // one node whose columns hold typed operands (`n.<col>` reads them
     // with their column type, nulls included), beside literal operands
     val cols: Seq[(String, DataType, Any)] = Seq(
       ("z", LongType, 0L), ("seven", LongType, 7L), ("neg", LongType, -3L),
@@ -3837,11 +3870,17 @@ class CypherSpec extends AnyFunSuite {
       ("flag", BooleanType, true), ("ln", LongType, null), ("sn", StringType, null),
       ("dn", DoubleType, null), ("xs", ArrayType(LongType), Seq(1L, 2L)),
       ("ss", ArrayType(StringType), Seq("p", null)), ("xn", ArrayType(LongType), null))
-    val typeOf = cols.map(c => c._1 -> c._2).toMap
-    val valueOf = cols.map(c => c._1 -> c._3).toMap
-    val schema = StructType(StructField("id", LongType) +: cols.map(c => StructField(c._1, c._2)))
-    val row = spark.createDataFrame(java.util.Arrays.asList(Row.fromSeq(0L +: cols.map(_._3))), schema)
-    val s = new GraftSession(spark)
+    def fresh(): GraftSession = {
+      val s = new GraftSession(spark)
+      s.setGraph(graft.core.PropertyGraph(spark.createDataFrame(
+        java.util.Arrays.asList(Row.fromSeq(Seq(1L, Seq("gen"), 1L) ++ cols.map(_._3))),
+        StructType(Seq(StructField("id", LongType, nullable = false),
+          StructField("labels", ArrayType(StringType), nullable = false),
+          StructField("k", LongType)) ++ cols.map(c => StructField(c._1, c._2)))),
+        spark.createDataFrame(java.util.Collections.emptyList[Row](),
+          graft.core.PropertyGraph.edgeBaseSchema)))
+      s
+    }
     val ops = Seq("+", "-", "*", "/", "%", "||")
     val leaf: Gen[ast.Expr] = Gen.frequency(
       6 -> Gen.oneOf(0L, 1L, 2L, 7L, -3L, Long.MaxValue - 2, Long.MinValue + 2).map(ast.Lit(_)),
@@ -3858,38 +3897,107 @@ class CypherSpec extends AnyFunSuite {
       l  <- if (depth == 1) leaf else Gen.frequency(1 -> leaf, 1 -> expr(depth - 1))
       r  <- if (depth == 1) leaf else Gen.frequency(1 -> leaf, 1 -> expr(depth - 1))
     } yield ast.Arith(op, l, r)
+    def text(e: ast.Expr): String = e match {
+      case ast.Lit(null)        => "null"
+      case ast.Lit(x: String)   => s"'$x'"
+      case ast.Lit(x)           => x.toString
+      case ast.ListLit(xs)      => xs.map(text).mkString("[", ", ", "]")
+      case ast.Prop(v, k)       => s"$v.$k"
+      case ast.Arith(op, l, r)  => s"(${text(l)} $op ${text(r)})"
+      case other                => fail(s"no text for $other")
+    }
     def same(a: Any, b: Any): Boolean = (a, b) match {
       case (x: Double, y: Double)                       => java.lang.Double.compare(x, y) == 0
       case (x: scala.collection.Seq[_], y: scala.collection.Seq[_]) =>
         x.size == y.size && x.zip(y).forall { case (p, q) => same(p, q) }
       case _                                            => a == b
     }
+    // the Spark error condition a failed statement raised
+    def condition(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).collectFirst {
+        case e: org.apache.spark.SparkThrowable if e.getCondition != null => e.getCondition
+      }.getOrElse(fail(s"no Spark error condition in $t", t))
     val exprs = Gen.listOfN(800, expr(2)).apply(Gen.Parameters.default, rng.Seed(10L)).get
-    var accepted = 0
-    val valued = collection.mutable.Map.empty[String, Int].withDefaultValue(0)
-    exprs.foreach { e =>
-      DriverEval.eval(e, {
-        case ast.Prop("n", k) => Some((valueOf(k), typeOf(k)))
-        case _                => None
-      }).foreach { case (v, t) =>
-        accepted += 1
-        if (v != null) valued(e.asInstanceOf[ast.Arith].op) += 1
-        val out = scala.util.Try(row.select(s.setValueColumn(row, "n", isRel = false, e).as("v")))
-          .flatMap(df => scala.util.Try((df.collect().head.get(0), df.schema.head.dataType)))
-        out match {
-          case scala.util.Failure(err) =>
-            fail(s"$e: the evaluator gave $v but the distributed path raised $err")
-          case scala.util.Success((sv, st)) =>
-            assert(same(v, sv), s"$e: evaluator $v, distributed $sv")
-            if (v != null) assert(t.catalogString == st.catalogString,
-              s"$e: evaluator type $t, distributed type $st")
+    def set(ix: Seq[Int]) = ix.map(i => s"n.v_$i = ${text(exprs(i))}").mkString(", ")
+    def write(s: GraftSession, viaBuffer: Boolean, ix: Seq[Int]): Try[Unit] = Try(s.cypher(
+      if (viaBuffer) s"UNWIND [1] AS x MERGE (n:gen {k: x}) ON MATCH SET ${set(ix)}"
+      else s"MATCH (n:gen {k: 1}) SET ${set(ix)}").collect()).map(_ => ())
+    def read(s: GraftSession, ix: Seq[Int]): Seq[(Any, DataType)] = {
+      val df = s.cypher("MATCH (n:gen {k: 1}) RETURN " + ix.map(i => s"n.v_$i AS v_$i").mkString(", "))
+      val row = df.collect().head
+      ix.indices.map(j => (row.get(j) match {
+        case xs: scala.collection.Seq[_] => xs.toSeq
+        case v => v
+      }, df.schema(j).dataType))
+    }
+    // Spark's own evaluation of each expression over the fixture row
+    // sorts them: the ones that raise, and the rest with their value.
+    // The sort on a constant makes Spark fold constant parts before it
+    // evaluates the row, as in a distributed plan (a one-row
+    // LocalRelation is otherwise evaluated first); it is then dropped
+    val row = fresh().catalog.database("neo4j").graph.nodes.orderBy(org.apache.spark.sql.functions.lit(true))
+    val want: Map[Int, Either[String, (Any, DataType)]] = exprs.indices.map { i =>
+      i -> Try(row.select(new GraftSession(spark).setValueColumn(row, "n", isRel = false, exprs(i))))
+        .flatMap(df => Try((df.collect().head.get(0) match {
+          case xs: scala.collection.Seq[_] => xs.toSeq
+          case v => v
+        }, df.schema.head.dataType))).toEither.left.map(condition)
+    }.toMap
+    val (raising, valued) = exprs.indices.partition(want(_).isLeft)
+    val (lists, scalars) = valued.partition(i => want(i).exists(_._2.isInstanceOf[ArrayType]))
+    val nonNull = collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    def agree(s: GraftSession, ix: Seq[Int], path: String): Unit =
+      ix.zip(read(s, ix)).foreach { case (i, (v, t)) =>
+        val (wv, wt) = want(i).toOption.get
+        assert(same(v, wv), s"${text(exprs(i))}: $path read $v, Spark computes $wv")
+        if (v != null) {
+          assert(t.catalogString == wt.catalogString, s"${text(exprs(i))}: $path type $t, Spark's $wt")
+          if (path == "buffered") nonNull(exprs(i).asInstanceOf[ast.Arith].op) += 1
         }
       }
+    def holdsBuffer(s: GraftSession) =
+      s.catalog.database("neo4j").validNodeDelta.flatMap(_.buf).isDefined
+    // scalar values, many SET items per statement: through the write
+    // buffer, which the session still holds after each write, and
+    // through the general path. `MATCH … SET` folds each item on its
+    // own, so the general path here is the distributed ON MATCH of the
+    // same statement, which projects every item in one fold
+    val buffered = fresh()
+    scalars.grouped(50).foreach { ix =>
+      val w = write(buffered, viaBuffer = true, ix)
+      assert(w.isSuccess && holdsBuffer(buffered), s"buffered write of ${ix.map(i => text(exprs(i)))}: $w")
+      agree(buffered, ix, "buffered")
+      val general = fresh()
+      general.cypher("MATCH (n:gen) SET n.d = n.k * 2").collect()
+      val gw = write(general, viaBuffer = true, ix)
+      assert(gw.isSuccess && !holdsBuffer(general), s"general write: $gw")
+      agree(general, ix, "general")
+    }
+    // list values fit no buffered column: the write takes the general path
+    if (lists.nonEmpty) {
+      val listed = fresh()
+      assert(write(listed, viaBuffer = true, lists).isSuccess && !holdsBuffer(listed))
+      agree(listed, lists, "general")
+    }
+    // an expression Spark raises on raises on both paths, one statement
+    // each, with Spark's condition; a raise writes nothing, so the
+    // buffered session keeps its write buffer
+    val general = fresh()
+    raising.foreach { i =>
+      Seq(buffered -> true, general -> false).foreach { case (s, viaBuffer) =>
+        write(s, viaBuffer, Seq(i)) match {
+          case Success(_) => fail(s"${text(exprs(i))}: Spark raises ${want(i)}, the write succeeded")
+          case Failure(t) => assert(Left(condition(t)) == want(i),
+            s"${text(exprs(i))}: ${if (viaBuffer) "buffered" else "general"} path raised " +
+              s"${condition(t)}, Spark raises ${want(i)}")
+        }
+      }
+      assert(holdsBuffer(buffered), s"${text(exprs(i))}: a raising write dropped the write buffer")
     }
     // the check is not vacuous: every operator yields values, and some
-    // expressions are declined
-    assert(ops.forall(valued(_) >= 10) && accepted < exprs.size,
-      s"$accepted of ${exprs.size} evaluated, non-null per operator: $valued")
+    // expressions raise
+    assert(ops.forall(nonNull(_) >= 10) && raising.nonEmpty,
+      s"${raising.size} of ${exprs.size} raised, non-null per operator: $nonNull")
   }
 
   test("edge buffer under transactions: ROLLBACK discards buffered merges, COMMIT publishes them") {

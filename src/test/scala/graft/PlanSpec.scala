@@ -1141,13 +1141,17 @@ class PlanSpec extends AnyFunSuite {
     // one driver-side row cap
     assert(holders(all, "limit(1000" + "1)").isEmpty,
       "a hand-copied bounded collect: use DeltaSide.collectBounded")
-    // one driver SET-value evaluator: its arithmetic and its column fit
-    // exist once, and apoc.merge.relationship shares the buffered
+    // one SET-value evaluator, Spark's: the buffered writes project
+    // setValueColumn over their driver rows, so no driver-side SET
+    // arithmetic exists; the buffered column fit exists once, beside
+    // the write buffer; and apoc.merge.relationship shares the buffered
     // relationship upsert instead of keeping its own
-    assert(occurrences(main, "=> x " + "/ y") == Map("DriverEval.scala" -> 1),
-      "a second driver SET-value evaluator: use DriverEval.eval")
-    assert(occurrences(main, "case (x: Long, " + "DoubleType)") == Map("DriverEval.scala" -> 1),
-      "a second buffered column fit: use DriverEval.fits")
+    assert(holders(main, "Driver" + "Eval").isEmpty,
+      "a driver SET-value evaluator: project setValueColumn (GraftSession.setValues)")
+    assert(holders(main, "=> x " + "/ y").isEmpty,
+      "driver-side SET arithmetic: project setValueColumn (GraftSession.setValues)")
+    assert(occurrences(main, "case (x: Long, " + "DoubleType)") == Map("DeltaLog.scala" -> 1),
+      "a second buffered column fit: use DeltaBuffer.fits")
     assert(holders(all, "mergeRelByIds" + "Buffered").isEmpty,
       "a second buffered relationship MERGE: use mutateRelUpsertBuffered")
   }
