@@ -2236,55 +2236,39 @@ final class GraftSession(val spark: SparkSession,
     }
   }
 
-  /** SET items of one [[setValues]] group: they apply to the rows `on`
-    * selects and read through `read`. `folded` when the distributed
-    * path projects them unguarded, so that Spark folds their constant
-    * parts before any row runs. */
-  private case class SetGroup(on: org.apache.spark.sql.Column, items: Seq[(ast.Prop, ast.Expr)],
-      read: PartialFunction[ast.Expr, org.apache.spark.sql.Column], folded: Boolean)
-
-  /** SET values for `n` rows the driver holds, by [[setValueColumn]]:
-    * every item of `groups` projects over `frame` (a LocalRelation of
-    * those rows) in ONE select, and `collect` evaluates it on the
-    * driver without a Spark job. A group's items apply to the rows its
-    * condition selects (null elsewhere), in order: an item reads the
-    * latest earlier item of its group that wrote the same property of
-    * `v`, else its group's bindings, else the frame's columns. Returns
-    * each row's values, all groups' items in order. When every item is
-    * a literal (parameters are substituted by now) there is nothing to
-    * project and `frame` is never built. A value Spark raises on raises
-    * here, before the caller writes anything. */
+  /** SET values for the `n` rows of `frame` (a LocalRelation of rows
+    * the driver holds), by [[setValueColumn]]: `items` project over it
+    * in ONE select, and `collect` evaluates it on the driver without a
+    * Spark job. In order: an item reads the latest earlier item that
+    * wrote the same property of `v`, else `read`, else the frame's
+    * columns. Returns each row's values. With no row, or when every
+    * item is a literal (parameters are substituted by now), there is
+    * nothing to project and `frame` is never built. A value Spark
+    * raises on raises here, before the caller writes anything. */
   private def setValues(n: Int, frame: => DataFrame, v: String, isRel: Boolean,
-      groups: Seq[SetGroup]): Seq[Seq[Any]] = {
-    import org.apache.spark.sql.functions.{lit, when}
-    val items = groups.flatMap(_.items)
+      items: Seq[(ast.Prop, ast.Expr)],
+      read: PartialFunction[ast.Expr, org.apache.spark.sql.Column]): Seq[Seq[Any]] = {
+    import org.apache.spark.sql.functions.lit
+    if (n == 0) return Nil
     if (items.forall(_._2.isInstanceOf[ast.Lit])) {
       val vs = items.map { case (_, e) => DeltaBuffer.canon(norm(e.asInstanceOf[ast.Lit].v)) }
       return Seq.fill(n)(vs)
     }
     val df = frame
-    val cols = groups.map { g =>
-      var written = Map.empty[ast.Expr, org.apache.spark.sql.Column]
-      g.items.map { case (p, e) =>
-        val c = setValueColumn(df, v, isRel, e, written.orElse(g.read))
-        written += (ast.Prop(v, p.key) -> c)
-        c
-      }
+    var written = Map.empty[ast.Expr, org.apache.spark.sql.Column]
+    val cols = items.map { case (p, e) =>
+      val c = setValueColumn(df, v, isRel, e, written.orElse(read))
+      written += (ast.Prop(v, p.key) -> c)
+      c
     }
     // Spark optimizes a distributed plan's values before any row runs:
     // it drops what a null makes moot (`'ab' * null`) and folds the
-    // constant parts, raising when a fold fails even where no row would
-    // evaluate it (a cast beside a null divisor). It evaluates a
-    // projection over a LocalRelation first, unless a node stands
+    // constant parts, raising where a fold fails. It evaluates a
+    // projection over a LocalRelation before that, unless a node stands
     // between them: the sort on a constant, which the optimizer drops
     // once the values are optimized, so they evaluate on the driver
-    // after all. The guards make folding lenient, so the groups the
-    // distributed path projects unguarded are optimized once more,
-    // unguarded, over a non-local child (the repartition); nothing runs.
-    val folded = groups.zip(cols).filter(_._1.folded).flatMap(_._2)
-    if (folded.nonEmpty) df.repartition(1).select(folded: _*).queryExecution.optimizedPlan
-    df.orderBy(lit(true)).select(groups.zip(cols).flatMap { case (g, cs) => cs.map(when(g.on, _)) }
-        .zipWithIndex.map { case (c, i) => c.as(s"_sv_$i") }: _*)
+    // after all, as the distributed path's would.
+    df.orderBy(lit(true)).select(cols.zipWithIndex.map { case (c, i) => c.as(s"_sv_$i") }: _*)
       .collect().toSeq.map(_.toSeq)
   }
 
@@ -2992,8 +2976,8 @@ final class GraftSession(val spark: SparkSession,
     * - SET values combine row fields, literals, arithmetic and the
     *   merge variable's own properties (`n.cnt + 1`); each batch-row
     *   read (a field, the row, a constant subscript `row[0]`) is a
-    *   column typed by its own values, and one whose values mix types
-    *   refuses;
+    *   column typed by its own values: integers beside floats widen to
+    *   float, and any other mix of types refuses;
     * - a value Spark raises on (zero divisor, overflow) raises on the
     *   buffered path as on the distributed one, before any write; ON
     *   CREATE runs over the created keys' rows only, so a key that
@@ -3075,23 +3059,40 @@ final class GraftSession(val spark: SparkSession,
         case ast.Prop(`alias`, _) | ast.Variable(`alias`) => true
         case r => constSub(r)
       }.distinct.zipWithIndex.map { case (r, i) => r -> s"$prefix$i" }
+    def shown(r: ast.Expr): String = r match {
+      case ast.Subscript(b, ast.Lit(i)) => s"${shown(b)}[$i]"
+      case ast.Prop(a, f)               => s"$a.$f"
+      case _                            => alias
+    }
     def readValue(elem: Any, r: ast.Expr): Any = r match {
       case ast.Subscript(b, ast.Lit(i: Long)) =>
         subscriptVal(elem, Some(b).collect { case ast.Prop(_, f) => f }, i, alias)
       case ast.Prop(_, f) => field(elem, f)
       case _              => norm(elem)
     }
-    // the one Spark type of a batch column's values; values of mixed
-    // types (a list's elements included) have none and refuse
-    def readType(what: String, vs: Iterable[Any]): DataType = {
-      val ts = vs.filter(_ != null).map {
-        case s: Seq[_] if s.filter(_ != null).map(PropertyGraph.literalType).distinct.size > 1 => null
-        case v => PropertyGraph.literalType(v)
-      }.toSeq.distinct
-      if (ts.size > 1 || ts.contains(null)) throw new UnsupportedOperationException(
-        s"$verb: `$what` mixes value types across the batch; a SET value reads a " +
-          s"mixed list only through constant subscripts like `$alias[0]`")
-      ts.headOption.getOrElse(StringType)
+    // the one Spark type of a batch column's values (a list's elements
+    // included): integers widen to float beside a float, as Spark's
+    // numeric coercion does ([[conform]] converts them); any other mix
+    // has none and refuses
+    def widen(a: Option[DataType], b: Option[DataType]): Option[DataType] = (a, b) match {
+      case (Some(x), Some(y)) if x == y => a
+      case (Some(LongType), Some(DoubleType)) | (Some(DoubleType), Some(LongType)) => Some(DoubleType)
+      case (Some(ArrayType(x, _)), Some(ArrayType(y, _))) => widen(Some(x), Some(y)).map(ArrayType(_))
+      case _ => None
+    }
+    def valueType(v: Any): Option[DataType] = v match {
+      case s: Seq[_] if s.exists(_ != null) =>
+        s.filter(_ != null).map(valueType).reduce(widen).map(ArrayType(_))
+      case _ => Some(PropertyGraph.literalType(v))
+    }
+    def readType(what: String, vs: Iterable[Any]): DataType =
+      vs.filter(_ != null).map(valueType).reduceOption(widen).getOrElse(Some(StringType))
+        .getOrElse(throw new UnsupportedOperationException(
+          s"$verb: `$what` mixes value types across the batch; a SET value reads a " +
+            s"mixed list only through constant subscripts like `$alias[0]`"))
+    def conform(v: Any, t: DataType): Any = (v, t) match {
+      case (s: Seq[_], ArrayType(et, _)) => s.map(conform(_, et))
+      case _                             => DeltaBuffer.fits(v, t).getOrElse(v)
     }
     val createCols = rowCols(m.onCreate, "_bc_")
     val matchCols = rowCols(m.onMatch, "_bf_")
@@ -3115,21 +3116,29 @@ final class GraftSession(val spark: SparkSession,
       throw new UnsupportedOperationException(
         s"duplicate keys in one $verb batch cannot compose with a SET " +
           "that reads the pattern variable's own properties")
-    def keyFields(prefix: String): Seq[StructField] = keyNames.zipWithIndex.map { case (kn, i) =>
-      StructField(prefix + kn, readType(kn, byKey.keysIterator.map(_(i)).toSeq)) }
-    def readFields(cols: Seq[(ast.Expr, String)], elemOf: ((Any, Any, Int)) => Any): Seq[StructField] =
-      cols.map { case (r, n) =>
-        StructField(n, readType(r.toString, byKey.valuesIterator.map(o => readValue(elemOf(o), r)).toSeq)) }
+    lazy val keyTypes = keyNames.zipWithIndex.map { case (kn, i) =>
+      readType(kn, byKey.keysIterator.map(_(i)).toSeq) }
+    def readTypes(cols: Seq[(ast.Expr, String)], elemOf: ((Any, Any, Int)) => Any): Seq[DataType] =
+      cols.map { case (r, _) => readType(shown(r), byKey.valuesIterator.map(o => readValue(elemOf(o), r)).toSeq) }
+    lazy val (createTypes, matchTypes) = (readTypes(createCols, _._1), readTypes(matchCols, _._2))
+    def keyFields(prefix: String): Seq[StructField] =
+      keyNames.lazyZip(keyTypes).map((kn, t) => StructField(prefix + kn, t))
+    def readFields(cols: Seq[(ast.Expr, String)], ts: Seq[DataType]): Seq[StructField] =
+      cols.lazyZip(ts).map((c, t) => StructField(c._2, t))
+    def keyRow(k: Seq[Any]): Seq[Any] = k.lazyZip(keyTypes).map(conform)
+    def readRow(elem: Any, cols: Seq[(ast.Expr, String)], ts: Seq[DataType]): Seq[Any] =
+      cols.lazyZip(ts).map((c, t) => conform(readValue(elem, c._1), t))
     // a created key's row: id, labels, key values and batch-row reads —
     // the buffered projection's created rows and the distributed
     // candidates alike; `_sg` is 2 when a repeated key also runs ON
     // MATCH on its own created row (row-only values: the n-reading
     // case was refused above)
     lazy val candFields = PropertyGraph.nodeBaseSchema.fields.toSeq ++ keyFields("") ++
-      readFields(createCols, _._1) ++ readFields(matchCols, _._2) :+ StructField("_sg", IntegerType)
+      readFields(createCols, createTypes) ++ readFields(matchCols, matchTypes) :+
+      StructField("_sg", IntegerType)
     def candRow(id: Long, k: Seq[Any], occ: (Any, Any, Int)): Seq[Any] =
-      Seq(id, np.labels) ++ k ++ createCols.map(c => readValue(occ._1, c._1)) ++
-        matchCols.map(c => readValue(occ._2, c._1)) :+ (if (occ._3 > 1) 2 else 1)
+      Seq(id, np.labels) ++ keyRow(k) ++ readRow(occ._1, createCols, createTypes) ++
+        readRow(occ._2, matchCols, matchTypes) :+ (if (occ._3 > 1) 2 else 1)
 
     val g = db.graph
     def labelCond(nodesDf: DataFrame): org.apache.spark.sql.Column =
@@ -3161,9 +3170,10 @@ final class GraftSession(val spark: SparkSession,
     // ---- driver-buffered delta (the fast path, r11 verdict #5) -------
     // A literal batch commits with ONE distributed action: an isin-
     // pruned lookup of the matched rows (collect — bounded by the batch
-    // size). The SET values of the matched and created rows come from
-    // ONE projection of the distributed path's own expression over a
-    // LocalRelation of those rows ([[setValues]]). Replacement and
+    // size). The SET values of the matched rows and of the created rows
+    // each come from one projection of the distributed path's own
+    // expression over a LocalRelation of those rows ([[setValues]]),
+    // and a clause that applies to no row projects nothing. Replacement and
     // created rows are assembled on the driver into an immutable,
     // insertion-ordered write buffer whose DataFrame is a LocalRelation
     // — so the commit itself runs no checkpoint job, and the read-side
@@ -3249,31 +3259,33 @@ final class GraftSession(val spark: SparkSession,
       val created = if (matchOnly) Nil else byKey.toSeq.zipWithIndex.collect {
         case ((k, occ), i) if !keyColsPresent || !matchedKeys.contains(k) => (createBase + i, k, occ)
       }
-      // the projection's rows: the created candidates' columns, and for
-      // a matched row (`_sg` 0) the node properties ON MATCH reads, as
-      // `_cur_` columns of the frame's type
+      // the projections' rows: the created candidates' columns, and for
+      // a matched row the node properties ON MATCH reads, as `_cur_`
+      // columns of the frame's type
       val known = DeltaBuffer.known(nodeSchema, bufColTypes) _
       val curCols = m.onMatch.flatMap { case (_, e) => ast.reads(e) }
         .collect { case ast.Prop(`mergeVar`, k) if k != "id" => k }.distinct
         .flatMap(k => known(k).map(t => k -> StructField(s"_cur_$k", t)))
-      def rows = matched.map { case (id, mrow) =>
-        Row.fromSeq(candRow(id, keyTuple(mrow), byKey(keyTuple(mrow))).init ++ (0 +:
-          curCols.map(c => mrow.getOrElse(c._1, null))))
-      } ++ created.map { case (id, k, occ) =>
-        Row.fromSeq(candRow(id, k, occ) ++ curCols.map(_ => null)) }
+      val schema = StructType(candFields ++ curCols.map(_._2))
+      def createdRow(c: (Long, Seq[Any], (Any, Any, Int))): Row =
+        Row.fromSeq(candRow(c._1, c._2, c._3) ++ curCols.map(_ => null))
       val curRead: PartialFunction[ast.Expr, org.apache.spark.sql.Column] = {
         case ast.Prop(`mergeVar`, k) if k != "id" =>
           curCols.find(_._1 == k).fold(lit(null))(c => col(c._2.name))
       }
-      // as on the distributed path, ON CREATE runs on created rows
-      // only, and ON MATCH folds like the distributed join's projection
-      val values = setValues(matched.size + created.size,
-        spark.createDataFrame(javaList(rows), StructType(candFields ++ curCols.map(_._2))),
-        mergeVar, isRel = false, Seq(
-          SetGroup(col("_sg") > 0, m.onCreate, bind(createCols), folded = false),
-          SetGroup(col("_sg") =!= 1, m.onMatch, bind(matchCols).orElse(curRead),
-            folded = keyColsPresent)))
-      val nCreate = m.onCreate.size
+      // as on the distributed path, ON CREATE runs over the created rows
+      // and ON MATCH over the matched rows and a repeated key's created
+      // row, each a projection of its own rows
+      val reMatched = created.filter(_._3._3 > 1)
+      val createVals = setValues(created.size,
+        spark.createDataFrame(javaList(created.map(createdRow)), schema),
+        mergeVar, isRel = false, m.onCreate, bind(createCols))
+      val matchVals = setValues(matched.size + reMatched.size,
+        spark.createDataFrame(javaList(matched.map { case (id, mrow) =>
+          Row.fromSeq(candRow(id, keyTuple(mrow), byKey(keyTuple(mrow))).init ++ (0 +:
+            curCols.map(c => mrow.getOrElse(c._1, null))))
+        } ++ reMatched.map(createdRow)), schema),
+        mergeVar, isRel = false, m.onMatch, bind(matchCols).orElse(curRead))
       var typeOk = true
       val colType = DeltaBuffer.colType(nodeSchema, bufColTypes) _
       def put(cur: collection.mutable.Map[String, Any], k: String, v: Any): Unit =
@@ -3281,18 +3293,19 @@ final class GraftSession(val spark: SparkSession,
           case Some(cv) => cur(k) = cv
           case None     => typeOk = false
         }
-      def onMatch(cur: collection.mutable.Map[String, Any], vs: Seq[Any]): Unit =
-        m.onMatch.zip(vs.drop(nCreate)).foreach { case ((p, _), v) => put(cur, p.key, v) }
-      val replacements = matched.zip(values).map { case ((id, mrow), vs) =>
+      def set(cur: collection.mutable.Map[String, Any], items: Seq[(ast.Prop, ast.Expr)],
+          vs: Seq[Any]): Unit = items.zip(vs).foreach { case ((p, _), v) => put(cur, p.key, v) }
+      val replacements = matched.zip(matchVals).map { case ((id, mrow), vs) =>
         val cur = collection.mutable.LinkedHashMap.from(mrow)
-        onMatch(cur, vs)
+        set(cur, m.onMatch, vs)
         (id, cur)
       }
-      val createdBuf = created.zip(values.drop(matched.size)).map { case ((id, k, occ), vs) =>
+      val reMatchVals = reMatched.map(_._1).zip(matchVals.drop(matched.size)).toMap
+      val createdBuf = created.zip(createVals).map { case ((id, k, _), vs) =>
         val cur = collection.mutable.LinkedHashMap[String, Any]("id" -> id, "labels" -> np.labels)
         keyNames.zip(k).foreach { case (kn, kv) => put(cur, kn, kv) }
-        m.onCreate.zip(vs).foreach { case ((p, _), v) => put(cur, p.key, v) }
-        if (occ._3 > 1) onMatch(cur, vs)
+        set(cur, m.onCreate, vs)
+        reMatchVals.get(id).foreach(set(cur, m.onMatch, _))
         (id, cur)
       }
       if (typeOk) {
@@ -3314,9 +3327,9 @@ final class GraftSession(val spark: SparkSession,
     var updRows: Option[DataFrame] = None
     if (m.onMatch.nonEmpty && keyColsPresent) {
       val rows = byKey.toSeq.map { case (k, (_, last, _)) =>
-        Row.fromSeq(k ++ matchCols.map(c => readValue(last, c._1)))
+        Row.fromSeq(keyRow(k) ++ readRow(last, matchCols, matchTypes))
       }
-      val schema = StructType(keyFields("_bk_") ++ readFields(matchCols, _._2))
+      val schema = StructType(keyFields("_bk_") ++ readFields(matchCols, matchTypes))
       val batchDf = spark.createDataFrame(javaList(rows), schema)
       val pruned = pruneByKeys(g.nodes)
       val cond = keyNames.map(kn => pruned(kn) === col(s"_bk_$kn")).reduce(_ && _)
@@ -4254,11 +4267,11 @@ final class GraftSession(val spark: SparkSession,
       hops.zipWithIndex.forall { case (h, i) => pairRows(i).contains(pairOf(c, h)) }
     }
 
-    // ---- 4. SET values: one projection per hop ---------------------
-    // A hop's rows — the pre-existing edges of HIT bindings (ON MATCH)
-    // and its created edges (pattern props land first, then ON CREATE
-    // may overwrite them) — form one LocalRelation, and [[setValues]]
-    // projects the hop's items over it. `updatedAcc` threads earlier
+    // ---- 4. SET values: per hop, one projection per row set -------
+    // A hop's pre-existing edges of HIT bindings (ON MATCH) and its
+    // created edges (pattern props land first, then ON CREATE may
+    // overwrite them) each form one LocalRelation, and [[setValues]]
+    // projects their items over it. `updatedAcc` threads earlier
     // hops' updates into later hops touching the same edge row (the
     // distributed path's `working` overlay, driver form). A created
     // edge reads only its endpoints, type and eid, as on the
@@ -4308,28 +4321,22 @@ final class GraftSession(val spark: SparkSession,
         known(k).orElse(hitRows.iterator.map(_._2.getOrElse(k, null)).find(_ != null)
           .map(PropertyGraph.literalType)).map(t => k -> StructField(s"_cur_$k", t))
       }
-      def row(r: Map[String, Any], group: Int, cur: Boolean): Row = Row.fromSeq(
-        edgeFields.map(f => r(f.name)) ++ (group +: curCols.map(c => if (cur) r.getOrElse(c._1, null) else null)))
       def ownRead(cols: Seq[(String, StructField)]): PartialFunction[ast.Expr, org.apache.spark.sql.Column] = {
         case ast.Prop(v, k) if v == h.relVar && !edgeFields.exists(_.name == k) =>
           cols.find(_._1 == k).fold(lit(null))(c => col(c._2.name))
       }
-      val values = setValues(hitRows.size + newRows.size, spark.createDataFrame(
-          javaList(hitRows.map(r => row(r._2, 0, cur = true)) ++ newRows.map(r => row(r._2, 1, cur = false))),
-          StructType(edgeFields ++ (StructField("_sg", IntegerType) +: curCols.map(_._2)))),
-        h.relVar, isRel = true, Seq(
-          SetGroup(col("_sg") === 0, matchItems, ownRead(curCols), folded = true),
-          SetGroup(col("_sg") === 1, cItems, ownRead(Nil), folded = true)))
-      (hitRows ++ newRows).zip(values).zipWithIndex.foreach { case (((eid, r), vs), j) =>
-        val cur = collection.mutable.LinkedHashMap.from(r)
-        if (j < hitRows.size) {
-          matchItems.zip(vs).foreach { case ((p, _), v) => put(cur, p.key, v) }
-          updatedAcc(eid) = cur.toMap
-        } else {
-          cItems.zip(vs.drop(matchItems.size)).foreach { case ((p, _), v) => put(cur, p.key, v) }
-          created += ((eid, cur.toMap))
+      def values(rows: Seq[(Long, Map[String, Any])], items: Seq[(ast.Prop, ast.Expr)],
+          cols: Seq[(String, StructField)]): Seq[(Long, Map[String, Any])] =
+        rows.zip(setValues(rows.size, spark.createDataFrame(javaList(rows.map { case (_, r) =>
+            Row.fromSeq(edgeFields.map(f => r(f.name)) ++ cols.map(c => r.getOrElse(c._1, null))) }),
+            StructType(edgeFields ++ cols.map(_._2))),
+          h.relVar, isRel = true, items, ownRead(cols))).map { case ((eid, r), vs) =>
+          val cur = collection.mutable.LinkedHashMap.from(r)
+          items.zip(vs).foreach { case ((p, _), v) => put(cur, p.key, v) }
+          (eid, cur.toMap)
         }
-      }
+      updatedAcc ++= values(hitRows, matchItems, curCols)
+      created ++= values(newRows, cItems, Nil)
     }
     val replacements = updatedAcc.toSeq
     if (!typeOk) return None

@@ -3855,6 +3855,36 @@ class CypherSpec extends AnyFunSuite {
     }
   }
 
+  test("UNWIND … MERGE reads a batch field that mixes integers and floats as floats") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    // drivers send integer and float values in one parameter batch: the
+    // field widens to float, as Spark's numeric coercion does
+    val rows = Seq(Map("id" -> 1L, "price" -> 10L), Map("id" -> 2L, "price" -> 2.5),
+      Map("id" -> 3L, "price" -> 4L), Map("id" -> 4L, "price" -> 0.5))
+    for (distributed <- Seq(false, true)) {
+      val d = new GraftSession(spark)
+      d.setGraph(graft.core.PropertyGraph(spark.createDataFrame(
+        java.util.Arrays.asList(Row(1L, Seq("mp"), 1L, 1.5), Row(2L, Seq("mp"), 2L, 3.5)),
+        StructType(Seq(StructField("id", LongType, nullable = false),
+          StructField("labels", ArrayType(StringType), nullable = false),
+          StructField("k", LongType), StructField("price", DoubleType)))),
+        spark.createDataFrame(java.util.Collections.emptyList[Row](),
+          graft.core.PropertyGraph.edgeBaseSchema)))
+      if (distributed) d.cypher("MATCH (n:mp) SET n.z = n.k * 2").collect()
+      def delta = d.catalog.database("neo4j").validNodeDelta
+      assert(delta.exists(_.buf.isEmpty) == distributed)
+      d.cypher("UNWIND $rows AS r MERGE (p:mp {k: r.id}) " +
+        "ON CREATE SET p.price = r.price, p.w = r.price * 2 " +
+        "ON MATCH SET p.price = r.price, p.up = r.price * 2", Map("rows" -> rows)).collect()
+      assert(delta.exists(_.buf.isDefined) == !distributed, s"distributed $distributed")
+      assert(d.cypher("MATCH (p:mp) RETURN p.k AS k, p.price AS price, p.up AS up, p.w AS w " +
+        "ORDER BY k").collect().map(_.toString).toSeq ==
+        Seq("[1,10.0,20.0,null]", "[2,2.5,5.0,null]", "[3,4.0,null,8.0]", "[4,0.5,null,1.0]"),
+        s"distributed $distributed")
+    }
+  }
+
   test("driver SET-value evaluator agrees with setValueColumn on generated values and operators") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
