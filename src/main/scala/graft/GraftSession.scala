@@ -250,33 +250,47 @@ final class GraftSession(val spark: SparkSession,
     * deliberate upper bound: over-counting can only make a label look
     * less selective, the safe direction for an ordering heuristic),
     * tombstones subtract from the totals. Edge side mirrors by
-    * relType. O(delta) — two small aggregates. */
+    * relType. O(delta): a write buffer's delta is counted from its
+    * rows on the driver, any other delta by two small aggregates. */
   private def statsOverlaid(s0: graft.core.GraphStats,
       nodeDelta: Option[DataFrame],
       edgeDelta: Option[DataFrame]): graft.core.GraphStats = {
     import org.apache.spark.sql.functions.{coalesce, col, count, explode, lit, sum, when}
-    def tomb(df: DataFrame) =
-      if (df.columns.contains(PropertyGraph.TombstoneCol))
-        coalesce(col(PropertyGraph.TombstoneCol), lit(false))
-      else lit(false)
-    val (labelAdds, nodeAdd) = nodeDelta.map { nd =>
-      val live = nd.filter(!tomb(nd))
-      val adds =
-        if (!nd.columns.contains("labels")) Map.empty[String, Long]
-        else live.select(explode(col("labels")).as("_l")).groupBy("_l")
-          .agg(count(lit(1)).as("n")).collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val net = nd.agg(sum(when(tomb(nd), -1L).otherwise(1L))).collect()(0)
-      (adds, if (net.isNullAt(0)) 0L else net.getLong(0))
-    }.getOrElse((Map.empty[String, Long], 0L))
-    val (typeAdds, edgeAdd) = edgeDelta.map { ed =>
-      val adds =
-        if (!ed.columns.contains("relType")) Map.empty[String, Long]
-        else ed.filter(!tomb(ed)).groupBy("relType").agg(count(lit(1)).as("n"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val net = ed.agg(sum(when(tomb(ed), -1L).otherwise(1L))).collect()(0)
-      (adds, if (net.isNullAt(0)) 0L else net.getLong(0))
-    }.getOrElse((Map.empty[String, Long], 0L))
+    // (adds per group, net rows) of one delta; `labels` groups by each
+    // element of its array, `relType` by its value
+    def counted(d: DataFrame, group: String): (Map[String, Long], Long) =
+      DeltaSide.localRows(d) match {
+        case Some(rows) =>
+          val t = d.columns.indexOf(PropertyGraph.TombstoneCol)
+          val g = d.columns.indexOf(group)
+          def dead(r: Row) = t >= 0 && !r.isNullAt(t) && r.getBoolean(t)
+          def groups(r: Row): Seq[String] = r.get(g) match {
+            case null if group == "labels" => Nil
+            case xs: scala.collection.Seq[_] => xs.map(_.asInstanceOf[String]).toSeq
+            case x => Seq(x.asInstanceOf[String])
+          }
+          val adds =
+            if (g < 0) Map.empty[String, Long]
+            else rows.filterNot(dead).flatMap(groups).groupMapReduce(identity)(_ => 1L)(_ + _)
+          (adds, rows.map(r => if (dead(r)) -1L else 1L).sum)
+        case None =>
+          val tomb =
+            if (d.columns.contains(PropertyGraph.TombstoneCol))
+              coalesce(col(PropertyGraph.TombstoneCol), lit(false))
+            else lit(false)
+          val live = d.filter(!tomb)
+          val adds =
+            if (!d.columns.contains(group)) Map.empty[String, Long]
+            else (if (group == "labels") live.select(explode(col(group)).as(group)) else live)
+              .groupBy(group).agg(count(lit(1)).as("n")).collect()
+              .map(r => r.getString(0) -> r.getLong(1)).toMap
+          val net = d.agg(sum(when(tomb, -1L).otherwise(1L))).collect()(0)
+          (adds, if (net.isNullAt(0)) 0L else net.getLong(0))
+      }
+    val (labelAdds, nodeAdd) =
+      nodeDelta.map(counted(_, "labels")).getOrElse((Map.empty[String, Long], 0L))
+    val (typeAdds, edgeAdd) =
+      edgeDelta.map(counted(_, "relType")).getOrElse((Map.empty[String, Long], 0L))
     if (labelAdds.isEmpty && typeAdds.isEmpty && nodeAdd == 0L && edgeAdd == 0L) s0
     else s0.bumped(labelAdds, typeAdds, nodeAdd, edgeAdd)
   }
@@ -1535,10 +1549,11 @@ final class GraftSession(val spark: SparkSession,
     currentPassword = to
   }
 
-  private def unit(): DataFrame = {
-    import org.apache.spark.sql.functions.lit
-    spark.range(1).select(lit("ok").as("status"))
-  }
+  /** The status frame of a statement with no rows of its own: one
+    * driver-held row, so reading it runs no Spark job. */
+  private def unit(): DataFrame =
+    spark.createDataFrame(java.util.List.of(Row("ok")),
+      StructType(Seq(StructField("status", StringType))))
 
   private def showDatabases(): DataFrame = {
     val rows = catalog.listDatabases.map { db =>
@@ -3477,7 +3492,10 @@ final class GraftSession(val spark: SparkSession,
       case None => (side.part(db.graph), updated)
     }
     val defer = !eager && isShadow(db)
-    val delta = if (defer) delta0 else delta0.localCheckpoint()
+    // the union has the partitions of both its sides, so an unsized
+    // fold would double the next fold's tasks
+    val sized = delta0.coalesce(graft.core.AdaptiveParts.forFrame(delta0))
+    val delta = if (defer) sized else sized.localCheckpoint()
     side.publish(db, DeltaState[B](base, delta, side.overlay(base, delta),
       materialized = !defer))
   }

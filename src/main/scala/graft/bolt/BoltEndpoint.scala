@@ -1,9 +1,12 @@
 package graft.bolt
 
 import graft.{GraftSession, TxHandle}
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream, EOFException}
+import java.io.{BufferedOutputStream, ByteArrayInputStream, ByteArrayOutputStream, DataInputStream,
+  DataOutputStream, EOFException, IOException}
 import java.net.{InetSocketAddress, ServerSocket, Socket}
 import java.nio.charset.StandardCharsets.UTF_8
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.LocalTableScanExec
 
 /** Bolt 7687 surface mirroring the reference image's second mapped
   * port (SURVEY §2.9; the reference maps 7473/7474/7687 at
@@ -28,7 +31,11 @@ import java.nio.charset.StandardCharsets.UTF_8
   *    executes through `session.cypherWire` and streams RECORDs
   *    INCREMENTALLY: the result is a `toLocalIterator`, so PULL n
   *    holds at most one Spark partition on the driver, not the whole
-  *    result set;
+  *    result set (a result whose rows the driver already holds, such
+  *    as a write's status row, is collected without a job);
+  *  - each reply is written through one buffer and flushed once, on a
+  *    socket with Nagle's algorithm off: a reply's small writes would
+  *    otherwise wait on the client's delayed ACK;
   *  - `RETURN n` over a bare node/relationship variable emits real
   *    PackStream Node (0x4E) / Relationship (0x52) structs — typed
   *    entities with identity, labels and property maps, the shape a
@@ -77,6 +84,7 @@ final class BoltEndpoint(session: GraftSession, port: Int = 7687,
     while (running) {
       try {
         val sock = server.accept()
+        sock.setTcpNoDelay(true)
         pool.execute(() => {
           try serve(sock)
           catch { case _: Throwable => () }
@@ -108,7 +116,7 @@ final class BoltEndpoint(session: GraftSession, port: Int = 7687,
 
   private def serve(sock: Socket): Unit = {
     val in = new DataInputStream(sock.getInputStream)
-    val out = new DataOutputStream(sock.getOutputStream)
+    val out = new DataOutputStream(new BufferedOutputStream(sock.getOutputStream, 1 << 16))
 
     // handshake: magic + 4 proposals, each 4 bytes (layout
     // [reserved, range, minor, major]); a proposal covers version
@@ -244,7 +252,7 @@ final class BoltEndpoint(session: GraftSession, port: Int = 7687,
           }
           else try {
             val df = session.cypherWire(query, params, db, tx.orNull)
-            pending = Some((df.columns.toSeq, df.toLocalIterator()))
+            pending = Some((df.columns.toSeq, BoltEndpoint.streamed(df)))
             success(Map("fields" -> df.columns.toSeq, "t_first" -> 0L))
           } catch {
             case e: Exception => failure(e match {
@@ -338,6 +346,9 @@ final class BoltEndpoint(session: GraftSession, port: Int = 7687,
       }
       out.flush()
     } finally {
+      // a FAILURE written just before a return (a refused HELLO or
+      // LOGON) still reaches the client
+      try out.flush() catch { case _: IOException => () }
       // disconnect / read-timeout with a transaction still open: roll
       // back so the shadow snapshots are freed and nothing half-done
       // ever publishes
@@ -385,6 +396,17 @@ final class BoltEndpoint(session: GraftSession, port: Int = 7687,
     PackStream.writeStructHeader(out, tag, size)
   private type Struct = PackStream.Struct
   private val Struct = PackStream.Struct
+}
+
+object BoltEndpoint {
+  /** A result's rows as `RUN` streams them: incrementally, one Spark
+    * partition at a time, or at once when the executed plan already
+    * holds them on the driver (a write's status row), with no job. */
+  def streamed(df: DataFrame): java.util.Iterator[Row] =
+    df.queryExecution.executedPlan match {
+      case _: LocalTableScanExec => java.util.Arrays.asList(df.collect(): _*).iterator()
+      case _ => df.toLocalIterator()
+    }
 }
 
 /** Marker wrapper: a record value that may be a tagged entity struct

@@ -1,6 +1,7 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 
 /** Scale-adaptive shuffle-partition sizing for ITERATIVE loops (guide
   * §2.2 "fewer, larger reduce partitions" / §2.6): a fixpoint that
@@ -37,6 +38,18 @@ object AdaptiveParts {
       spark.conf.get("spark.sql.shuffle.partitions", "200").toInt)
     math.max(1L, math.min(cap.toLong,
       (rows + RowsPerPartition - 1) / RowsPerPartition)).toInt
+  }
+
+  /** [[forRows]] over Catalyst's estimate of `df`'s rows: its row
+    * count where the plan knows one, else its size estimate over the
+    * estimated row width. Both are upper estimates, so a frame of
+    * unknown size gets the configured width. No job. */
+  def forFrame(df: DataFrame): Int = {
+    val plan = df.queryExecution.optimizedPlan
+    val st = plan.stats
+    val rows = st.rowCount.getOrElse(
+      st.sizeInBytes / EstimationUtils.getSizePerRow(plan.output).max(BigInt(1)))
+    forRows(df.sparkSession, rows.min(BigInt(Long.MaxValue)).toLong)
   }
 
   /** Run `body` with `spark.sql.shuffle.partitions` sized by

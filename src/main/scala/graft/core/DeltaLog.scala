@@ -2,7 +2,9 @@ package graft.core
 
 import scala.collection.immutable.VectorMap
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LocalLimit, LocalRelation, LogicalPlan, Union}
 import org.apache.spark.sql.types._
 
 /** Driver-local write buffer of one delta-log side: present when the
@@ -163,15 +165,52 @@ object DeltaSide {
   val MaxBufferRows = 100000
 
   /** Past this many rows one statement's matched keys, batch or miss set
-    * stay distributed instead of being collected to the driver, and a
+    * stay distributed instead of being collected to the driver, a
     * driver-resident delta is overlaid by an anti join instead of its
-    * literal key set ([[PropertyGraph.overlayByKey]]). */
+    * literal key set ([[PropertyGraph.overlayByKey]]), and a path's
+    * frontier joins unhinted instead of broadcast or as literal keys
+    * (`CypherCompiler.compileHop`). */
   val MaxDriverRows = 10000
 
-  /** `df`'s rows when there are at most [[MaxDriverRows]] of them (one
-    * bounded collect), else None. */
-  def collectBounded(df: DataFrame): Option[Array[Row]] =
-    Some(df.limit(MaxDriverRows + 1).collect()).filter(_.length <= MaxDriverRows)
+  /** `df`'s rows when there are at most [[MaxDriverRows]] of them, else
+    * None: one bounded collect. A frame whose optimized plan is a union
+    * with driver-resident branches (a base read under a write buffer's
+    * delta) takes those branches' rows on the driver and the rest in
+    * one bounded take; Spark's take over the whole union would scan
+    * its partitions in batches, one job per batch. */
+  def collectBounded(df: DataFrame): Option[Array[Row]] = {
+    val bounded = df.limit(MaxDriverRows + 1)
+    // the optimizer pushes a LocalLimit onto each branch of a union
+    def unlimited(p: LogicalPlan) = p match { case LocalLimit(_, c) => c; case c => c }
+    val (local, rest) = bounded.queryExecution.optimizedPlan match {
+      case GlobalLimit(_, LocalLimit(_, u: Union)) =>
+        u.children.map(unlimited).partition(_.isInstanceOf[LocalRelation])
+      case _ => (Nil, Nil)
+    }
+    val all =
+      if (local.isEmpty) bounded.collect()
+      else {
+        val held = local.iterator.flatMap(p => localRows(p.asInstanceOf[LocalRelation]))
+          .take(MaxDriverRows + 1).toArray
+        if (held.length > MaxDriverRows || rest.isEmpty) held
+        else held ++ GraftSqlBridge.frame(df.sparkSession,
+          if (rest.size == 1) rest.head else Union(rest))
+          .limit(MaxDriverRows + 1 - held.length).collect()
+      }
+    Some(all).filter(_.length <= MaxDriverRows)
+  }
+
+  /** The rows of a LocalRelation-backed frame (a write buffer's delta),
+    * read on the driver without a Spark job; None for any other frame. */
+  def localRows(df: DataFrame): Option[Seq[Row]] = df.queryExecution.analyzed match {
+    case r: LocalRelation => Some(localRows(r).toSeq)
+    case _ => None
+  }
+
+  private def localRows(r: LocalRelation): Iterator[Row] = {
+    val toRow = CatalystTypeConverters.createToScalaConverter(r.schema)
+    r.data.iterator.map(toRow(_).asInstanceOf[Row])
+  }
 
   val Nodes: DeltaSide[NodeDeltaBuffer] = new DeltaSide(
     "id", Set("id"), NodeDeltaBuffer(VectorMap.empty, VectorMap.empty),

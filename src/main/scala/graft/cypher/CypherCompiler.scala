@@ -1,9 +1,11 @@
 package graft.cypher
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
 import scala.util.control.NonFatal
-import graft.core.PropertyGraph
+import graft.core.{DeltaSide, PropertyGraph}
 import ast._
 
 /** Compiles the Cypher AST onto declarative DataFrame operations so
@@ -121,7 +123,10 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
       case m: Match    => ctx = Some(compileMatch(ctx, m))
       case s: MatchShortest => ctx = Some(compileShortest(ctx, s))
       case p: MatchPath => ctx = Some(compilePlainPath(ctx, p))
-      case r: Return   => return compileProjection(ctx, r.items, r.distinct, r.orderBy, r.skip, r.limit, keepVarCols = false)
+      case r: Return   =>
+        val rowBound = provenRows.collect { case (d, b) if ctx.exists(_ eq d) => b }
+        return compileProjection(ctx, r.items, r.distinct, r.orderBy, r.skip, r.limit,
+          keepVarCols = false, rowBound = rowBound)
       case w: With     =>
         var df = compileProjection(ctx, w.items, w.distinct, w.orderBy, w.skip, w.limit, keepVarCols = true)
         w.where.foreach(e => df = df.filter(compileExpr(e, df)))
@@ -169,9 +174,12 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
         val bound = Option(df).map(boundIdVars).getOrElse(ctxVars)
         df = compilePath(Option(df), orientPath(p, bound), pending = pending)
       }
+      // semi/anti joins and filters below only drop rows
+      val pathBound = lastPathBound.filter(_ => ctx.isEmpty && m.patterns.size == 1)
       existencePreds.foreach { case (pats, w, negated) =>
         df = applyExists(df, pats, w, negated) }
       pending.foreach(r => df = filterWithSubqueries(df, r))
+      provenRows = pathBound.map(df -> _)
       df
     } finally whereAnchorProps = prevAnchors
   }
@@ -933,7 +941,7 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
     // Frontier-cardinality estimate, maintained only when the path
     // starts UNBOUND from the sealed stats (ctx present means an
     // unknown-size binding table — never hint against it). A frontier
-    // estimated under [[CypherCompiler.BroadcastFrontierRows]] is a
+    // estimated under `DeltaSide.MaxDriverRows` is a
     // broadcast-hint CANDIDATE before each join: Catalyst's static size
     // estimates degrade through a join chain, so without the hint a
     // tiny anchored frontier joining a huge edge table plans (and
@@ -957,10 +965,11 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
           // READ-statement compilers (probeHints): mutation compiles
           // stay job-free — the declarative-MERGE discipline
           .orElse(if (probeHints && !textualOrder && anchorRank(p.start, Set.empty) >= 2)
-            Some(CypherCompiler.BroadcastFrontierRows.toDouble)
+            Some(DeltaSide.MaxDriverRows.toDouble)
           else None)
       else None
     var frontierBound: Option[Long] = None
+    var anchor = ctx.isEmpty && cur != null
     p.hops.foreach { case (rel, node) =>
       // seed a var-length expansion from FILTERED starts: consume any
       // pending plain conjunct whose variables are all bound already
@@ -986,7 +995,8 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
       // broadcast hints onto huge intermediates
       val preBound = Option(cur).map(boundIdVars).getOrElse(Set.empty[String])
       val (next, nextBound) = compileHop(cur, prevVar, rel, node, idsOnly, frontierEst,
-        frontierBound)
+        frontierBound, anchor)
+      anchor = false
       cur = next
       frontierBound = nextBound
       frontierEst = (frontierEst, cheapStats) match {
@@ -1013,10 +1023,22 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
       .foreach(e => cur = filterWithSubqueries(cur, e))
     p.hops.map(_._1).flatMap(_.where)
       .foreach(e => cur = filterWithSubqueries(cur, e))
+    // filters only drop rows; set last, as the filters compile paths too
+    lastPathBound = if (p.hops.isEmpty) None else frontierBound
     cur
   }
 
   private var lastNodeVar: String = _
+
+  /** The proven row bound of the path [[compilePath]] compiled last:
+    * the anchor frontier's exact count times each hop's sealed maximum
+    * degree, None when any factor is unknown. */
+  private var lastPathBound: Option[Long] = None
+
+  /** A MATCH result and the proven bound on its rows, recorded when
+    * the clause is one unbound path ([[compileMatch]]); the RETURN
+    * that reads that very frame sorts as a top-k of the bound. */
+  private var provenRows: Option[(DataFrame, Long)] = None
 
   /** Temporal map constructors refuse unknown component keys loudly —
     * an ignored key (e.g. a typo'd `epochMilis`) would otherwise build
@@ -1036,12 +1058,16 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
   private var probeFailed: Boolean = false
 
   /** Measured gate for every explicit broadcast hint (ADVICE r18): is
-    * the frontier ACTUALLY within the hint bound? `limit(B+1).count`
-    * short-circuits, so a genuinely tiny frontier pays one bounded job.
+    * the frontier ACTUALLY within the hint bound? One bounded collect
+    * (`DeltaSide.collectBounded`, an early-exit driver take with no
+    * exchange) answers, so a genuinely tiny frontier pays one job.
     * Returns the (possibly checkpointed) frame and, when the frontier
-    * is within the bound, its exact row count — the measurement
-    * [[compilePath]] multiplies by sealed maximum degrees so that the
-    * later hints of the path need no probe of their own.
+    * is within the bound, its rows: the frontier's own columns when
+    * `keepRows` (the anchor frontier, which [[compileHop]] then joins
+    * as literal keys), else one placeholder column per row. Their
+    * count is the measurement [[compilePath]] multiplies by sealed
+    * maximum degrees so that the later hints of the path need no
+    * probe of their own.
     *
     * When the session has NO free stats (rank-gated attempts on a
     * never-saved graph), the frontier is localCheckpointed FIRST and
@@ -1052,7 +1078,9 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
     * (r19: that repeated re-execution was the measured cost of the
     * blanket r18-shaped probes on the varlen bench rows). A frontier
     * past the bound costs its one materialization — data the join was
-    * about to shuffle anyway — and stops further attempts.
+    * about to shuffle anyway — and stops further attempts. A frontier
+    * kept as rows is collected first instead: within the bound its
+    * rows replace the frame, so only a frontier past it checkpoints.
     *
     * With SEALED stats the plain probe is kept instead: the estimate
     * is already trustworthy, and the un-checkpointed frontier keeps
@@ -1062,23 +1090,14 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
     * so an anchored path pays one confirmation probe per statement:
     * later hops hint on the measured count times those maxima and
     * probe again only when that bound exceeds the threshold. */
-  private def probed(df: DataFrame): (DataFrame, Option[Long]) = {
+  private def probed(df: DataFrame, keepRows: Boolean = false)
+      : (DataFrame, Option[Array[Row]]) = {
+    val kept = if (keepRows) DeltaSide.collectBounded(df) else None
+    if (kept.isDefined) return (df, kept)
     val m = if (!scanBackedGraph) df.localCheckpoint() else df
-    // bounded-take probe, NOT limit().count() (r19): a count over a
-    // limit plans GlobalLimit — an Exchange that ships up to B+1 rows
-    // from EVERY partition (measured: the join-order probe's ordered
-    // session shuffled 320k records at the 4M fixture that were
-    // nothing but this gate). limit().collect() runs as
-    // CollectLimitExec.executeCollect — an incremental driver-side
-    // take with no exchange that early-exits as soon as B+1 rows
-    // exist, so a huge frontier pays a partial scan, not a full one.
-    // The single-value projection bounds what the driver holds.
-    val n = m.select(org.apache.spark.sql.functions.lit(1))
-      .limit(CypherCompiler.BroadcastFrontierRows.toInt + 1)
-      .collect().length.toLong
-    val small = n <= CypherCompiler.BroadcastFrontierRows
-    if (!small) probeFailed = true
-    (m, if (small) Some(n) else None)
+    val rows = if (keepRows) None else DeltaSide.collectBounded(m.select(lit(1)))
+    if (rows.isEmpty) probeFailed = true
+    (m, rows)
   }
 
   /** Exact upper bound on the rows one frontier row joins to through
@@ -1105,10 +1124,13 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
 
   /** One hop of a path; returns the joined frame and a proven bound
     * on its rows, given `bound` on the rows of `cur` (see the
-    * frontierEst note in compilePath). */
+    * frontierEst note in compilePath). `anchor`: `cur` is the path's
+    * unbound start frontier, and this is its first hop. A probed
+    * anchor frontier within the bound joins as literal keys
+    * ([[literalHop]]); past it, the join stays unhinted. */
   private def compileHop(cur: DataFrame, prevVar: String, rel: RelPat, node: NodePat,
       idsOnly: Boolean, frontierEst: Option[Double],
-      bound: Option[Long]): (DataFrame, Option[Long]) = {
+      bound: Option[Long], anchor: Boolean): (DataFrame, Option[Long]) = {
     val nv = node.variable.getOrElse(fresh("n"))
     lastNodeVar = nv
     // a stats-estimated SMALL side broadcasts explicitly — see the
@@ -1122,12 +1144,12 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
     // probe also checkpoints the frontier (see [[probed]]).
     def hinted(df: DataFrame, est: Option[Double],
         rows: Option[Long]): (DataFrame, Option[Long]) =
-      if (!est.exists(_ <= CypherCompiler.BroadcastFrontierRows)) (df, rows)
-      else if (scanBackedGraph && rows.exists(_ <= CypherCompiler.BroadcastFrontierRows))
+      if (!est.exists(_ <= DeltaSide.MaxDriverRows)) (df, rows)
+      else if (scanBackedGraph && rows.exists(_ <= DeltaSide.MaxDriverRows))
         (org.apache.spark.sql.functions.broadcast(df), rows)
       else probed(df) match {
-        case (m, Some(n)) => (org.apache.spark.sql.functions.broadcast(m), Some(n))
-        case (m, None)    => (m, None)
+        case (m, Some(rs)) => (org.apache.spark.sql.functions.broadcast(m), Some(rs.length.toLong))
+        case (m, None)     => (m, None)
       }
     rel.varLength match {
       case Some((lo, hi)) =>
@@ -1140,18 +1162,27 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
         val nearSide = if (rel.dir == -1) s"$rv${SEP}dst" else s"$rv${SEP}src"
         // each frontier row meets at most maxFanout edges; filters and
         // the far-node join (node ids are unique) never add rows
+        def fannedOut(b: Option[Long]): Option[Long] = for (b <- b; f <- maxFanout(rel)) yield
+          if (f != 0 && b > Long.MaxValue / f) Long.MaxValue else b * f
         val (joined, joinedBound) =
           if (cur == null) // deferred idsOnly start: id comes from the edge
             (e.withColumn(s"$prevVar${SEP}id", col(nearSide)), None)
           else {
-            val (c, curBound) = hinted(cur, frontierEst, bound)
-            val j = rel.dir match {
+            val (c, curBound, rows) =
+              if (anchor && frontierEst.exists(_ <= DeltaSide.MaxDriverRows))
+                probed(cur, keepRows = true) match {
+                  case (m, Some(rs)) =>
+                    (org.apache.spark.sql.functions.broadcast(m), Some(rs.length.toLong), Some(rs))
+                  case (m, None) => (m, None, None)
+                }
+              else { val (h, b) = hinted(cur, frontierEst, bound); (h, b, None) }
+            val literal = rows.flatMap(literalHop(c, s"$prevVar${SEP}id", _, e, nearSide))
+            val j = literal.getOrElse(rel.dir match {
               case 1  => c.join(e, c(s"$prevVar${SEP}id") === e(s"$rv${SEP}src"))
               case -1 => c.join(e, c(s"$prevVar${SEP}id") === e(s"$rv${SEP}dst"))
               case 0  => c.join(e, c(s"$prevVar${SEP}id") === e(s"$rv${SEP}src")) // e pre-symmetrized
-            }
-            (j, for (b <- curBound; f <- maxFanout(rel)) yield
-              if (f != 0 && b > Long.MaxValue / f) Long.MaxValue else b * f)
+            })
+            (j, fannedOut(curBound))
           }
         val farSide = if (rel.dir == -1) s"$rv${SEP}src" else s"$rv${SEP}dst"
         if (joined.columns.contains(s"$nv${SEP}id")) {
@@ -1178,6 +1209,37 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
           (j.join(n, col(farSide) === n(s"$nv${SEP}id")), jBound)
         }
     }
+  }
+
+  /** The first hop over an anchor frontier whose `rows` the probe
+    * holds on the driver: the edge scan keeps the edges whose near end
+    * is one of the frontier's ids — a literal key set, as
+    * `PropertyGraph.overlayByKey` removes a buffered delta's keys —
+    * and a lookup by that id adds each frontier column. These are the
+    * rows of the inner join `front ⋈ e`, with no join, so no broadcast
+    * stage and no job of its own; the optimizer prunes the lookups of
+    * the columns nothing reads. None when the ids are not distinct
+    * (a lookup would drop the duplicates a join multiplies). */
+  private def literalHop(front: DataFrame, idCol: String, rows: Array[Row],
+      e: DataFrame, nearSide: String): Option[DataFrame] = {
+    val i = front.columns.indexOf(idCol)
+    if (rows.exists(_.isNullAt(i))) return None
+    val ids = rows.map(_.getLong(i))
+    if (ids.distinct.length != ids.length) return None
+    val near = GraftSqlBridge.expression(col(nearSide))
+    val keyed =
+      if (ids.isEmpty) e.filter(lit(false))
+      else e.filter(GraftSqlBridge.column(InSet(near, ids.toSet[Any])))
+    val frontCols = front.schema.fields.toSeq.zipWithIndex.map { case (f, j) =>
+      if (j == i) col(nearSide).as(f.name)
+      else {
+        val toCatalyst = CatalystTypeConverters.createToCatalystConverter(f.dataType)
+        val values = ids.iterator.zip(rows.iterator.map(r => toCatalyst(r.get(j))))
+          .filter(_._2 != null).toMap
+        GraftSqlBridge.column(graft.plans.KeyLookup(near, values, f.dataType)).as(f.name)
+      }
+    }
+    Some(keyed.select(frontCols ++ e.columns.toSeq.map(col): _*))
   }
 
   /** Var-length expand `[:T*lo..hi]`: iterative frontier join with
@@ -1239,7 +1301,7 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
     // session's memoized live stats re-enabled it).
     val base0 = (seedEst, cheapStats) match {
       case (Some(e0), Some(_)) if scanBackedGraph && hi != Int.MaxValue &&
-          e0 <= CypherCompiler.BroadcastFrontierRows =>
+          e0 <= DeltaSide.MaxDriverRows =>
         val hops = collection.mutable.ArrayBuffer.empty[DataFrame]
         var ids = startIds
         var step = 0
@@ -1455,7 +1517,7 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
         // the safe direction); pathCost's step cap is fine there
         // because it only RANKS orientations
         e0 * math.pow(math.max(1.0, relBranch(rel, s)), hi.toDouble) <=
-          CypherCompiler.BroadcastFrontierRows
+          DeltaSide.MaxDriverRows
       case (Some(_), None) if hi != Int.MaxValue && !probeFailed =>
         true // no free stats: the measured probe below decides
       case _ => false
@@ -2140,7 +2202,8 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
 
   private def compileProjection(ctx: Option[DataFrame], items0: Seq[ReturnItem],
       distinct: Boolean, orderBy0: Seq[(Expr, Boolean)], skipE: Option[Expr],
-      limitE: Option[Expr], keepVarCols: Boolean): DataFrame = {
+      limitE: Option[Expr], keepVarCols: Boolean,
+      rowBound: Option[Long] = None): DataFrame = {
     val skip = skipE.map(CypherCompiler.longArg("SKIP", _))
     val limit = limitE.map(CypherCompiler.longArg("LIMIT", _))
     var df = ctx.getOrElse(unitDf)
@@ -2375,7 +2438,14 @@ final class CypherCompiler(spark: SparkSession, graph: PropertyGraph,
         val c = col(s"`$n`")
         if (asc) c.asc else c.desc }: _*)
     skip.foreach(n => out = out.offset(n.toInt))
-    limit.foreach(n => out = out.limit(n.toInt))
+    // a sort with no LIMIT under a proven row bound (`rowBound`, at
+    // least one row for a global aggregate) keeps every row as a top-k
+    // of that bound: Spark runs it as one TakeOrderedAndProject job,
+    // where a range-partitioned sort runs three. Capped at the rows a
+    // driver collect may hold, since the top-k buffers k rows.
+    val topK = rowBound.map(math.max(1L, _)).filter(b => sortRefs.nonEmpty &&
+      skip.isEmpty && b <= DeltaSide.MaxDriverRows)
+    limit.orElse(topK).foreach(n => out = out.limit(n.toInt))
     if (hiddenSorts.nonEmpty) out = out.drop(hiddenSorts.map(_._1).toSeq: _*)
     out
   }
@@ -3531,13 +3601,4 @@ object CypherCompiler {
     * stability over churn. */
   private[graft] val ReorderFactor: Double = 2.0
 
-  /** A frontier ESTIMATED at or under this many rows gets an explicit
-    * broadcast hint on its next pattern join: Catalyst's static
-    * estimates degrade through join chains, so a provably-anchored
-    * tiny frontier would otherwise plan a full shuffle of the big
-    * edge/node side (AQE converts the join at runtime but the map-side
-    * shuffle write is already paid). Conservative: the estimate's
-    * decimation heuristic is order-of-magnitude, and a broadcast this
-    * size is a few MB even with wide rows. */
-  private[graft] val BroadcastFrontierRows: Double = 10000.0
 }

@@ -262,7 +262,7 @@ final class HttpEndpoint(session: GraftSession, port: Int = 7474,
       val st = it.next()
       val q = st.path("statement").asText("")
       val params = Option(st.get("parameters"))
-        .map(fromJsonMap).getOrElse(Map.empty[String, Any])
+        .map(HttpEndpoint.fromJsonMap).getOrElse(Map.empty[String, Any])
       try {
         val df = session.cypher(q, params, db, tx)
         val cols = df.columns
@@ -360,18 +360,6 @@ final class HttpEndpoint(session: GraftSession, port: Int = 7474,
 
   // ---- JSON <-> engine values ------------------------------------
 
-  private def fromJsonMap(n: JsonNode): Map[String, Any] =
-    n.properties().asScala.map(e => e.getKey -> fromJson(e.getValue)).toMap
-
-  private def fromJson(n: JsonNode): Any =
-    if (n.isNull) null
-    else if (n.isIntegralNumber) n.asLong
-    else if (n.isNumber) n.asDouble
-    else if (n.isBoolean) n.asBoolean
-    else if (n.isTextual) n.asText
-    else if (n.isArray) n.elements().asScala.map(fromJson).toVector
-    else fromJsonMap(n)
-
   private def writeJsonValue(gen: JsonGenerator, v: Any): Unit = v match {
     case null                    => gen.writeNull()
     case b: Boolean              => gen.writeBoolean(b)
@@ -417,6 +405,20 @@ final class HttpEndpoint(session: GraftSession, port: Int = 7474,
 }
 
 object HttpEndpoint {
+  /** A JSON object's members as statement parameters: integers are
+    * LONG, other numbers DOUBLE, arrays Vectors, objects Maps. */
+  def fromJsonMap(n: JsonNode): Map[String, Any] =
+    n.properties().asScala.map(e => e.getKey -> fromJson(e.getValue)).toMap
+
+  private def fromJson(n: JsonNode): Any =
+    if (n.isNull) null
+    else if (n.isIntegralNumber) n.asLong
+    else if (n.isNumber) n.asDouble
+    else if (n.isBoolean) n.asBoolean
+    else if (n.isTextual) n.asText
+    else if (n.isArray) n.elements().asScala.map(fromJson).toVector
+    else fromJsonMap(n)
+
   /** SSLContext from a JKS/PKCS12 keystore file — the 7473 HTTPS
     * analog of the reference's `/ssl` certificate mount (ref
     * `docker-entrypoint.sh:479-537` wires `dbms.ssl.policy.https.*`

@@ -74,6 +74,21 @@ class BoltSpec extends AnyFunSuite {
     } finally ep.stop()
   }
 
+  test("a FAILURE sent just before the server closes the connection reaches the client") {
+    val ep = new BoltEndpoint(new GraftSession(spark), 0, "127.0.0.1")
+    val port = ep.start()
+    try {
+      val c = new Client(port)
+      assert(c.handshake() == 0x00000404)
+      c.send(0x10, "RETURN 1 AS x", Map.empty[String, Any], Map.empty[String, Any]) // RUN before HELLO
+      val (t, f) = c.recv()
+      assert(t == FAILURE)
+      assert(f.head.asInstanceOf[Map[String, Any]]("message") == "expected HELLO")
+      intercept[java.io.EOFException](c.recv()) // then the server closed
+      c.close()
+    } finally ep.stop()
+  }
+
   test("autocommit RUN/PULL round-trips rows with parameters") {
     val session = new GraftSession(spark)
     session.cypher("CREATE (a:dog {name:'Arne'})-[:SNIFFS]->(b:dog {name:'Bosse'})")

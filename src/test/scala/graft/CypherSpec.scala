@@ -4341,4 +4341,80 @@ class CypherSpec extends AnyFunSuite {
     assert(back.forall(_.getString(4) == s"file://$dir/x.csv"))
     graft.core.SnapshotStore.deleteDir(dir)
   }
+
+  test("an anchor frontier joined as literal keys answers as the general join") {
+    // the probed anchor of a path's first hop joins as its rows' ids
+    // (an edge-scan key set plus lookups of its columns); the general
+    // path binds the same variable in an earlier clause and joins
+    val s0 = new GraftSession(spark)
+    val dir = java.nio.file.Files.createTempDirectory("glk_").toString
+    s0.cypher("UNWIND $rows AS row CREATE (:LK {ck: row.ck, nm: row.nm, grp: row.grp})",
+      Map("rows" -> (0 until 30).map(x => Map("ck" -> x.toLong, "nm" -> s"c$x", "grp" -> (x % 3).toLong))))
+    s0.cypher("UNWIND range(0, 89) AS x CREATE (:LO {ok: x})")
+    s0.cypher("UNWIND $rows AS row MATCH (c:LK {ck: row.c}), (o:LO {ok: row.o}) " +
+      "MERGE (c)-[:T1]->(o)",
+      Map("rows" -> (0 until 90).map(o => Map("c" -> (o / 3).toLong, "o" -> o.toLong))))
+    s0.cypher("UNWIND $rows AS row MATCH (c:LK {ck: row.c}), (o:LO {ok: row.o}) " +
+      "MERGE (o)-[:T2]->(c)",
+      Map("rows" -> (0 until 30).map(c => Map("c" -> c.toLong, "o" -> ((3 * c + 4) % 90).toLong))))
+    s0.cypher("CREATE INDEX lk_ck FOR (n:LK) ON (n.ck)")
+    s0.saveDatabase(dir)
+    val s = new GraftSession(spark)
+    s.loadDatabase(dir)
+    val shapes = Seq(
+      "-[:T1]-(o:LO) RETURN o.ok AS ok",                            // undirected
+      "-[:T1|T2]-(x) RETURN x.ok AS ok",                            // multi-type, undirected
+      "<-[:T1|T2]-(x) RETURN x.ok AS ok",                           // multi-type, incoming
+      "-[r:T1]->(o:LO) RETURN c, r.eid AS e, o.ok AS ok",           // the anchor whole
+      "-[:T1]->(o:LO) RETURN c.nm AS nm, c.grp AS g, o.ok AS ok",   // anchor columns
+      "-[:T1]->(o:LO)<-[:T1]-(d:LK) RETURN c.nm AS a, d.nm AS b",   // two hops
+      "-[:T1]->(o:LO) RETURN o.ok AS ok ORDER BY ok DESC",          // top-k of the bound
+      "-[:T1]->(o:LO) RETURN c.grp AS g, count(*) AS n ORDER BY g") // aggregate, sorted
+    for (anchor <- Seq("ck: 7", "grp: 1", "ck: 99"); shape <- shapes) {
+      val (k, v) = anchor.split(": ") match { case Array(a, b) => (a, b) }
+      // wire mode returns a bare node variable as all its columns
+      def run(q: String) = s.cypherWire(q, Map.empty, "neo4j", null)
+      val lit = run(s"MATCH (c:LK {$anchor})$shape")
+      val gen = run(s"MATCH (c:LK) WHERE c.$k = $v WITH c MATCH (c)$shape")
+      val (a, b) = (lit.collect().toSeq, gen.collect().toSeq)
+      if (shape.contains("ORDER BY")) assert(a == b, s"$anchor $shape")
+      else assert(a.sortBy(_.toString) == b.sortBy(_.toString), s"$anchor $shape")
+      if (anchor == "grp: 1") assert(a.nonEmpty, s"$anchor $shape")
+      val plan = lit.queryExecution.executedPlan.toString
+      assert(plan.contains("INSET") || plan.contains("LocalTableScan"),
+        s"the anchor of $anchor $shape did not join as literal keys:\n$plan")
+      if (shape.contains("RETURN c") && anchor != "ck: 99")
+        assert(plan.contains("lookup("), s"no lookup of the anchor's columns:\n$plan")
+    }
+  }
+
+  test("an anchor frontier past the driver-row bound joins unhinted, with the same answer") {
+    val s = new GraftSession(spark)
+    val n = graft.core.DeltaSide.MaxDriverRows + 50
+    s.cypher(s"UNWIND range(0, ${n - 1}) AS x CREATE (:BF {g: 1, k: x})")
+    s.cypher("UNWIND range(0, 3) AS x CREATE (:BT {t: x})")
+    s.cypher("MATCH (a:BF), (t:BT {t: 3}) WHERE a.k % 1000 = 0 CREATE (a)-[:BR]->(t)")
+    val lit = s.cypher("MATCH (a:BF {g: 1})-[:BR]->(t:BT) RETURN a.k AS k, t.t AS t ORDER BY k")
+    val gen = s.cypher("MATCH (a:BF) WHERE a.g = 1 WITH a MATCH (a)-[:BR]->(t:BT) " +
+      "RETURN a.k AS k, t.t AS t ORDER BY k")
+    val plan = lit.queryExecution.executedPlan.toString
+    assert(!plan.contains("INSET") && !plan.contains("lookup("),
+      "a frontier past the bound joined as literal keys:\n" + plan)
+    val expected = (0 to n - 1 by 1000).map(k => Seq(k.toLong, 3L))
+    assert(lit.collect().map(_.toSeq).toSeq == expected)
+    assert(gen.collect().map(_.toSeq).toSeq == expected)
+  }
+
+  test("consecutive distributed SETs on one node keep the fold's task count flat") {
+    // each distributed fold unions the kept delta with the new rows;
+    // sized from its rows, the fold does not double the next one
+    val s = new GraftSession(spark)
+    s.cypher("CREATE (:FW {k: 1, v: 0})")
+    val tasks = (1 to 12).map { _ =>
+      graft.core.StatementMetrics.measure(spark)(
+        s.cypher("MATCH (n:FW) SET n.v = n.v + 1"))._2.tasks
+    }
+    assert(tasks.drop(2).forall(_ <= tasks(1)), s"fold tasks per statement: $tasks")
+    assert(s.cypher("MATCH (n:FW) RETURN n.v AS v").collect().map(_.getLong(0)).toSeq == Seq(12L))
+  }
 }

@@ -582,24 +582,41 @@ class PlanSpec extends AnyFunSuite {
     graft.core.SnapshotStore.deleteDir(dataDir)
   }
 
-  /** The FIRST node scan compiled is the bottom-left leaf of the
-    * left-deep join tree — in the executed-plan print, the first
-    * FileScan over the node base. Returns that scan's text (its
-    * PartitionFilters carry the label it was pruned to). */
-  /** The PartitionFilters list of the FIRST label-pruned node scan in
-    * the executed plan — the bottom-left leaf of the left-deep join
-    * tree (edge scans prune on relType and are skipped; the segment is
-    * isolated so the scan's re-applied DataFilters can't satisfy a
-    * label assertion). */
-  private def firstNodeScan(df: org.apache.spark.sql.DataFrame): String = {
-    val lines = df.queryExecution.executedPlan.toString.linesIterator.toSeq
-    val i = lines.indexWhere(l =>
-      l.contains("PartitionFilters") && l.contains("_label_key"))
-    assert(i >= 0, "no label-pruned node scan in plan:\n" + lines.mkString("\n"))
-    val l = lines(i)
-    val start = l.indexOf("PartitionFilters: [")
-    val end = l.indexOf(']', start)
-    l.substring(start, if (end < 0) l.length else end)
+  /** `body`'s result and the executed plans of the queries it ran
+    * (a compile's probes), in the order they ran. */
+  private def executedDuring[T](body: => T): (T, Seq[String]) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    // events still queued from earlier work would reach the listener
+    org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    // measure drains the listener bus, so every execution is seen
+    try (StatementMetrics.measure(spark)(body)._1, plans.toArray(Array.empty[String]).toSeq)
+    finally spark.listenerManager.unregister(listener)
+  }
+
+  /** The PartitionFilters list of the FIRST label-pruned node scan
+    * executed: in the compile's `probes`, then in `df`'s executed plan
+    * — the bottom-left leaf of the left-deep join tree (edge scans
+    * prune on relType and are skipped; the segment is isolated so the
+    * scan's re-applied DataFilters can't satisfy a label assertion).
+    * An anchor frontier the compile probed and then joins as literal
+    * keys appears only in its probe. */
+  private def firstNodeScan(df: org.apache.spark.sql.DataFrame,
+      probes: Seq[String] = Nil): String = {
+    val lines = (probes :+ df.queryExecution.executedPlan.toString).flatMap(_.linesIterator)
+    def partitionFilters(l: String): String = {
+      val start = l.indexOf("PartitionFilters: [")
+      if (start < 0) ""
+      else { val end = l.indexOf(']', start); l.substring(start, if (end < 0) l.length else end) }
+    }
+    lines.map(partitionFilters).find(_.contains("_label_key")).getOrElse(
+      fail("no label-pruned node scan in plan:\n" + lines.mkString("\n")))
   }
 
   test("stats-driven join ordering: 3-hop pattern anchors at the selective label") {
@@ -623,18 +640,18 @@ class PlanSpec extends AnyFunSuite {
       Map("rows" -> (0 until 200).map(i => Map("a" -> i.toLong, "b" -> (i % 5).toLong))))
     s.saveDatabase(dataDir)
     // stats sealed: 2000 Big / 200 Mid / 5 Tiny
-    val df = s.cypher(
-      "MATCH (a:Big)-[:R1]->(m:Mid)-[:R2]->(t:Tiny) RETURN count(*) AS n")
-    val scan = firstNodeScan(df)
+    val (df, probes) = executedDuring(s.cypher(
+      "MATCH (a:Big)-[:R1]->(m:Mid)-[:R2]->(t:Tiny) RETURN count(*) AS n"))
+    val scan = firstNodeScan(df, probes)
     assert(scan.contains("Tiny") && !scan.contains("Big"),
       "3-hop pattern did not anchor at the selective label:\n" +
         df.queryExecution.executedPlan.toString)
     assert(df.collect().head.getLong(0) == 2000L)
     // comma-separated patterns reorder too: the Tiny-anchored pattern
     // compiles first even when written last
-    val df2 = s.cypher(
-      "MATCH (a:Big)-[:R1]->(m:Mid), (m)-[:R2]->(t:Tiny) RETURN count(*) AS n")
-    val scan2 = firstNodeScan(df2)
+    val (df2, probes2) = executedDuring(s.cypher(
+      "MATCH (a:Big)-[:R1]->(m:Mid), (m)-[:R2]->(t:Tiny) RETURN count(*) AS n"))
+    val scan2 = firstNodeScan(df2, probes2)
     assert(scan2.contains("Tiny") && !scan2.contains("Big"),
       "comma patterns not reordered by anchor selectivity:\n" +
         df2.queryExecution.executedPlan.toString)
@@ -660,13 +677,13 @@ class PlanSpec extends AnyFunSuite {
     val prevMeta = spark.conf.get("spark.sql.maxMetadataStringLength", "100")
     spark.conf.set("spark.sql.maxMetadataStringLength", "2000")
     try {
-      val jo = SparkEntry.queries("cy_join_order")(spark, sf)
-      val scan = firstNodeScan(jo)
+      val (jo, probes) = executedDuring(SparkEntry.queries("cy_join_order")(spark, sf))
+      val scan = firstNodeScan(jo, probes)
       assert(scan.contains("region") && !scan.contains("customer"),
         "cy_join_order did not anchor at the selective label:\n" +
-          jo.queryExecution.executedPlan.toString)
-      val lx = SparkEntry.queries("cy_label_expr_scan")(spark, sf)
-      val scan2 = firstNodeScan(lx)
+          (probes :+ jo.queryExecution.executedPlan.toString).mkString("\n"))
+      val (lx, probes2) = executedDuring(SparkEntry.queries("cy_label_expr_scan")(spark, sf))
+      val scan2 = firstNodeScan(lx, probes2)
       assert(scan2.contains("nation") && scan2.contains("region") &&
         !scan2.contains("customer"),
         "cy_label_expr_scan not pruned to the covering set:\n" +
@@ -869,20 +886,24 @@ class PlanSpec extends AnyFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     compiled(3L)._1.collect() // first reads of the loaded dir
-    val (df, jobs) = compiled(7L)
+    // the probe's own plan: the compile's one execution
+    val ((df, jobs), probePlans) = executedDuring(compiled(7L))
     assert(jobs == 1, s"an anchored 2-hop compile ran $jobs jobs; one probe expected")
+    assert(probePlans.size == 1 && probePlans.head.contains("index_aux"),
+      "the probe does not read the RANGE projection:\n" + probePlans)
+    // the probed anchor joins as literal keys: the :MPL edge scan
+    // carries its id set, and its broadcast join is gone
     val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("index_aux"), "anchor does not read the RANGE projection:\n" + p)
-    assert("BroadcastHashJoin".r.findAllMatchIn(p).length >= 4,
-      "the hop chain is no longer broadcast-hinted:\n" + p)
+    assert(p.linesIterator.exists(l => l.contains("= MPL)") && l.contains("In(src, [7])")),
+      "the :MPL edge scan does not carry the anchor's key set:\n" + p)
+    assert("BroadcastHashJoin".r.findAllMatchIn(p).length == 3,
+      "the hop chain after the anchor is no longer broadcast-hinted:\n" + p)
     assert(rows(df) == expected(Seq(21L, 22L, 23L)))
     // a transactional MERGE publishes its write buffer at COMMIT as a
     // driver-resident delta, without a job; reads over it remove the
     // delta's keys by their literal set, so no broadcast stage is
     // added: a read of a key the delta does not hold compiles and runs
-    // with the jobs it had before. (A read of a key it does hold also
-    // scans the delta's rows, a second partition for the probe's
-    // bounded take.)
+    // with the jobs it had before.
     def firstRun(k: Long): (Set[(Long, Long)], Seq[String], Int) = {
       val (d, c) = StatementMetrics.measure(spark)(s.cypher(q, Map("k" -> k)))
       val (got, m) = StatementMetrics.measure(spark)(rows(d))
@@ -895,14 +916,21 @@ class PlanSpec extends AnyFunSuite {
     assert(commit.jobs.isEmpty, s"COMMIT of a buffered MERGE ran ${commit.jobs.size} jobs")
     assert(s.catalog.database("neo4j").validNodeDelta.exists(_.buf.isDefined),
       "the committed MERGE published no write buffer")
-    compiled(3L) // the delta-overlaid stats, once per state
+    // the delta-overlaid stats come from the write buffer's rows: the
+    // first read after COMMIT runs its probe and no aggregate
+    val (_, afterCommit) = StatementMetrics.measure(spark)(s.cypher(q, Map("k" -> 3L)))
+    assert(afterCommit.jobs.size == 1, "the first read after COMMIT compiled with jobs at " +
+      afterCommit.jobs.map(_.callSite).mkString(", ") + "; one probe expected")
     val (txRows, txCompileJobs, txRunJobs) = firstRun(8L)
     assert(txCompileJobs.size == 1, "after a committed MERGE the 2-hop compile ran jobs at " +
       txCompileJobs.mkString(", ") + "; one probe expected")
     assert(txRunJobs <= runJobs,
       s"after a committed MERGE the 2-hop read ran $txRunJobs jobs, $runJobs before it")
     assert(txRows == expected(Seq(24L, 25L, 26L)))
-    assert(rows(compiled(7L)._1) == expected(Seq(21L, 22L, 23L)))
+    // the delta's row comes from the driver, the base's in one take
+    val (heldDf, heldJobs) = compiled(7L)
+    assert(heldJobs == 1, s"a read of a key the delta holds compiled with $heldJobs jobs")
+    assert(rows(heldDf) == expected(Seq(21L, 22L, 23L)))
     // soundness: one edge merged after the load raises :MPL's degrees
     // past the sealed maxima, which become unknown — the read probes
     // its hops again and still answers right
